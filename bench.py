@@ -39,7 +39,7 @@ def main() -> None:
     # member the sorted loop happens to reach first — per-query
     # attribution then stays comparable across runs AND uniform within
     # each family (previously retrieval_mrr_eval / similarity_ann_recall
-    # / similarity_recall_sweep paid the _TOPK_MEMO builds other
+    # / similarity_recall_sweep paid the cached top-k builds other
     # consumers got for free — VERDICT r08 item 6). The block is TIMED
     # and printed in the JSON line (warm_sec / warm_queries) so the
     # shared-frame cost is visible instead of silently untimed
@@ -58,7 +58,7 @@ def main() -> None:
         # as a phantom 2-3x per-query "regression" in bench_diff
         "corpus_source_minhash",
         "curation_multisignal_gate",
-        # the _TOPK_MEMO producers (one per index method + the
+        # the session-cached top-k producers (one per index method + the
         # matryoshka pair frame via its report query): every consumer
         # of the acceptance stack now sees the same warmed state
         "similarity_topk",

@@ -35,6 +35,7 @@ from ..functions.hashing import (
     h60_packed_member_sql,
     h60_sql,
 )
+from ..session import session_cached
 from ..sources.batch import load_table
 
 NUM_PERM = 16
@@ -44,35 +45,15 @@ EST_THRESHOLD = 0.8
 SIMHASH_BITS = 32
 
 
-# (applicationId, sf_dir, kind) -> shared persisted frame. The dedup
-# family's expensive inputs (MinHash signatures, LSH pair frame,
-# candidate gram/token sets) were already persist()-ed, and Spark's
-# CacheManager matches canonicalized plans, so every consumer shared
-# ONE materialization — but each consumer still re-ran the Python
-# builder chain and re-analyzed the deep lineage per query (~0.9-1.8 s
-# of driver-side build time per consumer, measured round 9; the
-# "Asked to cache already cached data" warnings were this). Memoizing
-# the DataFrame OBJECT per session hands every consumer the identical
-# plan (plan-hash equality proven at the fold,
-# plans/r09/load_table_memo_plan_identity.json) and skips the rebuild.
-# No results cross sessions: entries die with the application, like
-# _LABELS_MEMO below.
-_SHARED_FRAME_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _session_frame(spark, sf_dir, kind, build):
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    if key not in _SHARED_FRAME_MEMO:
-        for k in [k for k in _SHARED_FRAME_MEMO if k[0] != key[0]]:
-            del _SHARED_FRAME_MEMO[k]
-        _SHARED_FRAME_MEMO[key] = build()
-    return _SHARED_FRAME_MEMO[key]
-
-
 def _token_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT persisted: token arrays are corpus-scale, so caching them is
     # wrong at 100 TB — only the tiny signature frame is cached below
-    docs = load_table(spark, sf_dir, "documents")
+    return _doc_tokens(load_table(spark, sf_dir, "documents"))
+
+
+def _doc_tokens(docs: DataFrame) -> DataFrame:
+    """(doc_id, source, tok): distinct whitespace tokens of a
+    (doc_id, source, text) frame — a table or a stream micro-batch."""
     return docs.select(
         "doc_id",
         "source",
@@ -98,10 +79,8 @@ def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """doc_id, source, mh0..mh{NUM_PERM-1} via explode → min-agg.
-
-    Map-side partial min means the shuffle carries one row per
-    (doc, partition), not per token — the explode never hits the wire.
+    """The corpus's MinHash signatures (see ``_minhash_of``), persisted
+    and cached for the session.
 
     The frame is persisted (memory+disk): the LSH band self-join and
     the estimate join reuse it 4×, and the Jaccard verify stage builds
@@ -109,6 +88,21 @@ def _minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans, so every consumer shares ONE materialization instead of
     re-tokenizing and re-hashing the corpus per use. At 100 TB the
     signature frame is ~1e-3 of corpus size; caching it is the plan.
+    """
+    return _minhash_of(_token_sets(spark, sf_dir)).persist()
+
+
+_minhash_signatures = session_cached(_minhash_signatures)
+
+
+def _minhash_of(tok_sets: DataFrame) -> DataFrame:
+    """doc_id, source, mh0..mh{NUM_PERM-1} of a (doc_id, source, tok)
+    frame via explode → min-agg. The one MinHash of the engine: the
+    batch operators and the streaming incremental-dedup writer both
+    sign through it.
+
+    Map-side partial min means the shuffle carries one row per
+    (doc, partition), not per token — the explode never hits the wire.
 
     Hash family: each seeded md5 digest is packed into TWO independent
     60-bit members (functions/hashing.py), so NUM_PERM members cost
@@ -117,26 +111,21 @@ def _minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns once per row before member extraction (inlining would
     re-hash per member).
     """
-    def build() -> DataFrame:
-        hashed = (
-            _token_sets(spark, sf_dir)
-            .select("doc_id", "source", F.explode("tok").alias("sh"))
-            .select(
-                "doc_id",
-                "source",
-                *[
-                    h60_packed_md5(s, F.col("sh")).alias(f"d{s}")
-                    for s in range(NUM_PERM // 2)
-                ],
-            )
-        )
-        aggs = [
-            F.min(h60_packed_member(F.col(f"d{j // 2}"), j % 2)).alias(f"mh{j}")
-            for j in range(NUM_PERM)
-        ]
-        return hashed.groupBy("doc_id", "source").agg(*aggs).persist()
-
-    return _session_frame(spark, sf_dir, "mh_signatures", build)
+    hashed = tok_sets.select(
+        "doc_id", "source", F.explode("tok").alias("sh")
+    ).select(
+        "doc_id",
+        "source",
+        *[
+            h60_packed_md5(s, F.col("sh")).alias(f"d{s}")
+            for s in range(NUM_PERM // 2)
+        ],
+    )
+    aggs = [
+        F.min(h60_packed_member(F.col(f"d{j // 2}"), j % 2)).alias(f"mh{j}")
+        for j in range(NUM_PERM)
+    ]
+    return hashed.groupBy("doc_id", "source").agg(*aggs)
 
 
 def _band_rows(mh: DataFrame) -> DataFrame:
@@ -167,53 +156,52 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     est_jaccard = (#matching minhashes)/16 — an exact rational, so it
     hash-compares across engines with no rounding concerns.
     """
+    mh = _minhash_signatures(spark, sf_dir)
+    bands = _band_rows(mh)
+    left, right = bands.alias("l"), bands.alias("r")
+    cand = (
+        left.join(
+            right,
+            (F.col("l.source") == F.col("r.source"))
+            & (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.sig") == F.col("r.sig"))
+            & (F.col("l.doc_id") < F.col("r.doc_id")),
+        )
+        .select(
+            F.col("l.doc_id").alias("doc_id_a"),
+            F.col("r.doc_id").alias("doc_id_b"),
+        )
+        .distinct()
+    )
+    a = mh.select(
+        F.col("doc_id").alias("doc_id_a"),
+        *[F.col(f"mh{j}").alias(f"a{j}") for j in range(NUM_PERM)],
+    )
+    b = mh.select(
+        F.col("doc_id").alias("doc_id_b"),
+        *[F.col(f"mh{j}").alias(f"b{j}") for j in range(NUM_PERM)],
+    )
+    matches = sum(
+        (F.col(f"a{j}") == F.col(f"b{j}")).cast("int")
+        for j in range(NUM_PERM)
+    )
+    # persisted: the pair frame is tiny (near-dup pairs only) and
+    # three downstream consumers (jaccard/ngram verify, clustering)
+    # consume it — the session cache hands them this exact object
+    return (
+        cand.join(a, "doc_id_a")
+        .join(b, "doc_id_b")
+        .select(
+            "doc_id_a",
+            "doc_id_b",
+            (matches / F.lit(float(NUM_PERM))).alias("est_jaccard"),
+        )
+        .where(F.col("est_jaccard") >= EST_THRESHOLD)
+        .persist()
+    )
 
-    def build() -> DataFrame:
-        mh = _minhash_signatures(spark, sf_dir)
-        bands = _band_rows(mh)
-        left, right = bands.alias("l"), bands.alias("r")
-        cand = (
-            left.join(
-                right,
-                (F.col("l.source") == F.col("r.source"))
-                & (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.sig") == F.col("r.sig"))
-                & (F.col("l.doc_id") < F.col("r.doc_id")),
-            )
-            .select(
-                F.col("l.doc_id").alias("doc_id_a"),
-                F.col("r.doc_id").alias("doc_id_b"),
-            )
-            .distinct()
-        )
-        a = mh.select(
-            F.col("doc_id").alias("doc_id_a"),
-            *[F.col(f"mh{j}").alias(f"a{j}") for j in range(NUM_PERM)],
-        )
-        b = mh.select(
-            F.col("doc_id").alias("doc_id_b"),
-            *[F.col(f"mh{j}").alias(f"b{j}") for j in range(NUM_PERM)],
-        )
-        matches = sum(
-            (F.col(f"a{j}") == F.col(f"b{j}")).cast("int")
-            for j in range(NUM_PERM)
-        )
-        # persisted: the pair frame is tiny (near-dup pairs only) and
-        # three downstream consumers (jaccard/ngram verify, clustering)
-        # consume it — the session memo hands them this exact object
-        return (
-            cand.join(a, "doc_id_a")
-            .join(b, "doc_id_b")
-            .select(
-                "doc_id_a",
-                "doc_id_b",
-                (matches / F.lit(float(NUM_PERM))).alias("est_jaccard"),
-            )
-            .where(F.col("est_jaccard") >= EST_THRESHOLD)
-            .persist()
-        )
 
-    return _session_frame(spark, sf_dir, "lsh_pairs", build)
+minhash_lsh_pairs = session_cached(minhash_lsh_pairs)
 
 
 def _candidate_docs(pairs: DataFrame) -> DataFrame:
@@ -236,17 +224,7 @@ def jaccard_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate docs only (see _candidate_docs), then probed from cache
     by both sides of the pair join."""
     pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_id_a", "doc_id_b")
-    tok = _session_frame(
-        spark,
-        sf_dir,
-        "cand_tok_sets",
-        lambda: (
-            _token_sets(spark, sf_dir)
-            .join(_candidate_docs(pairs), "doc_id", "leftsemi")
-            .select("doc_id", "tok")
-            .persist()
-        ),
-    )
+    tok = _candidate_token_sets(spark, sf_dir)
     a = tok.select(F.col("doc_id").alias("doc_id_a"), F.col("tok").alias("tok_a"))
     b = tok.select(F.col("doc_id").alias("doc_id_b"), F.col("tok").alias("tok_b"))
     inter = F.size(F.array_intersect("tok_a", "tok_b"))
@@ -272,6 +250,19 @@ def jaccard_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("jaccard"),
         )
     )
+
+
+def _candidate_token_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_id_a", "doc_id_b")
+    return (
+        _token_sets(spark, sf_dir)
+        .join(_candidate_docs(pairs), "doc_id", "leftsemi")
+        .select("doc_id", "tok")
+        .persist()
+    )
+
+
+_candidate_token_sets = session_cached(_candidate_token_sets)
 
 
 NGRAM_N = 3
@@ -340,18 +331,20 @@ def _pair_gram_sets(
     ~4 s at sf0.1 for the exploded pairs×grams formulation, and that
     blow-up scales with the near-dup rate)."""
     pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_id_a", "doc_id_b")
-    gram_sets = _session_frame(
-        spark,
-        sf_dir,
-        "cand_gram_sets",
-        lambda: (
-            _char_gram_rows(spark, sf_dir, bound_to=_candidate_docs(pairs))
-            .groupBy("doc_id")
-            .agg(F.collect_list("g").alias("grams"))
-            .persist()
-        ),
+    return pairs, _candidate_gram_sets(spark, sf_dir)
+
+
+def _candidate_gram_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_id_a", "doc_id_b")
+    return (
+        _char_gram_rows(spark, sf_dir, bound_to=_candidate_docs(pairs))
+        .groupBy("doc_id")
+        .agg(F.collect_list("g").alias("grams"))
+        .persist()
     )
-    return pairs, gram_sets
+
+
+_candidate_gram_sets = session_cached(_candidate_gram_sets)
 
 
 def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -450,24 +443,6 @@ def gram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 CC_MAX_ITERS = 25
 
-# converged label frames are localCheckpoint-backed (plan truncated), so
-# unlike the persist()-ed frames above they can't be deduplicated by
-# CacheManager plan matching — memoize per (application, sf_dir) instead
-# so the clustering and every composition over it (operators.curation)
-# run the propagation once per session.
-# Lifetime: entries live as long as the Python process. A checkpointed
-# frame from a STOPPED SparkSession is unusable anyway, so on insert we
-# evict every entry belonging to a different applicationId (stale
-# sessions); within one application the frame is one row per paired doc
-# per sf_dir — bounded and intentionally kept for the session.
-_LABELS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
-def _memo_put(app_id: str, sf_dir: str, labels: DataFrame) -> None:
-    for key in [k for k in _LABELS_MEMO if k[0] != app_id]:
-        del _LABELS_MEMO[key]
-    _LABELS_MEMO[(app_id, sf_dir)] = labels
-
 
 def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the LSH near-dup pair graph: every
@@ -496,9 +471,15 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan must be truncated at the materialization point, exactly as
     iterative graph engines on Spark do.
     """
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    if memo_key in _LABELS_MEMO:
-        return _clusters_output(spark, sf_dir, _LABELS_MEMO[memo_key])
+    return _clusters_output(spark, sf_dir, _cluster_labels(spark, sf_dir))
+
+
+def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # converged label frames are localCheckpoint-backed (plan truncated),
+    # so unlike the persist()-ed frames above CacheManager plan matching
+    # cannot share them — the session cache runs the propagation once
+    # per session for the clustering and every composition over it
+    # (operators.curation)
     pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_id_a", "doc_id_b")
     edges = (
         pairs.union(pairs.select("doc_id_b", "doc_id_a"))
@@ -532,8 +513,10 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(
             f"near_dup_clusters did not converge in {CC_MAX_ITERS} rounds"
         )
-    _memo_put(memo_key[0], sf_dir, labels)
-    return _clusters_output(spark, sf_dir, labels)
+    return labels
+
+
+_cluster_labels = session_cached(_cluster_labels)
 
 
 def _clusters_output(
@@ -2416,19 +2399,13 @@ ORACLES["dedup_prefix_filter"] = f"""
 """
 
 
-# per-session memo for the exact-pair frame (same lifetime rules as
-# _LABELS_MEMO): the recall audit and any later composition reuse the
-# persisted RESULT instead of rebuilding the verify stage
-_EXACT_PAIRS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _memoized_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EXACT_PAIRS_MEMO:
-        for k in [k for k in _EXACT_PAIRS_MEMO if k[0] != key[0]]:
-            del _EXACT_PAIRS_MEMO[k]
-        _EXACT_PAIRS_MEMO[key] = prefix_filter_join(spark, sf_dir).persist()
-    return _EXACT_PAIRS_MEMO[key]
+    # cached for the session: the recall audit and any later composition
+    # reuse the persisted RESULT instead of rebuilding the verify stage
+    return prefix_filter_join(spark, sf_dir).persist()
+
+
+_memoized_prefix_filter = session_cached(_memoized_prefix_filter)
 
 
 def lsh_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -27,6 +27,7 @@ import math
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ..session import session_cached
 from ..sources.batch import load_table
 
 DIM = 64
@@ -100,6 +101,7 @@ def topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
             "neighbor_id",
             F.round("cos", 6).alias("cos_sim"),
         )
+        .persist()
     )
 
 
@@ -171,6 +173,7 @@ def lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "neighbor_id",
             F.round("cos", 6).alias("cos_sim"),
         )
+        .persist()
     )
 
 
@@ -258,6 +261,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "neighbor_id",
             F.round("cos", 6).alias("cos_sim"),
         )
+        .persist()
     )
 
 
@@ -432,6 +436,7 @@ def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "approx_dist"
             ),
         )
+        .persist()
     )
 
 
@@ -498,6 +503,7 @@ def ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "neighbor_id",
             F.round(F.col("adc") / F.lit(1_000_000.0), 6).alias("approx_dist"),
         )
+        .persist()
     )
 
 
@@ -713,8 +719,6 @@ def _sq_dist(v, c) -> F.Column:
         lambda acc, x: acc + x,
     )
 
-
-_KM_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 # Centroid-state tier bound. At or below this many clusters the Lloyd
 # state is driver-resident (a dict) and rides to executors as ONE
@@ -1020,7 +1024,7 @@ def kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``kmeans_clusters`` (the training query) and ``dedup.semantic``
     (which dedups WITHIN the trained clusters), so the Lloyd rounds
     run once per (session, sf_dir); the assignment frame is persisted
-    and memoized like dedup's label frame.
+    and session-cached like dedup's label frame.
 
     Two physical tiers, selected by k, same Lloyd semantics:
 
@@ -1042,9 +1046,6 @@ def kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     double precision identically on both sides, so assignments (and
     the DuckDB oracle's unrolled replica) match bit-for-bit.
     """
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    if memo_key in _KM_MEMO:
-        return _KM_MEMO[memo_key]
     vecs = _vectors(spark, sf_dir)
     # k grows with the corpus so expected cluster size stays constant
     # (see _km_k) — the SemDeDup bound that keeps the within-cluster
@@ -1095,10 +1096,10 @@ def kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
         # long-lived session must not accumulate stale corpus caches
         if widened:
             vecs.unpersist()
-    for key in [k_ for k_ in _KM_MEMO if k_[0] != memo_key[0]]:
-        del _KM_MEMO[key]
-    _KM_MEMO[memo_key] = out
     return out
+
+
+kmeans_assignments = session_cached(kmeans_assignments)
 
 
 def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1816,6 +1817,7 @@ def sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id", "rank", F.col("vec_id").alias("neighbor_id"), "sq_dist"
         )
+        .persist()
     )
 
 
@@ -2283,6 +2285,7 @@ def bq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("hamming").cast("int").alias("hamming"),
             F.round("cos", 6).alias("cos_sim"),
         )
+        .persist()
     )
 
 
@@ -2756,6 +2759,7 @@ def _mrl_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= TOPK)
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
+        .persist()
     )
 
 
@@ -3195,6 +3199,7 @@ def ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "neighbor_id",
             F.round(F.col("adc") / F.lit(1_000_000.0), 6).alias("approx_dist"),
         )
+        .persist()
     )
 
 
@@ -3451,44 +3456,22 @@ ORACLES["similarity_recall_sweep"] = _recall_sweep_sql()
 
 
 # ---------------------------------------------------------------------
-# Per-session top-k memo: the acceptance stack (ann_recall, the
+# Per-session top-k frames: the acceptance stack (ann_recall, the
 # matryoshka report, recall_sweep) and the standalone index queries all
-# evaluate the same small per-method top-k frames; memoizing the
-# persisted result per (application, sf_dir) makes each pipeline run
-# ONCE per session instead of once per consumer (the recall sweep alone
-# re-paid all seven). Same lifetime rules as dedup._LABELS_MEMO.
+# evaluate the same small per-method top-k frames; caching the persisted
+# result per session makes each pipeline run ONCE per session instead
+# of once per consumer (the recall sweep alone re-paid all seven).
 # ---------------------------------------------------------------------
 
-_TOPK_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _session_memo(name: str):
-    import functools
-
-    def deco(fn):
-        @functools.wraps(fn)
-        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            key = (spark.sparkContext.applicationId, sf_dir, name)
-            if key not in _TOPK_MEMO:
-                for k in [k for k in _TOPK_MEMO if k[0] != key[0]]:
-                    del _TOPK_MEMO[k]
-                _TOPK_MEMO[key] = fn(spark, sf_dir).persist()
-            return _TOPK_MEMO[key]
-
-        return wrapped
-
-    return deco
-
-
-topk_bruteforce = _session_memo("exact")(topk_bruteforce)
-lsh_topk = _session_memo("lsh")(lsh_topk)
-ivf_topk = _session_memo("ivf")(ivf_topk)
-pq_topk = _session_memo("pq")(pq_topk)
-ivf_pq_topk = _session_memo("ivf_pq")(ivf_pq_topk)
-ivfpq_residual_topk = _session_memo("ivfpq_res")(ivfpq_residual_topk)
-sq_topk = _session_memo("sq")(sq_topk)
-bq_topk = _session_memo("bq")(bq_topk)
-_mrl_prefix_pairs = _session_memo("mrl_pairs")(_mrl_prefix_pairs)
+topk_bruteforce = session_cached(topk_bruteforce)
+lsh_topk = session_cached(lsh_topk)
+ivf_topk = session_cached(ivf_topk)
+pq_topk = session_cached(pq_topk)
+ivf_pq_topk = session_cached(ivf_pq_topk)
+ivfpq_residual_topk = session_cached(ivfpq_residual_topk)
+sq_topk = session_cached(sq_topk)
+bq_topk = session_cached(bq_topk)
+_mrl_prefix_pairs = session_cached(_mrl_prefix_pairs)
 
 
 def cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:

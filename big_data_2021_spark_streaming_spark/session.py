@@ -15,14 +15,19 @@ We instead pin the configs that matter at 100 TB:
   raw int64 and floor-divide to micros in the catalog layer
   (sources/batch.py) — identical truncation to DuckDB's ns→µs read.
 - Arrow enabled for the pandas-UDF paths (similarity / multimodal).
+
+It also holds the engine's one store that lives as long as a session:
+``session_cached`` (see there).
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
+from collections import OrderedDict
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -150,3 +155,73 @@ def configure_existing(spark: SparkSession) -> SparkSession:
             file=sys.stderr,
         )
     return spark
+
+
+# (applicationId, sf_dir) -> {(function, *other args): DataFrame}, least
+# recently used sf_dir first. Named *_CACHE so tools/plan_fingerprint.py
+# treats it as runtime state, not a plan constant.
+_SESSION_CACHE: OrderedDict[tuple[str, str], dict[tuple, DataFrame]] = (
+    OrderedDict()
+)
+# sf_dirs kept per application: one test compares two corpora (an
+# offset-id copy against its base) and must keep both; every benchmark
+# pass and every other test reads one
+SESSION_CACHE_DIRS = 2
+
+
+def session_cached(fn):
+    """Memoize ``fn(spark, sf_dir, *args) -> DataFrame`` for the life of
+    ``spark``'s application, so every consumer in a session gets the
+    same DataFrame object (one plan, one materialization of whatever
+    ``fn`` persists or checkpoints) instead of rebuilding it.
+
+    The cache only stores, looks up and evicts; it must never change a
+    plan. Every ``persist()``/``localCheckpoint()`` stays in ``fn``'s
+    body, which the plan fingerprint hashes. Apply it by rebinding
+    (``f = session_cached(f)``), not with ``@``: the fingerprint reads
+    ``fn``'s source through ``__wrapped__``, and a decorator line would
+    fold this function's source into every builder that uses ``f``.
+
+    Lifetime: a frame from a stopped session is unusable, so entries of
+    other applications are dropped on the next miss. Within one
+    application at most ``SESSION_CACHE_DIRS`` sf_dirs are kept; the
+    least recently used one is evicted (see ``evict_session_cache``).
+    Rewriting a corpus dir in place mid-session would serve the stale
+    frames: write new corpora under fresh paths."""
+
+    @functools.wraps(fn)
+    def cached(spark: SparkSession, sf_dir: str, *args) -> DataFrame:
+        frames = _session_frames(spark, sf_dir)
+        key = (fn, *args)
+        if key not in frames:
+            frames[key] = fn(spark, sf_dir, *args)
+        return frames[key]
+
+    return cached
+
+
+def _session_frames(spark: SparkSession, sf_dir: str) -> dict:
+    app = spark.sparkContext.applicationId
+    slot = (app, sf_dir)
+    if slot in _SESSION_CACHE:
+        _SESSION_CACHE.move_to_end(slot)
+        return _SESSION_CACHE[slot]
+    for stale in [s for s in _SESSION_CACHE if s[0] != app]:
+        del _SESSION_CACHE[stale]
+    while len(_SESSION_CACHE) >= SESSION_CACHE_DIRS:
+        _unpersist(_SESSION_CACHE.popitem(last=False)[1])
+    return _SESSION_CACHE.setdefault(slot, {})
+
+
+def evict_session_cache(spark: SparkSession, sf_dir: str) -> None:
+    """Drop this application's cached frames for ``sf_dir``.
+
+    Their cached blocks are unpersisted, which only drops a cache over
+    lineage Spark can recompute, so a frame a caller still holds stays
+    usable. ``localCheckpoint`` blocks are not released."""
+    _unpersist(_SESSION_CACHE.pop((spark.sparkContext.applicationId, sf_dir), {}))
+
+
+def _unpersist(frames: dict) -> None:
+    for df in frames.values():
+        df.unpersist()

@@ -24,6 +24,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import session_cached
+
 # table -> columns stored as parquet TIMESTAMP(NANOS)
 TABLES: dict[str, tuple[str, ...]] = {
     "region": (),
@@ -46,38 +48,26 @@ def _nanos_to_ts(col: str) -> F.Column:
     return F.timestamp_micros(F.expr(f"`{col}` div 1000"))
 
 
-# (applicationId, sf_dir, table) -> resolved DataFrame. A DataFrame is
-# an immutable LOGICAL PLAN, not data: memoizing it skips the parquet
-# footer/schema resolution spark.read pays per call (~500 load_table
-# calls per bench run, each a driver-side file-listing + footer read —
-# guide §6) while leaving every consumer's plan byte-identical (proven
-# at the round-9 fold by normalized-plan-hash equality over all 252
-# queries, plans/r09/load_table_memo_plan_identity.json). No RESULT is
-# cached — scans still read parquet at every execution. Keyed by
-# applicationId so a new session re-resolves; entries from dead apps
-# are evicted. Caveat: rewriting a corpus dir in-place mid-session
-# would serve the stale file listing — regenerate corpora under fresh
-# paths (tools/make_corpus.py already does).
-_TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one test table with normalized timestamp columns."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {sorted(TABLES)}")
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _TABLE_MEMO.get(key)
-    if cached is not None:
-        return cached
-    for k in [k for k in _TABLE_MEMO if k[0] != key[0]]:
-        del _TABLE_MEMO[k]
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     for ts_col in TABLES[name]:
         if ts_col in df.columns and dict(df.dtypes)[ts_col] == "bigint":
             df = df.withColumn(ts_col, _nanos_to_ts(ts_col))
-    _TABLE_MEMO[key] = df
     return df
+
+
+# A DataFrame is an immutable LOGICAL PLAN, not data: caching it per
+# session skips the parquet footer/schema resolution spark.read pays per
+# call (~500 load_table calls per bench run, each a driver-side
+# file-listing + footer read) while leaving every consumer's plan
+# identical (normalized-plan-hash equality over all registry queries,
+# plans/r09/load_table_memo_plan_identity.json). No RESULT is cached:
+# scans still read parquet at every execution.
+load_table = session_cached(load_table)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

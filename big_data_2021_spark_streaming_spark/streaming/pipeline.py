@@ -481,46 +481,6 @@ def stream_dedup(
     )
 
 
-def doc_minhash_signatures(docs: DataFrame) -> DataFrame:
-    """MinHash signatures (doc_id, source, mh0..mh{NUM_PERM-1}) of an
-    ARBITRARY (doc_id, source, text) frame — the streaming-side twin of
-    ``operators/dedup._minhash_signatures``, which is bound to an
-    sf_dir-loaded table. Same math end to end: distinct whitespace
-    tokens, packed-md5 60-bit hash members (functions/hashing.py),
-    map-side partial min so the explode never hits the wire.
-
-    Deliberately DUPLICATED rather than refactored into a shared
-    helper: extracting the body out of the batch operator would change
-    every driver-verified dedup builder's plan fingerprint mid-round
-    (plans/registry.py staleness rule), costing regrade slots for a
-    value-neutral refactor. The batch≡stream equivalence test
-    (tests/test_streaming_incremental_dedup.py) pins the two copies
-    value-identical, so drift cannot be silent; fold the refactor in at
-    the next fingerprint-baseline regeneration (round-7 fold)."""
-    from ..functions.hashing import h60_packed_md5, h60_packed_member
-    from ..operators.dedup import NUM_PERM
-
-    hashed = docs.select(
-        "doc_id",
-        "source",
-        F.explode(F.array_distinct(F.split(F.trim("text"), r"\s+"))).alias(
-            "sh"
-        ),
-    ).select(
-        "doc_id",
-        "source",
-        *[
-            h60_packed_md5(s, F.col("sh")).alias(f"d{s}")
-            for s in range(NUM_PERM // 2)
-        ],
-    )
-    aggs = [
-        F.min(h60_packed_member(F.col(f"d{j // 2}"), j % 2)).alias(f"mh{j}")
-        for j in range(NUM_PERM)
-    ]
-    return hashed.groupBy("doc_id", "source").agg(*aggs)
-
-
 def incremental_dedup_batch_writer(out_dir: str):
     """batch_fn for ``to_foreach_batch_sink``: streaming incremental
     near-dup dedup — each arriving document micro-batch is checked
@@ -554,10 +514,16 @@ def incremental_dedup_batch_writer(out_dir: str):
     def write(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window
 
-        from ..operators.dedup import EST_THRESHOLD, NUM_PERM, _band_rows
+        from ..operators.dedup import (
+            EST_THRESHOLD,
+            NUM_PERM,
+            _band_rows,
+            _doc_tokens,
+            _minhash_of,
+        )
 
         spark = batch_df.sparkSession
-        mh_new = doc_minhash_signatures(batch_df).persist()
+        mh_new = _minhash_of(_doc_tokens(batch_df)).persist()
         try:
             best = None
             if batch_id > 0:

@@ -242,6 +242,7 @@ def test_kmeans_seeds_fill_on_offset_id_space(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from big_data_2021_spark_streaming_spark.operators import similarity
+    from big_data_2021_spark_streaming_spark.session import evict_session_cache
 
     sf = str(tmp_path / "offset_sf")
     (tmp_path / "offset_sf").mkdir()
@@ -278,7 +279,4 @@ def test_kmeans_seeds_fill_on_offset_id_space(spark, tmp_path):
         ids = [r.cluster_id for r in out.select("cluster_id").distinct().collect()]
         assert all(cid >= 10_000_000 for cid in ids)
     finally:
-        key = (spark.sparkContext.applicationId, sf)
-        frame = similarity._KM_MEMO.pop(key, None)
-        if frame is not None:
-            frame.unpersist()
+        evict_session_cache(spark, sf)

@@ -828,9 +828,9 @@ def test_verified_builders_unchanged_since_green():
     stale = sorted(n for n in current if current[n] != baseline[n])
     assert not stale, (
         f"builders/oracles re-planned after their driver green: {stale} — "
-        "move them into _REPLANNED_AFTER_GREEN (registry.py) and out of "
-        "_DRIVER_VERIFIED; regenerate verified_fingerprints.json only at "
-        "the next fold"
+        "move their entries from verified_fingerprints.json to "
+        "pending_fingerprints.json and rerun python "
+        "tools/plan_fingerprint.py; a fold moves entries back the same way"
     )
 
 

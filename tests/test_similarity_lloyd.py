@@ -23,6 +23,7 @@ from __future__ import annotations
 import pytest
 
 from big_data_2021_spark_streaming_spark.operators import similarity as sim
+from big_data_2021_spark_streaming_spark.session import evict_session_cache
 
 SF = "/root/testdata/sf0.001"
 
@@ -89,7 +90,7 @@ def test_dispatch_selects_distributed_tier_past_the_bound(spark, monkeypatch):
     # route through the distributed tier and still produce a total,
     # seed-labeled assignment for the full corpus
     monkeypatch.setattr(sim, "LLOYD_BROADCAST_MAX", 4)
-    sim._KM_MEMO.clear()
+    evict_session_cache(spark, SF)
     try:
         out = sim.kmeans_assignments(spark, SF)
         n = sim._vectors(spark, SF).count()
@@ -97,4 +98,4 @@ def test_dispatch_selects_distributed_tier_past_the_bound(spark, monkeypatch):
         assert out.select("vec_id").distinct().count() == n
         assert set(out.columns) == {"vec_id", "v", "cluster_id", "d"}
     finally:
-        sim._KM_MEMO.clear()  # never leak a tiny-bound memo to other tests
+        evict_session_cache(spark, SF)  # never leak a tiny-bound assignment

@@ -2,7 +2,9 @@
 
 The registry's standing rule: any query whose builder or oracle is
 re-planned after its last driver green must leave ``_DRIVER_VERIFIED``
-(into ``_REPLANNED_AFTER_GREEN``) so it regrades early. Round 5 argued
+(into ``_REPLANNED_AFTER_GREEN``) so it regrades early. Both sets are
+the keys of this tool's two output files (plans/registry.py), so moving
+a name means moving its entry between the files. Round 5 argued
 ONE scoped exception — a pure JOIN-STRATEGY diff (adding/removing an
 ``F.broadcast`` hint and nothing else) cannot change result VALUES, so
 it does not invalidate a value green. VERDICT r05 item 4 asked for that
@@ -25,11 +27,16 @@ closure:
 - the query's oracle SQL is folded in verbatim (the exemption never
   covers oracle edits).
 
-``python tools/plan_fingerprint.py`` regenerates the committed baseline
+``python tools/plan_fingerprint.py`` rehashes the names already in the
+committed baseline
 ``big_data_2021_spark_streaming_spark/plans/verified_fingerprints.json``
-— run it ONLY at fold time (when a new CORRECTNESS round's greens move
-into ``_DRIVER_VERIFIED``), never to silence a mid-round failure. The
-enforcing test is
+and writes every other registry name to ``pending_fingerprints.json``
+beside it. A fold moves the newly green entries from the pending file
+to the verified file and then runs the tool; a re-planned verified name
+moves the other way. Rerun it on a moved baseline ONLY at fold time, or
+after a plan-identity proof (tools/plan_identity.py) plus the oracle
+gate show a refactor plan-neutral — never to silence a mid-round
+failure. The enforcing test is
 ``tests/test_plans.py::test_verified_builders_unchanged_since_green``.
 """
 
@@ -55,13 +62,13 @@ _CONST_TYPES = (int, float, str, bytes, bool, tuple, frozenset, dict, list, set)
 
 
 def _is_runtime_cache(name: str) -> bool:
-    """Module-level memo dicts (``_KM_MEMO``, ``_LABELS_MEMO``, ...) are
-    RUNTIME state, not plan constants: their contents change as queries
-    execute in-session, so hashing them makes the fingerprint depend on
-    test order. Excluded by the repo's naming convention; a plan
-    constant with non-scalar leaves under any other name raises loudly
-    in _checked_repr instead of drifting silently."""
-    return name.endswith(("_MEMO", "_CACHE"))
+    """Module-level cache dicts (``session._SESSION_CACHE``) are RUNTIME
+    state, not plan constants: their contents change as queries execute
+    in-session, so hashing them makes the fingerprint depend on test
+    order. Excluded by the repo's naming convention; a plan constant
+    with non-scalar leaves under any other name raises loudly in
+    _checked_repr instead of drifting silently."""
+    return name.endswith("_CACHE")
 
 
 _SCALARS = (int, float, str, bytes, bool, type(None))
@@ -81,7 +88,7 @@ def _checked_repr(name: str, val) -> str:
     if not _data_only(val):
         raise TypeError(
             f"constant {name} holds non-data values (runtime objects?) — "
-            "name it *_MEMO/*_CACHE if it is session state, or make it "
+            "keep session state in session.session_cached, or make it "
             "plain data so the plan fingerprint is stable"
         )
     return _stable_repr(val)
