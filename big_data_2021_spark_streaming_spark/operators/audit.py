@@ -22,6 +22,7 @@ from functools import reduce
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ..session import local_frame
 from ..sources.batch import load_table
 
 # child table, fk column, parent table, pk column
@@ -1573,7 +1574,8 @@ def partition_pruning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # always does — a bare groupBy would emit 0 rows and diverge, so
     # the grid left-joins the chain and the empty side displays the
     # aggregate-on-empty values (counts 0, byte sums NULL)
-    base = spark.createDataFrame(
+    base = local_frame(
+        spark,
         [(layout, probe) for layout in dims for probe in dims],
         "layout string, probe_dim string",
     )

@@ -27,7 +27,7 @@ import math
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..session import session_cached
+from ..session import local_frame, session_cached
 from ..sources.batch import load_table
 
 DIM = 64
@@ -319,6 +319,13 @@ def _pq_centroid_rows() -> list[tuple[int, int, int, int]]:
     ]
 
 
+def _pq_book(spark: SparkSession) -> DataFrame:
+    """The PQ codebooks as a (gd, m, k, cq) literal frame."""
+    return local_frame(
+        spark, _pq_centroid_rows(), "gd INT, m INT, k INT, cq LONG"
+    )
+
+
 def _milli(x) -> F.Column:
     # embedding components quantized to exact integer milli-units —
     # the established cross-engine exact-integer pattern (see
@@ -340,9 +347,7 @@ def _pq_codes_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = vecs.select(
         "vec_id", F.posexplode("v").alias("gd", "x")
     ).select("vec_id", "gd", _milli(F.col("x")).alias("xq"))
-    cents = spark.createDataFrame(
-        _pq_centroid_rows(), "gd INT, m INT, k INT, cq LONG"
-    )
+    cents = _pq_book(spark)
     diff = F.col("xq") - F.col("cq")
     dists = (
         comp.join(F.broadcast(cents), "gd")
@@ -393,9 +398,7 @@ def _pq_query_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("query_id", "gd", _milli(F.col("x")).alias("xq"))
     )
-    cents = spark.createDataFrame(
-        _pq_centroid_rows(), "gd INT, m INT, k INT, cq LONG"
-    )
+    cents = _pq_book(spark)
     diff = F.col("xq") - F.col("cq")
     return (
         qcomp.join(F.broadcast(cents), "gd")
@@ -791,7 +794,8 @@ def _cent_frame(spark: SparkSession, cents: dict[int, list[float]]) -> DataFrame
         "per-round driver collect are not sized for this k — use "
         "_lloyd_distributed (kmeans_assignments selects it automatically)"
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [([{"cid": cid, "c": cents[cid]} for cid in sorted(cents)],)],
         "cents array<struct<cid:int,c:array<double>>>",
     )
@@ -3131,9 +3135,7 @@ def ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = vecs.select(
         "vec_id", F.posexplode("v").alias("gd", "x")
     ).select("vec_id", "gd", _milli(F.col("x")).alias("xq"))
-    book = spark.createDataFrame(
-        _pq_centroid_rows(), "gd INT, m INT, k INT, cq LONG"
-    )
+    book = _pq_book(spark)
     # corpus residual codes: residual = milli(x) − milli(centroid), per
     # the vector's own cell (per-list residuals, exactly as Faiss)
     rcomp = (

@@ -38,6 +38,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import STATE_NAME_BY_ABBREV, states_dimension
+from ..session import local_frame
 from .reference_queries import decode_rsvps, q2_us_meetups_enriched
 
 # (rsvp_id, country, city, state, mtime_ms, guests, event_id, event_name, time_ms)
@@ -91,8 +92,8 @@ def _envelope_rows() -> list[tuple[str, str]]:
 
 
 def _envelope_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        _envelope_rows(), "value STRING, timestamp STRING"
+    return local_frame(
+        spark, _envelope_rows(), "value STRING, timestamp STRING"
     )
 
 

@@ -39,6 +39,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .session import local_frame
+
 # USPS two-letter code -> full name, uppercase (public reference data).
 _STATES_COMPACT = (
     "AL:ALABAMA,AK:ALASKA,AZ:ARIZONA,AR:ARKANSAS,CA:CALIFORNIA,"
@@ -71,7 +73,7 @@ def states_dimension(spark: SparkSession) -> DataFrame:
     design), ``state_short`` = abbreviation (join key).
     """
     rows = [(name, abbrev) for abbrev, name in STATE_NAME_BY_ABBREV.items()]
-    return spark.createDataFrame(rows, ["group_state", "state_short"])
+    return local_frame(spark, rows, "group_state STRING, state_short STRING")
 
 
 def rsvp_schema(mode: str = "faithful") -> StructType:

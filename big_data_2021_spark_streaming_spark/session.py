@@ -16,8 +16,9 @@ We instead pin the configs that matter at 100 TB:
   (sources/batch.py) — identical truncation to DuckDB's ns→µs read.
 - Arrow enabled for the pandas-UDF paths (similarity / multimodal).
 
-It also holds the engine's one store that lives as long as a session:
-``session_cached`` (see there).
+It also holds the engine's one store that lives as long as a session,
+``session_cached``, and its one way to build a frame from Python rows,
+``local_frame`` (see each).
 """
 
 from __future__ import annotations
@@ -26,6 +27,7 @@ import functools
 import os
 import sys
 from collections import OrderedDict
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -98,16 +100,14 @@ def _ship_package(spark: SparkSession) -> None:
     workers — they only see PYTHONPATH, pyFiles, and their cwd. Running
     from the repo root masks this (worker cwd is on its path); any
     other cwd fails with ModuleNotFoundError inside the worker. Zip the
-    package once per session and ``addPyFile`` it — the live-session
-    mechanism Spark provides for exactly this.
+    package (``_package_zip``) and ``addPyFile`` it once per session —
+    the live-session mechanism Spark provides for exactly this.
 
-    Caveat: the zip is keyed by applicationId and shipped once per
-    session, so package code EDITED while a session is live keeps
-    running the stale zip on workers until the session restarts —
-    restart the session after editing operator code."""
-    import pathlib
+    Caveat: the zip is shipped once per session, so package code EDITED
+    while a session is live keeps running the stale zip on workers
+    until the session restarts — restart the session after editing
+    operator code."""
     import tempfile
-    import zipfile
 
     marker = "spark.big_data_2021_spark_streaming_spark.shipped"
     try:
@@ -115,22 +115,63 @@ def _ship_package(spark: SparkSession) -> None:
             return
     except Exception:
         pass
-    pkg_root = pathlib.Path(__file__).resolve().parent
-    zpath = pathlib.Path(tempfile.gettempdir()) / (
-        f"big_data_2021_spark_streaming_spark_pkg_"
-        f"{spark.sparkContext.applicationId}.zip"
+    zpath = _package_zip(
+        Path(__file__).resolve().parent, Path(tempfile.gettempdir())
     )
-    if not zpath.exists():
-        with zipfile.ZipFile(zpath, "w") as z:
-            for f in sorted(pkg_root.rglob("*")):
-                if "__pycache__" in f.parts or not f.is_file():
-                    continue
-                z.write(f, f"{pkg_root.name}/{f.relative_to(pkg_root)}")
     spark.sparkContext.addPyFile(str(zpath))
     try:
         spark.conf.set(marker, "true")
     except Exception:
         pass
+
+
+def _package_zip(pkg_root: Path, out_dir: Path) -> Path:
+    """Zip ``pkg_root`` (minus ``__pycache__``) into ``out_dir``, named
+    by a hash of the package's files, and return the path. Sessions
+    running the same code share one zip instead of leaving one per
+    application in the temp dir; an edit names a new one. The zip is
+    written under a per-process name and renamed into place, so a
+    concurrent session never ships a half-written file."""
+    import hashlib
+    import zipfile
+
+    files = [
+        f
+        for f in sorted(pkg_root.rglob("*"))
+        if f.is_file() and "__pycache__" not in f.parts
+    ]
+    digest = hashlib.sha256()
+    for f in files:
+        digest.update(f.relative_to(pkg_root).as_posix().encode() + b"\0")
+        digest.update(f.read_bytes() + b"\0")
+    zpath = out_dir / f"{pkg_root.name}_pkg_{digest.hexdigest()[:16]}.zip"
+    if not zpath.exists():
+        tmp = zpath.with_name(f"{zpath.name}.{os.getpid()}.tmp")
+        with zipfile.ZipFile(tmp, "w") as z:
+            for f in files:
+                z.write(f, f"{pkg_root.name}/{f.relative_to(pkg_root)}")
+        os.replace(tmp, zpath)
+    return zpath
+
+
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """A literal frame (``rows`` of tuples, schema ``ddl``) the JVM holds
+    as a local relation: it plans as ``LocalTableScan`` and collects
+    with no job. ``spark.createDataFrame(list, ddl)`` would instead
+    pickle the rows into a Python RDD (``Scan ExistingRDD``) and run a
+    Python-worker job on every execution — once per micro-batch for a
+    stream's broadcast side. Same schema and rows either way, with or
+    without ``spark.sql.execution.arrow.pyspark.enabled``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = to_arrow_schema(_parse_datatype_string(ddl))
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, row, strict=True)) for row in rows],
+        schema=schema,
+    )
+    return spark.createDataFrame(table)
 
 
 def configure_existing(spark: SparkSession) -> SparkSession:

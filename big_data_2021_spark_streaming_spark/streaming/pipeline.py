@@ -44,6 +44,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..session import local_frame
+
 ENVELOPE_SCHEMA = StructType(
     [
         StructField("value", StringType()),
@@ -424,8 +426,8 @@ def drift_monitor_batch_writer(
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ref = spark.createDataFrame(
-            sorted(ref_cells.items()), "bucket INT, o_ref BIGINT"
+        ref = local_frame(
+            spark, sorted(ref_cells.items()), "bucket INT, o_ref BIGINT"
         )
         bucket = F.least(
             F.lit(DRIFT_BUCKETS - 1),

@@ -7,8 +7,8 @@ foreachBatch stream with partitioned-parquet signature state. Pins:
 - batch ≡ stream: streaming the corpus as (everything-else, then the
   INCR_SOURCE docs) must give the INCR batch verdicts value-identical
   to the batch operator (which the driver's DuckDB oracle has
-  hash-verified) — this is ALSO the drift guard for the deliberately
-  duplicated signature math (see doc_minhash_signatures);
+  hash-verified) — this is ALSO the drift guard for the signature
+  math both paths share (see dedup._minhash_of);
 - replay idempotence: re-running a committed batch rewrites exactly
   its own partitions and sees exactly the pre-batch corpus;
 - slicing invariance: how the PRIOR corpus was split into micro-batches
