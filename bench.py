@@ -44,8 +44,9 @@ def main() -> None:
     # and printed in the JSON line (warm_sec / warm_queries) so the
     # shared-frame cost is visible instead of silently untimed
     # (VERDICT r08 item 3); "value" keeps its r02-r08 meaning — the sum
-    # of the per-query timed loop — so round-over-round totals stay
-    # like-for-like.
+    # of the per-query timed loop. Totals compare like-for-like only
+    # between runs with the same warm set: a query added to or removed
+    # from it moves its first-touch cost between warm_sec and value.
     warm_timings: dict[str, float] = {}
     for warm in (
         "dedup_clusters",

@@ -20,7 +20,7 @@ from __future__ import annotations
 from functools import reduce
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from ..session import local_frame
 from ..sources.batch import load_table
@@ -184,6 +184,34 @@ def user_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 DRIFT_BUCKETS = 10
 
 
+def drift_bucket(value: Column, lo: Column, hi: Column) -> Column:
+    """INT bucket of ``value`` on the DRIFT_BUCKETS equi-width grid
+    over [lo, hi]: ``hi`` itself falls in the last bucket, and a
+    zero-width grid puts every value in bucket 0."""
+    return (
+        F.when(hi == lo, F.lit(0))
+        .otherwise(
+            F.least(
+                F.lit(DRIFT_BUCKETS - 1),
+                F.floor((value - lo) * DRIFT_BUCKETS / (hi - lo)),
+            )
+        )
+        .cast("int")
+    )
+
+
+def tvd_micro(n1: str, n2: str) -> Column:
+    """Total-variation distance Σ|o1·n2 − o2·n1| / (2·n1·n2) in half-up
+    micro-units, from the column ``num`` = Σ|o1·n2 − o2·n1| and the
+    SQL expressions ``n1``, ``n2`` of the two sides' totals. An empty
+    side means no drift is measurable: tvd := 0 (r08 single-row sweep;
+    an ANSI div-by-zero crash otherwise)."""
+    return F.expr(
+        f"CASE WHEN {n1} = 0 OR {n2} = 0 THEN 0 ELSE"
+        f" (2 * 1000000 * num + 2 * {n1} * {n2}) div (4 * {n1} * {n2}) END"
+    )
+
+
 def value_drift_tvd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-drift monitor: total-variation distance between the
     first and second time-halves of each event type's ``value``
@@ -214,19 +242,9 @@ def value_drift_tvd(spark: SparkSession, sf_dir: str) -> DataFrame:
     marked = base.crossJoin(F.broadcast(bounds)).select(
         "event_type",
         (F.col("us") * 2 <= F.col("lo_us") + F.col("hi_us")).alias("first_half"),
-        F.when(F.col("hi_v") == F.col("lo_v"), F.lit(0))
-        .otherwise(
-            F.least(
-                F.lit(DRIFT_BUCKETS - 1),
-                F.floor(
-                    (F.col("value") - F.col("lo_v"))
-                    * DRIFT_BUCKETS
-                    / (F.col("hi_v") - F.col("lo_v"))
-                ),
-            )
-        )
-        .cast("int")
-        .alias("bucket"),
+        drift_bucket(F.col("value"), F.col("lo_v"), F.col("hi_v")).alias(
+            "bucket"
+        ),
     )
     cells = marked.groupBy("event_type", "bucket").agg(
         F.sum(F.col("first_half").cast("bigint")).alias("o1"),
@@ -256,12 +274,7 @@ def value_drift_tvd(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.col("n1").alias("n_first"),
             F.col("n2").alias("n_second"),
-            # an empty half means no drift is measurable: tvd := 0
-            # (r08 single-row sweep; ANSI div-by-zero crash otherwise)
-            F.expr(
-                "CASE WHEN n1 = 0 OR n2 = 0 THEN 0 ELSE"
-                " (2 * 1000000 * num + 2 * n1 * n2) div (4 * n1 * n2) END"
-            ).alias("tvd_micro"),
+            tvd_micro("n1", "n2").alias("tvd_micro"),
             "top_shift_bucket",
         )
     )

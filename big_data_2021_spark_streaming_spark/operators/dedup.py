@@ -149,6 +149,27 @@ def _band_rows(mh: DataFrame) -> DataFrame:
     )
 
 
+def _estimate_sides(mh_a: DataFrame, key_a: str, mh_b: DataFrame, key_b: str):
+    """The two signature sides of a pair join, keyed ``key_a`` and
+    ``key_b``, and the MinHash Jaccard estimate over them: the
+    ``est_jaccard`` column (#matching minhashes)/NUM_PERM, an exact
+    rational. The engine's one estimate; each caller keeps its own
+    join order."""
+    a = mh_a.select(
+        F.col("doc_id").alias(key_a),
+        *[F.col(f"mh{j}").alias(f"a{j}") for j in range(NUM_PERM)],
+    )
+    b = mh_b.select(
+        F.col("doc_id").alias(key_b),
+        *[F.col(f"mh{j}").alias(f"b{j}") for j in range(NUM_PERM)],
+    )
+    matches = sum(
+        (F.col(f"a{j}") == F.col(f"b{j}")).cast("int")
+        for j in range(NUM_PERM)
+    )
+    return a, b, (matches / F.lit(float(NUM_PERM))).alias("est_jaccard")
+
+
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate pairs: banded-LSH candidates within a source
     block, kept when the MinHash Jaccard estimate ≥ 0.8.
@@ -173,29 +194,14 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    a = mh.select(
-        F.col("doc_id").alias("doc_id_a"),
-        *[F.col(f"mh{j}").alias(f"a{j}") for j in range(NUM_PERM)],
-    )
-    b = mh.select(
-        F.col("doc_id").alias("doc_id_b"),
-        *[F.col(f"mh{j}").alias(f"b{j}") for j in range(NUM_PERM)],
-    )
-    matches = sum(
-        (F.col(f"a{j}") == F.col(f"b{j}")).cast("int")
-        for j in range(NUM_PERM)
-    )
+    a, b, est = _estimate_sides(mh, "doc_id_a", mh, "doc_id_b")
     # persisted: the pair frame is tiny (near-dup pairs only) and
     # three downstream consumers (jaccard/ngram verify, clustering)
     # consume it — the session cache hands them this exact object
     return (
         cand.join(a, "doc_id_a")
         .join(b, "doc_id_b")
-        .select(
-            "doc_id_a",
-            "doc_id_b",
-            (matches / F.lit(float(NUM_PERM))).alias("est_jaccard"),
-        )
+        .select("doc_id_a", "doc_id_b", est)
         .where(F.col("est_jaccard") >= EST_THRESHOLD)
         .persist()
     )
@@ -557,9 +563,26 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     actual runtime size is small. est_jaccard is the exact rational
     matches/NUM_PERM, so it hash-compares with no rounding concerns."""
     mh = _minhash_signatures(spark, sf_dir)
-    bands = _band_rows(mh)
-    new_bands = bands.where(F.col("source") == INCR_SOURCE)
-    old_bands = bands.where(F.col("source") != INCR_SOURCE)
+    is_new = F.col("source") == INCR_SOURCE
+    new_docs = (
+        load_table(spark, sf_dir, "documents")
+        .where(is_new)
+        .select(F.col("doc_id").alias("new_id"))
+    )
+    return _dedup_verdicts(
+        new_docs, _best_prior_match(mh.where(~is_new), mh.where(is_new))
+    )
+
+
+def _best_prior_match(corpus_mh: DataFrame, new_mh: DataFrame) -> DataFrame:
+    """(new_id, old_id, est_jaccard): each new document's best corpus
+    match at est_jaccard >= EST_THRESHOLD (highest estimate, then
+    lowest old_id); a new document without one has no row. Only the
+    candidates of the (band, sig) equi-join are scored. Shared by
+    ``incremental_dedup`` and the streaming
+    ``incremental_dedup_batch_writer``."""
+    old_bands = _band_rows(corpus_mh)
+    new_bands = _band_rows(new_mh)
     cand = (
         old_bands.alias("o")
         .join(
@@ -573,39 +596,25 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    a = mh.where(F.col("source") == INCR_SOURCE).select(
-        F.col("doc_id").alias("new_id"),
-        *[F.col(f"mh{j}").alias(f"a{j}") for j in range(NUM_PERM)],
-    )
-    b = mh.select(
-        F.col("doc_id").alias("old_id"),
-        *[F.col(f"mh{j}").alias(f"b{j}") for j in range(NUM_PERM)],
-    )
-    matches = sum(
-        (F.col(f"a{j}") == F.col(f"b{j}")).cast("int") for j in range(NUM_PERM)
-    )
+    a, b, est = _estimate_sides(new_mh, "new_id", corpus_mh, "old_id")
     scored = (
         b.join(cand.join(a, "new_id"), "old_id")
-        .select(
-            "new_id",
-            "old_id",
-            (matches / F.lit(float(NUM_PERM))).alias("est_jaccard"),
-        )
+        .select("new_id", "old_id", est)
         .where(F.col("est_jaccard") >= EST_THRESHOLD)
     )
     w = Window.partitionBy("new_id").orderBy(
         F.col("est_jaccard").desc(), F.col("old_id")
     )
-    best = (
+    return (
         scored.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
         .select("new_id", "old_id", "est_jaccard")
     )
-    new_docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("source") == INCR_SOURCE)
-        .select(F.col("doc_id").alias("new_id"))
-    )
+
+
+def _dedup_verdicts(new_docs: DataFrame, best: DataFrame) -> DataFrame:
+    """One verdict per ``new_docs`` row (column new_id): novel, or a
+    duplicate of its ``_best_prior_match``."""
     return new_docs.join(best, "new_id", "left").select(
         F.col("new_id").alias("doc_id"),
         F.col("old_id").isNull().alias("is_novel"),

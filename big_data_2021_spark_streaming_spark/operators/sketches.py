@@ -75,6 +75,12 @@ CMS_D = 3  # hash rows
 CMS_W = 1024  # buckets per row
 CMS_TOPN = 20  # heavy hitters to probe
 
+# ---- presence-bitmap parameters -------------------------------------
+BITMAP_WORDS = 1024  # user-presence bitmap words
+BITMAP_BITS_PER_WORD = 60  # bits used per BIGINT word: bit 63 would
+# wrap Spark's shiftleft negative and overflow DuckDB's checked <<,
+# so words carry 60 bits and stay positive in both engines
+
 
 def _h(seed: str, expr_col: F.Column) -> F.Column:
     """Portable 60-bit hash: md5(seed:value) hex prefix → bigint.
@@ -1049,3 +1055,44 @@ QUERIES = {
     "sketch_bloom_reduction": sketch_bloom_reduction,
     "sketch_cms_heavy_hitters": sketch_cms_heavy_hitters,
 }
+
+
+# ---------------------------------------------------------------------
+# User-presence bitmap
+# ---------------------------------------------------------------------
+
+
+def user_presence_bitmap(
+    events: DataFrame,
+    words: int = BITMAP_WORDS,
+    bits_per_word: int = BITMAP_BITS_PER_WORD,
+) -> DataFrame:
+    """(event_type, word, mask): each user hashes to one bit of a
+    words×bits_per_word presence bitmap per event type, and the bits
+    of a word OR together. The lineage of the batch
+    ``analytics.event_user_bitmap`` and, over a streaming frame, its
+    streaming form.
+
+    bit_or is associative and idempotent, so a stream's state is
+    exactly the batch sketch at every micro-batch boundary: replays
+    and at-least-once sources cannot corrupt it (re-OR-ing a bit is a
+    no-op), where exact count_distinct state grows without bound.
+    State is |types|·words rows however long the stream; complete and
+    update output both work."""
+    uid = F.col("user_id").cast("string")
+    return (
+        events.select(
+            "event_type",
+            (_h("bmw", uid) % (words * bits_per_word)).alias("slot"),
+        )
+        .select(
+            "event_type",
+            F.expr(f"slot div {bits_per_word}").alias("word"),
+            F.expr(
+                f"shiftleft(cast(1 as bigint),"
+                f" cast(slot % {bits_per_word} as int))"
+            ).alias("bit"),
+        )
+        .groupBy("event_type", "word")
+        .agg(F.expr("bit_or(bit)").alias("mask"))
+    )

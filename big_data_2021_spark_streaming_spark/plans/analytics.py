@@ -4326,17 +4326,12 @@ def order_fulfillment_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-BITMAP_WORDS = 1024  # user-presence bitmap words
-BITMAP_BITS_PER_WORD = 60  # bits used per BIGINT word: bit 63 would
-# wrap Spark's shiftleft negative and overflow DuckDB's checked <<,
-# so words carry 60 bits and stay positive in both engines
-
-
 def event_user_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bitmap-index distinct-user counting per event type: each user
-    hashes to one bit of a BITMAP_WORDS×64-bit presence bitmap; words
-    OR together map-side, and the exact popcount of the OR'd bitmap is
-    the distinct estimate (exact until buckets collide — the report
+    hashes to one bit of a presence bitmap
+    (``sketches.user_presence_bitmap``); words OR together map-side,
+    and the exact popcount of the OR'd bitmap is the distinct
+    estimate (exact until buckets collide — the report
     carries the exact distinct count and the collision shortfall).
     This is the roaring-bitmap/BITMAP index pattern every OLAP engine
     uses for COUNT(DISTINCT) acceleration: per-partition bitmaps are
@@ -4347,26 +4342,10 @@ def event_user_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     → per-type popcount sum; the exact side is the one count-distinct
     shuffle this sketch exists to avoid — kept here as the acceptance
     metric, same as the HLL/CMS siblings."""
-    from ..operators.sketches import _h
+    from ..operators.sketches import user_presence_bitmap
 
     events = load_table(spark, sf_dir, "events")
-    uid = F.col("user_id").cast("string")
-    slots = events.select(
-        "event_type",
-        (_h("bmw", uid) % (BITMAP_WORDS * BITMAP_BITS_PER_WORD)).alias(
-            "slot"
-        ),
-    ).select(
-        "event_type",
-        F.expr(f"slot div {BITMAP_BITS_PER_WORD}").alias("word"),
-        F.expr(
-            f"shiftleft(cast(1 as bigint),"
-            f" cast(slot % {BITMAP_BITS_PER_WORD} as int))"
-        ).alias("bit"),
-    )
-    words = slots.groupBy("event_type", "word").agg(
-        F.expr("bit_or(bit)").alias("mask")
-    )
+    words = user_presence_bitmap(events)
     counts = words.groupBy("event_type").agg(
         F.sum(F.bit_count("mask")).cast("bigint").alias("bitmap_count"),
         F.count(F.lit(1)).cast("bigint").alias("words_used"),

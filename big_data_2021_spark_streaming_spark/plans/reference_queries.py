@@ -29,7 +29,7 @@ per-window city cardinality is bounded (it is: #US cities).
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 from ..schemas import rsvp_schema
 
@@ -40,11 +40,23 @@ def decode_rsvps(raw: DataFrame, mode: str = "faithful") -> DataFrame:
     ``raw`` has columns (value STRING, timestamp STRING) — what the
     reference sees after its cast-projection
     (``srapk_structure_streaming.py:16``). PERMISSIVE ``from_json``:
-    malformed rows become a NULL struct, as in the reference.
+    malformed rows stay, with a ``data`` struct ``decode_failed`` flags.
     """
     return raw.select(
         F.from_json("value", rsvp_schema(mode)).alias("data"),
         F.col("timestamp"),
+    )
+
+
+def decode_failed() -> Column:
+    """True on a decoded row whose JSON failed to parse. PERMISSIVE
+    ``from_json`` yields an all-NULL struct for corrupt input, not a
+    NULL struct, so the test is on three top-level fields that are
+    never all NULL together on a valid record."""
+    return (
+        F.col("data.rsvp_id").isNull()
+        & F.col("data.group").isNull()
+        & F.col("data.event").isNull()
     )
 
 

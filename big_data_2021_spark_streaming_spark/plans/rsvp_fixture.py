@@ -39,7 +39,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import STATE_NAME_BY_ABBREV, states_dimension
 from ..session import local_frame
-from .reference_queries import decode_rsvps, q2_us_meetups_enriched
+from .reference_queries import (
+    decode_failed,
+    decode_rsvps,
+    q2_us_meetups_enriched,
+)
 
 # (rsvp_id, country, city, state, mtime_ms, guests, event_id, event_name, time_ms)
 _FIXTURE = [
@@ -145,17 +149,9 @@ def rsvp_decode_failures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     env = _envelope_df(spark)
     parsed = env.select(F.from_json("value", rsvp_schema("faithful")).alias("data"))
-    # modern from_json yields an ALL-NULL struct for corrupt input, not
-    # a NULL struct — detect via fields that are never all-null together
-    # on a valid record
-    corrupt = (
-        F.col("data.rsvp_id").isNull()
-        & F.col("data.group").isNull()
-        & F.col("data.event").isNull()
-    )
     return parsed.agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(corrupt.cast("bigint")).alias("n_corrupt"),
+        F.sum(decode_failed().cast("bigint")).alias("n_corrupt"),
     )
 
 

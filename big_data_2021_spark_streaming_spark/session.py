@@ -33,6 +33,15 @@ from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# the defaults a live session accepts: ``get_session`` builds with them
+# and ``configure_existing`` sets them on a session it did not build
+RUNTIME_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+}
+
 
 def get_session(
     app_name: str = "big-data-2021-spark-streaming-spark",
@@ -55,12 +64,8 @@ def get_session(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         )
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.showConsoleProgress", "false")
@@ -73,20 +78,25 @@ def get_session(
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         )
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**RUNTIME_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    _ship_or_warn(spark)
+    return spark
+
+
+def _ship_or_warn(spark: SparkSession) -> None:
+    """``_ship_package``, best-effort: repo-root cwd still works without
+    it — but say so, or a broken zip surfaces later as an opaque
+    worker-side ModuleNotFoundError with no clue it was a shipping
+    failure."""
     try:
         _ship_package(spark)
     except Exception as e:
-        # best-effort: repo-root cwd still works without it — but say
-        # so, or a broken zip surfaces later as an opaque worker-side
-        # ModuleNotFoundError with no clue it was a shipping failure
         print(
             f"warning: could not ship package to workers: {e}",
             file=sys.stderr,
         )
-    return spark
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -177,24 +187,12 @@ def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
 def configure_existing(spark: SparkSession) -> SparkSession:
     """Apply the engine's runtime-settable defaults to a session we did
     not create (the driver hands us one in ``__spark_entry__``)."""
-    runtime = {
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-    }
-    for k, v in runtime.items():
+    for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:
             pass  # static conf on a live session — keep going
-    try:
-        _ship_package(spark)
-    except Exception as e:
-        print(
-            f"warning: could not ship package to workers: {e}",
-            file=sys.stderr,
-        )
+    _ship_or_warn(spark)
     return spark
 
 

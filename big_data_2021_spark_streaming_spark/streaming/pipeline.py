@@ -113,19 +113,15 @@ def with_ingest_metrics(df: DataFrame, name: str = "ingest_metrics") -> DataFram
     aggregation query over the stream.
 
     Works on any frame with the decoded RSVP ``data`` struct.
-    PERMISSIVE ``from_json`` turns a malformed record into a struct of
-    all-NULL fields (not a NULL struct — the same predicate
-    ``rsvp_decode_failures`` pins), so ``n_corrupt`` is the live
-    decode-failure meter the reference had no way to see."""
-    corrupt = (
-        F.col("data.rsvp_id").isNull()
-        & F.col("data.group").isNull()
-        & F.col("data.event").isNull()
-    )
+    ``n_corrupt`` counts ``reference_queries.decode_failed`` rows (the
+    predicate ``rsvp_decode_failures`` pins): the live decode-failure
+    meter the reference had no way to see."""
+    from ..plans.reference_queries import decode_failed
+
     return df.observe(
         name,
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(corrupt.cast("bigint")).alias("n_corrupt"),
+        F.sum(decode_failed().cast("bigint")).alias("n_corrupt"),
         F.max("timestamp").alias("max_event_ts"),
     )
 
@@ -403,38 +399,39 @@ def read_upsert_state(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(f"{out_dir}/v={max(versions)}")
 
 
-DRIFT_BUCKETS = 10
-
-
 def drift_monitor_batch_writer(
     ref_cells: dict[int, int], lo: float, hi: float, out_dir: str
 ):
     """batch_fn for ``to_foreach_batch_sink``: per micro-batch
     distribution-drift alarm — bucket the batch's ``value`` on the
-    FIXED [lo, hi) equi-width grid a reference corpus defined, compute
+    FIXED [lo, hi] equi-width grid a reference corpus defined, compute
     the exact total-variation distance against the reference histogram
-    (the same |o_b·n_ref − o_ref·n_b| integer reformulation as
+    (``audit.drift_bucket`` and ``audit.tvd_micro``, the expressions of
     ``operators.audit.value_drift_tvd``), and land ONE metrics row per
     batch in ``out_dir/batch_id=N`` (overwrite — idempotent under
     batch replay, same contract as idempotent_parquet_batch_writer).
+    An empty batch writes n_batch = 0, tvd_micro = 0; a ``ref_cells``
+    with no positive total is a ValueError when the writer is built.
 
     Everything stays on executors: the reference histogram is a
-    ≤ DRIFT_BUCKETS-row broadcast, the batch reduces to bucket cells,
+    ≤ audit.DRIFT_BUCKETS-row broadcast, the batch reduces to bucket cells,
     and the alarm row is WRITTEN, not collected — the shape a 100 TB
     ingest pipeline's per-batch quality gate runs."""
+    from ..operators.audit import drift_bucket, tvd_micro
+
     n_ref = sum(ref_cells.values())
+    if n_ref <= 0:
+        raise ValueError(
+            "drift_monitor_batch_writer: ref_cells must hold a reference "
+            f"histogram with a positive total, got {ref_cells!r}"
+        )
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         ref = local_frame(
             spark, sorted(ref_cells.items()), "bucket INT, o_ref BIGINT"
         )
-        bucket = F.least(
-            F.lit(DRIFT_BUCKETS - 1),
-            F.floor(
-                (F.col("value") - F.lit(lo)) * DRIFT_BUCKETS / F.lit(hi - lo)
-            ),
-        ).cast("int")
+        bucket = drift_bucket(F.col("value"), F.lit(lo), F.lit(hi))
         cells = (
             batch_df.select(bucket.alias("bucket"))
             .groupBy("bucket")
@@ -461,10 +458,7 @@ def drift_monitor_batch_writer(
             .select(
                 F.lit(batch_id).cast("bigint").alias("batch_id"),
                 "n_batch",
-                F.expr(
-                    f"(2 * 1000000 * num + 2 * n_batch * {n_ref})"
-                    f" div (4 * n_batch * {n_ref})"
-                ).alias("tvd_micro"),
+                tvd_micro("n_batch", str(n_ref)).alias("tvd_micro"),
             )
         )
         out.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
@@ -502,24 +496,21 @@ def incremental_dedup_batch_writer(out_dir: str):
     corpus and rewrites exactly its own partitions — the same
     exactly-once-effect contract as the other foreachBatch writers.
 
-    Scale shape = the batch operator's: the increment's band rows land
-    on the corpus band table via a (band, sig) equi-join (candidate
-    work bounded by true collisions), the corpus signature table is
-    never reshuffled or rewritten (append-only partitions), and join
-    strategy is left to AQE — a pinned broadcast here is the
-    dup-dense-corpus job-killer the round-5 audit removed. The keyed-
+    The match is the batch operator's own code: the writer signs the
+    batch with ``dedup._minhash_of`` and calls
+    ``dedup._best_prior_match`` (band equi-join, estimate, best-match
+    window) and ``dedup._dedup_verdicts``; it keeps only the parquet
+    state above. The corpus signature table is never reshuffled or
+    rewritten (append-only partitions). The keyed-
     state (transformWithState) formulation of the same operator needs
     the protobuf runtime this sandbox lacks; foreachBatch + partitioned
     parquet state is the deployable equivalent and is trigger-shape
     invariant (pinned by the slicing test)."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window
-
         from ..operators.dedup import (
-            EST_THRESHOLD,
-            NUM_PERM,
-            _band_rows,
+            _best_prior_match,
+            _dedup_verdicts,
             _doc_tokens,
             _minhash_of,
         )
@@ -527,68 +518,16 @@ def incremental_dedup_batch_writer(out_dir: str):
         spark = batch_df.sparkSession
         mh_new = _minhash_of(_doc_tokens(batch_df)).persist()
         try:
-            best = None
             if batch_id > 0:
                 corpus = spark.read.parquet(f"{out_dir}/sigs").where(
                     F.col("ingest_batch") < batch_id
                 )
-                bands_old = _band_rows(corpus).select(
-                    F.col("doc_id").alias("old_id"), "band", "sig"
-                )
-                bands_new = _band_rows(mh_new).select(
-                    F.col("doc_id").alias("new_id"), "band", "sig"
-                )
-                cand = (
-                    bands_old.join(bands_new, ["band", "sig"])
-                    .select("new_id", "old_id")
-                    .distinct()
-                )
-                a = mh_new.select(
-                    F.col("doc_id").alias("new_id"),
-                    *[F.col(f"mh{j}").alias(f"a{j}") for j in range(NUM_PERM)],
-                )
-                b = corpus.select(
-                    F.col("doc_id").alias("old_id"),
-                    *[F.col(f"mh{j}").alias(f"b{j}") for j in range(NUM_PERM)],
-                )
-                matches = sum(
-                    (F.col(f"a{j}") == F.col(f"b{j}")).cast("int")
-                    for j in range(NUM_PERM)
-                )
-                scored = (
-                    b.join(cand.join(a, "new_id"), "old_id")
-                    .select(
-                        "new_id",
-                        "old_id",
-                        (matches / F.lit(float(NUM_PERM))).alias(
-                            "est_jaccard"
-                        ),
-                    )
-                    .where(F.col("est_jaccard") >= EST_THRESHOLD)
-                )
-                w = Window.partitionBy("new_id").orderBy(
-                    F.col("est_jaccard").desc(), F.col("old_id")
-                )
-                best = (
-                    scored.withColumn("rn", F.row_number().over(w))
-                    .where(F.col("rn") == 1)
-                    .select("new_id", "old_id", "est_jaccard")
-                )
-            new_docs = batch_df.select(F.col("doc_id").alias("new_id"))
-            if best is None:
-                verdicts = new_docs.select(
-                    F.col("new_id").alias("doc_id"),
-                    F.lit(True).alias("is_novel"),
-                    F.lit(None).cast("long").alias("dup_of"),
-                    F.lit(None).cast("double").alias("est_jaccard"),
-                )
-            else:
-                verdicts = new_docs.join(best, "new_id", "left").select(
-                    F.col("new_id").alias("doc_id"),
-                    F.col("old_id").isNull().alias("is_novel"),
-                    F.col("old_id").alias("dup_of"),
-                    "est_jaccard",
-                )
+            else:  # no corpus yet: an empty one, so every doc is novel
+                corpus = mh_new.where(F.lit(False))
+            verdicts = _dedup_verdicts(
+                batch_df.select(F.col("doc_id").alias("new_id")),
+                _best_prior_match(corpus, mh_new),
+            )
             verdicts.write.mode("overwrite").parquet(
                 f"{out_dir}/verdicts/batch_id={batch_id}"
             )
@@ -842,6 +781,28 @@ def ewma_spike_step(
     return out, new_hist
 
 
+def ewma_fold(
+    user_id, rows, hist: list[int]
+) -> tuple[list[tuple], list[int]]:
+    """One user's micro-batch through the EWMA spike detector: ``rows``
+    (a pandas frame with event_id, ts, value) in (ts, event_id) order,
+    each value quantized to signed half-up micro-units and folded
+    through :func:`ewma_spike_step` from the history ``hist``. Returns
+    the spike rows, in ``EWMA_OUTPUT_SCHEMA`` column order, and the
+    updated history. Both streaming forms call it; it needs no JVM."""
+    import math
+
+    out = []
+    rows = rows.sort_values(["ts", "event_id"])
+    for eid, v in zip(rows["event_id"], rows["value"]):
+        v = float(v)
+        vq = int(math.floor(abs(v) * 1e6 + 0.5)) * (1 if v >= 0 else -1)
+        res, hist = ewma_spike_step(hist, vq)
+        if res is not None:
+            out.append((int(user_id), int(eid), v, res[0], res[1]))
+    return out, hist
+
+
 def stream_ewma_spikes(
     events: DataFrame, watermark_delay: str = "10 minutes"
 ) -> DataFrame:
@@ -849,33 +810,23 @@ def stream_ewma_spikes(
     (plans/analytics.py::event_ewma_spikes): per-user state is the last
     ≤EWMA_DEPTH micro-unit values — O(DEPTH) longs per active user, the
     bounded-state shape — folded event-by-event in (ts, event_id)
-    order within each micro-batch via applyInPandasWithState.
+    order within each micro-batch (:func:`ewma_fold`) via
+    applyInPandasWithState.
 
     Batch≡stream equivalence holds when micro-batches arrive in
     event-time order (the replay contract the equivalence test pins);
     an out-of-order event inside one batch is still handled by the
     in-batch sort. The watermark bounds how stale a batch may be, not
     the state size (history is already bounded)."""
-    import math
-
     import pandas as pd
-
-    cols = [f.name for f in EWMA_OUTPUT_SCHEMA.fields]
 
     def update(key, pdfs, state: GroupState):
         (user_id,) = key
-        rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
         hist = list(state.get[0]) if state.exists else []
-        out = []
-        for eid, v in zip(rows["event_id"], rows["value"]):
-            v = float(v)
-            vq = int(math.floor(abs(v) * 1e6 + 0.5)) * (1 if v >= 0 else -1)
-            res, hist = ewma_spike_step(hist, vq)
-            if res is not None:
-                out.append((int(user_id), int(eid), v, res[0], res[1]))
+        out, hist = ewma_fold(user_id, pd.concat(list(pdfs)), hist)
         state.update((hist,))
         if out:
-            yield pd.DataFrame(out, columns=cols)
+            yield pd.DataFrame(out, columns=EWMA_OUTPUT_SCHEMA.fieldNames())
 
     return (
         events.withWatermark("ts", watermark_delay)
@@ -894,8 +845,8 @@ def streaming_ewma_tws(
     events: DataFrame, watermark_delay: str = "10 minutes"
 ) -> DataFrame:
     """``transformWithStateInPandas`` form of :func:`stream_ewma_spikes`
-    (VERDICT r06 item 4): the same pure per-event fold
-    (:func:`ewma_spike_step`, shared with the batch plan) over a
+    (VERDICT r06 item 4): the same pure per-user fold
+    (:func:`ewma_fold` over :func:`ewma_spike_step`) over a
     per-user ValueState holding the bounded ≤EWMA_DEPTH history — the
     Spark 4 arbitrary-state API the detector deploys on, where the
     applyInPandasWithState twin is the compatibility form. The
@@ -910,15 +861,11 @@ def streaming_ewma_tws(
     PLAN contract (operator, key, schema, mode, watermark) is pinned
     ungated because building the streaming plan needs no state server.
     """
-    import math
-
     import pandas as pd
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,
     )
-
-    cols = [f.name for f in EWMA_OUTPUT_SCHEMA.fields]
 
     class EwmaProcessor(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -926,18 +873,11 @@ def streaming_ewma_tws(
 
         def handleInputRows(self, key, rows, timerValues):
             (user_id,) = key
-            pdf = pd.concat(list(rows)).sort_values(["ts", "event_id"])
             hist = list(self._hist.get()[0]) if self._hist.exists() else []
-            out = []
-            for eid, v in zip(pdf["event_id"], pdf["value"]):
-                v = float(v)
-                vq = int(math.floor(abs(v) * 1e6 + 0.5)) * (1 if v >= 0 else -1)
-                res, hist = ewma_spike_step(hist, vq)
-                if res is not None:
-                    out.append((int(user_id), int(eid), v, res[0], res[1]))
+            out, hist = ewma_fold(user_id, pd.concat(list(rows)), hist)
             self._hist.update((hist,))
             if out:
-                yield pd.DataFrame(out, columns=cols)
+                yield pd.DataFrame(out, columns=EWMA_OUTPUT_SCHEMA.fieldNames())
 
         def close(self) -> None:
             pass
@@ -1041,43 +981,6 @@ def streaming_topk(events: DataFrame, k: int = 3) -> DataFrame:
     )
 
 
-def stream_user_bitmap(
-    events: DataFrame, words: int = 1024, bits_per_word: int = 60
-) -> DataFrame:
-    """Streaming twin of ``analytics.event_user_bitmap``: per
-    (event_type, word) presence-bit OR over an unbounded user stream.
-    bit_or is associative+idempotent, so the streaming state is EXACTLY
-    the batch sketch at every micro-batch boundary — replays and
-    at-least-once sources cannot corrupt it (re-OR-ing a bit is a
-    no-op), which is the property that makes bitmap/HLL-class sketches
-    the right distinct counters for streams while exact
-    count_distinct state grows without bound. State is bounded at
-    |types|·words rows regardless of stream length; 60 bits per word
-    keep the mask positive in int64 (bit 63 would wrap).
-
-    Complete/update output both work; the pinned test ORs a prefix
-    emission into a later one to prove mergeability."""
-    from ..operators.sketches import _h
-
-    uid = F.col("user_id").cast("string")
-    return (
-        events.select(
-            "event_type",
-            (_h("bmw", uid) % (words * bits_per_word)).alias("slot"),
-        )
-        .select(
-            "event_type",
-            F.expr(f"slot div {bits_per_word}").alias("word"),
-            F.expr(
-                f"shiftleft(cast(1 as bigint),"
-                f" cast(slot % {bits_per_word} as int))"
-            ).alias("bit"),
-        )
-        .groupBy("event_type", "word")
-        .agg(F.expr("bit_or(bit)").alias("mask"))
-    )
-
-
 def merge_session_events(
     open_session: tuple | None, events, gap_us: int
 ) -> tuple[list[tuple], tuple]:
@@ -1115,5 +1018,7 @@ def _duration_to_us(text: str) -> int:
         "minutes": 60_000_000,
         "hour": 3_600_000_000,
         "hours": 3_600_000_000,
-    }[unit]
-    return int(amount) * scale
+    }
+    if unit not in scale:
+        raise ValueError(f"duration {text!r}: unit must be one of {sorted(scale)}")
+    return int(amount) * scale[unit]

@@ -198,9 +198,11 @@ def test_fulfillment_latency_matches_pure_python(spark):
 
 
 def test_bitmap_sketch_counts_bounded_by_exact(spark):
-    from big_data_2021_spark_streaming_spark.plans.analytics import (
+    from big_data_2021_spark_streaming_spark.operators.sketches import (
         BITMAP_BITS_PER_WORD,
         BITMAP_WORDS,
+    )
+    from big_data_2021_spark_streaming_spark.plans.analytics import (
         event_user_bitmap,
     )
 

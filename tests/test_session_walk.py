@@ -9,10 +9,12 @@ the property that makes micro-batch boundaries semantically invisible).
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given
 from hypothesis import strategies as st
 
 from big_data_2021_spark_streaming_spark.streaming.pipeline import (
+    _duration_to_us,
     merge_session_events,
 )
 
@@ -73,3 +75,8 @@ def test_batch_slicing_is_invisible(events, gap_us, data):
 def test_empty_batch_keeps_state():
     closed, cur = merge_session_events((5, 10, 2, 3.0), [], 100)
     assert closed == [] and cur == (5, 10, 2, 3.0)
+
+
+def test_unknown_gap_unit_is_a_named_error():
+    with pytest.raises(ValueError, match="unit must be one of"):
+        _duration_to_us("1 day")

@@ -7,7 +7,9 @@ from __future__ import annotations
 import math
 
 import pyspark.sql.functions as F
+import pytest
 
+from big_data_2021_spark_streaming_spark.operators.audit import DRIFT_BUCKETS
 from big_data_2021_spark_streaming_spark.sources.batch import load_table
 from big_data_2021_spark_streaming_spark.streaming import pipeline
 
@@ -15,8 +17,8 @@ from big_data_2021_spark_streaming_spark.streaming import pipeline
 def _ref_histogram(events):
     lo, hi = events.agg(F.min("value"), F.max("value")).first()
     bucket = F.least(
-        F.lit(pipeline.DRIFT_BUCKETS - 1),
-        F.floor((F.col("value") - F.lit(lo)) * pipeline.DRIFT_BUCKETS / F.lit(hi - lo)),
+        F.lit(DRIFT_BUCKETS - 1),
+        F.floor((F.col("value") - F.lit(lo)) * DRIFT_BUCKETS / F.lit(hi - lo)),
     ).cast("int")
     cells = (
         events.select(bucket.alias("bucket"))
@@ -77,9 +79,9 @@ def test_stream_drift_monitor_per_batch_tvd(spark, sf_dir, tmp_path):
     # recompute expected TVD per batch with the same integer formula
     def cells_of(df):
         bucket = F.least(
-            F.lit(pipeline.DRIFT_BUCKETS - 1),
+            F.lit(DRIFT_BUCKETS - 1),
             F.floor(
-                (F.col("value") - F.lit(lo)) * pipeline.DRIFT_BUCKETS / F.lit(hi - lo)
+                (F.col("value") - F.lit(lo)) * DRIFT_BUCKETS / F.lit(hi - lo)
             ),
         ).cast("int")
         got = (
@@ -97,6 +99,22 @@ def test_stream_drift_monitor_per_batch_tvd(spark, sf_dir, tmp_path):
     assert not math.isnan(max(got))
 
 
+def test_drift_writer_empty_batch_writes_zero_tvd(spark, tmp_path):
+    # an empty micro-batch has no measurable drift: one row with
+    # n_batch = 0 and tvd_micro = 0, not an ANSI divide-by-zero
+    out_dir = str(tmp_path / "drift_out")
+    write = pipeline.drift_monitor_batch_writer({0: 3, 9: 1}, 0.0, 1.0, out_dir)
+    write(spark.range(0).selectExpr("CAST(id AS DOUBLE) AS value"), 4)
+    rows = spark.read.parquet(f"{out_dir}/batch_id=4").collect()
+    assert [(r.batch_id, r.n_batch, r.tvd_micro) for r in rows] == [(4, 0, 0)]
+
+
+@pytest.mark.parametrize("ref_cells", [{}, {0: 0, 9: 0}])
+def test_drift_writer_rejects_an_empty_reference(ref_cells, tmp_path):
+    with pytest.raises(ValueError, match="ref_cells"):
+        pipeline.drift_monitor_batch_writer(ref_cells, 0.0, 1.0, str(tmp_path))
+
+
 def test_stream_user_bitmap_equals_batch_and_merges(spark, tmp_path):
     """The streaming bitmap sketch must equal the batch sketch over the
     same rows at every boundary, and a stale emission OR-merged into a
@@ -104,8 +122,10 @@ def test_stream_user_bitmap_equals_batch_and_merges(spark, tmp_path):
     that makes it replay-safe."""
     import json as _json
 
+    from big_data_2021_spark_streaming_spark.operators.sketches import (
+        user_presence_bitmap as stream_user_bitmap,
+    )
     from big_data_2021_spark_streaming_spark.streaming.pipeline import (
-        stream_user_bitmap,
         to_memory_sink,
     )
 

@@ -7,8 +7,10 @@ foreachBatch stream with partitioned-parquet signature state. Pins:
 - batch ≡ stream: streaming the corpus as (everything-else, then the
   INCR_SOURCE docs) must give the INCR batch verdicts value-identical
   to the batch operator (which the driver's DuckDB oracle has
-  hash-verified) — this is ALSO the drift guard for the signature
-  math both paths share (see dedup._minhash_of);
+  hash-verified). Both paths run the same code (dedup._minhash_of,
+  dedup._best_prior_match, dedup._dedup_verdicts), so this pins that
+  shared code over both kinds of state: a table split by source, and
+  parquet signature partitions read back by batch id;
 - replay idempotence: re-running a committed batch rewrites exactly
   its own partitions and sees exactly the pre-batch corpus;
 - slicing invariance: how the PRIOR corpus was split into micro-batches
