@@ -1164,27 +1164,6 @@ EXPECTATIONS: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def expectations_gate_sql(table: str) -> tuple[str, str]:
-    """Compile a table's declarative EXPECTATIONS into the
-    ``(reject_sql, reason_sql)`` pair ``streaming.pipeline.
-    dlq_split_batch_writer`` consumes — the SAME contract that
-    ``data_quality_report`` scores in batch quarantines rows on the
-    streaming ingest path, so the two surfaces can never drift.
-    ``reason`` is the FIRST violated expectation in declaration order
-    (deterministic; a row violating several contracts is quarantined
-    once, attributed to the earliest)."""
-    checks = [(n, p) for t, n, p in EXPECTATIONS if t == table]
-    if not checks:
-        raise ValueError(f"no expectations declared for table {table!r}")
-    reject = " OR ".join(f"({p})" for _, p in checks)
-    reason = (
-        "CASE "
-        + " ".join(f"WHEN {p} THEN '{n}'" for n, p in checks)
-        + " ELSE NULL END"
-    )
-    return reject, reason
-
-
 def data_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declarative expectations runner (the dbt-test / Great-
     Expectations shape): every contract in ``EXPECTATIONS`` evaluated

@@ -723,26 +723,16 @@ def _sq_dist(v, c) -> F.Column:
     )
 
 
-# Centroid-state tier bound. At or below this many clusters the Lloyd
-# state is driver-resident (a dict) and rides to executors as ONE
-# broadcast row holding the cid-sorted centroid array — k×DIM aggregate
-# values, not data. Past it that shape breaks twice over: the per-round
-# collect is no longer "an aggregate" (k = n/KM_TARGET_CLUSTER means a
-# billion-vector corpus collects ~4M×64 decimals every round) and the
-# single broadcast array row approaches the broadcast/codegen limits.
-# So past the bound the centroid table becomes a DISTRIBUTED frame and
-# the argmin a coarse-cell equi-join (_lloyd_distributed) — the
-# MLlib/Faiss-IVF shape. ``_cent_frame`` asserts the bound loudly, so
-# the driver-resident path cannot silently run at a k it was never
-# sized for.
+# Centroid-state bound. The Lloyd state is driver-resident (a dict)
+# and rides to executors as ONE broadcast row holding the cid-sorted
+# centroid array — k×DIM aggregate values, not data. Past this many
+# clusters that shape breaks twice over: the per-round collect is no
+# longer "an aggregate" and the single broadcast array row approaches
+# the broadcast/codegen limits. k = n/KM_TARGET_CLUSTER stays under it
+# up to 256k vectors; ``kmeans_assignments`` refuses a larger corpus
+# with a ValueError before any persist or Lloyd job, and
+# ``_cent_frame`` asserts the bound for every other caller.
 LLOYD_BROADCAST_MAX = 1024
-# Coarse cells probed per vector in the distributed tier. Probing all
-# occupied cells reproduces exhaustive Lloyd bit-for-bit (pinned in
-# tests/test_similarity_lloyd.py); the default trades that for ~nprobe/
-# k_coarse of the candidate work, the standard web-scale k-means
-# approximation (hierarchical / IVF-style Lloyd). The graded corpora
-# never reach this tier (k = n/250 > 1024 needs n > 256k vectors).
-LLOYD_NPROBE = 8
 
 
 def _corpus_rows(sf_dir: str) -> int | None:
@@ -786,13 +776,12 @@ def _cent_frame(spark: SparkSession, cents: dict[int, list[float]]) -> DataFrame
     """The current centroids as ONE row holding the cid-sorted centroid
     array — broadcast data, not a k×DIM expression tree (inlining k
     centroids as literals recompiled a k×DIM tree per Lloyd round: ~150 s
-    of pure JIT at k=128, measured round 5). Loudly refuses past the
-    driver-resident tier bound."""
+    of pure JIT at k=128, measured round 5). Loudly refuses past
+    LLOYD_BROADCAST_MAX."""
     assert len(cents) <= LLOYD_BROADCAST_MAX, (
         f"{len(cents)} centroids exceed LLOYD_BROADCAST_MAX="
         f"{LLOYD_BROADCAST_MAX}: the 1-row broadcast centroid array and "
-        "per-round driver collect are not sized for this k — use "
-        "_lloyd_distributed (kmeans_assignments selects it automatically)"
+        "per-round driver collect are not sized for this k"
     )
     return local_frame(
         spark,
@@ -801,7 +790,7 @@ def _cent_frame(spark: SparkSession, cents: dict[int, list[float]]) -> DataFrame
     )
 
 
-def _km_best(vcol: str = "v") -> F.Column:
+def _km_best() -> F.Column:
     """Argmin over the broadcast centroid array: array_min on
     struct<d, cid> is lexicographic — min distance with a deterministic
     cluster-id tiebreak. Element order (cid-sorted) and per-centroid
@@ -810,7 +799,7 @@ def _km_best(vcol: str = "v") -> F.Column:
         F.transform(
             F.col("cents"),
             lambda s: F.struct(
-                _sq_dist(F.col(vcol), s["c"]).alias("d"),
+                _sq_dist(F.col("v"), s["c"]).alias("d"),
                 s["cid"].alias("cid"),
             ),
         )
@@ -840,23 +829,22 @@ def _seed_rows(vecs: DataFrame, k: int) -> DataFrame:
     Rank-based seeds hold the bound on any id distribution, and on the
     dense-from-0 graded corpora they are the identical rows (ids
     0..k-1), so driver-graded values are unchanged. Cluster ids are the
-    seed vec_ids in BOTH tiers."""
+    seed vec_ids."""
     return vecs.select("vec_id", "v").orderBy("vec_id").limit(k)
 
 
-def _lloyd_broadcast_train(
-    spark: SparkSession, vecs: DataFrame, k: int
-) -> dict[int, list[float]]:
+def _lloyd_broadcast(spark: SparkSession, vecs: DataFrame, k: int) -> DataFrame:
     """KM_ITERS Lloyd rounds with driver-resident centroid state
-    (k <= LLOYD_BROADCAST_MAX, asserted by _cent_frame). Each round is
+    (k <= LLOYD_BROADCAST_MAX, asserted by _cent_frame), then the final
+    cell assignment as one more broadcast argmin scan. Each round is
     ONE corpus scan with zero row shuffles: the 1-row crossJoin
     broadcasts and the update map-side-combines to k rows. The
     per-round ``collect()`` moves ~k×DIM numbers — an aggregate, not
-    data; that classification is exactly what the tier bound protects.
+    data; that classification is exactly what the bound protects.
     The mean is taken in double precision (float(decimal)/int), the
-    identical IEEE expression the oracle and the distributed tier use,
-    so tiers and engines agree bit-for-bit. Clusters that captured no
-    vectors keep their previous centroid."""
+    identical IEEE expression the oracle uses, so the engines agree
+    bit-for-bit. Clusters that captured no vectors keep their previous
+    centroid."""
     cents: dict[int, list[float]] = {
         int(r["vec_id"]): [float(x) for x in r["v"]]
         for r in _seed_rows(vecs, k).collect()
@@ -871,13 +859,10 @@ def _lloyd_broadcast_train(
             cents[int(r["cluster_id"])] = [
                 float(r[f"s{i}"]) / n for i in range(DIM)
             ]
-    return cents
-
-
-def _lloyd_broadcast(spark: SparkSession, vecs: DataFrame, k: int) -> DataFrame:
-    """Driver-resident-centroid tier: train, then the final cell
-    assignment as one more broadcast argmin scan."""
-    cents = _lloyd_broadcast_train(spark, vecs, k)
+    # built fresh, not reused from the loop: Spark names lambda
+    # variables from one session-wide counter, so skipping this call
+    # would rename them in the plan text of every later query (the
+    # text tools/plan_identity.py hashes)
     best = _km_best()
     return vecs.crossJoin(F.broadcast(_cent_frame(spark, cents))).select(
         "vec_id",
@@ -885,138 +870,6 @@ def _lloyd_broadcast(spark: SparkSession, vecs: DataFrame, k: int) -> DataFrame:
         best.getField("cid").alias("cluster_id"),
         best.getField("d").alias("d"),
     )
-
-
-def _assign_distributed(
-    spark: SparkSession,
-    vecs: DataFrame,
-    cent: DataFrame,
-    coarse: dict[int, list[float]],
-    nprobe: int,
-) -> DataFrame:
-    """One distributed-tier assignment pass: route the argmin through a
-    coarse quantizer so no n×k product is ever formed.
-
-    1. each fine centroid joins its nearest coarse cell (k × k_coarse
-       distance math, distributed — centroid rows are data here);
-    2. each vector probes its ``nprobe`` nearest OCCUPIED coarse cells
-       (n × k_coarse math + an n×nprobe explode). Probing only occupied
-       cells makes assignment total by construction: every probed cell
-       has >= 1 fine centroid, so no vector can end the round
-       unassigned;
-    3. vectors equi-join fine centroids on the cell id and take the
-       lexicographic min of struct(d, cid) — identical distance fold
-       and tiebreak as the broadcast tier, so with nprobe >= |occupied|
-       the result is bit-for-bit exhaustive Lloyd (pinned in tests).
-
-    Candidate volume is ~n × nprobe × (k/k_coarse) rows instead of n×k:
-    with k_coarse = ceil(sqrt(k)) that is a ~sqrt(k)/nprobe-fold
-    reduction, the hierarchical-k-means trade every web-scale trainer
-    (MLlib via its runs-of-centers, Faiss IVF training) makes."""
-    # (1) fine centroid -> coarse cell (argmin over the coarse array)
-    bestc = _km_best("c")
-    cell = cent.crossJoin(F.broadcast(_cent_frame(spark, coarse))).select(
-        F.col("cid").alias("fcid"),
-        "c",
-        bestc.getField("cid").alias("ccid"),
-    )
-    # occupied cells: <= k_coarse ids — a bounded aggregate collect of
-    # the same class as the coarse centroids themselves
-    occ = sorted(r["ccid"] for r in cell.select("ccid").distinct().collect())
-    occ_frame = _cent_frame(spark, {cid: coarse[cid] for cid in occ})
-    p = min(nprobe, len(occ))
-    # (2) per-vector probe list over occupied cells only
-    probes = (
-        vecs.crossJoin(F.broadcast(occ_frame))
-        .select(
-            "vec_id",
-            "v",
-            F.explode(
-                F.slice(
-                    F.array_sort(
-                        F.transform(
-                            F.col("cents"),
-                            lambda s: F.struct(
-                                _sq_dist(F.col("v"), s["c"]).alias("d"),
-                                s["cid"].alias("cid"),
-                            ),
-                        )
-                    ),
-                    1,
-                    p,
-                )
-            ).alias("pr"),
-        )
-        .select("vec_id", "v", F.col("pr.cid").alias("ccid"))
-    )
-    # (3) candidate equi-join + grouped argmin; `v` is constant within
-    # a vec_id group so first() is deterministic by value
-    scored = probes.join(cell, "ccid").select(
-        "vec_id",
-        "v",
-        F.struct(
-            _sq_dist(F.col("v"), F.col("c")).alias("d"),
-            F.col("fcid").alias("cid"),
-        ).alias("dc"),
-    )
-    return (
-        scored.groupBy("vec_id")
-        .agg(F.min("dc").alias("best"), F.first("v").alias("v"))
-        .select(
-            "vec_id",
-            "v",
-            F.col("best.cid").alias("cluster_id"),
-            F.col("best.d").alias("d"),
-        )
-    )
-
-
-def _lloyd_distributed(
-    spark: SparkSession, vecs: DataFrame, k: int, nprobe: int | None = None
-) -> DataFrame:
-    """Distributed-centroid tier (k > LLOYD_BROADCAST_MAX): Lloyd with
-    the centroid table as a DataFrame and the argmin as a coarse-cell
-    equi-join (_assign_distributed). Driver state is bounded by
-    k_coarse <= LLOYD_BROADCAST_MAX regardless of k; the k-row centroid
-    frame localCheckpoints each round so lineage never stacks
-    KM_ITERS joins deep. The Lloyd update divides DECIMAL sums cast to
-    double by the double count — the identical IEEE expression as the
-    broadcast tier's float(decimal)/int — so the tiers agree wherever
-    their candidate sets agree (everywhere, when nprobe >= |occupied|).
-
-    The one seed-time concentration: TakeOrderedAndProject funnels the
-    k seed rows through a single task before they become a distributed
-    frame — k×DIM doubles once at startup, not per round."""
-    nprobe = LLOYD_NPROBE if nprobe is None else nprobe
-    import math
-
-    k_coarse = min(LLOYD_BROADCAST_MAX, math.isqrt(max(k - 1, 1)) + 1)
-    coarse = _lloyd_broadcast_train(spark, vecs, k_coarse)
-    cent = (
-        _seed_rows(vecs, k)
-        .select(F.col("vec_id").alias("cid"), F.col("v").alias("c"))
-        .localCheckpoint()
-    )
-    for _ in range(KM_ITERS):
-        assigned = _assign_distributed(spark, vecs, cent, coarse, nprobe)
-        sums = _decimal_cluster_sums(assigned)
-        newc = F.array(
-            *[
-                F.col(f"s{i}").cast("double") / F.col("n").cast("double")
-                for i in range(DIM)
-            ]
-        )
-        cent = (
-            cent.join(
-                sums.select(F.col("cluster_id").alias("cid"), newc.alias("cnew")),
-                "cid",
-                "left",
-            )
-            # clusters that captured no vectors keep their previous centroid
-            .select("cid", F.coalesce("cnew", "c").alias("c"))
-            .localCheckpoint()
-        )
-    return _assign_distributed(spark, vecs, cent, coarse, nprobe)
 
 
 def kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1030,19 +883,11 @@ def kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     run once per (session, sf_dir); the assignment frame is persisted
     and session-cached like dedup's label frame.
 
-    Two physical tiers, selected by k, same Lloyd semantics:
-
-    - k <= LLOYD_BROADCAST_MAX — ``_lloyd_broadcast``: centroids are
-      driver-resident aggregates riding out as ONE broadcast row; each
-      round is one corpus scan with zero row shuffles. Every graded
-      corpus lands here (k = n/250 stays under 1024 up to 256k
-      vectors), on plans bit-identical to the pre-tier code.
-    - k > LLOYD_BROADCAST_MAX — ``_lloyd_distributed``: the centroid
-      table is a DataFrame and the argmin a coarse-cell equi-join, so
-      driver state stays O(sqrt(k)) and no n×k product is formed — the
-      shape that survives k ~ 4M on a billion-vector corpus, where the
-      broadcast tier's per-round collect (~4M×64 decimals) and 1-row
-      array would blow the driver and the broadcast limit.
+    One physical tier (``_lloyd_broadcast``): centroids are
+    driver-resident aggregates riding out as ONE broadcast row; each
+    round is one corpus scan with zero row shuffles. It holds up to
+    k = LLOYD_BROADCAST_MAX (k = n/250, so up to 256k vectors); a
+    larger corpus raises ValueError before any persist or Lloyd job.
 
     Cross-engine exactness: component sums accumulate on
     DECIMAL(27,12) — exact and order-independent, immune to Spark's
@@ -1050,14 +895,23 @@ def kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     double precision identically on both sides, so assignments (and
     the DuckDB oracle's unrolled replica) match bit-for-bit.
     """
-    vecs = _vectors(spark, sf_dir)
     # k grows with the corpus so expected cluster size stays constant
     # (see _km_k) — the SemDeDup bound that keeps the within-cluster
     # pair stage linear. The count comes from parquet footer metadata
     # (no Spark job); only a non-inspectable path pays a scan-based
     # count as the fallback.
-    n_rows = _corpus_rows(sf_dir)
-    k = _km_k(vecs.count() if n_rows is None else n_rows)
+    n = _corpus_rows(sf_dir)
+    if n is None:
+        n = _vectors(spark, sf_dir).count()
+    k = _km_k(n)
+    if k > LLOYD_BROADCAST_MAX:
+        raise ValueError(
+            f"k-means over {n} vectors needs k={k} clusters, past "
+            f"LLOYD_BROADCAST_MAX={LLOYD_BROADCAST_MAX}: the broadcast "
+            "centroid array and per-round driver collect are not sized "
+            "for it"
+        )
+    vecs = _vectors(spark, sf_dir)
     # the n·k distance math is the job's compute bound, so it must use
     # every core: a small corpus arrives as ONE parquet split (the x16
     # rep corpus is a single ~16 MB row group → the whole Lloyd loop
@@ -1075,10 +929,7 @@ def kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
         # fewer splits than cores, never on the 100 TB path.
         vecs = vecs.repartition(want).persist()
     try:
-        if k <= LLOYD_BROADCAST_MAX:
-            out = _lloyd_broadcast(spark, vecs, k)
-        else:
-            out = _lloyd_distributed(spark, vecs, k)
+        out = _lloyd_broadcast(spark, vecs, k)
         if widened:
             # localCheckpoint (eager) both materializes the memoized
             # assignment while the widened corpus is still cached AND

@@ -540,82 +540,6 @@ def incremental_dedup_batch_writer(out_dir: str):
     return write
 
 
-def token_budget_admission_batch_writer(out_dir: str, cap_tokens: int):
-    """batch_fn for ``to_foreach_batch_sink``: streaming token-budget
-    admission — the online face of ``operators/curation.
-    token_budget_plan`` (SURVEY §7.4b item 2). Each source stream gets
-    ``cap_tokens``; arriving documents are admitted in deterministic
-    order (batch order, then doc_id) while the source's RUNNING token
-    total stays within the cap, and once a source crosses it the
-    source is closed — the keep/stop decision a streaming ingest gate
-    actually emits. (The batch operator answers the retrospective
-    question — which docs fill a budget in global quality order; this
-    twin answers the online one, where quality ranking across unseen
-    future docs is impossible and per-source caps are the standard
-    control.)
-
-    Admission is the inclusive prefix test ``cum <= cap`` on the raw
-    per-source running total, so decisions are a pure function of the
-    documents' global arrival order: micro-batch slicing cannot change
-    them (pinned), and replays are idempotent via the same versioned
-    state the upsert writer uses ({out_dir}/totals/v=N holds per-source
-    totals AFTER batch N; {out_dir}/decisions/batch_id=N the per-doc
-    verdicts; both whole-partition overwrites).
-
-    Scale: one window partitioned BY SOURCE (never global) over the
-    micro-batch, one |sources|-row state table joined broadcast-style
-    by AQE, nothing driver-side."""
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window
-
-        spark = batch_df.sparkSession
-        prev = None
-        if batch_id > 0:
-            prev = spark.read.parquet(f"{out_dir}/totals/v={batch_id - 1}")
-        b = batch_df.select(
-            "doc_id", "source", F.col("n_tokens").cast("bigint").alias("n_tokens")
-        )
-        if prev is not None:
-            b = b.join(
-                prev.withColumnRenamed("total_tokens", "_prior"), "source", "left"
-            ).withColumn("_prior", F.coalesce("_prior", F.lit(0)))
-        else:
-            b = b.withColumn("_prior", F.lit(0).cast("bigint"))
-        w = (
-            Window.partitionBy("source")
-            .orderBy("doc_id")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        decided = b.withColumn(
-            "cum_tokens", F.col("_prior") + F.sum("n_tokens").over(w)
-        ).select(
-            "doc_id",
-            "source",
-            "n_tokens",
-            "cum_tokens",
-            (F.col("cum_tokens") <= F.lit(cap_tokens)).alias("admitted"),
-        )
-        decided.write.mode("overwrite").parquet(
-            f"{out_dir}/decisions/batch_id={batch_id}"
-        )
-        new_totals = (
-            b.groupBy("source")
-            .agg((F.first("_prior") + F.sum("n_tokens")).alias("total_tokens"))
-        )
-        if prev is not None:
-            # sources silent this batch carry their totals forward
-            new_totals = (
-                prev.join(new_totals.select("source"), "source", "left_anti")
-                .unionByName(new_totals)
-            )
-        new_totals.write.mode("overwrite").parquet(
-            f"{out_dir}/totals/v={batch_id}"
-        )
-
-    return write
-
-
 def stream_interval_join(
     left: DataFrame,
     right: DataFrame,
@@ -789,7 +713,8 @@ def ewma_fold(
     each value quantized to signed half-up micro-units and folded
     through :func:`ewma_spike_step` from the history ``hist``. Returns
     the spike rows, in ``EWMA_OUTPUT_SCHEMA`` column order, and the
-    updated history. Both streaming forms call it; it needs no JVM."""
+    updated history. :func:`stream_ewma_spikes` calls it per user and
+    micro-batch; it needs no JVM."""
     import math
 
     out = []
@@ -838,146 +763,6 @@ def stream_ewma_spikes(
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    )
-
-
-def streaming_ewma_tws(
-    events: DataFrame, watermark_delay: str = "10 minutes"
-) -> DataFrame:
-    """``transformWithStateInPandas`` form of :func:`stream_ewma_spikes`
-    (VERDICT r06 item 4): the same pure per-user fold
-    (:func:`ewma_fold` over :func:`ewma_spike_step`) over a
-    per-user ValueState holding the bounded ≤EWMA_DEPTH history — the
-    Spark 4 arbitrary-state API the detector deploys on, where the
-    applyInPandasWithState twin is the compatibility form. The
-    watermark bounds batch staleness on entry; state is already
-    O(DEPTH) longs per user, so no TTL timer is needed for size (a
-    production job that must forget idle users adds an EventTime timer
-    — orthogonal to the fold).
-
-    Deploy note: the transformWithState Python worker needs the
-    ``protobuf`` package (its state-server protocol), which this
-    sandbox lacks — the e2e batch≡stream test is protobuf-gated; the
-    PLAN contract (operator, key, schema, mode, watermark) is pinned
-    ungated because building the streaming plan needs no state server.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class EwmaProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._hist = handle.getValueState("hist", _EWMA_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            hist = list(self._hist.get()[0]) if self._hist.exists() else []
-            out, hist = ewma_fold(user_id, pd.concat(list(rows)), hist)
-            self._hist.update((hist,))
-            if out:
-                yield pd.DataFrame(out, columns=EWMA_OUTPUT_SCHEMA.fieldNames())
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withWatermark("ts", watermark_delay)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=EwmaProcessor(),
-            outputStructType=EWMA_OUTPUT_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
-        )
-    )
-
-
-TOPK_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("event_type", StringType()),
-        StructField("rank", IntegerType()),
-        StructField("event_id", LongType()),
-        StructField("value", DoubleType()),
-    ]
-)
-
-_TOPK_STATE_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("value", DoubleType()),
-    ]
-)
-
-
-def merge_topk(
-    cur: list[tuple[int, float]], new, k: int
-) -> list[tuple[int, float]]:
-    """Pure top-k merge (unit-testable core of :func:`streaming_topk`):
-    fold ``new`` (event_id, value) pairs into the current top-k list.
-    Order: value desc, event_id asc — a total order, so the result is
-    independent of how the stream was sliced into micro-batches."""
-    merged = list(cur)
-    merged.extend((int(e), float(v)) for e, v in new)
-    merged.sort(key=lambda t: (-t[1], t[0]))
-    return merged[:k]
-
-
-def streaming_topk(events: DataFrame, k: int = 3) -> DataFrame:
-    """Running top-k values per event_type via transformWithStateInPandas
-    (the Spark 4 arbitrary-state API; ``sessionize`` above shows the
-    older ``applyInPandasWithState`` form).
-
-    Each micro-batch merges new rows into a k-row ListState per key and
-    re-emits the key's current top-k (update mode) — the streaming
-    equivalent of ``TakeOrderedAndProject``: state and output are both
-    O(k) per key regardless of stream volume, so a 100 TB/day stream
-    costs the same state as a toy one. Ties break by event_id so
-    re-runs are deterministic.
-
-    Deploy note: the transformWithState Python worker needs the
-    ``protobuf`` package at runtime (its state-server protocol), which
-    this sandbox lacks — the merge logic is property-tested via
-    :func:`merge_topk` and the end-to-end test is gated on protobuf
-    availability.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class TopKProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._topk = handle.getListState("topk", _TOPK_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            cur = [(int(r[0]), float(r[1])) for r in self._topk.get()]
-            for pdf in rows:
-                cur = merge_topk(
-                    cur,
-                    zip(pdf["event_id"].astype("int64"), pdf["value"].astype(float)),
-                    k,
-                )
-            self._topk.put(cur)
-            yield pd.DataFrame(
-                {
-                    "event_type": [key[0]] * len(cur),
-                    "rank": range(1, len(cur) + 1),
-                    "event_id": [e for e, _ in cur],
-                    "value": [v for _, v in cur],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("event_type").transformWithStateInPandas(
-        statefulProcessor=TopKProcessor(),
-        outputStructType=TOPK_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )
 
 

@@ -138,15 +138,8 @@ _ALLOWED_PINS = frozenset(
         # the Lloyd centroid array: ONE row of <= LLOYD_BROADCAST_MAX
         # × DIM aggregate values — _cent_frame ASSERTS the bound, so
         # every pin of it is <= 1024×64 doubles (~0.5 MiB), orders of
-        # magnitude under the 8 GiB cap. Past the bound
-        # kmeans_assignments dispatches to _lloyd_distributed, whose
-        # own pins are the same asserted-bounded frame: the coarse
-        # centroid array (k_coarse <= LLOYD_BROADCAST_MAX) in the
-        # fine-centroid cell join and the occupied-cell probe array.
-        ("operators/similarity.py", "_lloyd_broadcast_train", "_cent_frame"),
+        # magnitude under the 8 GiB cap.
         ("operators/similarity.py", "_lloyd_broadcast", "_cent_frame"),
-        ("operators/similarity.py", "_assign_distributed", "_cent_frame"),
-        ("operators/similarity.py", "_assign_distributed", "occ_frame"),
         ("operators/similarity.py", "label_centroid_distances", "cents"),
         ("operators/similarity.py", "label_consensus", "tot"),
         ("operators/similarity.py", "lsh_topk", "queries"),

@@ -1,9 +1,9 @@
-"""Layout-writer tests: partition pruning and shuffle-free bucketed joins.
+"""Join-layout tests: the physical join shapes the plan picks.
 
-These pin the two layout properties that ARE the plan at 100 TB: a
-selective predicate on a partition column must scan only its directory
-(PartitionFilters), and a join of two co-bucketed tables must run with
-zero Exchange operators (the shuffle was paid at write time).
+These pin two scale properties of joins over the loaded tables: an
+explicit strategy hint (shuffle_hash, merge, broadcast) must produce
+its join operator, and a selective dimension side must inject a
+runtime Bloom filter into the fact-side scan.
 """
 
 from __future__ import annotations
@@ -11,10 +11,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from big_data_2021_spark_streaming_spark.sources.batch import load_table
-from big_data_2021_spark_streaming_spark.sources.layout import (
-    write_bucketed,
-    write_partitioned,
-)
 
 SF = "/root/testdata/sf0.001"
 
@@ -24,61 +20,6 @@ def plan_of(df) -> str:
     return jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
-
-
-def test_partitioned_write_enables_partition_pruning(spark, tmp_path):
-    events = load_table(spark, SF, "events").withColumn(
-        "event_date", F.to_date("ts")
-    )
-    path = str(tmp_path / "events_by_type")
-    write_partitioned(events, path, ["event_type"], sort_cols=["ts"])
-
-    one_type = spark.read.parquet(path).where(F.col("event_type") == "click")
-    p = plan_of(one_type)
-    pf_line = next(line for line in p.splitlines() if "PartitionFilters" in line)
-    assert "event_type" in pf_line  # predicate became a directory lookup
-    assert one_type.count() > 0
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    import shutil
-    from pathlib import Path
-
-    # managed-table locations survive the session's in-memory catalog;
-    # clear both the catalog entry and any leftover warehouse dir
-    warehouse = Path(spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:"))
-    for t in ("orders_b", "lineitem_b"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(warehouse / t, ignore_errors=True)
-    spark.conf.set(
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false"
-    )
-    orders = load_table(spark, SF, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    lineitem = load_table(spark, SF, "lineitem").select(
-        "l_orderkey", "l_quantity"
-    )
-    write_bucketed(orders, "orders_b", "o_orderkey", 4, sort_col="o_orderkey")
-    write_bucketed(lineitem, "lineitem_b", "l_orderkey", 4, sort_col="l_orderkey")
-    joined = (
-        spark.table("orders_b")
-        .join(
-            spark.table("lineitem_b"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        .groupBy("o_orderkey")
-        .agg(F.sum("l_quantity").alias("qty"))
-    )
-    # broadcast would hide the bucketing — force the shuffle-join path
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        p = plan_of(joined)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    assert "Arguments: hashpartitioning" not in p  # no shuffle on either side
-    assert "SortMergeJoin" in p
-    assert joined.count() > 0
 
 
 def test_join_strategy_hints_are_honored(spark):

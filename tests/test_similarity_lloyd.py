@@ -1,21 +1,17 @@
-"""The two Lloyd k-means tiers must be the SAME algorithm.
+"""The Lloyd k-means bound: one tier, refused loudly past it.
 
-kmeans_assignments dispatches on k: driver-resident broadcast-array
-centroids at k <= LLOYD_BROADCAST_MAX (every graded corpus), a
-distributed centroid frame with a coarse-cell equi-join argmin past it
-(the billion-vector shape — VERDICT r05 item 3). These tests pin the
-tier seam:
+kmeans_assignments keeps the centroids driver-resident and broadcasts
+them as one array row, which is sized for k <= LLOYD_BROADCAST_MAX
+(every graded corpus; k = n/250 stays under 1024 up to 256k vectors).
+These tests pin both refusals:
 
-- with nprobe >= |occupied cells| the distributed tier IS exhaustive
-  Lloyd: every vector scores every fine centroid through the cell join,
-  with the identical distance fold and (d, cid) tiebreak — so its
-  output must equal the broadcast tier bit-for-bit;
-- with a small nprobe (the production approximation) assignment must
-  still be TOTAL — probing only occupied cells guarantees every vector
-  a candidate — and every cluster id must be a seed id;
-- the driver-resident path must refuse loudly past the bound
-  (_cent_frame's assertion), so nobody can re-route a huge k through
-  the collect-per-round shape by accident.
+- the broadcast centroid frame asserts the bound (_cent_frame), so
+  nobody can route a huge k through the collect-per-round shape by
+  accident;
+- kmeans_assignments raises a ValueError naming the bound, k and the
+  vector count before it persists anything or runs a job, instead of
+  failing inside the Lloyd loop (and where ``python -O`` strips the
+  assert, not at all).
 """
 
 from __future__ import annotations
@@ -28,55 +24,6 @@ from big_data_2021_spark_streaming_spark.session import evict_session_cache
 SF = "/root/testdata/sf0.001"
 
 
-def _rows(df):
-    return sorted(
-        (int(r["vec_id"]), int(r["cluster_id"]), float(r["d"]))
-        for r in df.select("vec_id", "cluster_id", "d").collect()
-    )
-
-
-def test_distributed_tier_with_full_probe_is_exhaustive_lloyd(spark):
-    vecs = sim._vectors(spark, SF).persist()
-    try:
-        k = sim._km_k(vecs.count())  # 500 vectors -> the KM_K floor
-        assert k <= sim.LLOYD_BROADCAST_MAX
-        broadcast_tier = _rows(sim._lloyd_broadcast(spark, vecs, k))
-        # nprobe >= any possible occupied-cell count -> exhaustive
-        distributed = _rows(
-            sim._lloyd_distributed(
-                spark, vecs, k, nprobe=sim.LLOYD_BROADCAST_MAX
-            )
-        )
-        assert distributed == broadcast_tier  # bit-for-bit, incl. d
-    finally:
-        vecs.unpersist()
-
-
-def test_distributed_tier_small_nprobe_is_total_and_valid(spark):
-    vecs = sim._vectors(spark, SF).persist()
-    try:
-        n = vecs.count()
-        k = sim._km_k(n)
-        out = sim._lloyd_distributed(spark, vecs, k, nprobe=1).persist()
-        try:
-            # total: one row per vector, no vector dropped by cell routing
-            assert out.count() == n
-            assert out.select("vec_id").distinct().count() == n
-            # every cluster id is a seed id (the k lowest vec_ids)
-            seed_ids = {
-                int(r["vec_id"]) for r in sim._seed_rows(vecs, k).collect()
-            }
-            got = {
-                int(r["cluster_id"])
-                for r in out.select("cluster_id").distinct().collect()
-            }
-            assert got <= seed_ids
-        finally:
-            out.unpersist()
-    finally:
-        vecs.unpersist()
-
-
 def test_broadcast_tier_refuses_past_the_bound(spark, monkeypatch):
     # the lint VERDICT r05 item 3 asked for: the 1-row centroid array
     # cannot be built past LLOYD_BROADCAST_MAX
@@ -85,17 +32,21 @@ def test_broadcast_tier_refuses_past_the_bound(spark, monkeypatch):
         sim._cent_frame(spark, {i: [0.0] * sim.DIM for i in range(5)})
 
 
-def test_dispatch_selects_distributed_tier_past_the_bound(spark, monkeypatch):
-    # with the bound forced below the corpus k, kmeans_assignments must
-    # route through the distributed tier and still produce a total,
-    # seed-labeled assignment for the full corpus
+def test_kmeans_refuses_past_the_bound_before_any_job(spark, monkeypatch):
+    # the sf0.001 corpus (500 vectors) needs k = KM_K = 8 > 4
     monkeypatch.setattr(sim, "LLOYD_BROADCAST_MAX", 4)
     evict_session_cache(spark, SF)
+    sc = spark.sparkContext
+    persisted = sc._jsc.getPersistentRDDs().size()
+    sc.setJobGroup("kmeans_bound", "kmeans_assignments past the bound")
     try:
-        out = sim.kmeans_assignments(spark, SF)
-        n = sim._vectors(spark, SF).count()
-        assert out.count() == n
-        assert out.select("vec_id").distinct().count() == n
-        assert set(out.columns) == {"vec_id", "v", "cluster_id", "d"}
+        with pytest.raises(
+            ValueError, match=r"500 vectors .*k=8 .*LLOYD_BROADCAST_MAX=4"
+        ):
+            sim.kmeans_assignments(spark, SF)
+        assert sc.statusTracker().getJobIdsForGroup("kmeans_bound") == []
+        assert sc._jsc.getPersistentRDDs().size() == persisted
     finally:
-        evict_session_cache(spark, SF)  # never leak a tiny-bound assignment
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+        evict_session_cache(spark, SF)  # never leak a tiny-bound entry

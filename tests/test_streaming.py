@@ -715,63 +715,6 @@ def test_update_output_mode_re_emits_changed_windows(spark, fixture_dir, produce
     assert sorted(emissions) == [1, 2]
 
 
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState's Python worker needs the protobuf package",
-)
-def test_streaming_topk_updates_across_batches(spark, tmp_path):
-    """transformWithStateInPandas running top-k: each batch merges into
-    O(k) ListState per key and re-emits the key's current top-k.
-    The pure merge is property-tested in test_topk_merge.py; this wires
-    it through the real state server where the runtime allows."""
-    from big_data_2021_spark_streaming_spark.streaming.pipeline import (
-        streaming_topk,
-    )
-
-    d = tmp_path / "topk"
-    d.mkdir()
-
-    def write(name, events):
-        (d / name).write_text("\n".join(json.dumps(e) for e in events))
-
-    write(
-        "b0.json",
-        [
-            {"event_id": 1, "event_type": "click", "value": 5.0},
-            {"event_id": 2, "event_type": "click", "value": 9.0},
-            {"event_id": 3, "event_type": "view", "value": 1.0},
-        ],
-    )
-    schema = "event_id LONG, event_type STRING, value DOUBLE"
-    stream = spark.readStream.schema(schema).json(str(d))
-    q = to_memory_sink(streaming_topk(stream, k=2), "topk_sink", "update")
-    q.processAllAvailable()
-    first = {
-        (r.event_type, r.rank, r.event_id)
-        for r in spark.table("topk_sink").collect()
-    }
-    assert ("click", 1, 2) in first and ("click", 2, 1) in first
-    assert ("view", 1, 3) in first
-
-    # batch 1: a new click value displaces event 1 from the top-2
-    write("b1.json", [{"event_id": 4, "event_type": "click", "value": 7.0}])
-    drain(q)
-    latest = {}
-    for r in spark.table("topk_sink").collect():
-        latest.setdefault((r.event_type, r.rank), []).append(r.event_id)
-    assert latest[("click", 1)][-1] == 2  # 9.0 still first
-    assert latest[("click", 2)][-1] == 4  # 7.0 displaces 5.0
-
-
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
@@ -1017,67 +960,6 @@ def test_upsert_state_writer_maintains_latest_per_key(spark, tmp_path):
     assert state_replayed == state1
 
 
-def test_expectations_gate_quarantines_contract_violations(spark, tmp_path):
-    """The declarative EXPECTATIONS contract, compiled by
-    expectations_gate_sql, must quarantine exactly the rows the batch
-    data_quality_report would count as violations — same predicates,
-    two surfaces — with reasons attributed in declaration order."""
-    import json as _json
-
-    from big_data_2021_spark_streaming_spark.operators.audit import (
-        expectations_gate_sql,
-    )
-    from big_data_2021_spark_streaming_spark.streaming.pipeline import (
-        dlq_split_batch_writer,
-        to_foreach_batch_sink,
-    )
-
-    reject_sql, reason_sql = expectations_gate_sql("events")
-    src = tmp_path / "gate_src"
-    src.mkdir()
-    out = str(tmp_path / "gate_out")
-    writer = dlq_split_batch_writer(out, reject_sql, reason_sql)
-
-    rows = [
-        # clean
-        {"event_id": 1, "ts": "2021-01-01T00:00:00", "user_id": 7,
-         "event_type": "click", "value": 1.5},
-        # null user_id
-        {"event_id": 2, "ts": "2021-01-01T00:00:01", "user_id": None,
-         "event_type": "view", "value": 0.5},
-        # unknown event_type
-        {"event_id": 3, "ts": "2021-01-01T00:00:02", "user_id": 8,
-         "event_type": "teleport", "value": 0.5},
-        # negative value AND unknown type: attributed to the EARLIER
-        # declared expectation (event_type_accepted)
-        {"event_id": 4, "ts": "2021-01-01T00:00:03", "user_id": 9,
-         "event_type": "warp", "value": -2.0},
-        # null ts
-        {"event_id": 5, "ts": None, "user_id": 10,
-         "event_type": "purchase", "value": 3.0},
-    ]
-    (src / "b0.json").write_text("\n".join(_json.dumps(r) for r in rows))
-    stream = spark.readStream.schema(
-        "event_id LONG, ts TIMESTAMP, user_id LONG,"
-        " event_type STRING, value DOUBLE"
-    ).json(str(src))
-    q = to_foreach_batch_sink(
-        stream, writer, str(tmp_path / "gate_ckpt"), available_now=True
-    )
-    q.awaitTermination()
-
-    good = spark.read.parquet(f"{out}/good").collect()
-    dlq = spark.read.parquet(f"{out}/dlq").collect()
-    assert {r.event_id for r in good} == {1}
-    assert {r.event_id: r.reject_reason for r in dlq} == {
-        2: "user_id_not_null",
-        3: "event_type_accepted",
-        4: "event_type_accepted",
-        5: "ts_not_null",
-    }
-    assert len(good) + len(dlq) == len(rows)
-
-
 def test_ewma_spikes_batch_stream_equivalence(spark, tmp_path):
     """The streaming EWMA spike detector must emit exactly the rows the
     batch plan produces on the same events, with the data split across
@@ -1140,105 +1022,6 @@ def test_ewma_spikes_batch_stream_equivalence(spark, tmp_path):
         streamed = {
             tuple(r) for r in spark.table("ewma_sink").collect()
         }
-    finally:
-        q.stop()
-    assert streamed == batch
-    assert any(r[1] > 6 for r in streamed), (
-        "no spike in batch 2 — state never crossed the boundary"
-    )
-
-
-def test_streaming_ewma_tws_plan_contract(spark):
-    """The transformWithStateInPandas EWMA form (VERDICT r06 item 4),
-    ungated: building the streaming plan needs no protobuf state
-    server, so the contract — operator present, keyed on user_id,
-    append mode, event-time watermark applied, output schema exactly
-    the shared EWMA_OUTPUT_SCHEMA — is pinned in every environment;
-    only the stateful EXECUTION is gated below."""
-    from big_data_2021_spark_streaming_spark.streaming.pipeline import (
-        EWMA_OUTPUT_SCHEMA,
-        streaming_ewma_tws,
-    )
-
-    src = (
-        spark.readStream.format("rate")
-        .load()
-        .selectExpr(
-            "timestamp AS ts",
-            "value AS event_id",
-            "value % 5 AS user_id",
-            "CAST(value AS DOUBLE) AS value",
-        )
-    )
-    df = streaming_ewma_tws(src)
-    assert df.isStreaming
-    assert df.schema == EWMA_OUTPUT_SCHEMA
-    analyzed = df._jdf.queryExecution().analyzed().toString()
-    # Spark 4 names the logical operator TransformWithStateInPySpark
-    assert "TransformWithStateInPySpark" in analyzed, analyzed
-    assert "user_id" in analyzed
-    assert "EventTimeWatermark" in analyzed, analyzed
-    assert "Append" in analyzed, analyzed
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState's Python worker needs the protobuf package",
-)
-def test_streaming_ewma_tws_matches_batch(spark, tmp_path):
-    """transformWithStateInPandas EWMA ≡ batch plan across a
-    micro-batch boundary — the same equivalence the
-    applyInPandasWithState form pins above, through the Spark 4
-    arbitrary-state API (ValueState-held history)."""
-    import json as _json
-
-    import pandas as pd
-
-    from big_data_2021_spark_streaming_spark.plans.analytics import (
-        event_ewma_spikes,
-    )
-    from big_data_2021_spark_streaming_spark.streaming.pipeline import (
-        streaming_ewma_tws,
-        to_memory_sink,
-    )
-
-    vals = [1.0, 1.1, 0.9, 1.0, 1.05, 9.5, 1.0, 1.0, 12.25, 0.95]
-    rows = [
-        {
-            "event_id": i + 1,
-            "user_id": 7,
-            "ts": f"2024-01-01 00:{i:02d}:00",
-            "value": v,
-        }
-        for i, v in enumerate(vals)
-    ]
-    pdf = pd.DataFrame(rows)
-    pdf["ts"] = pd.to_datetime(pdf["ts"])
-    bdir = tmp_path / "batch"
-    bdir.mkdir()
-    pdf.to_parquet(bdir / "events.parquet")
-    batch = {
-        (r.user_id, r.event_id, r.value, r.n_hist, r.ewma)
-        for r in event_ewma_spikes(spark, str(bdir)).collect()
-    }
-    assert batch, "fixture produced no spikes — test is vacuous"
-    sdir = tmp_path / "stream"
-    sdir.mkdir()
-    (sdir / "b0.json").write_text("\n".join(_json.dumps(r) for r in rows[:6]))
-    schema = "event_id LONG, user_id LONG, ts TIMESTAMP, value DOUBLE"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(sdir))
-    )
-    q = to_memory_sink(streaming_ewma_tws(stream), "ewma_tws_sink")
-    try:
-        q.processAllAvailable()
-        (sdir / "b1.json").write_text(
-            "\n".join(_json.dumps(r) for r in rows[6:])
-        )
-        q.processAllAvailable()
-        streamed = {tuple(r) for r in spark.table("ewma_tws_sink").collect()}
     finally:
         q.stop()
     assert streamed == batch
