@@ -22,6 +22,7 @@ from functools import reduce
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
+from ..functions.exact import half_up
 from ..session import local_frame
 from ..sources.batch import load_table
 
@@ -36,9 +37,9 @@ FK_EDGES: tuple[tuple[str, str, str, str], ...] = (
 )
 
 _MICRO = (
-    "CASE WHEN child_rows = 0 THEN 0 ELSE"
-    " (2 * orphan_rows * 1000000 + child_rows) div (2 * child_rows)"
-    " END"
+    "CASE WHEN child_rows = 0 THEN 0 ELSE "
+    + half_up("orphan_rows * 1000000", "child_rows")
+    + " END"
 )  # zero-denominator guard: an empty child table has 0 orphans
 
 
@@ -113,12 +114,10 @@ def join_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rank",
             "l_suppkey",
             "cnt",
-            F.expr("(2 * cnt * 1000000 + total_rows) div (2 * total_rows)").alias(
-                "share_micro"
-            ),
+            F.expr(half_up("cnt * 1000000", "total_rows")).alias("share_micro"),
             "n_keys",
             "max_cnt",
-            F.expr("(2 * total_rows * 1000000 + n_keys) div (2 * n_keys)").alias(
+            F.expr(half_up("total_rows * 1000000", "n_keys")).alias(
                 "avg_cnt_micro"
             ),
         )
@@ -174,9 +173,9 @@ def user_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rows_total",
         "rows_erased",
         F.expr(
-            "CASE WHEN rows_total = 0 THEN 0 ELSE"
-            " (2 * rows_erased * 1000000 + rows_total) div (2 * rows_total)"
-            " END"
+            "CASE WHEN rows_total = 0 THEN 0 ELSE "
+            + half_up("rows_erased * 1000000", "rows_total")
+            + " END"
         ).alias("erased_micro"),
     )
 
@@ -208,7 +207,7 @@ def tvd_micro(n1: str, n2: str) -> Column:
     an ANSI div-by-zero crash otherwise)."""
     return F.expr(
         f"CASE WHEN {n1} = 0 OR {n2} = 0 THEN 0 ELSE"
-        f" (2 * 1000000 * num + 2 * {n1} * {n2}) div (4 * {n1} * {n2}) END"
+        f" {half_up('1000000 * num', f'2 * {n1} * {n2}')} END"
     )
 
 
@@ -359,14 +358,12 @@ def layout_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "layout",
             "files",
-            F.expr(
-                f"(2 * span_u * 1000000 + files * {b})"
-                f" div (2 * files * {b})"
-            ).alias("probe_scan_user_micro"),
-            F.expr(
-                f"(2 * span_d * 1000000 + files * {b})"
-                f" div (2 * files * {b})"
-            ).alias("probe_scan_time_micro"),
+            F.expr(half_up("span_u * 1000000", f"files * {b}")).alias(
+                "probe_scan_user_micro"
+            ),
+            F.expr(half_up("span_d * 1000000", f"files * {b}")).alias(
+                "probe_scan_time_micro"
+            ),
         )
         .orderBy("layout")
     )
@@ -487,8 +484,7 @@ def join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     h1 = hist(orders).select("b", F.col("n").alias("n1"), F.col("d").alias("d1"))
     h2 = hist(li).select("b", F.col("n").alias("n2"), F.col("d").alias("d2"))
     per_bucket = h1.join(h2, "b").select(
-        F.expr("(2 * n1 * n2 + greatest(d1, d2)) div (2 * greatest(d1, d2))")
-        .alias("est_b"),
+        F.expr(half_up("n1 * n2", "greatest(d1, d2)")).alias("est_b"),
         "n1", "n2", "d1", "d2",
     )
     est = per_bucket.agg(
@@ -499,9 +495,7 @@ def join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("d2").alias("td2"),
     ).select(
         "est_bucketed",
-        F.expr(
-            "(2 * t1 * t2 + greatest(td1, td2)) div (2 * greatest(td1, td2))"
-        ).alias("est_global"),
+        F.expr(half_up("t1 * t2", "greatest(td1, td2)")).alias("est_global"),
     )
     actual = (
         orders.select("k")
@@ -513,12 +507,10 @@ def join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "est_global",
         "est_bucketed",
         F.expr(
-            "(2 * abs(est_global - actual_rows) * 1000000 + actual_rows)"
-            " div (2 * actual_rows)"
+            half_up("abs(est_global - actual_rows) * 1000000", "actual_rows")
         ).alias("err_global_micro"),
         F.expr(
-            "(2 * abs(est_bucketed - actual_rows) * 1000000 + actual_rows)"
-            " div (2 * actual_rows)"
+            half_up("abs(est_bucketed - actual_rows) * 1000000", "actual_rows")
         ).alias("err_bucketed_micro"),
     )
 
@@ -875,9 +867,9 @@ def join_strategy_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "child_rows",
                 "parent_rows",
                 F.expr(
-                    "CASE WHEN child_rows = 0 THEN 0 ELSE"
-                    " (2 * top_key_rows * 1000000 + child_rows)"
-                    " div (2 * child_rows) END"
+                    "CASE WHEN child_rows = 0 THEN 0 ELSE "
+                    + half_up("top_key_rows * 1000000", "child_rows")
+                    + " END"
                 ).alias("top_key_share_micro"),
                 F.expr(
                     f"CASE WHEN parent_rows <= {ADV_BROADCAST_ROWS}"
@@ -1025,11 +1017,12 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             # a single global band means every distribution coincides:
             # EMD := 0 (r08 single-row sweep; ANSI crash on (B−1)=0)
             F.expr(
-                "CASE WHEN n_bands <= 1 THEN cast(0 as bigint) ELSE"
-                " cast((2 * absdiff * 1000000"
-                " + cast(group_size as decimal(19,0)) * n_total * (n_bands - 1))"
-                " div (2 * cast(group_size as decimal(19,0)) * n_total"
-                "      * (n_bands - 1)) as bigint) END"
+                "CASE WHEN n_bands <= 1 THEN cast(0 as bigint) ELSE cast("
+                + half_up(
+                    "absdiff * 1000000",
+                    "cast(group_size as decimal(19,0)) * n_total * (n_bands - 1)",
+                )
+                + " as bigint) END"
             ).alias("emd_micro"),
         )
         .select(
@@ -1209,9 +1202,9 @@ def data_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_violations").cast("bigint").alias("n_violations"),
                 (F.col("n_violations") == 0).alias("passed"),
                 F.expr(
-                    "CASE WHEN n_rows = 0 THEN 0 ELSE"
-                    " (2 * n_violations * 1000000 + n_rows)"
-                    " div (2 * n_rows) END / 1000000.0D"
+                    "CASE WHEN n_rows = 0 THEN 0 ELSE "
+                    + half_up("n_violations * 1000000", "n_rows")
+                    + " END / 1000000.0D"
                 ).alias("violation_rate"),
             )
         )
@@ -1299,9 +1292,7 @@ def lake_file_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_bytes",
             "p50_bytes",
             "max_bytes",
-            F.expr(
-                "(2 * total_bytes + n_files) div (2 * n_files)"
-            ).alias("mean_bytes"),
+            F.expr(half_up("total_bytes", "n_files")).alias("mean_bytes"),
             "small_files",
         )
         .select(
@@ -1317,13 +1308,13 @@ def lake_file_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             # mean. n_files needs no guard — it is a group count, ≥ 1
             # whenever the row exists.
             F.expr(
-                "CASE WHEN mean_bytes = 0 THEN 0 ELSE"
-                " (2 * max_bytes * 1000000 + mean_bytes)"
-                " div (2 * mean_bytes) END"
+                "CASE WHEN mean_bytes = 0 THEN 0 ELSE "
+                + half_up("max_bytes * 1000000", "mean_bytes")
+                + " END"
             ).alias("max_to_mean_micro"),
-            F.expr(
-                "(2 * small_files * 1000000 + n_files) div (2 * n_files)"
-            ).alias("small_share_micro"),
+            F.expr(half_up("small_files * 1000000", "n_files")).alias(
+                "small_share_micro"
+            ),
         )
         .orderBy("source")
     )
@@ -1431,9 +1422,9 @@ def vacuum_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             # r07): a partition holding only zero-byte files has no I/O
             # budget to spend
             F.expr(
-                "CASE WHEN total_bytes = 0 THEN 0 ELSE"
-                " (2 * coalesce(small_bytes, 0) * 1000000 + total_bytes)"
-                " div (2 * total_bytes) END"
+                "CASE WHEN total_bytes = 0 THEN 0 ELSE "
+                + half_up("coalesce(small_bytes, 0) * 1000000", "total_bytes")
+                + " END"
             ).alias("rewrite_share_micro"),
         )
         .orderBy("source")
@@ -1584,11 +1575,12 @@ def partition_pruning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_vals_total"
             ),
             F.expr(
-                "cast((2 * cast(hit_bytes as decimal(38,0))"
-                " * 1000000 + cast(coalesce(n_vals_total, 0)"
-                " as decimal(38,0)) * total_bytes)"
-                " div (2 * cast(coalesce(n_vals_total, 0)"
-                " as decimal(38,0)) * total_bytes) as bigint)"
+                "cast("
+                + half_up(
+                    "cast(hit_bytes as decimal(38,0)) * 1000000",
+                    "cast(coalesce(n_vals_total, 0) as decimal(38,0)) * total_bytes",
+                )
+                + " as bigint)"
             ).alias("scan_frac_micro"),
         )
         .orderBy("layout", "probe_dim")
@@ -1728,8 +1720,7 @@ def lake_clustering_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
             "max_depth",
             "covered_points",
             F.expr(
-                "cast((2 * _area * 1000000 + covered_points)"
-                " div (2 * covered_points) as bigint)"
+                "cast(" + half_up("_area * 1000000", "covered_points") + " as bigint)"
             ).alias("avg_depth_micro"),
         )
         .orderBy("source", "dim")

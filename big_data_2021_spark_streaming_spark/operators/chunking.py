@@ -35,6 +35,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ..functions.exact import half_up
 from ..sources.batch import load_table
 from .text import tokens_col, _oracle_tokens
 
@@ -185,10 +186,7 @@ def doc_length_bucketing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "real_tokens",
         (F.col("n_docs") * F.col("cap")).alias("padded_tokens"),
         (
-            F.expr(
-                "(2 * (n_docs * cap - in_cap_tokens) * 1000000"
-                " + n_docs * cap) div (2 * n_docs * cap)"
-            )
+            F.expr(half_up("(n_docs * cap - in_cap_tokens) * 1000000", "n_docs * cap"))
             / F.lit(1e6)
         ).alias("padding_waste"),
     )

@@ -18,6 +18,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ..functions.exact import exact_global_rank, half_up
 from ..sources.batch import load_table
 from ..operators.text import quality_lineage
 from ..operators import dedup as _dedup  # oracle-SQL fragments only
@@ -266,8 +267,7 @@ def cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(union == 0, F.lit(0).cast("bigint"))
         .otherwise(
             F.expr(
-                "(2 * 1000 * inter_grams + (grams_a + grams_b - inter_grams))"
-                " div (2 * (grams_a + grams_b - inter_grams))"
+                half_up("1000 * inter_grams", "(grams_a + grams_b - inter_grams)")
             )
         )
         .alias("jaccard_permille"),
@@ -359,16 +359,14 @@ def source_minhash_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source_a",
         "source_b",
         "matching_members",
-        F.expr(
-            f"(2 * matching_members * 1000000 + {n_perm})"
-            f" div (2 * {n_perm})"
-        ).alias("est_jaccard_micro"),
+        F.expr(half_up("matching_members * 1000000", f"{n_perm}")).alias(
+            "est_jaccard_micro"
+        ),
         "toks_a",
         "toks_b",
         "inter_toks",
         F.expr(
-            "(2 * inter_toks * 1000000 + (toks_a + toks_b - inter_toks))"
-            " div (2 * (toks_a + toks_b - inter_toks))"
+            half_up("inter_toks * 1000000", "(toks_a + toks_b - inter_toks)")
         ).alias("exact_jaccard_micro"),
     )
 
@@ -683,10 +681,9 @@ def weighted_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "lang",
             "w_micro",
-            F.expr(
-                f"(2 * w_micro * {WSAMPLE_BUCKETS} + u_bucket)"
-                " div (2 * u_bucket)"
-            ).alias("priority"),
+            F.expr(half_up(f"w_micro * {WSAMPLE_BUCKETS}", "u_bucket")).alias(
+                "priority"
+            ),
         )
         .orderBy(F.col("priority").desc(), "doc_id")
         .limit(WSAMPLE_TOP)
@@ -795,10 +792,7 @@ def token_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "kept_share",
-            F.expr(
-                "(2 * tokens_kept * 1000000 + tokens_total)"
-                " div (2 * tokens_total)"
-            )
+            F.expr(half_up("tokens_kept * 1000000", "tokens_total"))
             / F.lit(1e6),
         )
     )
@@ -875,13 +869,10 @@ def corpus_mixture_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_docs",
         "total_chars",
         (
-            F.expr("(2 * q_micro + n_docs) div (2 * n_docs)") / F.lit(1e6)
+            F.expr(half_up("q_micro", "n_docs")) / F.lit(1e6)
         ).alias("avg_quality"),
         (
-            F.expr(
-                "(2 * n_docs * 1000000 + sum(n_docs) over ())"
-                " div (2 * sum(n_docs) over ())"
-            )
+            F.expr(half_up("n_docs * 1000000", "sum(n_docs) over ()"))
             / F.lit(1e6)
         ).alias("share"),
     )
@@ -913,20 +904,16 @@ def mixture_reweight_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum(stratum_chars) over () div count(1) over ()"
         ).alias("target_chars"),
     )
-    rate_micro = F.expr(
-        "least(1000000, (2 * target_chars * 1000000 + stratum_chars)"
-        " div (2 * stratum_chars))"
+    rate_sql = (
+        f"least(1000000, {half_up('target_chars * 1000000', 'stratum_chars')})"
     )
     return planned.select(
         "lang",
         "n_docs",
         "stratum_chars",
         "target_chars",
-        rate_micro.alias("rate_micro"),
-        F.expr(
-            "least(1000000, (2 * target_chars * 1000000 + stratum_chars)"
-            " div (2 * stratum_chars)) * stratum_chars div 1000000"
-        ).alias("expected_chars"),
+        F.expr(rate_sql).alias("rate_micro"),
+        F.expr(f"{rate_sql} * stratum_chars div 1000000").alias("expected_chars"),
     )
 
 
@@ -1452,8 +1439,9 @@ def corpus_cross_shard_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         # zero-denominator rate := 0 (r07 degenerate policy, ADVICE r07):
         # no LSH pairs means nothing straddles a shard
         F.expr(
-            "CASE WHEN n_pairs = 0 THEN 0 ELSE"
-            " (2 * inter_shard * 1000000 + n_pairs) div (2 * n_pairs) END"
+            "CASE WHEN n_pairs = 0 THEN 0 ELSE "
+            + half_up("inter_shard * 1000000", "n_pairs")
+            + " END"
         ).alias("inter_share_micro"),
     )
 
@@ -1498,18 +1486,16 @@ def quality_dup_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     order doesn't matter; if it is, dedup-first saves quality-scoring
     compute.
 
-    Deciles come from ``_exact_global_rank`` on the exact micro
+    Deciles come from ``exact_global_rank`` on the exact micro
     quality (banded two-phase — no single-partition sort); the dup
     flag joins in from the memoized cluster-label frame (pair-graph
     sized). One corpus scan + one bounded join + a 10-key aggregate."""
-    from ..plans.analytics import _exact_global_rank
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     qm = quality_lineage(docs).select(
         "doc_id",
         F.expr("cast(round(quality * 1000000) as bigint)").alias("qm"),
     )
-    ranked = _exact_global_rank(qm, "qm", "doc_id", "rnk")
+    ranked = exact_global_rank(qm, "qm", "doc_id", "rnk")
     n_frame = qm.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     deciled = ranked.crossJoin(F.broadcast(n_frame)).select(
         "doc_id",
@@ -1531,9 +1517,7 @@ def quality_dup_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             "decile",
             "n_docs",
             "n_dups",
-            F.expr(
-                "(2 * n_dups * 1000000 + n_docs) div (2 * n_docs)"
-            ).alias("dup_micro"),
+            F.expr(half_up("n_dups * 1000000", "n_docs")).alias("dup_micro"),
         )
     )
 
@@ -1584,11 +1568,9 @@ def quality_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     companion of ``corpus_token_budget_plan`` (which packs to a fixed
     cap in arrival order).
 
-    Ranks come from ``_exact_global_rank`` on negated micro quality
+    Ranks come from ``exact_global_rank`` on negated micro quality
     (banded two-phase — no single-partition sort); the only
     unpartitioned window runs over the ≤10 decile rows."""
-    from ..plans.analytics import _exact_global_rank
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     q = (
         quality_lineage(docs)
@@ -1599,7 +1581,7 @@ def quality_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("neg_qm", -F.col("qm"))
     )
-    ranked = _exact_global_rank(q, "neg_qm", "doc_id", "rnk")
+    ranked = exact_global_rank(q, "neg_qm", "doc_id", "rnk")
     n_frame = q.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("nb").cast("bigint").alias("total_tokens"),
@@ -1625,9 +1607,7 @@ def quality_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_docs",
         "tokens",
         cum.cast("bigint").alias("cum_tokens"),
-        F.expr(
-            "(2 * cum_tokens * 1000000 + _tt) div (2 * _tt)"
-        ).alias("cum_share_micro"),
+        F.expr(half_up("cum_tokens * 1000000", "_tt")).alias("cum_share_micro"),
     ).orderBy("decile")
 
 
@@ -1763,9 +1743,11 @@ def quality_auc_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(
             (F.col("n_dup") > 0) & (F.col("n_nondup") > 0),
             F.expr(
-                "(2 * (2 * n_dup * n_nondup - 2 * s1 + s2) * 1000000"
-                " + 2 * n_dup * n_nondup)"
-                " div (2 * 2 * n_dup * n_nondup) / 1000000.0D"
+                half_up(
+                    "(2 * n_dup * n_nondup - 2 * s1 + s2) * 1000000",
+                    "2 * n_dup * n_nondup",
+                )
+                + " / 1000000.0D"
             ),
         ).alias("auc"),
     )

@@ -35,6 +35,7 @@ from ..functions.hashing import (
     h60_packed_member_sql,
     h60_sql,
 )
+from ..functions.exact import half_up
 from ..session import session_cached
 from ..sources.batch import load_table
 
@@ -235,9 +236,7 @@ def jaccard_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = tok.select(F.col("doc_id").alias("doc_id_b"), F.col("tok").alias("tok_b"))
     inter = F.size(F.array_intersect("tok_a", "tok_b"))
     union = F.size(F.array_union("tok_a", "tok_b"))
-    # exact half-up micro-unit division instead of ROUND(int/int
-    # double, 6) — the cross-engine ROUND-boundary class; set sizes are
-    # int32, so the 1e6 blow-up must go through BIGINT
+    # set sizes are int32, so the 1e6 blow-up must go through BIGINT
     return (
         pairs.join(a, "doc_id_a")
         .join(b, "doc_id_b")
@@ -251,8 +250,7 @@ def jaccard_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id_a",
             "doc_id_b",
             (
-                F.expr("(2 * n_inter * 1000000 + n_union) div (2 * n_union)")
-                / F.lit(1e6)
+                F.expr(half_up("n_inter * 1000000", "n_union")) / F.lit(1e6)
             ).alias("jaccard"),
         )
     )
@@ -378,8 +376,8 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_a = F.coalesce(F.size("g_a"), F.lit(0))
     n_b = F.coalesce(F.size("g_b"), F.lit(0))
     union = n_a + n_b - n_inter
-    # half-up micro-unit division (see jaccard_verify); div by a zero
-    # union yields NULL in both engines, preserving the WHEN semantics
+    # a zero union yields NULL in both engines, preserving the WHEN
+    # semantics
     return (
         pairs.join(a, "doc_id_a", "left")
         .join(b, "doc_id_b", "left")
@@ -394,8 +392,7 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id_b",
             F.when(
                 F.col("n_union") > 0,
-                F.expr("(2 * n_inter * 1000000 + n_union) div (2 * n_union)")
-                / F.lit(1e6),
+                F.expr(half_up("n_inter * 1000000", "n_union")) / F.lit(1e6),
             ).alias("ngram_jaccard"),
         )
     )
@@ -419,7 +416,6 @@ def gram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_inter = F.coalesce(F.size(F.array_intersect("g_a", "g_b")), F.lit(0))
     n_a = F.coalesce(F.size("g_a"), F.lit(0))
     n_b = F.coalesce(F.size("g_b"), F.lit(0))
-    # half-up micro-unit division (see jaccard_verify)
     return (
         pairs.join(a, "doc_id_a", "left")
         .join(b, "doc_id_b", "left")
@@ -435,13 +431,11 @@ def gram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id_b",
             F.when(
                 F.col("n_a") > 0,
-                F.expr("(2 * n_inter * 1000000 + n_a) div (2 * n_a)")
-                / F.lit(1e6),
+                F.expr(half_up("n_inter * 1000000", "n_a")) / F.lit(1e6),
             ).alias("contain_a_in_b"),
             F.when(
                 F.col("n_b") > 0,
-                F.expr("(2 * n_inter * 1000000 + n_b) div (2 * n_b)")
-                / F.lit(1e6),
+                F.expr(half_up("n_inter * 1000000", "n_b")) / F.lit(1e6),
             ).alias("contain_b_in_a"),
         )
     )
@@ -649,12 +643,10 @@ def lsh_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(
         (F.col("est_micro") / F.lit(1e6)).alias("est_jaccard"),
         "n_pairs",
-        (F.expr("(2 * s_true + n_pairs) div (2 * n_pairs)") / F.lit(1e6)).alias(
+        (F.expr(half_up("s_true", "n_pairs")) / F.lit(1e6)).alias(
             "mean_true_jaccard"
         ),
-        (F.expr("(2 * s_err + n_pairs) div (2 * n_pairs)") / F.lit(1e6)).alias(
-            "mean_abs_err"
-        ),
+        (F.expr(half_up("s_err", "n_pairs")) / F.lit(1e6)).alias("mean_abs_err"),
     )
 
 
@@ -695,17 +687,11 @@ def dup_rate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_unique_exact",
             "n_canonical",
             (
-                F.expr(
-                    "(2 * (n_docs - n_unique_exact) * 1000000 + n_docs)"
-                    " div (2 * n_docs)"
-                )
+                F.expr(half_up("(n_docs - n_unique_exact) * 1000000", "n_docs"))
                 / F.lit(1e6)
             ).alias("exact_dup_rate"),
             (
-                F.expr(
-                    "(2 * (n_docs - n_canonical) * 1000000 + n_docs)"
-                    " div (2 * n_docs)"
-                )
+                F.expr(half_up("(n_docs - n_canonical) * 1000000", "n_docs"))
                 / F.lit(1e6)
             ).alias("near_dup_rate"),
         )
@@ -1016,10 +1002,9 @@ def minhash_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             "n_exact",
             "est_kmv",
-            F.expr(
-                "(2 * abs(est_kmv - n_exact) * 1000000 + n_exact)"
-                " div (2 * n_exact)"
-            ).alias("rel_err_micro"),
+            F.expr(half_up("abs(est_kmv - n_exact) * 1000000", "n_exact")).alias(
+                "rel_err_micro"
+            ),
         )
         .orderBy("source")
     )
@@ -1967,10 +1952,9 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "deg",
         F.coalesce("triangles", F.lit(0)).cast("bigint").alias("triangles"),
         F.expr(
-            "CASE WHEN deg >= 2 THEN"
-            " (4 * coalesce(triangles, 0) * 1000000 + deg * (deg - 1))"
-            " div (2 * deg * (deg - 1))"
-            " ELSE cast(0 as bigint) END"
+            "CASE WHEN deg >= 2 THEN "
+            + half_up("2 * coalesce(triangles, 0) * 1000000", "deg * (deg - 1)")
+            + " ELSE cast(0 as bigint) END"
         ).alias("lcc_micro"),
     )
 
@@ -2161,9 +2145,9 @@ def crosslingual_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # NULLs never reach here — least/greatest drop them identically
         # in both engines
         (~F.col("lang_lo").eqNullSafe(F.col("lang_hi"))).alias("is_cross"),
-        F.expr(
-            "(2 * n_pairs * 1000000 + total) div (2 * total) / 1000000.0D"
-        ).alias("pair_share"),
+        F.expr(half_up("n_pairs * 1000000", "total") + " / 1000000.0D").alias(
+            "pair_share"
+        ),
     )
 
 
@@ -2359,8 +2343,8 @@ def prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_b",
             "n_inter",
             F.expr(
-                "(2 * n_inter * 1000000 + (n_a + n_b - n_inter))"
-                " div (2 * (n_a + n_b - n_inter)) / 1000000.0D"
+                half_up("n_inter * 1000000", "(n_a + n_b - n_inter)")
+                + " / 1000000.0D"
             ).alias("jaccard"),
         )
     )
@@ -2445,10 +2429,7 @@ def lsh_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = _memoized_prefix_filter(spark, sf_dir).select(
         "doc_id_a",
         "doc_id_b",
-        F.expr(
-            "(2 * n_inter * 1000000 + (n_a + n_b - n_inter))"
-            " div (2 * (n_a + n_b - n_inter))"
-        ).alias("jm"),
+        F.expr(half_up("n_inter * 1000000", "(n_a + n_b - n_inter)")).alias("jm"),
     )
     docs = load_table(spark, sf_dir, "documents")
     sa = docs.select(
@@ -2503,31 +2484,21 @@ def lsh_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_both",
         F.when(
             F.col("n_exact") > 0,
-            F.expr(
-                "(2 * n_both * 1000000 + n_exact) div (2 * n_exact)"
-                " / 1000000.0D"
-            ),
+            F.expr(half_up("n_both * 1000000", "n_exact") + " / 1000000.0D"),
         ).alias("recall"),
         F.when(
             F.col("n_in_scope") > 0,
             F.expr(
-                "(2 * n_both_in_scope * 1000000 + n_in_scope)"
-                " div (2 * n_in_scope) / 1000000.0D"
+                half_up("n_both_in_scope * 1000000", "n_in_scope") + " / 1000000.0D"
             ),
         ).alias("recall_in_scope"),
         F.when(
             F.col("n_lsh") > 0,
-            F.expr(
-                "(2 * n_both * 1000000 + n_lsh) div (2 * n_lsh)"
-                " / 1000000.0D"
-            ),
+            F.expr(half_up("n_both * 1000000", "n_lsh") + " / 1000000.0D"),
         ).alias("lsh_overlap"),
         F.when(
             F.col("n_exact") - F.col("n_both") > 0,
-            F.expr(
-                "(2 * missed_sum + (n_exact - n_both))"
-                " div (2 * (n_exact - n_both)) / 1000000.0D"
-            ),
+            F.expr(half_up("missed_sum", "(n_exact - n_both)") + " / 1000000.0D"),
         ).alias("missed_mean_jaccard"),
     )
 

@@ -44,6 +44,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.exact import half_up
 from ..sources.batch import load_table
 
 ASSET_SCHEMA = StructType(
@@ -498,9 +499,9 @@ def multimodal_frame_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_a",
         "doc_b",
         "shared_frames",
-        F.expr(
-            f"(2 * 1000 * shared_frames + {N_FRAMES}) div (2 * {N_FRAMES})"
-        ).alias("overlap_permille"),
+        F.expr(half_up("1000 * shared_frames", f"{N_FRAMES}")).alias(
+            "overlap_permille"
+        ),
     )
 
 
@@ -619,9 +620,12 @@ def multimodal_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(
             F.expr(
-                f"cast((2 * meta_width * {RESIZE_TARGET}"
-                f" + greatest(meta_width, meta_height))"
-                f" div (2 * greatest(meta_width, meta_height)) as int)"
+                "cast("
+                + half_up(
+                    f"meta_width * {RESIZE_TARGET}",
+                    "greatest(meta_width, meta_height)",
+                )
+                + " as int)"
             )
         )
         .alias("out_w"),
@@ -630,9 +634,12 @@ def multimodal_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(
             F.expr(
-                f"cast((2 * meta_height * {RESIZE_TARGET}"
-                f" + greatest(meta_width, meta_height))"
-                f" div (2 * greatest(meta_width, meta_height)) as int)"
+                "cast("
+                + half_up(
+                    f"meta_height * {RESIZE_TARGET}",
+                    "greatest(meta_width, meta_height)",
+                )
+                + " as int)"
             )
         )
         .alias("out_h"),
@@ -700,17 +707,16 @@ def multimodal_audio_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("skip"), F.lit(None).cast("double"))
         .otherwise(
             F.expr(
-                f"(2 * least(n_samples,"
-                f"            {AUDIO_WIN} + (n_frames - 1) * {AUDIO_HOP})"
-                f" * 1000000 + n_samples) div (2 * n_samples)"
+                half_up(
+                    f"least(n_samples, {AUDIO_WIN} + (n_frames - 1) * {AUDIO_HOP})"
+                    " * 1000000",
+                    "n_samples",
+                )
             )
             / F.lit(1e6)
         )
         .alias("coverage"),
-        # exact half-up milliseconds
-        F.expr(
-            "(2 * n_samples * 1000 + sample_rate) div (2 * sample_rate)"
-        ).alias("duration_ms"),
+        F.expr(half_up("n_samples * 1000", "sample_rate")).alias("duration_ms"),
         "skip",
     )
 

@@ -27,6 +27,7 @@ import math
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ..functions.exact import avg6, half_up, half_up_signed
 from ..session import local_frame, session_cached
 from ..sources.batch import load_table
 
@@ -74,14 +75,19 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _query_vectors(vecs: DataFrame) -> DataFrame:
+    """The fixed query sample as (query_id, q)."""
+    return vecs.where(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("q")
+    )
+
+
 def topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-5 cosine neighbors for each query vector (vec_id<20):
     broadcast the queries, one scan of the corpus, per-query top-k via
     row_number (partial top-k per partition under AQE)."""
     vecs = _vectors(spark, sf_dir)
-    queries = vecs.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("q")
-    )
+    queries = _query_vectors(vecs)
     scored = (
         vecs.crossJoin(F.broadcast(queries))
         .where(F.col("vec_id") != F.col("query_id"))
@@ -119,10 +125,9 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical doubles are already deterministic
     return with_norm.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_vecs"),
-        F.expr(
-            "(2 * sum(cast(round(norm * 1000000) as bigint)) + count(1))"
-            " div (2 * count(1)) / 1000000.0D"
-        ).alias("avg_norm"),
+        F.expr(avg6("sum(cast(round(norm * 1000000) as bigint))")).alias(
+            "avg_norm"
+        ),
         F.round(F.min("norm"), 6).alias("min_norm"),
         F.round(F.max("norm"), 6).alias("max_norm"),
     )
@@ -234,9 +239,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _ivf_cells(vecs)
     nearest_cells = _nearest_cells_fn(cents)
     assigned = nearest_cells(vecs, "vec_id", "v", 1)
-    queries = vecs.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("q")
-    )
+    queries = _query_vectors(vecs)
     probes = nearest_cells(queries, "query_id", "q", NPROBE)
     scored = (
         # N_QUERIES × NPROBE probe rows broadcast onto the corpus-sized
@@ -281,10 +284,7 @@ def ivf_cell_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cell_id",
         "n_vecs",
         (
-            F.expr(
-                "(2 * n_vecs * 1000000 + sum(n_vecs) OVER ())"
-                " div (2 * sum(n_vecs) OVER ())"
-            )
+            F.expr(half_up("n_vecs * 1000000", "sum(n_vecs) OVER ()"))
             / F.lit(1e6)
         ).alias("corpus_share"),
     )
@@ -465,9 +465,7 @@ def ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = _vectors(spark, sf_dir)
     nearest_cells = _nearest_cells_fn(_ivf_cells(vecs))
     assigned = nearest_cells(vecs, "vec_id", "v", 1).select("vec_id", "cell_id")
-    queries = vecs.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("q")
-    )
+    queries = _query_vectors(vecs)
     probes = nearest_cells(queries, "query_id", "q", NPROBE).select(
         "query_id", "cell_id"
     )
@@ -558,13 +556,11 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "n_exact",
             "n_hits",
-            # exact half-up centi-unit division: k/K recall ratios land
-            # on .xx5 boundaries constantly (e.g. 19/40), where
-            # cross-engine double ROUND diverges
-            (
-                F.expr("(2 * n_hits * 100 + n_exact) div (2 * n_exact)")
-                / F.lit(100.0)
-            ).alias("recall"),
+            # k/K recall ratios land on .xx5 boundaries constantly (e.g.
+            # 19/40), where cross-engine double ROUND diverges
+            (F.expr(half_up("n_hits * 100", "n_exact")) / F.lit(100.0)).alias(
+                "recall"
+            ),
         )
     )
 
@@ -586,9 +582,7 @@ def range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the IVF cell probe of ``similarity_ivf_topk`` — the candidate
     set shrinks, the τ filter is unchanged."""
     vecs = _vectors(spark, sf_dir)
-    queries = vecs.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("q")
-    )
+    queries = _query_vectors(vecs)
     return (
         vecs.crossJoin(F.broadcast(queries))
         .where(F.col("vec_id") != F.col("query_id"))
@@ -622,9 +616,7 @@ def diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle serves both under AQE."""
     vecs = _vectors(spark, sf_dir)
     assigned = _nearest_cells_fn(_ivf_cells(vecs))(vecs, "vec_id", "v", 1)
-    queries = vecs.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("q")
-    )
+    queries = _query_vectors(vecs)
     scored = (
         assigned.crossJoin(F.broadcast(queries))
         .where(F.col("vec_id") != F.col("query_id"))
@@ -1624,7 +1616,7 @@ def _sq_code() -> F.Column:
     """Half-up affine code in 0..SQ_LEVELS from milli component xq and
     broadcast params (mn, rng); constant-range dims collapse to 0."""
     return F.when(F.col("rng") == 0, F.lit(0)).otherwise(
-        F.expr(f"(2 * (xq - mn) * {SQ_LEVELS} + rng) div (2 * rng)")
+        F.expr(half_up(f"(xq - mn) * {SQ_LEVELS}", "rng"))
     )
 
 
@@ -1698,9 +1690,7 @@ def sq_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return coded.groupBy("gd", "mn", "mx").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_vecs"),
-        F.expr("(2 * sum(err) + count(1)) div (2 * count(1))").alias(
-            "avg_err_255milli"
-        ),
+        F.expr(half_up("sum(err)", "count(1)")).alias("avg_err_255milli"),
         F.max("err").alias("max_err_255milli"),
     )
 
@@ -1897,11 +1887,7 @@ def covariance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "gd2",
         "n_vecs",
         "s_xy",
-        F.expr(
-            "CASE WHEN num < 0"
-            " THEN -((2 * (-num) + n_vecs * n_vecs) div (2 * n_vecs * n_vecs))"
-            " ELSE (2 * num + n_vecs * n_vecs) div (2 * n_vecs * n_vecs) END"
-        ).alias("cov_milli2"),
+        F.expr(half_up_signed("num", "n_vecs * n_vecs")).alias("cov_milli2"),
         F.abs("num").alias("_absnum"),
     )
     return (
@@ -2116,9 +2102,7 @@ def bq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("crank", F.row_number().over(cand_w))
         .where(F.col("crank") <= BQ_CANDIDATES)
     )
-    queries = vecs.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("q")
-    )
+    queries = _query_vectors(vecs)
     rer_w = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("vec_id")
     )
@@ -2213,9 +2197,7 @@ def matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     output joins the two 5-row top-k sets; recall is half-up exact
     2-decimal division (the ann_recall contract)."""
     vecs = _vectors(spark, sf_dir)
-    queries = vecs.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("q")
-    )
+    queries = _query_vectors(vecs)
 
     def _topk(score_col: F.Column) -> DataFrame:
         w = Window.partitionBy("query_id").orderBy(
@@ -2254,10 +2236,7 @@ def matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "n_exact",
             "n_hits",
-            (
-                F.expr("(2 * n_hits * 100 + n_exact) div (2 * n_exact)")
-                / 100.0
-            ).alias("recall"),
+            (F.expr(half_up("n_hits * 100", "n_exact")) / 100.0).alias("recall"),
         )
     )
 
@@ -2388,9 +2367,7 @@ def power_iteration_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-row sweep)
     half_away = (
         "CASE WHEN mx = 0 THEN cast(0 as bigint)"
-        " WHEN w < 0 THEN"
-        " -cast((2 * (-w) * 1000000 + mx) div (2 * mx) as bigint)"
-        " ELSE cast((2 * w * 1000000 + mx) div (2 * mx) as bigint) END"
+        f" ELSE cast({half_up_signed('w * 1000000', 'mx')} as bigint) END"
     )
     for _ in range(PCA_ROUNDS):
         w = (
@@ -2422,9 +2399,7 @@ def power_iteration_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.expr(
                 "CASE WHEN den = 0 THEN cast(0 as bigint)"
-                " WHEN num < 0 THEN"
-                " -cast((2 * (-num) + den) div (2 * den) as bigint)"
-                " ELSE cast((2 * num + den) div (2 * den) as bigint) END"
+                f" ELSE cast({half_up_signed('num', 'den')} as bigint) END"
             ).alias("lambda_scaled")
         )
     )
@@ -2586,10 +2561,9 @@ def recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(method).alias("method"),
                 "n_exact_pairs",
                 "n_hits",
-                F.expr(
-                    "(2 * n_hits * 1000000 + n_exact_pairs)"
-                    " div (2 * n_exact_pairs)"
-                ).alias("recall_micro"),
+                F.expr(half_up("n_hits * 1000000", "n_exact_pairs")).alias(
+                    "recall_micro"
+                ),
             )
         )
     out = frames[0]
@@ -2601,9 +2575,7 @@ def recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _mrl_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix-dim top-k pairs (the matryoshka_recall approx side)."""
     vecs = _vectors(spark, sf_dir)
-    queries = vecs.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("q")
-    )
+    queries = _query_vectors(vecs)
     score = _cos(
         F.slice(F.col("q"), 1, MRL_DIM), F.slice(F.col("v"), 1, MRL_DIM)
     )
@@ -2727,9 +2699,9 @@ def label_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_audited",
             "n_suspect",
             F.expr(
-                "case when agree_den = 0 then null else"
-                " (2 * agree_num * 1000000 + agree_den)"
-                " div (2 * agree_den) / 1000000.0D end"
+                "case when agree_den = 0 then null else "
+                + half_up("agree_num * 1000000", "agree_den")
+                + " / 1000000.0D end"
             ).alias("agreement"),
         )
     )
@@ -2822,10 +2794,7 @@ def ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_rel_hits",
             "dcg_micro",
             (
-                F.expr(
-                    f"(2 * dcg_micro * 1000000 + {_NDCG_IDCG_MICRO})"
-                    f" div (2 * {_NDCG_IDCG_MICRO})"
-                )
+                F.expr(half_up("dcg_micro * 1000000", f"{_NDCG_IDCG_MICRO}"))
                 / F.lit(1e6)
             ).alias("ndcg"),
         )
@@ -2976,9 +2945,7 @@ def ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _ivf_cells(vecs)
     nearest_cells = _nearest_cells_fn(cents)
     assigned = nearest_cells(vecs, "vec_id", "v", 1).select("vec_id", "cell_id")
-    queries = vecs.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("q")
-    )
+    queries = _query_vectors(vecs)
     probes = nearest_cells(queries, "query_id", "q", NPROBE).select(
         "query_id", "cell_id"
     )
@@ -3233,17 +3200,14 @@ def jl_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_vec = df.mapInArrow(
         jl_batches, "label int, sx2 long, sy2 long"
     ).where(F.col("sx2") > 0)
-    ratio_micro = F.expr(
-        f"(2 * 1000000 * sy2 + {JL_K} * sx2) div (2 * {JL_K} * sx2)"
-    )
+    ratio_micro = F.expr(half_up("1000000 * sy2", f"{JL_K} * sx2"))
     return (
         per_vec.select("label", ratio_micro.alias("r_micro"))
         .groupBy("label")
         .agg(
             F.count(F.lit(1)).alias("n_vecs"),
             (
-                F.expr("(2 * sum(r_micro) + count(1)) div (2 * count(1))")
-                / F.lit(1e6)
+                F.expr(half_up("sum(r_micro)", "count(1)")) / F.lit(1e6)
             ).alias("avg_ratio"),
             (F.min("r_micro") / F.lit(1e6)).alias("min_ratio"),
             (F.max("r_micro") / F.lit(1e6)).alias("max_ratio"),
@@ -3373,9 +3337,7 @@ def cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_labels",
             "top_label",
             "top_n",
-            F.expr(
-                "(2 * top_n * 1000000 + n_vecs) div (2 * n_vecs)"
-            ).alias("purity_micro"),
+            F.expr(half_up("top_n * 1000000", "n_vecs")).alias("purity_micro"),
         )
         .orderBy("cluster_id")
     )
@@ -3442,15 +3404,9 @@ def dim_mean_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def mean_micro(s: str, n: str) -> str:
-        # signed half-away micro mean of an exact DECIMAL(·,6) sum:
-        # S = s·1e6 is integral by construction
-        return (
-            f"case when {s} >= 0"
-            f" then (2 * cast({s} * 1000000 as decimal(38,0)) + {n})"
-            f" div (2 * {n})"
-            f" else -((-2 * cast({s} * 1000000 as decimal(38,0)) + {n})"
-            f" div (2 * {n})) end"
-        )
+        # signed micro mean of an exact DECIMAL(·,6) sum: S = s·1e6 is
+        # integral by construction
+        return half_up_signed(f"cast({s} * 1000000 as decimal(38,0))", n)
 
     ml = mean_micro("s1", "n_vecs")
     mg = mean_micro("g1", "n_all")

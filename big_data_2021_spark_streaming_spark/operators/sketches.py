@@ -54,6 +54,7 @@ import math
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ..functions.exact import exact_global_rank, half_up
 from ..sources.batch import load_table
 
 # ---- HLL parameters -------------------------------------------------
@@ -119,8 +120,9 @@ def _hll_finalize(summary: DataFrame) -> DataFrame:
         + " END"
     )
     raw = F.expr(
-        f"(2 * {HLL_ALPHA_MILLI * HLL_M * HLL_M * (1 << HLL_CAP)}"
-        f" + 1000 * s_scaled) div (2 * 1000 * s_scaled)"
+        half_up(
+            f"{HLL_ALPHA_MILLI * HLL_M * HLL_M * (1 << HLL_CAP)}", "1000 * s_scaled"
+        )
     )
     out = (
         summary.withColumn("raw_est", raw)
@@ -139,8 +141,7 @@ def _hll_finalize(summary: DataFrame) -> DataFrame:
         .withColumn(
             "err_permille",
             F.expr(
-                "(2 * 1000 * abs(hll_estimate - exact_distinct) + exact_distinct)"
-                " div (2 * exact_distinct)"
+                half_up("1000 * abs(hll_estimate - exact_distinct)", "exact_distinct")
             ),
         )
     )
@@ -285,8 +286,9 @@ def _hll_estimate_only(summary: DataFrame) -> DataFrame:
         + " END"
     )
     raw = F.expr(
-        f"(2 * {HLL_ALPHA_MILLI * HLL_M * HLL_M * (1 << HLL_CAP)}"
-        f" + 1000 * s_scaled) div (2 * 1000 * s_scaled)"
+        half_up(
+            f"{HLL_ALPHA_MILLI * HLL_M * HLL_M * (1 << HLL_CAP)}", "1000 * s_scaled"
+        )
     )
     return (
         summary.withColumn("raw_est", raw)
@@ -452,13 +454,13 @@ def sketch_hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
         "exact_intersection",
         "exact_union",
         F.expr(
-            "(2 * greatest(est_intersection, cast(0 as bigint)) * 1000000"
-            " + est_union) div (2 * est_union)"
+            half_up(
+                "greatest(est_intersection, cast(0 as bigint)) * 1000000", "est_union"
+            )
         ).alias("jaccard_est_micro"),
-        F.expr(
-            "(2 * exact_intersection * 1000000 + exact_union)"
-            " div (2 * exact_union)"
-        ).alias("jaccard_exact_micro"),
+        F.expr(half_up("exact_intersection * 1000000", "exact_union")).alias(
+            "jaccard_exact_micro"
+        ),
     )
 
 
@@ -525,11 +527,10 @@ def sketch_bloom_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bloom_pass",
         "true_pass",
         "false_pos",
-        # fp rate among non-members, half-up permille
-        F.expr(
-            "(2 * 1000 * false_pos + (n_probes - true_pass))"
-            " div (2 * (n_probes - true_pass))"
-        ).alias("fp_permille"),
+        # fp rate among non-members, permille
+        F.expr(half_up("1000 * false_pos", "(n_probes - true_pass)")).alias(
+            "fp_permille"
+        ),
     )
 
 
@@ -623,15 +624,13 @@ def sketch_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fact scan reduces map-side to ≤HQ_BUCKETS cells per partition
     and one tiny final merge — the error report says what that buys.
 
-    The exact side reuses ``_exact_global_rank`` (banded two-phase
+    The exact side reuses ``exact_global_rank`` (banded two-phase
     row-number — no single-partition fact sort); every division runs
     on non-negative offsets from the global min so Spark's
     truncate-toward-zero ``div`` and DuckDB's floor ``//`` agree even
     for negative values. NULL values are excluded at the scan (r08,
     both engines): a NULL is not a measurement, and engines place
     NULLs at opposite ends of the rank order."""
-    from ..plans.analytics import _exact_global_rank
-
     events = load_table(spark, sf_dir, "events").where(
         F.col("value").isNotNull()
     )
@@ -693,7 +692,7 @@ def sketch_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("est_micro"),
         )
     )
-    ranked = _exact_global_rank(base, "m", "event_id", "rnk")
+    ranked = exact_global_rank(base, "m", "event_id", "rnk")
     exact = (
         ranked.join(
             F.broadcast(picked.select("q", "r")),

@@ -19,6 +19,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ..functions.exact import exact_global_rank, half_up, half_up_signed
 from ..sources.batch import load_table
 
 # BPE-ish pre-tokenizer: letter runs | digits | any other non-space char.
@@ -92,15 +93,14 @@ def quality_lineage(docs: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
             toks, F.lit(0).cast("bigint"), lambda acc, t: acc + F.length(t)
         ).alias("total_len"),
     )
-    stop_micro = F.expr("(2 * n_stop * 1000000 + n_tokens) div (2 * n_tokens)")
-    len_micro = F.expr(
-        "(2 * total_len * 1000000 + n_tokens) div (2 * n_tokens)"
-    )
+    stop_micro = F.expr(half_up("n_stop * 1000000", "n_tokens"))
+    len_micro = F.expr(half_up("total_len * 1000000", "n_tokens"))
     q_micro = F.expr(
-        "least(n_tokens * 5000, 500000)"
-        " + (2 * (300000 * n_stop"
-        "         + least(20000 * total_len, 200000 * n_tokens))"
-        "    + n_tokens) div (2 * n_tokens)"
+        "least(n_tokens * 5000, 500000) + "
+        + half_up(
+            "(300000 * n_stop + least(20000 * total_len, 200000 * n_tokens))",
+            "n_tokens",
+        )
     )
     return staged.select(
         "doc_id",
@@ -161,11 +161,7 @@ def lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pred_lang",
         "n_docs",
         (
-            F.expr(
-                "(2 * n_docs * 1000000"
-                " + sum(n_docs) OVER (PARTITION BY lang))"
-                " div (2 * sum(n_docs) OVER (PARTITION BY lang))"
-            )
+            F.expr(half_up("n_docs * 1000000", "sum(n_docs) OVER (PARTITION BY lang)"))
             / F.lit(1e6)
         ).alias("share_of_gold"),
     )
@@ -315,8 +311,6 @@ def length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~#buckets keys."""
     docs = load_table(spark, sf_dir, "documents")
     bucket = (F.floor(F.col("n_chars") / 50) * 50).cast("int")
-    # avg as exact half-up 1e4-unit integer division, not
-    # ROUND(int/int double, 4) — the cross-engine ROUND-boundary class
     return (
         docs.groupBy(bucket.alias("bucket_lo"))
         .agg(
@@ -330,10 +324,9 @@ def length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_docs",
             "min_chars",
             "max_chars",
-            (
-                F.expr("(2 * sum_chars * 10000 + n_docs) div (2 * n_docs)")
-                / F.lit(1e4)
-            ).alias("avg_chars"),
+            (F.expr(half_up("sum_chars * 10000", "n_docs")) / F.lit(1e4)).alias(
+                "avg_chars"
+            ),
         )
     )
 
@@ -429,19 +422,14 @@ def token_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = tok.join(cf, "tok").crossJoin(F.broadcast(total))
     n = F.count(F.lit(1))
     rare = (F.col("c") * (100 // RARE_PCT) < F.col("total")).cast("bigint")
-    # both ratios as exact half-up integer unit division (1e4 / 1e6
-    # units), like quality_lineage: ROUND(int/int double, d) is the
-    # ROUND-boundary divergence class — Spark rounds BigDecimal's
-    # shortest repr, DuckDB the raw double, so a ratio landing on a
-    # .xxx5 boundary at an ungraded sf would hash-FAIL
     agg = scored.groupBy("doc_id").agg(
         n.alias("n_tokens"),
         F.min("c").alias("min_count"),
         F.sum("c").alias("sum_c"),
         F.sum(rare).alias("n_rare"),
     )
-    avg_u = F.expr("(2 * sum_c * 10000 + n_tokens) div (2 * n_tokens)")
-    rare_u = F.expr("(2 * n_rare * 1000000 + n_tokens) div (2 * n_tokens)")
+    avg_u = F.expr(half_up("sum_c * 10000", "n_tokens"))
+    rare_u = F.expr(half_up("n_rare * 1000000", "n_tokens"))
     return agg.select(
         "doc_id",
         "n_tokens",
@@ -637,8 +625,6 @@ def repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.max("run_len").alias("max_run_len"))
     )
-    # all three fractions are int/int rationals → exact half-up
-    # micro-unit division (the cross-engine ROUND-boundary class);
     # dup_bigram_frac's 1 - nd/nb is computed as (nb-nd)/nb so the
     # numerator stays integer
     return (
@@ -647,22 +633,15 @@ def repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "n_tokens",
+            (F.expr(half_up("top_count * 1000000", "n_tokens")) / F.lit(1e6)).alias(
+                "top_word_frac"
+            ),
+            (F.expr(half_up("n_distinct * 1000000", "n_tokens")) / F.lit(1e6)).alias(
+                "type_token_ratio"
+            ),
             (
                 F.expr(
-                    "(2 * top_count * 1000000 + n_tokens) div (2 * n_tokens)"
-                )
-                / F.lit(1e6)
-            ).alias("top_word_frac"),
-            (
-                F.expr(
-                    "(2 * n_distinct * 1000000 + n_tokens) div (2 * n_tokens)"
-                )
-                / F.lit(1e6)
-            ).alias("type_token_ratio"),
-            (
-                F.expr(
-                    "(2 * (n_bigrams - n_distinct_bigrams) * 1000000"
-                    " + n_bigrams) div (2 * n_bigrams)"
+                    half_up("(n_bigrams - n_distinct_bigrams) * 1000000", "n_bigrams")
                 )
                 / F.lit(1e6)
             ).alias("dup_bigram_frac"),
@@ -957,33 +936,21 @@ def lang_id_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.sum("prod").cast("bigint").alias("e_sum"))
     )
-    half_up = (
-        "CASE WHEN {a} >= 0"
-        " THEN (2 * ({a}) * 1000000 + ({b})) div (2 * ({b}))"
-        " ELSE -((2 * -({a}) * 1000000 + ({b})) div (2 * ({b}))) END"
-    )
+
+    def micro(a: str, b: str) -> str:
+        return half_up_signed(f"({a}) * 1000000", f"({b})") + " / 1000000.0D"
+
     return (
         stats.crossJoin(F.broadcast(e))
         .select(
             "n_docs",
             "n_agree",
             "e_sum",
-            F.expr(
-                half_up.format(a="n_agree", b="n_docs") + " / 1000000.0D"
-            ).alias("po"),
-            F.expr(
-                half_up.format(a="e_sum", b="n_docs * n_docs")
-                + " / 1000000.0D"
-            ).alias("pe"),
+            F.expr(micro("n_agree", "n_docs")).alias("po"),
+            F.expr(micro("e_sum", "n_docs * n_docs")).alias("pe"),
             F.when(
                 F.expr("n_docs * n_docs - e_sum") > 0,
-                F.expr(
-                    half_up.format(
-                        a="n_agree * n_docs - e_sum",
-                        b="n_docs * n_docs - e_sum",
-                    )
-                    + " / 1000000.0D"
-                ),
+                F.expr(micro("n_agree * n_docs - e_sum", "n_docs * n_docs - e_sum")),
             ).alias("kappa"),
         )
     )
@@ -1175,9 +1142,7 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.coalesce(F.col("n_grams"), F.lit(0)).cast("bigint").alias("n_grams"),
         F.coalesce(F.col("n_novel"), F.lit(0)).cast("bigint").alias("n_novel"),
-        F.expr("(2 * 1000 * n_novel + n_grams) div (2 * n_grams)").alias(
-            "novelty_permille"
-        ),
+        F.expr(half_up("1000 * n_novel", "n_grams")).alias("novelty_permille"),
     )
 
 
@@ -1272,9 +1237,7 @@ def boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             F.coalesce("n_grams", F.lit(0)).cast("bigint").alias("n_grams"),
             F.coalesce("n_boiler", F.lit(0)).cast("bigint").alias("n_boiler"),
-            F.expr(
-                "(2 * 1000 * n_boiler + n_grams) div (2 * n_grams)"
-            ).alias("boiler_permille"),
+            F.expr(half_up("1000 * n_boiler", "n_grams")).alias("boiler_permille"),
         )
     )
 
@@ -1350,7 +1313,7 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     probs = cb.join(cp, "w1").select(
         "w1",
         "w2",
-        F.expr(f"(2 * c_b * {LM_SCALE} + c_p) div (2 * c_p)").alias("p_micro"),
+        F.expr(half_up(f"c_b * {LM_SCALE}", "c_p")).alias("p_micro"),
     )
     scored = (
         big.join(probs, ["w1", "w2"])
@@ -1363,7 +1326,7 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id").join(scored, "doc_id", "left").select(
         "doc_id",
         F.coalesce(F.col("n_bigrams"), F.lit(0)).cast("bigint").alias("n_bigrams"),
-        F.expr("(2 * sp + n_bigrams) div (2 * n_bigrams)").alias("lm_score_micro"),
+        F.expr(half_up("sp", "n_bigrams")).alias("lm_score_micro"),
     )
 
 
@@ -1465,23 +1428,23 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "tok",
             # idf_micro = halfup((2(N-df)+1) * 1e6, 2df+1)
-            F.expr(
-                "(2 * (2 * (n_docs - df) + 1) * 1000000 + (2 * df + 1))"
-                " div (2 * (2 * df + 1))"
-            ).alias("idf_micro"),
+            F.expr(half_up("(2 * (n_docs - df) + 1) * 1000000", "(2 * df + 1)")).alias(
+                "idf_micro"
+            ),
             # tfpart_micro = halfup(44*tf*T * 1e6, 20*tf*T + 6*T + 18*dl*N)
             F.expr(
-                "(2 * 44 * tf * t_toks * 1000000"
-                " + (20 * tf * t_toks + 6 * t_toks + 18 * dl * n_docs))"
-                " div (2 * (20 * tf * t_toks + 6 * t_toks + 18 * dl * n_docs))"
+                half_up(
+                    "44 * tf * t_toks * 1000000",
+                    "(20 * tf * t_toks + 6 * t_toks + 18 * dl * n_docs)",
+                )
             ).alias("tfpart_micro"),
         )
         .select(
             "doc_id",
             "tok",
-            F.expr(
-                "(2 * idf_micro * tfpart_micro + 1000000) div (2 * 1000000)"
-            ).alias("contrib_micro"),
+            F.expr(half_up("idf_micro * tfpart_micro", "1000000")).alias(
+                "contrib_micro"
+            ),
         )
     )
     return (
@@ -1546,7 +1509,10 @@ def rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense_ranked = dense_pool.select(
         "doc_id", F.row_number().over(w_dense).alias("dense_rank")
     )
-    rr = "(2 * 1000000 + (%(k)d + %(r)s)) div (2 * (%(k)d + %(r)s))"
+
+    def rr(rank: str) -> F.Column:
+        return F.expr(half_up("1000000", f"({RRF_K} + {rank})"))
+
     fused = (
         lex_ranked.join(dense_ranked, "doc_id", "full_outer")
         .select(
@@ -1554,12 +1520,8 @@ def rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lex_rank",
             "dense_rank",
             (
-                F.coalesce(
-                    F.expr(rr % {"k": RRF_K, "r": "lex_rank"}), F.lit(0)
-                )
-                + F.coalesce(
-                    F.expr(rr % {"k": RRF_K, "r": "dense_rank"}), F.lit(0)
-                )
+                F.coalesce(rr("lex_rank"), F.lit(0))
+                + F.coalesce(rr("dense_rank"), F.lit(0))
             ).alias("rrf_micro"),
         )
         .orderBy(F.col("rrf_micro").desc(), "doc_id")
@@ -1747,9 +1709,9 @@ def substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n_hits", F.lit(0)).cast("bigint").alias("n_hits"),
             F.coalesce("n_islands", F.lit(0)).cast("bigint").alias("n_islands"),
             F.coalesce("dup_chars", F.lit(0)).cast("bigint").alias("dup_chars"),
-            F.expr(
-                "(2 * 1000 * coalesce(dup_chars, 0) + n_chars) div (2 * n_chars)"
-            ).alias("dup_permille"),
+            F.expr(half_up("1000 * coalesce(dup_chars, 0)", "n_chars")).alias(
+                "dup_permille"
+            ),
         )
     )
 
@@ -1856,10 +1818,9 @@ def encoding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ctrl_chars",
             "nonascii_chars",
             "total_chars",
-            F.expr(
-                "(2 * 1000000 * nonascii_chars + total_chars)"
-                " div (2 * total_chars)"
-            ).alias("nonascii_ppm"),
+            F.expr(half_up("1000000 * nonascii_chars", "total_chars")).alias(
+                "nonascii_ppm"
+            ),
         )
     )
 
@@ -2230,9 +2191,7 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.length("piece").cast("bigint").alias("piece_len"),
             "n_occ",
             F.row_number().over(rank_w).cast("bigint").alias("piece_rank"),
-            F.expr(
-                "(2 * n_occ * 1000000 + tot) div (2 * tot)"
-            ).alias("share_micro"),
+            F.expr(half_up("n_occ * 1000000", "tot")).alias("share_micro"),
         )
     )
 
@@ -2312,10 +2271,9 @@ def bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang",
             "n_words",
             "n_pieces",
-            F.expr(
-                "(2 * n_pieces * 1000000 + n_words) div (2 * n_words)"
-                " / 1000000.0D"
-            ).alias("fertility"),
+            F.expr(half_up("n_pieces * 1000000", "n_words") + " / 1000000.0D").alias(
+                "fertility"
+            ),
         )
     )
 
@@ -2419,9 +2377,7 @@ def rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored_members = members.join(
         words.select(
             "tok",
-            F.expr("(2 * degree * 1000000 + freq) div (2 * freq)").alias(
-                "word_score_micro"
-            ),
+            F.expr(half_up("degree * 1000000", "freq")).alias("word_score_micro"),
         ),
         "tok",
     )
@@ -2565,14 +2521,12 @@ def feature_hashing_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_collided_buckets",
         "max_bucket_terms",
         "max_bucket_occ",
-        (
-            F.expr("(2 * collided_occ * 1000000 + total_occ) div (2 * total_occ)")
-            / F.lit(1e6)
-        ).alias("collided_occ_share"),
-        (
-            F.expr("(2 * net_l1 * 1000000 + total_occ) div (2 * total_occ)")
-            / F.lit(1e6)
-        ).alias("signed_l1_share"),
+        (F.expr(half_up("collided_occ * 1000000", "total_occ")) / F.lit(1e6)).alias(
+            "collided_occ_share"
+        ),
+        (F.expr(half_up("net_l1 * 1000000", "total_occ")) / F.lit(1e6)).alias(
+            "signed_l1_share"
+        ),
     )
 
 
@@ -2687,9 +2641,7 @@ def source_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "r",
         F.expr(
-            f"(2 * ({d38} * {d38}) * 1000000"
-            f" + (cast(n as decimal(38,0)) * r * c))"
-            f" div (2 * (cast(n as decimal(38,0)) * r * c))"
+            half_up(f"({d38} * {d38}) * 1000000", "(cast(n as decimal(38,0)) * r * c)")
         ).alias("chi2_cell_micro"),
     )
     return contrib.groupBy("source").agg(
@@ -2783,12 +2735,8 @@ def hapax_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vocab",
             "hapax",
             "n_tokens",
-            F.expr(
-                "(2 * hapax * 1000000 + vocab) div (2 * vocab)"
-            ).alias("hapax_share_micro"),
-            F.expr(
-                "(2 * vocab * 1000000 + n_tokens) div (2 * n_tokens)"
-            ).alias("ttr_micro"),
+            F.expr(half_up("hapax * 1000000", "vocab")).alias("hapax_share_micro"),
+            F.expr(half_up("vocab * 1000000", "n_tokens")).alias("ttr_micro"),
         )
         .orderBy("source")
     )
@@ -2828,13 +2776,11 @@ def zipf_topshare(spark: SparkSession, sf_dir: str) -> DataFrame:
     curve as template spam (one page repeated) and a too-steep one as
     vocabulary collapse.
 
-    Ranks come from ``_exact_global_rank`` on the term-frequency frame
+    Ranks come from ``exact_global_rank`` on the term-frequency frame
     (|vocab| rows) with metric -freq — the banded two-phase rank, no
     single-partition sort. The coverage sums collapse to ONE
     conditional aggregation over the ranked vocabulary, stacked to a
     row per k. Shares are exact half-up micro."""
-    from ..plans.analytics import _exact_global_rank
-
     docs = load_table(spark, sf_dir, "documents")
     tf = (
         docs.select(F.explode(tokens_col(F.col("text"))).alias("tok"))
@@ -2842,7 +2788,7 @@ def zipf_topshare(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
         .withColumn("neg_freq", -F.col("freq"))
     )
-    ranked = _exact_global_rank(tf, "neg_freq", "tok", "rnk")
+    ranked = exact_global_rank(tf, "neg_freq", "tok", "rnk")
     aggs = [F.sum("freq").alias("total")]
     for k in ZIPF_KS:
         aggs.append(
@@ -2861,9 +2807,7 @@ def zipf_topshare(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("k").cast("bigint").alias("k"),
         F.col("top_tokens").cast("bigint").alias("top_tokens"),
         F.col("total").cast("bigint").alias("total_tokens"),
-        F.expr(
-            "(2 * top_tokens * 1000000 + total) div (2 * total)"
-        ).alias("coverage_micro"),
+        F.expr(half_up("top_tokens * 1000000", "total")).alias("coverage_micro"),
     )
 
 
@@ -2941,9 +2885,9 @@ def char_class_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_spaces").alias("n_spaces"),
     )
     share = (
-        lambda c: F.expr(
-            f"(2 * {c} * 1000000 + n_chars) div (2 * n_chars)"
-        ).alias(f"{c.removeprefix('n_')}_share_micro")
+        lambda c: F.expr(half_up(f"{c} * 1000000", "n_chars")).alias(
+            f"{c.removeprefix('n_')}_share_micro"
+        )
     )
     return agg.select(
         "source",
@@ -2952,8 +2896,7 @@ def char_class_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         share("n_digits"),
         share("n_spaces"),
         F.expr(
-            "(2 * (n_chars - n_letters - n_digits - n_spaces) * 1000000"
-            " + n_chars) div (2 * n_chars)"
+            half_up("(n_chars - n_letters - n_digits - n_spaces) * 1000000", "n_chars")
         ).alias("other_share_micro"),
     ).orderBy("source")
 
@@ -3023,12 +2966,10 @@ def word_len_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "source",
             "n_words",
-            F.expr("(2 * sum_len * 1000000 + n_words) div (2 * n_words)")
-            .alias("mean_len_micro"),
+            F.expr(half_up("sum_len * 1000000", "n_words")).alias("mean_len_micro"),
             "p50_len",
             "max_len",
-            F.expr("(2 * n_long * 1000000 + n_words) div (2 * n_words)")
-            .alias("long_share_micro"),
+            F.expr(half_up("n_long * 1000000", "n_words")).alias("long_share_micro"),
         )
         .orderBy("source")
     )

@@ -21,7 +21,7 @@ can hash-check it, and each is written plan-first for 100 TB:
 - aggregates use built-in JVM functions only (whole-stage codegen; no
   Python in the hot path),
 - displayed SUM/AVG/ratio aggregates of doubles ride exact micro-unit
-  integer sums with half-up integer division (see the helpers below):
+  integer sums with half-up integer division (functions/exact.py):
   parallel summation order is nondeterministic in *any* engine, and
   ROUND(double) itself diverges cross-engine on .xx5 boundaries.
 
@@ -35,6 +35,17 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ..functions.exact import (
+    RFM_BANDS,
+    avg6,
+    cents,
+    cents_signed,
+    exact_global_rank,
+    half_up,
+    half_up_signed,
+    ratio6,
+    sum_m6,
+)
 from ..sources.batch import load_table
 
 
@@ -50,66 +61,6 @@ def _epoch_us(c) -> F.Column:
     """
     col = F.col(c) if isinstance(c, str) else c
     return F.unix_micros(col.cast("timestamp"))
-
-
-# ---------------------------------------------------------------------------
-# Exact displayed-aggregate helpers. ROUND(SUM(double)) is partition-
-# order-dependent in the last ulp, and the final ROUND itself diverges
-# cross-engine on .xx5 boundaries (Spark rounds the shortest decimal
-# repr of the double, DuckDB the raw binary value) — the sf0.4 sweep
-# flipped five queries this way. So every displayed SUM/AVG/ratio of a
-# ≤6-decimal double rides an exact micro-unit integer sum (the per-row
-# ×1e6 product is ONE shared IEEE op; the DECIMAL(38,0) accumulator
-# cannot overflow at any realistic corpus) with half-up INTEGER
-# division down to the display precision, then one exact /10^k.
-# The DuckDB oracles mirror the same expressions with `//` (operands
-# kept non-negative, or the sign-aware CASE, so floor == truncate).
-# ---------------------------------------------------------------------------
-
-
-def _sum_m6(expr: str) -> str:
-    """SQL: exact 1e-6-unit sum of a ≤6dp double expr, decimal(38,0)-
-    typed but accumulated as TWO BIGINT sums (hi = x div 1e6, lo =
-    x % 1e6; x ≡ hi·1e6 + lo exactly for either sign, so Σx =
-    1e6·Σhi + Σlo). Per-row work stays on primitive longs inside
-    whole-stage codegen — a straight decimal(38,0) sum runs ~3× slower
-    through the non-primitive aggregation buffer — and the decimal
-    recombination happens once per GROUP. Σhi is dollars-scaled and
-    Σlo < rows·1e6, so both partials sit far inside int64 at any
-    realistic corpus while the recombined total gets decimal range."""
-    x = f"cast(round(({expr}) * 1000000) as bigint)"
-    return (
-        f"(cast(sum({x} div 1000000) as decimal(38,0)) * 1000000"
-        f" + sum({x} % 1000000))"
-    )
-
-
-def _cents(sum_sql: str) -> str:
-    """SQL: half-up 2-decimal display of a non-negative micro sum."""
-    return f"(2 * ({sum_sql}) + 10000) div 20000 / 100.0D"
-
-
-def _cents_signed(sum_sql: str) -> str:
-    """Sign-aware 2-decimal display (half-up = away from zero, matching
-    both engines' ROUND) for sums that can be negative (acctbal)."""
-    return (
-        f"(case when ({sum_sql}) >= 0"
-        f" then (2 * ({sum_sql}) + 10000) div 20000"
-        f" else -((-2 * ({sum_sql}) + 10000) div 20000) end) / 100.0D"
-    )
-
-
-def _avg6(sum_sql: str, n_sql: str = "count(1)") -> str:
-    """SQL: half-up 6-decimal display of mean = micro sum / count."""
-    return f"(2 * ({sum_sql}) + ({n_sql})) div (2 * ({n_sql})) / 1000000.0D"
-
-
-def _ratio6(num_sql: str, den_sql: str) -> str:
-    """SQL: half-up 6-decimal display of a non-negative ratio."""
-    return (
-        f"(2 * ({num_sql}) * 1000000 + ({den_sql}))"
-        f" div (2 * ({den_sql})) / 1000000.0D"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -234,13 +185,13 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.where(F.col("l_shipdate") <= F.lit("2001-09-01").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.expr(_cents(_sum_m6("l_quantity"))).alias("sum_qty"),
-            F.expr(_cents(_sum_m6("l_extendedprice"))).alias("sum_base_price"),
+            F.expr(cents(sum_m6("l_quantity"))).alias("sum_qty"),
+            F.expr(cents(sum_m6("l_extendedprice"))).alias("sum_base_price"),
             F.expr(
-                _cents(_sum_m6("l_extendedprice * (1 - l_discount)"))
+                cents(sum_m6("l_extendedprice * (1 - l_discount)"))
             ).alias("sum_disc_price"),
-            F.expr(_avg6(_sum_m6("l_quantity"))).alias("avg_qty"),
-            F.expr(_avg6(_sum_m6("l_discount"))).alias("avg_disc"),
+            F.expr(avg6(sum_m6("l_quantity"))).alias("avg_qty"),
+            F.expr(avg6(sum_m6("l_discount"))).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
     )
@@ -266,7 +217,7 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("n_name").alias("nation_name"))
         .agg(
             F.expr(
-                _cents(_sum_m6("l_extendedprice * (1 - l_discount)"))
+                cents(sum_m6("l_extendedprice * (1 - l_discount)"))
             ).alias("revenue")
         )
     )
@@ -279,7 +230,7 @@ def top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     revenue = orders.groupBy("o_custkey").agg(
-        F.expr(_cents(_sum_m6("o_totalprice"))).alias("total_spent")
+        F.expr(cents(sum_m6("o_totalprice"))).alias("total_spent")
     )
     return (
         revenue.join(customer, revenue.o_custkey == customer.c_custkey)
@@ -372,10 +323,10 @@ def user_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(
             F.col("n_events") >= 2,
             F.expr(
-                "(2 * 1000000 * cast(num as decimal(38,0))"
-                " + cast(n_events as decimal(38,0)) * (n_events - 1))"
-                " div (2 * cast(n_events as decimal(38,0))"
-                "      * (n_events - 1))"
+                half_up(
+                    "1000000 * cast(num as decimal(38,0))",
+                    "cast(n_events as decimal(38,0)) * (n_events - 1)",
+                )
             ),
         ).alias("simpson_micro"),
     )
@@ -396,7 +347,7 @@ def rollup_order_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     return orders.rollup("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        F.expr(_cents(_sum_m6("o_totalprice"))).alias("total_price"),
+        F.expr(cents(sum_m6("o_totalprice"))).alias("total_price"),
     )
 
 
@@ -409,7 +360,7 @@ def cube_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cube("event_type", "hour")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.expr(_cents(_sum_m6("value"))).alias("sum_value"),
+            F.expr(cents(sum_m6("value"))).alias("sum_value"),
         )
     )
 
@@ -422,14 +373,10 @@ def pivot_user_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROUND(SUM(..)) is partition-order-dependent in the last ulp and
     flipped a .xx5 boundary at the sf0.4 sweep."""
     events = load_table(spark, sf_dir, "events")
-    cents = F.expr(
-        "(2 * sum(cast(round(value * 1000000) as bigint)) + 10000)"
-        " div 20000 / 100.0D"
-    )
     pivoted = (
         events.groupBy("user_id")
         .pivot("event_type", ["click", "view", "purchase", "error", "signup"])
-        .agg(cents)
+        .agg(F.expr(cents("sum(cast(round(value * 1000000) as bigint))")))
     )
     return pivoted
 
@@ -463,8 +410,7 @@ def session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.expr(
-                "(2 * sum(cast(round(value * 1000000) as bigint)) + 10000)"
-                " div 20000 / 100.0D"
+                cents("sum(cast(round(value * 1000000) as bigint))")
             ).alias("sum_value"),
         )
         .select(
@@ -632,7 +578,7 @@ def user_event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "user_id",
             (
-                F.expr("(2 * s_us + 100 * n_gaps) div (200 * n_gaps)")
+                F.expr(half_up("s_us", "100 * n_gaps"))
                 / F.lit(1e4)
             ).alias("avg_gap_sec"),
             "n_events",
@@ -657,8 +603,7 @@ def sliding_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.expr(
-                "(2 * sum(cast(round(value * 1000000) as bigint)) + 10000)"
-                " div 20000 / 100.0D"
+                cents("sum(cast(round(value * 1000000) as bigint))")
             ).alias("sum_value"),
         )
         .select(
@@ -684,15 +629,17 @@ def promo_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             # pct to 4dp = micro ratio of the two exact micro sums
             # (100 × 1e4 = 1e6 scaling folds into one half-up division)
             F.expr(
-                "(2 * " + _sum_m6(
-                    "case when p_type like 'PROMO%'"
-                    " then l_extendedprice * (1 - l_discount) else 0.0D end"
-                ) + " * 1000000 + " + _sum_m6("l_extendedprice * (1 - l_discount)")
-                + ") div (2 * " + _sum_m6("l_extendedprice * (1 - l_discount)")
-                + ") / 10000.0D"
+                half_up(
+                    sum_m6(
+                        "case when p_type like 'PROMO%'"
+                        " then l_extendedprice * (1 - l_discount) else 0.0D end"
+                    ) + " * 1000000",
+                    sum_m6("l_extendedprice * (1 - l_discount)"),
+                )
+                + " / 10000.0D"
             ).alias("promo_pct"),
             F.expr(
-                _cents(_sum_m6("l_extendedprice * (1 - l_discount)"))
+                cents(sum_m6("l_extendedprice * (1 - l_discount)"))
             ).alias("total_revenue"),
         )
     )
@@ -726,7 +673,7 @@ def supplier_balance_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_suppliers"),
             # acctbal can be negative → sign-aware exact cents
-            F.expr(_cents_signed(_sum_m6("s_acctbal"))).alias("total_balance"),
+            F.expr(cents_signed(sum_m6("s_acctbal"))).alias("total_balance"),
         )
         .where(F.col("n_suppliers") > 0)
     )
@@ -887,12 +834,12 @@ def salted_type_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "salt")
         .agg(
             F.count(F.lit(1)).alias("partial_n"),
-            F.expr(_sum_m6("value")).alias("partial_m"),
+            F.expr(sum_m6("value")).alias("partial_m"),
         )
     )
     return phase1.groupBy("event_type").agg(
         F.sum("partial_n").alias("n_events"),
-        F.expr(_cents("sum(partial_m)")).alias("total_value"),
+        F.expr(cents("sum(partial_m)")).alias("total_value"),
     )
 
 
@@ -929,11 +876,11 @@ def small_qty_part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         ["lineitem", "part"],
-        """
+        f"""
         SELECT p.p_brand,
-               (2 * SUM(CAST(ROUND(l.l_extendedprice * 1000000)
-                             AS DECIMAL(38,0))) + 10000)
-                   div 20000 / 100.0D AS low_qty_revenue,
+               {cents(
+                   "SUM(CAST(ROUND(l.l_extendedprice * 1000000) AS DECIMAL(38,0)))"
+               )} AS low_qty_revenue,
                COUNT(*) AS n_lines
         FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
         WHERE l.l_quantity < (
@@ -998,14 +945,9 @@ def inactive_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"""
         SELECT c.c_nationkey,
                COUNT(*) AS n_customers,
-               (CASE WHEN SUM(CAST(ROUND(c.c_acctbal * 1000000)
-                                   AS DECIMAL(38,0))) >= 0
-                     THEN (2 * SUM(CAST(ROUND(c.c_acctbal * 1000000)
-                                        AS DECIMAL(38,0))) + 10000)
-                          div 20000
-                     ELSE -((-2 * SUM(CAST(ROUND(c.c_acctbal * 1000000)
-                                           AS DECIMAL(38,0))) + 10000)
-                            div 20000) END) / 100.0D AS total_balance
+               {cents_signed(
+                   "SUM(CAST(ROUND(c.c_acctbal * 1000000) AS DECIMAL(38,0)))"
+               )} AS total_balance
         FROM customer c
         WHERE c.c_acctbal > (
             SELECT AVG(c_acctbal) FROM customer WHERE c_acctbal > 0.0
@@ -1069,7 +1011,7 @@ def shipping_priority_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
         .agg(
             F.expr(
-                _cents(_sum_m6("l_extendedprice * (1 - l_discount)"))
+                cents(sum_m6("l_extendedprice * (1 - l_discount)"))
             ).alias("revenue")
         )
         .orderBy(F.desc("revenue"), "o_orderkey")
@@ -1111,7 +1053,7 @@ def nation_pair_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
         .agg(
             F.expr(
-                _cents(_sum_m6("l_extendedprice * (1 - l_discount)"))
+                cents(sum_m6("l_extendedprice * (1 - l_discount)"))
             ).alias("revenue")
         )
     )
@@ -1157,13 +1099,13 @@ def market_share_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
             F.expr(
-                _ratio6(
-                    _sum_m6(
+                ratio6(
+                    sum_m6(
                         "case when supp_nation = 'NATION_2'"
                         " then l_extendedprice * (1 - l_discount)"
                         " else 0.0D end"
                     ),
-                    _sum_m6("l_extendedprice * (1 - l_discount)"),
+                    sum_m6("l_extendedprice * (1 - l_discount)"),
                 )
             ).alias("mkt_share")
         )
@@ -1194,7 +1136,7 @@ def part_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("n_name").alias("nation"), F.year("o_orderdate").alias("o_year"))
         .agg(
             F.expr(
-                _cents(_sum_m6("l_extendedprice * (1 - l_discount)"))
+                cents(sum_m6("l_extendedprice * (1 - l_discount)"))
             ).alias("profit")
         )
     )
@@ -1348,7 +1290,7 @@ def disjunctive_part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(clause)
         .agg(
             F.expr(
-                _cents(_sum_m6("l_extendedprice * (1 - l_discount)"))
+                cents(sum_m6("l_extendedprice * (1 - l_discount)"))
             ).alias("revenue"),
             F.count("*").alias("n_lines"),
         )
@@ -1397,10 +1339,10 @@ def running_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "ts",
-        F.expr("(2 * cum_m + 100) div 200 / 10000.0D").alias("cum_value"),
-        F.expr(
-            "(2 * mov_m + 100 * mov_n) div (200 * mov_n) / 10000.0D"
-        ).alias("moving_avg3"),
+        F.expr(half_up("cum_m", "100") + " / 10000.0D").alias("cum_value"),
+        F.expr(half_up("mov_m", "100 * mov_n") + " / 10000.0D").alias(
+            "moving_avg3"
+        ),
     )
 
 
@@ -1587,16 +1529,13 @@ def linkage_fs_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         return F.when(
             agree,
             F.expr(
-                f"(2 * {mn} * {d} * 1000000"
-                f" + {md} * cast({u} as decimal(38,0)))"
-                f" div (2 * {md} * cast({u} as decimal(38,0)))"
+                half_up(
+                    f"{mn} * {d} * 1000000",
+                    f"{md} * cast({u} as decimal(38,0))",
+                )
             ),
         ).otherwise(
-            F.expr(
-                f"(2 * {md - mn} * {d} * 1000000"
-                f" + {md} * ({d} - {u}))"
-                f" div (2 * {md} * ({d} - {u}))"
-            )
+            F.expr(half_up(f"{md - mn} * {d} * 1000000", f"{md} * ({d} - {u})"))
         )
 
     scored = pairs.select(
@@ -1684,10 +1623,9 @@ def user_trailing_hour_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "ts",
         "n_trailing_1h",
-        # half-up 4-decimal display from the exact micro window sum
-        F.expr(
-            "(2 * m_trailing + 100) div 200 / 10000.0D"
-        ).alias("sum_trailing_1h"),
+        F.expr(half_up("m_trailing", "100") + " / 10000.0D").alias(
+            "sum_trailing_1h"
+        ),
     )
 
 
@@ -1722,7 +1660,7 @@ def daily_click_purchase_recon(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             events.where(F.col("event_type") == event_type)
             .groupBy(F.date_trunc("day", "ts").alias("day"))
-            .agg(F.expr(_cents(_sum_m6("value"))).alias(alias))
+            .agg(F.expr(cents(sum_m6("value"))).alias(alias))
         )
 
     clicks, purchases = daily("click", "click_total"), daily("purchase", "purchase_total")
@@ -1957,9 +1895,10 @@ def discount_tax_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "disc_pct",
             F.expr(
-                f"(2 * ({d38} * {d38}) * 1000000"
-                f" + (cast(n as decimal(38,0)) * r * c))"
-                f" div (2 * (cast(n as decimal(38,0)) * r * c))"
+                half_up(
+                    f"({d38} * {d38}) * 1000000",
+                    "(cast(n as decimal(38,0)) * r * c)",
+                )
             ).alias("cell_micro"),
             "n_disc",
             "n_tax",
@@ -2019,8 +1958,7 @@ def anomaly_detector_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_both",
         (
             F.expr(
-                "(2 * n_both * 1000000 + (n_zscore + n_ewma - n_both))"
-                " div (2 * (n_zscore + n_ewma - n_both))"
+                half_up("n_both * 1000000", "(n_zscore + n_ewma - n_both)")
             )
             / F.lit(1e6)
         ).alias("jaccard"),
@@ -2066,9 +2004,11 @@ def experiment_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     srm = per_arm.agg(
         F.expr(
-            "(2 * (max(n_users) - min(n_users))"
-            " * (max(n_users) - min(n_users)) * 1000000"
-            " + sum(n_users)) div (2 * sum(n_users))"
+            half_up(
+                "(max(n_users) - min(n_users))"
+                " * (max(n_users) - min(n_users)) * 1000000",
+                "sum(n_users)",
+            )
         ).alias("_chi2_micro")
     )
     return per_arm.crossJoin(F.broadcast(srm)).select(
@@ -2080,11 +2020,7 @@ def experiment_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             # signed half-away split (div truncates toward zero in both
             # engines; the unsigned form would silently become
             # half-toward-+inf on a negative-value events table)
-            F.expr(
-                "case when _svq >= 0"
-                " then (2 * _svq + n_events) div (2 * n_events)"
-                " else -((-2 * _svq + n_events) div (2 * n_events)) end"
-            )
+            F.expr(half_up_signed("_svq", "n_events"))
             / F.lit(1e6)
         ).alias("mean_value"),
         (F.col("_chi2_micro") / F.lit(1e6)).alias("srm_chi2"),
@@ -2158,7 +2094,7 @@ def user_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
             "wau",
             F.when(
                 F.col("wau") > 0,
-                F.expr("(2 * dau * 1000000 + wau) div (2 * wau)")
+                F.expr(half_up("dau * 1000000", "wau"))
                 / F.lit(1e6),
             )
             .otherwise(F.lit(0.0))
@@ -2216,7 +2152,7 @@ def event_seasonal_naive_mape(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pred",
         F.when(
             F.col("c") > 0,
-            F.expr("(2 * abs(c - pred) * 1000000 + c) div (2 * c)"),
+            F.expr(half_up("abs(c - pred) * 1000000", "c")),
         ).alias("ape_micro"),
         (F.col("pred") - F.col("c")).alias("err"),
     )
@@ -2226,21 +2162,11 @@ def event_seasonal_naive_mape(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_zero_actual"),
         (
-            F.expr(
-                "(2 * sum(ape_micro) + count(ape_micro))"
-                " div (2 * count(ape_micro))"
-            )
+            F.expr(half_up("sum(ape_micro)", "count(ape_micro)"))
             / F.lit(1e6)
         ).alias("mape"),
         (
-            F.expr(
-                """case when sum(err) >= 0
-                    then (2 * sum(err) * 1000000 + count(1))
-                         div (2 * count(1))
-                    else -((2 * -sum(err) * 1000000 + count(1))
-                           div (2 * count(1)))
-                end"""
-            )
+            F.expr(half_up_signed("sum(err) * 1000000", "count(1)"))
             / F.lit(1e6)
         ).alias("mean_bias"),
     )
@@ -2315,28 +2241,16 @@ def experiment_cuped_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             F.expr(
-                f"""case
-                    when n * sxx - cast(sx as {dec}) * sx = 0
-                        then cast(0 as bigint)
-                    when n * sxy - cast(sx as {dec}) * sy_num >= 0 then
-                        cast((2 * (n * sxy - cast(sx as {dec}) * sy_num)
-                              * 1000000
-                              + (n * sxx - cast(sx as {dec}) * sx))
-                        div (2 * (n * sxx - cast(sx as {dec}) * sx))
-                        as bigint)
-                    else
-                        cast(-((2 * -(n * sxy - cast(sx as {dec}) * sy_num)
-                                * 1000000
-                                + (n * sxx - cast(sx as {dec}) * sx))
-                          div (2 * (n * sxx - cast(sx as {dec}) * sx)))
-                        as bigint)
-                end"""
+                f"case when n * sxx - cast(sx as {dec}) * sx = 0"
+                " then cast(0 as bigint) else cast("
+                + half_up_signed(
+                    f"(n * sxy - cast(sx as {dec}) * sy_num) * 1000000",
+                    f"(n * sxx - cast(sx as {dec}) * sx)",
+                )
+                + " as bigint) end"
             ).alias("theta_micro"),
             # signed half-away mean: x sums carry no sign contract
-            F.expr(
-                "case when sx >= 0 then (2 * sx + n) div (2 * n)"
-                " else -((-2 * sx + n) div (2 * n)) end"
-            ).alias("xbar_micro"),
+            F.expr(half_up_signed("sx", "n")).alias("xbar_micro"),
         )
     )
     per_arm = per_user.groupBy("arm").agg(
@@ -2350,16 +2264,8 @@ def experiment_cuped_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "arm",
             "n_users",
             # signed half-away arm means (value sums can be negative)
-            F.expr(
-                "case when sy_a >= 0"
-                " then (2 * sy_a + n_users) div (2 * n_users)"
-                " else -((-2 * sy_a + n_users) div (2 * n_users)) end"
-            ).alias("_ybar"),
-            F.expr(
-                "case when sx_a >= 0"
-                " then (2 * sx_a + n_users) div (2 * n_users)"
-                " else -((-2 * sx_a + n_users) div (2 * n_users)) end"
-            ).alias("_xbar_a"),
+            F.expr(half_up_signed("sy_a", "n_users")).alias("_ybar"),
+            F.expr(half_up_signed("sx_a", "n_users")).alias("_xbar_a"),
             "theta_micro",
             "xbar_micro",
         )
@@ -2371,14 +2277,9 @@ def experiment_cuped_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (
                     F.col("_ybar")
                     - F.expr(
-                        """case
-                            when theta_micro * (_xbar_a - xbar_micro) >= 0
-                            then (2 * theta_micro * (_xbar_a - xbar_micro)
-                                  + 1000000) div 2000000
-                            else -((2 * -(theta_micro
-                                          * (_xbar_a - xbar_micro))
-                                    + 1000000) div 2000000)
-                        end"""
+                        half_up_signed(
+                            "theta_micro * (_xbar_a - xbar_micro)", "1000000"
+                        )
                     )
                 )
                 / F.lit(1e6)
@@ -2432,7 +2333,7 @@ def event_dispersion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_days",
         F.col("s").alias("n_events"),
         (
-            F.expr("(2 * s * 1000000 + n_days) div (2 * n_days)")
+            F.expr(half_up("s * 1000000", "n_days"))
             / F.lit(1e6)
         ).alias("daily_mean"),
         (
@@ -2503,10 +2404,7 @@ def user_hazard_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_at_risk",
             "n_churned",
             (
-                F.expr(
-                    "(2 * n_churned * 1000000 + n_at_risk)"
-                    " div (2 * n_at_risk)"
-                )
+                F.expr(half_up("n_churned * 1000000", "n_at_risk"))
                 / F.lit(1e6)
             ).alias("hazard"),
         )
@@ -2553,10 +2451,7 @@ def event_markov_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_transitions",
             F.col("c").alias("n_correct"),
             (
-                F.expr(
-                    "(2 * c * 1000000 + n_transitions)"
-                    " div (2 * n_transitions)"
-                )
+                F.expr(half_up("c * 1000000", "n_transitions"))
                 / F.lit(1e6)
             ).alias("accuracy"),
         )
@@ -2620,10 +2515,7 @@ def event_hourly_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
             "hour",
             "event_type",
             F.coalesce("n", F.lit(0)).alias("n_events"),
-            F.expr(
-                "(2 * coalesce(sv, cast(0 as bigint)) + 10000)"
-                " div 20000 / 100.0D"
-            ).alias("sum_value"),
+            F.expr(cents("coalesce(sv, cast(0 as bigint))")).alias("sum_value"),
         )
     )
 
@@ -2701,50 +2593,11 @@ def value_equidepth_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-RFM_BANDS = 1024
-
-
-def _exact_global_rank(df: DataFrame, metric: str, tiebreak: str, out: str) -> DataFrame:
-    """Exact global dense row-number by (metric, tiebreak) WITHOUT a
-    single-partition sort: deterministic arithmetic value-bands (a pure
-    function of the value, so ties never straddle bands), row_number
-    within each band, then band offsets from a ≤RFM_BANDS-row cumsum
-    broadcast back — the same two-phase prefix shape as
-    ``peak_concurrent_sessions``. Integer metrics only."""
-    ext = df.agg(
-        F.max(metric).alias("_mx"), F.min(metric).alias("_mn")
-    )
-    banded = df.crossJoin(F.broadcast(ext)).withColumn(
-        "_band",
-        F.expr(
-            f"int((({metric} - _mn) * {RFM_BANDS}) div ((_mx - _mn) + 1))"
-        ),
-    )
-    w_in = Window.partitionBy("_band").orderBy(metric, tiebreak)
-    ranked = banded.withColumn("_r_in", F.row_number().over(w_in))
-    w_off = Window.orderBy("_band").rowsBetween(Window.unboundedPreceding, -1)
-    # band sizes come from the PRE-window frame so the expensive
-    # windowed lineage is referenced exactly once downstream
-    offs = (
-        banded.groupBy("_band")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .select(
-            "_band",
-            F.coalesce(F.sum("_c").over(w_off), F.lit(0)).alias("_off"),
-        )
-    )
-    return (
-        ranked.join(F.broadcast(offs), "_band")
-        .withColumn(out, (F.col("_off") + F.col("_r_in")).cast("bigint"))
-        .drop("_band", "_r_in", "_mx", "_mn", "_off")
-    )
-
-
 def user_value_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Gini coefficient of per-user event value — the scalar
     inequality summary user_value_concentration's Lorenz bands plot:
     G = (2·Σ rank·x − (n+1)·Σx) / (n·Σx) with ranks ascending. Ranks
-    come from ``_exact_global_rank`` (banded two-phase — no
+    come from ``exact_global_rank`` (banded two-phase — no
     single-partition sort), and tied values contribute the same sum
     under any within-tie order, so the deterministic tiebreak only
     needs to exist, not to match an external convention. All moments
@@ -2756,7 +2609,7 @@ def user_value_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     users = events.groupBy("user_id").agg(
         F.sum(F.expr("cast(round(value * 100) as bigint)")).alias("v_cents")
     )
-    ranked = _exact_global_rank(users, "v_cents", "user_id", "rnk")
+    ranked = exact_global_rank(users, "v_cents", "user_id", "rnk")
     agg = ranked.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_users"),
         F.sum(F.col("v_cents").cast("decimal(38,0)")).alias("s"),
@@ -2770,13 +2623,9 @@ def user_value_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_users",
         F.col("s").cast("bigint").alias("total_cents"),
         F.expr(
-            "CASE WHEN n_users * s <= 0 THEN NULL"
-            " WHEN 2 * si - (n_users + 1) * s >= 0 THEN"
-            "  (2 * (2 * si - (n_users + 1) * s) * 1000000 + n_users * s)"
-            "   div (2 * n_users * s)"
-            " ELSE"
-            "  -((2 * -(2 * si - (n_users + 1) * s) * 1000000 + n_users * s)"
-            "    div (2 * n_users * s)) END / 1000000.0D"
+            "CASE WHEN n_users * s <= 0 THEN NULL ELSE "
+            + half_up_signed("(2 * si - (n_users + 1) * s) * 1000000", "n_users * s")
+            + " END / 1000000.0D"
         ).alias("gini"),
     )
 
@@ -2789,7 +2638,7 @@ def customer_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``score = 1 + 5·(rank−1) div n``; recency inverted so 5 = most
     recent) and concatenated into the familiar 'RFM' cell label.
 
-    Ranks come from ``_exact_global_rank`` — the two-phase banded
+    Ranks come from ``exact_global_rank`` — the two-phase banded
     form, so the 100 TB plan never funnels the customer dimension
     through one sort task. All arithmetic is integer (days, counts,
     micro-unit cents): the oracle's plain ROW_NUMBER over the same
@@ -2812,21 +2661,21 @@ def customer_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("recency_days"),
             "frequency",
-            F.expr("(2 * micro + 10000) div 20000").alias("monetary_cents"),
+            F.expr(half_up("micro", "10000")).alias("monetary_cents"),
         )
     )
-    # each _exact_global_rank re-references its input ~4× (extremes,
+    # each exact_global_rank re-references its input ~4× (extremes,
     # in-band rank, band sizes); three chained calls without a
     # materialization barrier would re-aggregate orders ~30× (measured
     # 12 s → 2 s at sf0.1). per_cust is |customers| rows — persist is
     # the intended cluster answer too (MEMORY_AND_DISK, spillable).
     per_cust = per_cust.persist()
     n_frame = per_cust.agg(F.count(F.lit(1)).alias("n"))
-    ranked = _exact_global_rank(
+    ranked = exact_global_rank(
         per_cust, "recency_days", "o_custkey", "r_rank"
     ).persist()
-    ranked = _exact_global_rank(ranked, "frequency", "o_custkey", "f_rank").persist()
-    ranked = _exact_global_rank(
+    ranked = exact_global_rank(ranked, "frequency", "o_custkey", "f_rank").persist()
+    ranked = exact_global_rank(
         ranked, "monetary_cents", "o_custkey", "m_rank"
     )
     scored = ranked.crossJoin(F.broadcast(n_frame)).select(
@@ -2888,9 +2737,9 @@ def user_bot_periodicity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_distinct_gaps",
             (-F.col("top.ng")).cast("bigint").alias("modal_gap_s"),
             F.col("top.c").alias("modal_n"),
-            F.expr(
-                "(2 * 1000000 * top.c + n_gaps) div (2 * n_gaps)"
-            ).alias("periodicity_micro"),
+            F.expr(half_up("1000000 * top.c", "n_gaps")).alias(
+                "periodicity_micro"
+            ),
         )
     )
 
@@ -2901,7 +2750,7 @@ def value_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (discrete: value at rank ⌈q·n⌉ in (value, event_id) order) and the
     corpus totals before/after clipping, all in integer micro-units.
 
-    The percentile ranks come from ``_exact_global_rank`` (banded
+    The percentile ranks come from ``exact_global_rank`` (banded
     two-phase row-number — no single-partition sort of the fact
     table); the two bound rows broadcast back into one clipping scan.
     approx_percentile is the classic shortcut, but its results aren't
@@ -2915,7 +2764,7 @@ def value_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = events.where(F.col("value").isNotNull()).select(
         "event_id", F.expr("cast(round(value * 1000000) as bigint)").alias("m")
     )
-    ranked = _exact_global_rank(base, "m", "event_id", "rnk")
+    ranked = exact_global_rank(base, "m", "event_id", "rnk")
     n_frame = base.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     bounds = (
         ranked.crossJoin(F.broadcast(n_frame))
@@ -2964,7 +2813,7 @@ def forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.expr(
-                _cents(_sum_m6("l_extendedprice * l_discount"))
+                cents(sum_m6("l_extendedprice * l_discount"))
             ).alias("revenue_increase"),
             F.count(F.lit(1)).alias("n_lineitems"),
         )
@@ -2981,14 +2830,13 @@ def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("gs_customer")
     load_table(spark, sf_dir, "nation").createOrReplaceTempView("gs_nation")
     return spark.sql(
-        """
+        f"""
         SELECT n_name AS nation_name,
                o_orderpriority,
                CAST(grouping_id(n_name, o_orderpriority) AS INT) AS gid,
                COUNT(*) AS n_orders,
-               (2 * SUM(CAST(ROUND(o_totalprice * 1000000)
-                             AS DECIMAL(38,0))) + 10000)
-                   div 20000 / 100.0D AS revenue
+               {cents("SUM(CAST(ROUND(o_totalprice * 1000000) AS DECIMAL(38,0)))")}
+                   AS revenue
         FROM gs_orders
         JOIN gs_customer ON o_custkey = c_custkey
         JOIN gs_nation ON c_nationkey = n_nationkey
@@ -3116,8 +2964,7 @@ def merge_touched_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("state_rows_read", F.lit(0)) + F.col("n_inserts")
         ).alias("rows_after_merge"),
         F.expr(
-            "(2 * coalesce(state_rows_read, 0) * 1000000 + batch_rows)"
-            " div (2 * batch_rows)"
+            half_up("coalesce(state_rows_read, 0) * 1000000", "batch_rows")
         ).alias("readback_amp_micro"),
     )
     n_touched = touched.agg(
@@ -3195,9 +3042,7 @@ def mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "month",
         "n_orders",
         "total_cents",
-        F.expr("(2 * total_cents + n_orders) div (2 * n_orders)").alias(
-            "avg_cents"
-        ),
+        F.expr(half_up("total_cents", "n_orders")).alias("avg_cents"),
         (
             F.col("n_orders").eqNullSafe(F.col("f_n"))
             & F.col("total_cents").eqNullSafe(F.col("f_cents"))
@@ -3290,9 +3135,7 @@ def event_value_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "digit",
             "n",
-            F.expr(
-                "(2 * n * 1000000 + total) div (2 * total)"
-            ).alias("share_micro"),
+            F.expr(half_up("n * 1000000", "total")).alias("share_micro"),
             F.expr(f"cast({exp_case} as bigint)").alias("benford_micro"),
             "total",
         )
@@ -3405,10 +3248,9 @@ def orders_priority_mix_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     gshare = gp.crossJoin(F.broadcast(tot)).select(
         "priority",
-        F.expr(
-            "(2 * prio_total * 1000000 + grand_total)"
-            " div (2 * grand_total)"
-        ).alias("global_share_micro"),
+        F.expr(half_up("prio_total * 1000000", "grand_total")).alias(
+            "global_share_micro"
+        ),
     )
     return (
         cells.join(yt, "year")
@@ -3417,9 +3259,9 @@ def orders_priority_mix_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "year",
             "priority",
             "n_orders",
-            F.expr(
-                "(2 * n_orders * 1000000 + year_total) div (2 * year_total)"
-            ).alias("share_micro"),
+            F.expr(half_up("n_orders * 1000000", "year_total")).alias(
+                "share_micro"
+            ),
             "global_share_micro",
             "year_total",
         )
@@ -3484,7 +3326,7 @@ def regional_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "price_micro",
-            F.expr("(2 * ext_micro + qty) div (2 * qty)"),
+            F.expr(half_up("ext_micro", "qty")),
         )
     )
     w = Window.partitionBy("p_partkey")
@@ -3618,9 +3460,7 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "prev_type",
         "next_type",
         "n_transitions",
-        F.expr(
-            "(2 * n_transitions * 1000000 + n_from) div (2 * n_from)"
-        ).alias("p_micro"),
+        F.expr(half_up("n_transitions * 1000000", "n_from")).alias("p_micro"),
     )
 
 
@@ -3749,10 +3589,9 @@ def event_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_a",
             "n_b",
             "n_both",
-            F.expr(
-                f"(2 * n_both * n_users * {LIFT_SCALE} + n_a * n_b)"
-                " div (2 * n_a * n_b)"
-            ).alias("lift_micro"),
+            F.expr(half_up(f"n_both * n_users * {LIFT_SCALE}", "n_a * n_b")).alias(
+                "lift_micro"
+            ),
         )
     )
 
@@ -3851,10 +3690,11 @@ def nation_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_suppliers",
         "total_cents",
         F.expr(
-            "cast((2 * 1000000 * sum_sq"
-            " + cast(total_cents as decimal(38,0)) * total_cents)"
-            " div (2 * cast(total_cents as decimal(38,0)) * total_cents)"
-            " as bigint)"
+            "cast("
+            + half_up(
+                "1000000 * sum_sq", "cast(total_cents as decimal(38,0)) * total_cents"
+            )
+            + " as bigint)"
         ).alias("hhi_micro"),
     )
 
@@ -3920,7 +3760,7 @@ MAD_K = 3  # anomaly threshold: |x - median| > MAD_K * MAD
 def _exact_group_rank(
     df: DataFrame, key: str, metric: str, tiebreak: str, out: str
 ) -> DataFrame:
-    """Per-key variant of ``_exact_global_rank``: exact row-number by
+    """Per-key variant of ``exact_global_rank``: exact row-number by
     (metric, tiebreak) within each key WITHOUT one monolithic sort
     partition per key — deterministic value-bands within the key, rank
     inside (key, band), then per-key band-offset cumsum (≤|keys|·BANDS
@@ -4064,9 +3904,7 @@ def orders_aging_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderstatus", "age_bucket")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            F.expr("(2 * sum(micro) + 10000) div 20000").alias(
-                "open_value_cents"
-            ),
+            F.expr(half_up("sum(micro)", "10000")).alias("open_value_cents"),
         )
     )
 
@@ -4099,9 +3937,7 @@ def event_dow_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "dow",
         "n_events",
-        F.expr("(2 * 1000000 * n_events + total) div (2 * total)").alias(
-            "share_micro"
-        ),
+        F.expr(half_up("1000000 * n_events", "total")).alias("share_micro"),
     )
 
 
@@ -4184,8 +4020,7 @@ def event_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             (-F.col("top.nd")).cast("bigint").alias("changepoint_day"),
             F.col("top.s_abs").alias("cusum_peak"),
             F.expr(
-                "(2 * top.s_abs * 1000000 + n_days * total_events)"
-                " div (2 * n_days * total_events)"
+                half_up("top.s_abs * 1000000", "n_days * total_events")
             ).alias("peak_micro"),
         )
     )
@@ -4215,7 +4050,7 @@ def event_ewma_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame (ROWS 16 PRECEDING), state O(DEPTH) per user exactly like
     the streaming implementation would keep, never a per-user
     re-scan. Values here are strictly positive; a signed variant
-    would re-sign the half-up division (see _cents_signed).
+    would re-sign the half-up division (``exact.half_up_signed``).
 
     NULL measurements are excluded at the scan (r08, both engines):
     Spark's collect_list silently skips NULLs while the oracle's
@@ -4262,7 +4097,7 @@ def event_ewma_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "value",
         "n_hist",
-        (F.expr("(2 * num + den) div (2 * den)") / F.lit(1e6)).alias("ewma"),
+        (F.expr(half_up("num", "den")) / F.lit(1e6)).alias("ewma"),
     )
 
 
@@ -4408,11 +4243,14 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cohort_m",
         "age_months",
         "n_orders",
-        F.expr("(2 * rev_micro + 10000) div 20000").alias("rev_cents"),
+        F.expr(half_up("rev_micro", "10000")).alias("rev_cents"),
         F.expr(
-            "(2 * sum(rev_micro) over (partition by cohort_m"
-            " order by age_months rows between unbounded preceding"
-            " and current row) + 10000) div 20000"
+            half_up(
+                "sum(rev_micro) over (partition by cohort_m"
+                " order by age_months rows between unbounded preceding"
+                " and current row)",
+                "10000",
+            )
         ).alias("cum_rev_cents"),
     )
 
@@ -4451,12 +4289,10 @@ def supplier_return_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation_name"),
             "n_items",
             "n_returned",
-            F.expr(
-                "(2 * n_returned * 1000000 + n_items) div (2 * n_items)"
-            ).alias("return_micro"),
-            F.expr("(2 * rev_micro + 10000) div 20000").alias(
-                "revenue_cents"
+            F.expr(half_up("n_returned * 1000000", "n_items")).alias(
+                "return_micro"
             ),
+            F.expr(half_up("rev_micro", "10000")).alias("revenue_cents"),
         )
     )
 
@@ -4566,20 +4402,21 @@ def basket_lift_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_pair",
             "c1",
             "c2",
-            F.expr(
-                "(2 * c_pair * 1000000 + n_orders)"
-                " div (2 * n_orders) / 1000000.0D"
-            ).alias("support"),
-            F.expr(
-                "(2 * c_pair * 1000000 + c1) div (2 * c1) / 1000000.0D"
-            ).alias("confidence"),
+            F.expr(half_up("c_pair * 1000000", "n_orders") + " / 1000000.0D").alias(
+                "support"
+            ),
+            F.expr(half_up("c_pair * 1000000", "c1") + " / 1000000.0D").alias(
+                "confidence"
+            ),
             # lift numerator is pair·orders·1e6 — corpus² scale, so it
             # rides decimal(38,0); the quotient is micro-small, safe
             # for div's BIGINT return
             F.expr(
-                "(2 * cast(c_pair as decimal(38,0)) * n_orders * 1000000"
-                " + cast(c1 as decimal(38,0)) * c2)"
-                " div (2 * cast(c1 as decimal(38,0)) * c2) / 1000000.0D"
+                half_up(
+                    "cast(c_pair as decimal(38,0)) * n_orders * 1000000",
+                    "cast(c1 as decimal(38,0)) * c2",
+                )
+                + " / 1000000.0D"
             ).alias("lift"),
         )
         .orderBy(F.desc("c_pair"), "pk1", "pk2")
@@ -4614,7 +4451,7 @@ def revenue_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "day",
-            F.expr("(2 * cents + 100000) div 200000").alias("kusd"),
+            F.expr(half_up("cents", "100000")).alias("kusd"),
         )
     )
     # center by the series min: covariance/variance sums are invariant
@@ -4650,11 +4487,12 @@ def revenue_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "case when (n * sxx - sx * sx) * (n * syy - sy * sy) = 0"
             " then null else"
-            " case when n * sxy - sx * sy < 0 then -1 else 1 end"
-            " * ((2 * (n * sxy - sx * sy) * (n * sxy - sx * sy) * 1000000"
-            "     + (n * sxx - sx * sx) * (n * syy - sy * sy))"
-            "    div (2 * (n * sxx - sx * sx) * (n * syy - sy * sy)))"
-            " / 1000000.0D end"
+            " case when n * sxy - sx * sy < 0 then -1 else 1 end * ("
+            + half_up(
+                "(n * sxy - sx * sy) * (n * sxy - sx * sy) * 1000000",
+                "(n * sxx - sx * sx) * (n * syy - sy * sy)",
+            )
+            + ") / 1000000.0D end"
         ).alias("signed_r2"),
     )
 
@@ -4694,22 +4532,18 @@ def discount_quantity_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_brand",
         F.col("n").cast("bigint").alias("n_rows"),
         F.expr(
-            "case when n * sxx - sx * sx = 0 then null"
-            " when n * sxy - sx * sy >= 0 then"
-            "  (2 * (n * sxy - sx * sy) * 100000000 + (n * sxx - sx * sx))"
-            "   div (2 * (n * sxx - sx * sx))"
-            " else"
-            "  -((2 * -(n * sxy - sx * sy) * 100000000"
-            "     + (n * sxx - sx * sx)) div (2 * (n * sxx - sx * sx)))"
-            " end / 1000000.0D"
+            "case when n * sxx - sx * sx = 0 then null else "
+            + half_up_signed("(n * sxy - sx * sy) * 100000000", "(n * sxx - sx * sx)")
+            + " end / 1000000.0D"
         ).alias("slope"),
         F.expr(
             "case when (n * sxx - sx * sx) * (n * syy - sy * sy) = 0"
-            " then null else"
-            " (2 * (n * sxy - sx * sy) * (n * sxy - sx * sy) * 1000000"
-            "  + (n * sxx - sx * sx) * (n * syy - sy * sy))"
-            " div (2 * (n * sxx - sx * sx) * (n * syy - sy * sy))"
-            " / 1000000.0D end"
+            " then null else "
+            + half_up(
+                "(n * sxy - sx * sy) * (n * sxy - sx * sy) * 1000000",
+                "(n * sxx - sx * sx) * (n * syy - sy * sy)",
+            )
+            + " / 1000000.0D end"
         ).alias("r2"),
     )
 

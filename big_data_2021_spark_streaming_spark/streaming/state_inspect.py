@@ -39,6 +39,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ..functions.exact import half_up
+
 # line 2 of every offsets-log entry (line 1 is the "v1" version tag)
 _OFFSET_META_SCHEMA = (
     "batchWatermarkMs LONG, batchTimestampMs LONG, conf MAP<STRING, STRING>"
@@ -320,7 +322,5 @@ def state_skew_report(
     return per_part.crossJoin(F.broadcast(total)).select(
         "partition_id",
         "state_rows",
-        F.expr(
-            "(2 * 1000 * state_rows + total_rows) div (2 * total_rows)"
-        ).alias("share_permille"),
+        F.expr(half_up("1000 * state_rows", "total_rows")).alias("share_permille"),
     )

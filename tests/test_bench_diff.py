@@ -118,9 +118,11 @@ def test_manifest_covers_all_recorded_sweeps():
     on_disk = {p.name for p in (REPO / "bench_runs").glob("sf0.1_r*.json")}
     assert set(man["order"]) == on_disk, sorted(set(man["order"]) ^ on_disk)
     assert len(man["order"]) == len(set(man["order"]))
+    # an allow entry adjudicates one step of the sequence, so its key
+    # must name two ADJACENT runs, in order
+    steps = set(zip(man["order"], man["order"][1:]))
     for pair in man.get("allow", {}):
-        prev_name, curr_name = pair.split("->")
-        assert prev_name in man["order"] and curr_name in man["order"], pair
+        assert tuple(pair.split("->")) in steps, pair
 
 
 def test_recorded_runs_are_regression_free():

@@ -78,6 +78,8 @@ def _broadcast_sites() -> set[tuple[str, str, str]]:
 # leaks, epochs, ns, n1/n2, cust_nations, supp_nation, offsets).
 _ALLOWED_PINS = frozenset(
     {
+        ("functions/exact.py", "exact_global_rank", "ext"),
+        ("functions/exact.py", "exact_global_rank", "offs"),
         ("operators/audit.py", "join_cardinality_estimate", "actual"),
         ("operators/audit.py", "join_key_skew", "stats"),
         ("operators/audit.py", "join_strategy_advisor", "parent_stats"),
@@ -174,8 +176,6 @@ _ALLOWED_PINS = frozenset(
         ("operators/text.py", "source_chi2_drift", "top"),
         ("operators/text.py", "tfidf_topterms", "n_docs"),
         ("operators/text.py", "token_rarity", "total"),
-        ("plans/analytics.py", "_exact_global_rank", "ext"),
-        ("plans/analytics.py", "_exact_global_rank", "offs"),
         ("plans/analytics.py", "_exact_group_rank", "ext"),
         ("plans/analytics.py", "_exact_group_rank", "offs"),
         ("plans/analytics.py", "basket_lift_pairs", "n_frame"),
