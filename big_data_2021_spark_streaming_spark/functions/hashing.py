@@ -28,7 +28,7 @@ def h60(col: F.Column) -> F.Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
 
 
-def h60_seeded(seed: int, col: F.Column) -> F.Column:
+def h60_seeded(seed: int | str, col: F.Column) -> F.Column:
     """Domain-separated family member: h60(f"{seed}:{s}")."""
     return h60(F.concat(F.lit(f"{seed}:"), col))
 
@@ -38,7 +38,7 @@ def h60_sql(expr: str) -> str:
     return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
 
 
-def h60_seeded_sql(seed: int, expr: str) -> str:
+def h60_seeded_sql(seed: int | str, expr: str) -> str:
     return h60_sql(f"'{seed}:' || {expr}")
 
 

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions.exact import exact_global_rank, half_up
 from ..sources.batch import load_table
-from ..operators.text import quality_lineage
+from ..operators.text import quality_lineage, tokens_col
 from ..operators import dedup as _dedup  # oracle-SQL fragments only
 from ..operators.dedup import (
     NUM_PERM as DEDUP_NUM_PERM,
@@ -140,9 +140,8 @@ def _word_grams(docs: DataFrame) -> DataFrame:
     formulation (transform over sequence) is avoided deliberately:
     Catalyst inlines the token array into the lambda and re-splits the
     document per element (the quadratic CollapseProject trap)."""
-    toks = F.split(F.trim("text"), r"\s+")
     pos = docs.select(
-        "doc_id", "source", F.posexplode(toks).alias("pos", "tok")
+        "doc_id", "source", F.posexplode(tokens_col(F.col("text"))).alias("pos", "tok")
     ).where(F.col("tok") != "")
     w = Window.partitionBy("doc_id").orderBy("pos")
     parts = [F.col("tok")] + [

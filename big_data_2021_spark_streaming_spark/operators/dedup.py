@@ -38,6 +38,7 @@ from ..functions.hashing import (
 from ..functions.exact import half_up
 from ..session import session_cached
 from ..sources.batch import load_table
+from .text import tokens_col
 
 NUM_PERM = 16
 BANDS = 4
@@ -58,7 +59,7 @@ def _doc_tokens(docs: DataFrame) -> DataFrame:
     return docs.select(
         "doc_id",
         "source",
-        F.array_distinct(F.split(F.trim("text"), r"\s+")).alias("tok"),
+        F.array_distinct(tokens_col(F.col("text"))).alias("tok"),
     )
 
 
@@ -474,18 +475,21 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _clusters_output(spark, sf_dir, _cluster_labels(spark, sf_dir))
 
 
+def _pair_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst): the near-dup pair graph as a symmetric edge frame —
+    both directions of every LSH pair, the input of every iterative
+    graph operator here."""
+    pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_id_a", "doc_id_b")
+    return pairs.union(pairs.select("doc_id_b", "doc_id_a")).toDF("src", "dst")
+
+
 def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # converged label frames are localCheckpoint-backed (plan truncated),
     # so unlike the persist()-ed frames above CacheManager plan matching
     # cannot share them — the session cache runs the propagation once
     # per session for the clustering and every composition over it
     # (operators.curation)
-    pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_id_a", "doc_id_b")
-    edges = (
-        pairs.union(pairs.select("doc_id_b", "doc_id_a"))
-        .toDF("src", "dst")
-        .localCheckpoint()
-    )
+    edges = _pair_graph_edges(spark, sf_dir).localCheckpoint()
     # round 0 folded into init: label = min(self, direct neighbors)
     labels = (
         edges.groupBy(F.col("src").alias("doc_id"))
@@ -698,16 +702,18 @@ def dup_rate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """32-bit SimHash per document (Charikar): bit i is the sign of
-    Σ_tokens (±1 by bit i of h60(token)). Explode → 32 conditional
-    sums → bit assembly, all in one hash aggregate.
+def _simhash_sig(spark: SparkSession, sf_dir: str, bits: int) -> DataFrame:
+    """(doc_id, simhash): ``bits``-bit SimHash per document (Charikar):
+    bit i is the sign of Σ_tokens (±1 by bit i of h60(token)). Explode
+    → ``bits`` conditional sums → bit assembly in BIGINT, all in one
+    hash aggregate.
 
     The hash is PROJECTED to a named column before the aggregate:
-    inlining ``h60(t)`` into each of the 32 sum expressions evaluates
-    the md5 32× per token row (codegen does not common it up across
+    inlining ``h60(t)`` into each sum expression evaluates the md5 once
+    per bit per token row (codegen does not common it up across
     aggregate functions) — the same re-hash trap ``h60_packed_md5``'s
-    docstring pins, measured 5× on the 60-bit twin at sf0.1."""
+    docstring pins, measured 8.2 s → 1.7 s cold on the 60-bit
+    signature at sf0.1."""
     exploded = (
         _token_sets(spark, sf_dir)
         .select("doc_id", F.explode("tok").alias("t"))
@@ -718,56 +724,46 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         ).alias(f"s{i}")
-        for i in range(SIMHASH_BITS)
+        for i in range(bits)
     ]
     per_doc = exploded.groupBy("doc_id").agg(*sums)
     sig = sum(
         F.when(F.col(f"s{i}") >= 0, F.lit(2**i).cast("bigint")).otherwise(
             F.lit(0).cast("bigint")
         )
-        for i in range(SIMHASH_BITS)
+        for i in range(bits)
     )
     return per_doc.select("doc_id", sig.alias("simhash"))
 
 
-SIMHASH_BAND_BITS = 8  # 4 bands of 8 bits over the 32-bit signature
-SIMHASH_NEAR = 3  # near-dup verdict: hamming distance <= 3
+def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """32-bit SimHash per document (``_simhash_sig``)."""
+    return _simhash_sig(spark, sf_dir, SIMHASH_BITS)
 
 
-def simhash_hamming_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hamming-distance histogram of SimHash candidate pairs — the
-    calibration view for the SimHash near-dup detector: candidates are
-    pairs sharing at least one of the 4 8-bit signature bands (the
-    standard block-on-bands recall construction: any pair at hamming
-    <= 3 over 32 bits must agree on a full band by pigeonhole), and the
-    histogram of their exact signature distances shows where the
-    near-dup threshold separates real rewrites from hash noise.
+def _simhash_hamming(
+    spark: SparkSession, sf_dir: str, bits: int, band_bits: int, near: int
+) -> DataFrame:
+    """Hamming-distance histogram of SimHash candidate pairs: pairs
+    sharing at least one ``band_bits``-wide band of the ``bits``-bit
+    signature (block-on-bands: any pair at hamming <= ``near`` agrees on
+    a full band by pigeonhole while bits // band_bits > near), with
+    ``is_near`` marking the near-dup verdict.
 
     Scale: pairs form ONLY within band-value buckets (an equi-join on
     (band_id, band_value) — never an all-pairs product); the distinct
-    collapses the ≤4 band collisions per pair before the bit_count,
-    and the histogram is a ≤33-row aggregate. Scale honesty (the
-    ``embedding_nn`` fixed-width caveat applies here too): an 8-bit
-    band has only 256 values, so RANDOM collisions make the candidate
-    stage ~n²/(256·4)·4 asymptotically — fine for the calibration runs
-    this view exists for (measured 22 s at 80k docs on local[32];
-    sub-linear x4→x16 because fixed overhead still dominates), but the
-    corpus-scale near-dup path remains MinHash LSH, whose banded
-    bucket space is hash-sized rather than 2^band_bits. Widening bands
-    (e.g. 64-bit signatures × 16-bit bands) trades the pigeonhole
-    recall bound for quadratically fewer random collisions if this
-    operator must run corpus-wide."""
-    # persist the signature frame (2 longs per doc): the band self-join
-    # otherwise recomputes the token-explode + 32-sum lineage for BOTH
-    # sides (no ReusedExchange across the aliased join inputs — the
-    # plan showed 4 parquet scans). The query's dominant cost is the
-    # within-bucket pair stage itself, which is inherent; the persist
-    # just stops the signature aggregate from running twice.
-    sig = simhash(spark, sf_dir).persist()
-    n_bands = SIMHASH_BITS // SIMHASH_BAND_BITS
+    collapses the per-pair band collisions before the bit_count, and
+    the histogram has at most bits + 1 rows. Random collisions make
+    the candidate stage ~n²/2^band_bits per band asymptotically.
+
+    The signature frame (2 longs per doc) is persisted: the band
+    self-join otherwise recomputes the token-explode + sums lineage for
+    BOTH sides (no ReusedExchange across the aliased join inputs — the
+    plan showed 4 parquet scans)."""
+    sig = _simhash_sig(spark, sf_dir, bits).persist()
+    n_bands = bits // band_bits
     stack = ", ".join(
-        f"{b}, (simhash div {1 << (b * SIMHASH_BAND_BITS)})"
-        f" % {1 << SIMHASH_BAND_BITS}"
+        f"{b}, (simhash div {1 << (b * band_bits)}) % {1 << band_bits}"
         for b in range(n_bands)
     )
     bands = sig.select(
@@ -794,9 +790,28 @@ def simhash_hamming_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "hamming",
             "n_pairs",
-            (F.col("hamming") <= SIMHASH_NEAR).alias("is_near"),
+            (F.col("hamming") <= near).alias("is_near"),
         )
         .orderBy("hamming")
+    )
+
+
+SIMHASH_BAND_BITS = 8  # 4 bands of 8 bits over the 32-bit signature
+SIMHASH_NEAR = 3  # near-dup verdict: hamming distance <= 3
+
+
+def simhash_hamming_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The calibration view for the SimHash near-dup detector: 4 8-bit
+    bands over the 32-bit signature, and the histogram of exact
+    candidate distances shows where the near-dup threshold separates
+    real rewrites from hash noise. An 8-bit band has only 256 values,
+    so random collisions dominate the candidate stage at scale — fine
+    for the calibration runs this view exists for (measured 22 s at
+    80k docs on local[32]), but the corpus-scale near-dup path remains
+    MinHash LSH, whose banded bucket space is hash-sized rather than
+    2^band_bits; :func:`simhash_wide_hamming` is the wide-band form."""
+    return _simhash_hamming(
+        spark, sf_dir, SIMHASH_BITS, SIMHASH_BAND_BITS, SIMHASH_NEAR
     )
 
 
@@ -815,79 +830,15 @@ SIMHASH_WIDE_BAND_BITS = 15
 SIMHASH_WIDE_NEAR = 3
 
 
-def simhash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """60-bit SimHash per document — same Charikar construction as
-    :func:`simhash` at twice the width (one hash aggregate, 60
-    conditional sums, bit assembly stays in BIGINT). The hash is
-    projected once before the aggregate for the same 60×-re-hash
-    reason as the 32-bit builder (measured 8.2 s → 1.7 s cold at
-    sf0.1)."""
-    exploded = (
-        _token_sets(spark, sf_dir)
-        .select("doc_id", F.explode("tok").alias("t"))
-        .select("doc_id", h60(F.col("t")).alias("h"))
-    )
-    h = F.col("h")
-    sums = [
-        F.sum(
-            F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"s{i}")
-        for i in range(SIMHASH_WIDE_BITS)
-    ]
-    per_doc = exploded.groupBy("doc_id").agg(*sums)
-    sig = sum(
-        F.when(F.col(f"s{i}") >= 0, F.lit(2**i).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-        for i in range(SIMHASH_WIDE_BITS)
-    )
-    return per_doc.select("doc_id", sig.alias("simhash"))
-
-
 def simhash_wide_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hamming histogram of the WIDE SimHash candidate pairs — the
-    corpus-scale twin of :func:`simhash_hamming_histogram`: same
-    band-bucket equi-join shape (never all-pairs), but each 15-bit
-    band has 32768 values, so the random-collision asymptote shrinks
-    by 128× per band and the candidate stage stays pair-bounded far
-    deeper into the corpus. Run next to the 8-bit histogram, the two
-    views calibrate the width-vs-recall trade on real data. The
-    signature frame (2 longs per doc) is persisted for the same
-    no-ReusedExchange reason as the 8-bit variant."""
-    sig = simhash_wide(spark, sf_dir).persist()
-    n_bands = SIMHASH_WIDE_BITS // SIMHASH_WIDE_BAND_BITS
-    stack = ", ".join(
-        f"{b}, (simhash div {1 << (b * SIMHASH_WIDE_BAND_BITS)})"
-        f" % {1 << SIMHASH_WIDE_BAND_BITS}"
-        for b in range(n_bands)
-    )
-    bands = sig.select(
-        "doc_id",
-        "simhash",
-        F.expr(f"stack({n_bands}, {stack}) as (band_id, bv)"),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    pairs = (
-        a.join(b, ["band_id", "bv"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("da"),
-            F.col("b.doc_id").alias("db"),
-            F.expr("bit_count(a.simhash ^ b.simhash)")
-            .cast("bigint")
-            .alias("hamming"),
-        )
-        .distinct()
-    )
-    return (
-        pairs.groupBy("hamming")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
-        .select(
-            "hamming",
-            "n_pairs",
-            (F.col("hamming") <= SIMHASH_WIDE_NEAR).alias("is_near"),
-        )
-        .orderBy("hamming")
+    """Hamming histogram of the WIDE (60-bit, 15-bit band) SimHash
+    candidate pairs — the corpus-scale form of
+    :func:`simhash_hamming_histogram`: each band has 32768 values, so
+    the candidate stage stays pair-bounded far deeper into the corpus.
+    Run next to the 8-bit histogram, the two views calibrate the
+    width-vs-recall trade on real data."""
+    return _simhash_hamming(
+        spark, sf_dir, SIMHASH_WIDE_BITS, SIMHASH_WIDE_BAND_BITS, SIMHASH_WIDE_NEAR
     )
 
 
@@ -1800,10 +1751,7 @@ def pagerank_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     The edge frame reuses the persisted LSH pair frame every other
     dedup operator shares; the corpus is never rescanned.
     """
-    pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_id_a", "doc_id_b")
-    raw_edges = pairs.union(pairs.select("doc_id_b", "doc_id_a")).toDF(
-        "src", "dst"
-    )
+    raw_edges = _pair_graph_edges(spark, sf_dir)
     deg = raw_edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # node count as a 1-row broadcast (bounded by construction) rather
     # than an unpartitioned window, which would funnel the whole node
@@ -2023,12 +1971,7 @@ def kcore_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     node set — all bounded by the pair graph, corpus never rescanned;
     rounds are ``localCheckpoint``-ed like the sibling iterative
     operators so plan depth stays constant."""
-    pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_id_a", "doc_id_b")
-    edges = (
-        pairs.union(pairs.select("doc_id_b", "doc_id_a"))
-        .toDF("src", "dst")
-        .localCheckpoint()
-    )
+    edges = _pair_graph_edges(spark, sf_dir).localCheckpoint()
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     surv = deg.where(F.col("deg") >= KCORE_K).select(
         F.col("src").alias("doc_id")
@@ -2188,7 +2131,7 @@ def _shingle_rows(
     docs = load_table(spark, sf_dir, "documents")
     if bound_to is not None:
         docs = docs.join(bound_to.select("doc_id"), "doc_id", "leftsemi")
-    toks = docs.select("doc_id", F.split(F.trim("text"), r"\s+").alias("t"))
+    toks = docs.select("doc_id", tokens_col(F.col("text")).alias("t"))
     # guard size<2: Spark's sequence(1, 0) DESCENDS instead of being
     # empty, so the when() is load-bearing, not defensive styling
     shingles = F.when(

@@ -82,33 +82,54 @@ def _query_vectors(vecs: DataFrame) -> DataFrame:
     )
 
 
+def _rank_topk(scored: DataFrame, score: F.Column, *out: F.Column) -> DataFrame:
+    """(query_id, rank, neighbor_id, *out): each query's TOPK best rows
+    of a (query_id, neighbor_id, …) scored frame, ordered by ``score``
+    with neighbor_id breaking ties — persisted, since the recall
+    reports reuse every ANN result set via CacheManager plan matching."""
+    w = Window.partitionBy("query_id").orderBy(score, F.col("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= TOPK)
+        .select("query_id", "rank", "neighbor_id", *out)
+        .persist()
+    )
+
+
+def _cosine_topk(candidates: DataFrame) -> DataFrame:
+    """Exact-cosine top-k over (query_id, q, vec_id, v) candidate pairs,
+    excluding each query itself."""
+    scored = candidates.where(F.col("vec_id") != F.col("query_id")).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        _cos(F.col("q"), F.col("v")).alias("cos"),
+    )
+    return _rank_topk(
+        scored, F.col("cos").desc(), F.round("cos", 6).alias("cos_sim")
+    )
+
+
+def _adc_topk(lookups: DataFrame) -> DataFrame:
+    """ADC top-k: sum each (query_id, vec_id) candidate's qdist table
+    lookups into its approximate distance, smallest first."""
+    scored = lookups.groupBy(
+        "query_id", F.col("vec_id").alias("neighbor_id")
+    ).agg(F.sum("qdist").alias("adc"))
+    return _rank_topk(
+        scored,
+        F.col("adc").asc(),
+        # milli² units → distance² in micro-units; exact int / 1e6
+        F.round(F.col("adc") / F.lit(1_000_000.0), 6).alias("approx_dist"),
+    )
+
+
 def topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-5 cosine neighbors for each query vector (vec_id<20):
     broadcast the queries, one scan of the corpus, per-query top-k via
     row_number (partial top-k per partition under AQE)."""
     vecs = _vectors(spark, sf_dir)
     queries = _query_vectors(vecs)
-    scored = (
-        vecs.crossJoin(F.broadcast(queries))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _cos(F.col("q"), F.col("v")).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOPK)
-        .select(
-            "query_id",
-            "rank",
-            "neighbor_id",
-            F.round("cos", 6).alias("cos_sim"),
-        )
-        .persist()
-    )
+    return _cosine_topk(vecs.crossJoin(F.broadcast(queries)))
 
 
 def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -159,26 +180,8 @@ def lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("q"),
         F.col("signature").alias("qsig"),
     )
-    scored = (
+    return _cosine_topk(
         signed.join(F.broadcast(queries), F.col("signature") == F.col("qsig"))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _cos(F.col("q"), F.col("v")).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOPK)
-        .select(
-            "query_id",
-            "rank",
-            "neighbor_id",
-            F.round("cos", 6).alias("cos_sim"),
-        )
-        .persist()
     )
 
 
@@ -241,31 +244,9 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = nearest_cells(vecs, "vec_id", "v", 1)
     queries = _query_vectors(vecs)
     probes = nearest_cells(queries, "query_id", "q", NPROBE)
-    scored = (
-        # N_QUERIES × NPROBE probe rows broadcast onto the corpus-sized
-        # assignment frame — never a two-sided shuffle on cell_id
-        assigned.join(F.broadcast(probes), "cell_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _cos(F.col("q"), F.col("v")).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOPK)
-        .select(
-            "query_id",
-            "rank",
-            "neighbor_id",
-            F.round("cos", 6).alias("cos_sim"),
-        )
-        .persist()
-    )
+    # N_QUERIES × NPROBE probe rows broadcast onto the corpus-sized
+    # assignment frame — never a two-sided shuffle on cell_id
+    return _cosine_topk(assigned.join(F.broadcast(probes), "cell_id"))
 
 
 def ivf_cell_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -418,28 +399,10 @@ def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     production composes it with the IVF cell probe (see ivf_pq_topk)."""
     codes = _pq_codes_long(spark, sf_dir)
     qtab = _pq_query_table(spark, sf_dir)
-    scored = (
-        codes.join(F.broadcast(qtab), ["m", "code"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("qdist").alias("adc"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOPK)
-        .select(
-            "query_id",
-            "rank",
-            "neighbor_id",
-            # milli² units → distance² in micro-units; exact int / 1e6
-            F.round(F.col("adc") / F.lit(1_000_000.0), 6).alias(
-                "approx_dist"
-            ),
+    return _adc_topk(
+        codes.join(F.broadcast(qtab), ["m", "code"]).where(
+            F.col("vec_id") != F.col("query_id")
         )
-        .persist()
     )
 
 
@@ -479,7 +442,7 @@ def ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     codes = _pq_codes_long(spark, sf_dir)
     qtab = _pq_query_table(spark, sf_dir)
-    scored = (
+    return _adc_topk(
         # candidates are N_QUERIES × NPROBE × cell occupancy ≈
         # (NPROBE·N_QUERIES/NLIST)× the corpus — corpus-PROPORTIONAL,
         # so no broadcast hint here: a forced broadcast would hit the
@@ -489,22 +452,6 @@ def ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # their hints
         codes.join(candidates, "vec_id")
         .join(F.broadcast(qtab), ["query_id", "m", "code"])
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("qdist").alias("adc"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOPK)
-        .select(
-            "query_id",
-            "rank",
-            "neighbor_id",
-            F.round(F.col("adc") / F.lit(1_000_000.0), 6).alias("approx_dist"),
-        )
-        .persist()
     )
 
 
@@ -2998,28 +2945,12 @@ def ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "cell_id", "vec_id")
     )
-    scored = (
+    return _adc_topk(
         # candidate frame is corpus-proportional — no broadcast hint
         # (same reasoning as ivf_pq_topk); the ADC table stays hinted
         rcodes.drop("cell_id")
         .join(candidates, "vec_id")
         .join(F.broadcast(qtab), ["query_id", "cell_id", "m", "code"])
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("qdist").alias("adc"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOPK)
-        .select(
-            "query_id",
-            "rank",
-            "neighbor_id",
-            F.round(F.col("adc") / F.lit(1_000_000.0), 6).alias("approx_dist"),
-        )
-        .persist()
     )
 
 

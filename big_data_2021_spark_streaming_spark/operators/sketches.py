@@ -55,6 +55,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions.exact import exact_global_rank, half_up
+from ..functions.hashing import h60_seeded, h60_seeded_sql
 from ..sources.batch import load_table
 
 # ---- HLL parameters -------------------------------------------------
@@ -83,19 +84,6 @@ BITMAP_BITS_PER_WORD = 60  # bits used per BIGINT word: bit 63 would
 # so words carry 60 bits and stay positive in both engines
 
 
-def _h(seed: str, expr_col: F.Column) -> F.Column:
-    """Portable 60-bit hash: md5(seed:value) hex prefix → bigint.
-    Identical bytes in DuckDB via ``_h_sql`` — the same scheme as
-    functions/hashing.h60_packed_md5."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{seed}:"), expr_col)), 1, 15), 16, 10
-    ).cast("bigint")
-
-
-def _h_sql(seed: str, expr: str) -> str:
-    return f"CAST('0x' || substr(md5('{seed}:' || {expr}), 1, 15) AS BIGINT)"
-
-
 # ---------------------------------------------------------------------
 # HyperLogLog
 # ---------------------------------------------------------------------
@@ -109,11 +97,53 @@ def _hll_rho() -> F.Column:
     )
 
 
-def _hll_finalize(summary: DataFrame) -> DataFrame:
-    """Append hll_estimate / err_permille to a frame carrying
-    (…, nonzero_registers, s_scaled, exact_distinct) — the shared
-    estimator: exact half-up integer division for alpha·m²/Z plus the
-    precomputed linear-counting literals for the small range."""
+def _hll_registers(events: DataFrame, *scope: F.Column) -> DataFrame:
+    """(scope…, bucket, rho_max): one max-rho register set of
+    ``events.user_id`` per scope value (a single set with no scope)."""
+    uid = F.col("user_id").cast("string")
+    hashed = events.select(
+        *scope,
+        (h60_seeded("hllb", uid) % HLL_M).alias("bucket"),
+        (h60_seeded("hllv", uid) % (1 << HLL_CAP)).alias("v"),
+    )
+    keys = hashed.columns[:-1]
+    return (
+        hashed.select(*keys, _hll_rho().alias("rho"))
+        .groupBy(*keys)
+        .agg(F.max("rho").alias("rho_max"))
+    )
+
+
+def _hll_summarize(regs: DataFrame, keys: list[str]) -> DataFrame:
+    """(keys, nonzero_registers, s_scaled) from a register frame —
+    the shared map-side shape: S = Σ 2^(CAP - rho_max) over present
+    registers, and absent registers contribute 2^CAP each.
+    shiftleft keeps it exact-integer."""
+    return (
+        regs.groupBy(*keys)
+        .agg(
+            F.count("*").cast("bigint").alias("nonzero_registers"),
+            F.sum(
+                F.expr(f"shiftleft(cast(1 as bigint), {HLL_CAP} - rho_max)")
+            ).alias("s_present"),
+        )
+        .select(
+            *keys,
+            "nonzero_registers",
+            (
+                F.col("s_present")
+                + (F.lit(HLL_M) - F.col("nonzero_registers"))
+                * F.lit(1 << HLL_CAP).cast("bigint")
+            ).alias("s_scaled"),
+        )
+    )
+
+
+def _hll_estimate(summary: DataFrame) -> DataFrame:
+    """Append hll_estimate to a frame carrying (…, nonzero_registers,
+    s_scaled) — the shared estimator: exact half-up integer division
+    for alpha·m²/Z plus the precomputed linear-counting literals for
+    the small range."""
     lc_case = (
         "CASE zero_regs "
         + " ".join(f"WHEN {v} THEN {est}" for v, est in _LC_TABLE.items())
@@ -124,7 +154,7 @@ def _hll_finalize(summary: DataFrame) -> DataFrame:
             f"{HLL_ALPHA_MILLI * HLL_M * HLL_M * (1 << HLL_CAP)}", "1000 * s_scaled"
         )
     )
-    out = (
+    return (
         summary.withColumn("raw_est", raw)
         .withColumn(
             "zero_regs", (F.lit(HLL_M) - F.col("nonzero_registers")).cast("bigint")
@@ -138,14 +168,17 @@ def _hll_finalize(summary: DataFrame) -> DataFrame:
             .otherwise(F.col("raw_est"))
             .cast("bigint"),
         )
-        .withColumn(
-            "err_permille",
-            F.expr(
-                half_up("1000 * abs(hll_estimate - exact_distinct)", "exact_distinct")
-            ),
-        )
+        .drop("raw_est", "zero_regs")
     )
-    return out.drop("raw_est", "zero_regs")
+
+
+def _hll_finalize(summary: DataFrame) -> DataFrame:
+    """``_hll_estimate`` plus err_permille against the frame's
+    exact_distinct column."""
+    return _hll_estimate(summary).withColumn(
+        "err_permille",
+        F.expr(half_up("1000 * abs(hll_estimate - exact_distinct)", "exact_distinct")),
+    )
 
 
 def sketch_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -164,29 +197,7 @@ def sketch_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     permille — the acceptance metric for the sketch.
     """
     events = load_table(spark, sf_dir, "events")
-    uid = F.col("user_id").cast("string")
-    hashed = events.select(
-        (_h("hllb", uid) % HLL_M).alias("bucket"),
-        (_h("hllv", uid) % (1 << HLL_CAP)).alias("v"),
-    )
-    regs = hashed.select("bucket", _hll_rho().alias("rho")).groupBy("bucket").agg(
-        F.max("rho").alias("rho_max")
-    )
-    # S over all m registers: present ones contribute 2^(CAP-rho_max),
-    # absent ones 2^CAP each. shiftleft keeps it exact-integer.
-    summary = regs.agg(
-        F.count("*").alias("nonzero_registers"),
-        F.sum(
-            F.expr(f"shiftleft(cast(1 as bigint), {HLL_CAP} - rho_max)")
-        ).alias("s_present"),
-    ).select(
-        F.col("nonzero_registers").cast("bigint").alias("nonzero_registers"),
-        (
-            F.col("s_present")
-            + (F.lit(HLL_M) - F.col("nonzero_registers"))
-            * F.lit(1 << HLL_CAP).cast("bigint")
-        ).alias("s_scaled"),
-    )
+    summary = _hll_summarize(_hll_registers(events), [])
     exact = events.agg(F.count_distinct("user_id").cast("bigint").alias("exact_distinct"))
     return _hll_finalize(summary.crossJoin(exact)).select(
         F.lit(HLL_M).cast("bigint").alias("m"),
@@ -209,37 +220,13 @@ def sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_distinct is the true global distinct. Shapes: one scan, a
     (types × 64)-row register table, types+1 output rows."""
     events = load_table(spark, sf_dir, "events")
-    uid = F.col("user_id").cast("string")
-    hashed = events.select(
-        F.col("event_type").alias("scope"),
-        (_h("hllb", uid) % HLL_M).alias("bucket"),
-        (_h("hllv", uid) % (1 << HLL_CAP)).alias("v"),
-    )
-    regs = (
-        hashed.select("scope", "bucket", _hll_rho().alias("rho"))
-        .groupBy("scope", "bucket")
-        .agg(F.max("rho").alias("rho_max"))
-    )
+    regs = _hll_registers(events, F.col("event_type").alias("scope"))
     merged = (
         regs.groupBy("bucket")
         .agg(F.max("rho_max").alias("rho_max"))
         .select(F.lit("__merged__").alias("scope"), "bucket", "rho_max")
     )
-    all_regs = regs.unionByName(merged)
-    summary = all_regs.groupBy("scope").agg(
-        F.count("*").cast("bigint").alias("nonzero_registers"),
-        F.sum(
-            F.expr(f"shiftleft(cast(1 as bigint), {HLL_CAP} - rho_max)")
-        ).alias("s_present"),
-    ).select(
-        "scope",
-        "nonzero_registers",
-        (
-            F.col("s_present")
-            + (F.lit(HLL_M) - F.col("nonzero_registers"))
-            * F.lit(1 << HLL_CAP).cast("bigint")
-        ).alias("s_scaled"),
-    )
+    summary = _hll_summarize(regs.unionByName(merged), ["scope"])
     per_type = events.groupBy(F.col("event_type").alias("scope")).agg(
         F.count_distinct("user_id").cast("bigint").alias("exact_distinct")
     )
@@ -250,61 +237,6 @@ def sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _hll_finalize(summary.join(exact, "scope")).select(
         "scope", "nonzero_registers", "s_scaled", "hll_estimate",
         "exact_distinct", "err_permille",
-    )
-
-
-def _hll_summarize(regs: DataFrame, keys: list[str]) -> DataFrame:
-    """(keys, nonzero_registers, s_scaled) from a register frame —
-    the shared map-side shape: absent registers contribute 2^CAP."""
-    return (
-        regs.groupBy(*keys)
-        .agg(
-            F.count("*").cast("bigint").alias("nonzero_registers"),
-            F.sum(
-                F.expr(f"shiftleft(cast(1 as bigint), {HLL_CAP} - rho_max)")
-            ).alias("s_present"),
-        )
-        .select(
-            *keys,
-            "nonzero_registers",
-            (
-                F.col("s_present")
-                + (F.lit(HLL_M) - F.col("nonzero_registers"))
-                * F.lit(1 << HLL_CAP).cast("bigint")
-            ).alias("s_scaled"),
-        )
-    )
-
-
-def _hll_estimate_only(summary: DataFrame) -> DataFrame:
-    """hll_estimate from (…, nonzero_registers, s_scaled) without the
-    exact-count audit columns — the estimator `_hll_finalize` wraps,
-    for call sites that carry their own ground truth."""
-    lc_case = (
-        "CASE zero_regs "
-        + " ".join(f"WHEN {v} THEN {est}" for v, est in _LC_TABLE.items())
-        + " END"
-    )
-    raw = F.expr(
-        half_up(
-            f"{HLL_ALPHA_MILLI * HLL_M * HLL_M * (1 << HLL_CAP)}", "1000 * s_scaled"
-        )
-    )
-    return (
-        summary.withColumn("raw_est", raw)
-        .withColumn(
-            "zero_regs", (F.lit(HLL_M) - F.col("nonzero_registers")).cast("bigint")
-        )
-        .withColumn(
-            "hll_estimate",
-            F.when(
-                (F.col("zero_regs") > 0) & (F.col("raw_est") * 2 <= 5 * HLL_M),
-                F.expr(lc_case),
-            )
-            .otherwise(F.col("raw_est"))
-            .cast("bigint"),
-        )
-        .drop("raw_est", "zero_regs", "nonzero_registers", "s_scaled")
     )
 
 
@@ -325,19 +257,8 @@ def sketch_hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact Jaccard as the acceptance metric. All ratios are exact
     half-up micro-unit integer divisions, oracle-identical."""
     events = load_table(spark, sf_dir, "events")
-    uid = F.col("user_id").cast("string")
-    hashed = events.select(
-        F.col("event_type").alias("scope"),
-        (_h("hllb", uid) % HLL_M).alias("bucket"),
-        (_h("hllv", uid) % (1 << HLL_CAP)).alias("v"),
-    )
     # (types × ≤64)-row register table: tiny, reused by three branches
-    regs = (
-        hashed.select("scope", "bucket", _hll_rho().alias("rho"))
-        .groupBy("scope", "bucket")
-        .agg(F.max("rho").alias("rho_max"))
-        .persist()
-    )
+    regs = _hll_registers(events, F.col("event_type").alias("scope")).persist()
     types = regs.select("scope").distinct()
     # |types|²-bounded pair grid (handful of rows — intended BNLJ)
     pairs = types.select(F.col("scope").alias("type_a")).join(
@@ -353,8 +274,8 @@ def sketch_hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("type_a", "type_b", "bucket")
         .agg(F.max("rho_max").alias("rho_max"))
     )
-    scope_est = _hll_estimate_only(_hll_summarize(regs, ["scope"]))
-    union_est = _hll_estimate_only(
+    scope_est = _hll_estimate(_hll_summarize(regs, ["scope"]))
+    union_est = _hll_estimate(
         _hll_summarize(pair_regs, ["type_a", "type_b"])
     ).withColumnRenamed("hll_estimate", "est_union")
     # exact ground truth: one distinct (type, user) frame. The exact
@@ -487,8 +408,11 @@ def sketch_bloom_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
     needles = customer.filter(F.col("c_mktsegment") == _BLOOM_SEGMENT).select(
         F.col("c_custkey").cast("string").alias("key")
     )
-    # build: distinct bit positions over k seeded hashes
-    pos_cols = [(_h(f"bf{i}", F.col("key")) % BLOOM_BITS) for i in range(BLOOM_K)]
+    # build: distinct bit positions over k seeded hashes (the probe
+    # side hashes its own ``key`` column with the same expressions)
+    pos_cols = [
+        (h60_seeded(f"bf{i}", F.col("key")) % BLOOM_BITS) for i in range(BLOOM_K)
+    ]
     bits = (
         needles.select(F.explode(F.array(*pos_cols)).alias("pos")).distinct()
     )
@@ -497,11 +421,7 @@ def sketch_bloom_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey"), F.col("o_custkey").cast("string").alias("key")
     )
     probe_pos = probes.select(
-        "o_orderkey",
-        "key",
-        F.explode(
-            F.array(*[(_h(f"bf{i}", F.col("key")) % BLOOM_BITS) for i in range(BLOOM_K)])
-        ).alias("pos"),
+        "o_orderkey", "key", F.explode(F.array(*pos_cols)).alias("pos")
     )
     hit = (
         probe_pos.join(F.broadcast(bits.withColumn("set_", F.lit(1))), "pos", "left")
@@ -551,20 +471,21 @@ def sketch_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     events = load_table(spark, sf_dir, "events")
     uid = F.col("user_id").cast("string")
-    cells = (
-        events.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("row_"),
-                            (_h(f"cms{j}", uid) % CMS_W).alias("bucket"),
-                        )
-                        for j in range(CMS_D)
-                    ]
+    # the d (row, bucket) cells of a user — the build and the probe
+    # explode the same expression
+    user_cells = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(j).alias("row_"),
+                    (h60_seeded(f"cms{j}", uid) % CMS_W).alias("bucket"),
                 )
-            ).alias("c")
+                for j in range(CMS_D)
+            ]
         )
+    ).alias("c")
+    cells = (
+        events.select(user_cells)
         .select("c.row_", "c.bucket")
         .groupBy("row_", "bucket")
         .agg(F.count("*").cast("bigint").alias("cnt"))
@@ -575,23 +496,9 @@ def sketch_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("exact_cnt"), F.asc("user_id"))
         .limit(CMS_TOPN)
     )
-    probe = top.select(
-        "user_id",
-        "exact_cnt",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("row_"),
-                        (_h(f"cms{j}", F.col("user_id").cast("string")) % CMS_W).alias(
-                            "bucket"
-                        ),
-                    )
-                    for j in range(CMS_D)
-                ]
-            )
-        ).alias("c"),
-    ).select("user_id", "exact_cnt", "c.row_", "c.bucket")
+    probe = top.select("user_id", "exact_cnt", user_cells).select(
+        "user_id", "exact_cnt", "c.row_", "c.bucket"
+    )
     est = (
         probe.join(F.broadcast(cells), ["row_", "bucket"])
         .groupBy("user_id", "exact_cnt")
@@ -780,8 +687,8 @@ _LC_CASE_SQL = (
 
 ORACLES["sketch_hll_users"] = f"""
     WITH hashed AS (
-        SELECT {_h_sql('hllb', 'CAST(user_id AS VARCHAR)')} % {HLL_M} AS bucket,
-               {_h_sql('hllv', 'CAST(user_id AS VARCHAR)')} % {1 << HLL_CAP} AS v
+        SELECT {h60_seeded_sql('hllb', 'CAST(user_id AS VARCHAR)')} % {HLL_M} AS bucket,
+               {h60_seeded_sql('hllv', 'CAST(user_id AS VARCHAR)')} % {1 << HLL_CAP} AS v
         FROM events
     ),
     regs AS (
@@ -825,8 +732,8 @@ ORACLES["sketch_hll_users"] = f"""
 ORACLES["sketch_hll_merge"] = f"""
     WITH hashed AS (
         SELECT event_type AS scope,
-               {_h_sql('hllb', 'CAST(user_id AS VARCHAR)')} % {HLL_M} AS bucket,
-               {_h_sql('hllv', 'CAST(user_id AS VARCHAR)')} % {1 << HLL_CAP} AS v
+               {h60_seeded_sql('hllb', 'CAST(user_id AS VARCHAR)')} % {HLL_M} AS bucket,
+               {h60_seeded_sql('hllv', 'CAST(user_id AS VARCHAR)')} % {1 << HLL_CAP} AS v
         FROM events
     ),
     regs AS (
@@ -906,8 +813,8 @@ def _hll_sum_est_sql(src: str, keys: str) -> str:
 ORACLES["sketch_hll_intersection"] = f"""
     WITH hashed AS (
         SELECT event_type AS scope,
-               {_h_sql('hllb', 'CAST(user_id AS VARCHAR)')} % {HLL_M} AS bucket,
-               {_h_sql('hllv', 'CAST(user_id AS VARCHAR)')} % {1 << HLL_CAP} AS v
+               {h60_seeded_sql('hllb', 'CAST(user_id AS VARCHAR)')} % {HLL_M} AS bucket,
+               {h60_seeded_sql('hllv', 'CAST(user_id AS VARCHAR)')} % {1 << HLL_CAP} AS v
         FROM events
     ),
     regs AS (
@@ -966,12 +873,12 @@ ORACLES["sketch_hll_intersection"] = f"""
 """
 
 _BLOOM_PROBE_POS = " UNION ALL ".join(
-    f"SELECT o_orderkey, key, {_h_sql(f'bf{i}', 'key')} % {BLOOM_BITS} AS pos"
+    f"SELECT o_orderkey, key, {h60_seeded_sql(f'bf{i}', 'key')} % {BLOOM_BITS} AS pos"
     " FROM probes"
     for i in range(BLOOM_K)
 )
 _BLOOM_BUILD_POS = " UNION ALL ".join(
-    f"SELECT {_h_sql(f'bf{i}', 'key')} % {BLOOM_BITS} AS pos FROM needles"
+    f"SELECT {h60_seeded_sql(f'bf{i}', 'key')} % {BLOOM_BITS} AS pos FROM needles"
     for i in range(BLOOM_K)
 )
 
@@ -1016,13 +923,13 @@ ORACLES["sketch_bloom_reduction"] = f"""
 """
 
 _CMS_CELLS = " UNION ALL ".join(
-    f"SELECT {j} AS row_, {_h_sql(f'cms{j}', 'CAST(user_id AS VARCHAR)')}"
+    f"SELECT {j} AS row_, {h60_seeded_sql(f'cms{j}', 'CAST(user_id AS VARCHAR)')}"
     f" % {CMS_W} AS bucket FROM events"
     for j in range(CMS_D)
 )
 _CMS_PROBE = " UNION ALL ".join(
     f"SELECT user_id, exact_cnt, {j} AS row_,"
-    f" {_h_sql(f'cms{j}', 'CAST(user_id AS VARCHAR)')} % {CMS_W} AS bucket"
+    f" {h60_seeded_sql(f'cms{j}', 'CAST(user_id AS VARCHAR)')} % {CMS_W} AS bucket"
     " FROM top"
     for j in range(CMS_D)
 )
@@ -1082,7 +989,7 @@ def user_presence_bitmap(
     return (
         events.select(
             "event_type",
-            (_h("bmw", uid) % (words * bits_per_word)).alias("slot"),
+            (h60_seeded("bmw", uid) % (words * bits_per_word)).alias("slot"),
         )
         .select(
             "event_type",

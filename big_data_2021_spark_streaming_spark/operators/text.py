@@ -37,6 +37,8 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 
 
 def tokens_col(text: F.Column) -> F.Column:
+    """THE whitespace tokenizer (the module docstring's contract); every
+    operator that splits text into words calls it."""
     return F.split(F.trim(text), r"\s+")
 
 
@@ -2043,6 +2045,26 @@ def _bpe_merge(syms: DataFrame, top: DataFrame) -> DataFrame:
     )
 
 
+def _bpe_rounds(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, list[DataFrame]]:
+    """The trainer's merge chain as one declarative plan: ``tops[r-1]``
+    is round r's winning (a, b, n_occ) pair (count desc, then
+    lexicographic), and ``syms`` is the word histogram after the first
+    BPE_ROUNDS - 1 merges. Every merged round is persisted, so the
+    trainer, the encoder and the fertility report share those frames
+    through CacheManager plan matching. The last winner is learned but
+    not applied; the apply builders merge ``tops[-1]`` themselves."""
+    syms = _bpe_initial_syms(spark, sf_dir)
+    tops = []
+    for r in range(1, BPE_ROUNDS + 1):
+        counts = _bpe_pair_counts(syms)
+        tops.append(counts.orderBy(F.desc("n_occ"), "a", "b").limit(1))
+        if r < BPE_ROUNDS:
+            syms = _bpe_merge(syms, tops[-1]).persist()
+    return syms, tops
+
+
 def bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer training, BPE_ROUNDS merge rounds — the iterative
     fixpoint ``text_bpe_pair_stats`` shows one step of, run for real:
@@ -2059,22 +2081,17 @@ def bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     and there are ZERO driver collects: the whole R-round trainer is
     one declarative plan. The DuckDB oracle replays the identical
     weighted rounds via generated CTEs (list_reduce fold)."""
-    syms = _bpe_initial_syms(spark, sf_dir)
-    summaries = []
-    for r in range(1, BPE_ROUNDS + 1):
-        counts = _bpe_pair_counts(syms)
-        top = counts.orderBy(F.desc("n_occ"), "a", "b").limit(1)
-        summaries.append(
-            top.select(
-                F.lit(r).alias("round"),
-                "a",
-                "b",
-                F.concat("a", "b").alias("merged"),
-                "n_occ",
-            )
+    _, tops = _bpe_rounds(spark, sf_dir)
+    summaries = [
+        top.select(
+            F.lit(r).alias("round"),
+            "a",
+            "b",
+            F.concat("a", "b").alias("merged"),
+            "n_occ",
         )
-        if r < BPE_ROUNDS:
-            syms = _bpe_merge(syms, top).persist()
+        for r, top in enumerate(tops, 1)
+    ]
     out = summaries[0]
     for s in summaries[1:]:
         out = out.unionByName(s)
@@ -2161,21 +2178,14 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     packing: Σ n_occ is the exact token count of the dataset under
     this tokenizer.
 
-    Built by replaying the trainer's own declarative chain — the same
-    ``_bpe_merge`` fold, including the final round's merge the trainer
-    learns but never applies — so when ``text_bpe_train`` has already
-    run in the session, CacheManager plan-matching reuses its
-    persisted per-round symbol frames and this query pays only the
-    final merge + one explode/aggregate. Vocabulary is alphabet² -
-    bounded, so the unpartitioned rank/share window runs over a tiny
-    aggregated frame, never the corpus."""
-    syms = _bpe_initial_syms(spark, sf_dir)
-    for r in range(1, BPE_ROUNDS + 1):
-        counts = _bpe_pair_counts(syms)
-        top = counts.orderBy(F.desc("n_occ"), "a", "b").limit(1)
-        syms = _bpe_merge(syms, top)
-        if r < BPE_ROUNDS:
-            syms = syms.persist()
+    Built on the trainer's own chain (``_bpe_rounds``) plus the final
+    round's merge the trainer learns but never applies, so after
+    ``text_bpe_train`` this query pays only that merge + one
+    explode/aggregate. Vocabulary is alphabet²-bounded, so the
+    unpartitioned rank/share window runs over a tiny aggregated frame,
+    never the corpus."""
+    syms, tops = _bpe_rounds(spark, sf_dir)
+    syms = _bpe_merge(syms, tops[-1])
     vocab = (
         syms.select(F.explode(F.split("sym", _BPE_SEP)).alias("piece"), "w")
         .groupBy("piece")
@@ -2236,17 +2246,10 @@ def bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-scale chain output is collapsed to one row per distinct
     segmentation (vocabulary-bounded) and broadcast onto per-language
     token counts — the per-occurrence frame never re-shuffles. The
-    merge chain is replayed with the exact code path of
-    text_bpe_encode, so a session that already ran the trainer or the
-    encoder reuses its persisted per-round symbol frames via
-    CacheManager plan-matching."""
-    syms = _bpe_initial_syms(spark, sf_dir)
-    for r in range(1, BPE_ROUNDS + 1):
-        counts = _bpe_pair_counts(syms)
-        top = counts.orderBy(F.desc("n_occ"), "a", "b").limit(1)
-        syms = _bpe_merge(syms, top)
-        if r < BPE_ROUNDS:
-            syms = syms.persist()
+    merge chain is text_bpe_encode's (``_bpe_rounds`` plus the final
+    merge), so its persisted per-round frames are shared."""
+    syms, tops = _bpe_rounds(spark, sf_dir)
+    syms = _bpe_merge(syms, tops[-1])
     # syms is the word HISTOGRAM (one row per distinct token), so the
     # segmentation table is just a projection of it
     seg = syms.select(
@@ -2921,9 +2924,7 @@ def word_len_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     there is never a per-source sort of words. All displays are exact
     integers (micro mean via half-up div from BIGINT sums)."""
     docs = load_table(spark, sf_dir, "documents")
-    words = docs.select(
-        "source", F.explode(F.split(F.trim("text"), r"\s+")).alias("w")
-    )
+    words = docs.select("source", F.explode(tokens_col(F.col("text"))).alias("w"))
     cells = (
         words.groupBy("source", F.length("w").alias("len"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))

@@ -2106,6 +2106,34 @@ def user_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 MAPE_LAG_DAYS = 7  # seasonal-naive: day d forecast by day d-7
 
 
+def _daily_type_counts(events: DataFrame) -> DataFrame:
+    """(event_type, day, c): event counts per type and epoch day — one
+    scan reduced map-side to (type, day) cells."""
+    return (
+        events.select("event_type", _epoch_us("ts").alias("_us"))
+        .select("event_type", F.expr("_us div 86400000000").alias("day"))
+        .groupBy("event_type", "day")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+    )
+
+
+def _dense_daily(daily: DataFrame) -> DataFrame:
+    """``daily`` on the dense calendar grid: every type × every day of
+    the global span (a sequence-explode over broadcast 1-row bounds),
+    quiet days as explicit zeros — the series stays calendar-bounded,
+    never corpus-sized."""
+    bounds = daily.agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
+    grid = (
+        daily.select("event_type")
+        .distinct()
+        .crossJoin(F.broadcast(bounds))
+        .select("event_type", F.explode(F.sequence("d0", "d1")).alias("day"))
+    )
+    return grid.join(daily, ["event_type", "day"], "left").select(
+        "event_type", "day", F.coalesce("c", F.lit(0)).alias("c")
+    )
+
+
 def event_seasonal_naive_mape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forecast-baseline evaluation: MAPE (and bias) of the
     seasonal-naive predictor — tomorrow looks like the same weekday
@@ -2124,24 +2152,7 @@ def event_seasonal_naive_mape(spark: SparkSession, sf_dir: str) -> DataFrame:
     day) partial aggregate, the lag runs over the calendar-bounded
     dense grid."""
     events = load_table(spark, sf_dir, "events")
-    daily = (
-        events.select("event_type", _epoch_us("ts").alias("_us"))
-        .select("event_type", F.expr("_us div 86400000000").alias("day"))
-        .groupBy("event_type", "day")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    )
-    bounds = daily.agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
-    grid = (
-        daily.select("event_type")
-        .distinct()
-        .crossJoin(F.broadcast(bounds))
-        .select(
-            "event_type", F.explode(F.sequence("d0", "d1")).alias("day")
-        )
-    )
-    dense = grid.join(daily, ["event_type", "day"], "left").select(
-        "event_type", "day", F.coalesce("c", F.lit(0)).alias("c")
-    )
+    dense = _dense_daily(_daily_type_counts(events))
     w = Window.partitionBy("event_type").orderBy("day")
     scored = dense.withColumn(
         "pred", F.lag("c", MAPE_LAG_DAYS).over(w)
@@ -2305,24 +2316,7 @@ def event_dispersion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     chi² leaves. One scan → (type, day) partial aggregate → |types|
     rows."""
     events = load_table(spark, sf_dir, "events")
-    daily = (
-        events.select("event_type", _epoch_us("ts").alias("_us"))
-        .select("event_type", F.expr("_us div 86400000000").alias("day"))
-        .groupBy("event_type", "day")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    )
-    bounds = daily.agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
-    grid = (
-        daily.select("event_type")
-        .distinct()
-        .crossJoin(F.broadcast(bounds))
-        .select(
-            "event_type", F.explode(F.sequence("d0", "d1")).alias("day")
-        )
-    )
-    dense = grid.join(daily, ["event_type", "day"], "left").select(
-        "event_type", "day", F.coalesce("c", F.lit(0)).alias("c")
-    )
+    dense = _dense_daily(_daily_type_counts(events))
     moments = dense.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_days"),
         F.sum("c").alias("s"),
@@ -3958,26 +3952,7 @@ def event_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     span (broadcast 1-row bounds), so quiet days pull the cumsum down
     instead of being invisible."""
     events = load_table(spark, sf_dir, "events")
-    daily = (
-        events.select("event_type", _epoch_us("ts").alias("_us"))
-        .select("event_type", F.expr("_us div 86400000000").alias("day"))
-        .groupBy("event_type", "day")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    )
-    bounds = daily.agg(
-        F.min("day").alias("d0"), F.max("day").alias("d1")
-    )
-    grid = (
-        daily.select("event_type")
-        .distinct()
-        .crossJoin(F.broadcast(bounds))
-        .select(
-            "event_type", F.explode(F.sequence("d0", "d1")).alias("day")
-        )
-    )
-    dense = grid.join(daily, ["event_type", "day"], "left").select(
-        "event_type", "day", F.coalesce("c", F.lit(0)).alias("c")
-    )
+    dense = _dense_daily(_daily_type_counts(events))
     w_cum = (
         Window.partitionBy("event_type")
         .orderBy("day")
@@ -4696,27 +4671,10 @@ def event_trend_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").where(
         F.col("ts").isNotNull()
     )
-    daily = (
-        events.select("event_type", _epoch_us("ts").alias("_us"))
-        .select("event_type", F.expr("_us div 86400000000").alias("day"))
-        .groupBy("event_type", "day")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    )
-    daily = daily.persist()  # ONE corpus scan; bounds/grid/dense read it
-    bounds = daily.agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
-    grid = (
-        daily.select("event_type")
-        .distinct()
-        .crossJoin(F.broadcast(bounds))
-        .select(
-            "event_type", F.explode(F.sequence("d0", "d1")).alias("day")
-        )
-    )
-    dense = (
-        grid.join(daily, ["event_type", "day"], "left")
-        .select("event_type", "day", F.coalesce("c", F.lit(0)).alias("c"))
-        .persist()  # calendar-bounded cells; both sides of the pair join
-    )
+    # ONE corpus scan; bounds/grid/dense read it
+    daily = _daily_type_counts(events).persist()
+    # calendar-bounded cells; both sides of the pair join
+    dense = _dense_daily(daily).persist()
     pairs = (
         dense.alias("a")
         .join(

@@ -33,6 +33,19 @@ def test_load_full_bench_line(tmp_path):
     assert load_timings(str(f)) == {"q1": 0.5, "q2": 2.0}
 
 
+def test_warm_block_is_gated_under_warm_keys(tmp_path):
+    # the warm block is paid by every run, so a warm-builder regression
+    # must fail the gate like a per-query one
+    prev, curr = tmp_path / "p.json", tmp_path / "c.json"
+    for path, warm in ((prev, 2.0), (curr, 6.0)):
+        doc = {"queries": {"q": 1.0}, "warm_queries": {"dedup_clusters": warm}}
+        path.write_text(json.dumps({"metric": "x", "value": 1.0, **doc}))
+    p, c = load_timings(str(prev)), load_timings(str(curr))
+    assert p == {"q": 1.0, "warm:dedup_clusters": 2.0}
+    regs, _, _ = diff(p, c, 2.0, 1.0, set())
+    assert [(r[0], r[3]) for r in regs] == [("warm:dedup_clusters", 3.0)]
+
+
 def test_load_raw_stdout_with_noise_lines(tmp_path):
     f = tmp_path / "run.log"
     f.write_text(
@@ -109,13 +122,24 @@ def _manifest():
     return json.loads((REPO / "bench_runs" / "MANIFEST.json").read_text())
 
 
+# bench_runs/ recordings that are not sweeps of the gate sequence
+# (bench_runs/README.md): scale-up triples, embedding-dim sweeps and
+# solo re-timings that adjudicate a blip
+_NON_SWEEP_PREFIXES = ("sfrep", "sfemb", "adjudication_")
+
+
 def test_manifest_covers_all_recorded_sweeps():
-    # every committed sf0.1 sweep must appear in the run manifest (and
-    # vice versa) so the latest-pair gate below can't be dodged by file
+    # every committed sweep must appear in the run manifest (and vice
+    # versa) so the latest-pair gate below can't be dodged by file
     # naming — VERDICT r08 item 1: a lexicographic sorted() made a
-    # '*_before' leg masquerade as the latest run
+    # '*_before' leg masquerade as the latest run. Any other recording
+    # must carry a documented non-sweep prefix.
     man = _manifest()
-    on_disk = {p.name for p in (REPO / "bench_runs").glob("sf0.1_r*.json")}
+    on_disk = {
+        p.name
+        for p in (REPO / "bench_runs").glob("*.json")
+        if p.name != "MANIFEST.json" and not p.name.startswith(_NON_SWEEP_PREFIXES)
+    }
     assert set(man["order"]) == on_disk, sorted(set(man["order"]) ^ on_disk)
     assert len(man["order"]) == len(set(man["order"]))
     # an allow entry adjudicates one step of the sequence, so its key

@@ -187,13 +187,12 @@ _ALLOWED_PINS = frozenset(
         ("plans/analytics.py", "discount_tax_independence", "n"),
         ("plans/analytics.py", "event_cooccurrence_lift", "n_users"),
         ("plans/analytics.py", "event_cooccurrence_lift", "per_type"),
-        ("plans/analytics.py", "event_cusum_changepoint", "bounds"),
-        ("plans/analytics.py", "event_dispersion_index", "bounds"),
-        # r08: same 1-row day-span bounds frame as the dispersion grid
-        ("plans/analytics.py", "event_trend_theilsen", "bounds"),
+        # the 1-row day-span bounds of the dense day grid shared by
+        # event_cusum_changepoint, event_dispersion_index,
+        # event_seasonal_naive_mape and event_trend_theilsen
+        ("plans/analytics.py", "_dense_daily", "bounds"),
         ("plans/analytics.py", "event_dow_profile", "totals"),
         ("plans/analytics.py", "event_hourly_resample", "types"),
-        ("plans/analytics.py", "event_seasonal_naive_mape", "bounds"),
         ("plans/analytics.py", "event_transition_matrix", "totals"),
         ("plans/analytics.py", "excess_quantity_suppliers", "nation"),
         ("plans/analytics.py", "experiment_cuped_lift", "bounds"),

@@ -1,0 +1,104 @@
+"""Steps with one definition stay spelled once, with no table data: an
+AST scan of the package for hand copies of the seeded 60-bit hash and
+of the whitespace tokenizer. A copy that drifts from its definition
+breaks oracle parity (the hash) or the shared token contract (the
+tokenizer) in one operator only."""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+PKG = Path(__file__).resolve().parents[1] / "big_data_2021_spark_streaming_spark"
+
+# (module, function) that may spell each step: its one definition
+_HASH_HOME = {("functions/hashing.py", "h60")}
+_TOKENIZER_HOME = {("operators/text.py", "tokens_col")}
+
+
+def _name(call: ast.AST) -> str | None:
+    """``conv`` for ``F.conv(...)`` or ``conv(...)``; None for a non-call."""
+    if not isinstance(call, ast.Call):
+        return None
+    f = call.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+
+def _first_arg(call: ast.Call) -> ast.AST | None:
+    return call.args[0] if call.args else None
+
+
+def _is_md5_hash(node: ast.AST) -> bool:
+    """conv(substring(md5(...), ...), ...): the h60 digest-prefix hash."""
+    return (
+        _name(node) == "conv"
+        and _name(sub := _first_arg(node)) == "substring"
+        and _name(_first_arg(sub)) == "md5"
+    )
+
+
+def _is_ws_tokenizer(node: ast.AST) -> bool:
+    """split(trim(...), r"\\s+"): the whitespace tokenizer."""
+    return (
+        _name(node) == "split"
+        and len(node.args) >= 2
+        and _name(node.args[0]) == "trim"
+        and isinstance(node.args[1], ast.Constant)
+        and node.args[1].value == r"\s+"
+    )
+
+
+def _spellings(tree: ast.AST, match) -> list[tuple[int, str]]:
+    funcs = [
+        (n.lineno, n.end_lineno, n.name)
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ]
+    out = []
+    for node in ast.walk(tree):
+        if match(node):
+            covering = [f for f in funcs if f[0] <= node.lineno <= f[1]]
+            out.append((node.lineno, max(covering)[2] if covering else "<module>"))
+    return out
+
+
+def _sites(match) -> set[tuple[str, str]]:
+    sites = set()
+    for py in sorted(PKG.rglob("*.py")):
+        rel = str(py.relative_to(PKG))
+        for _, func in _spellings(ast.parse(py.read_text()), match):
+            sites.add((rel, func))
+    return sites
+
+
+def test_matchers_pin_what_they_match():
+    def hits(src: str, match) -> int:
+        return len(_spellings(ast.parse(src), match))
+
+    seeded = 'F.conv(F.substring(F.md5(F.concat(F.lit("s:"), c)), 1, 15), 16, 10)'
+    assert hits(seeded, _is_md5_hash)
+    assert hits("conv(substring(md5(c), 1, 15), 16, 10)", _is_md5_hash)
+    # the packed-member extraction reads a projected digest column
+    assert not hits("F.conv(F.substring(digest, 17, 15), 16, 10)", _is_md5_hash)
+    assert hits('F.split(F.trim("text"), r"\\s+")', _is_ws_tokenizer)
+    assert hits('F.explode(F.split(F.trim(F.col("text")), r"\\s+"))', _is_ws_tokenizer)
+    # a newline split of a trimmed file is not the tokenizer
+    newline = 'F.element_at(F.split(F.trim("value"), "\\n"), 2)'
+    assert not hits(newline, _is_ws_tokenizer)
+    assert not hits('F.split("sym", "\\x1f")', _is_ws_tokenizer)
+
+
+def test_seeded_hash_is_spelled_only_in_hashing():
+    sites = _sites(_is_md5_hash)
+    assert sites == _HASH_HOME, (
+        "md5-prefix hash spelled outside functions/hashing.py; call "
+        f"hashing.h60 / h60_seeded instead: {sorted(sites - _HASH_HOME)}"
+    )
+
+
+def test_whitespace_tokenizer_is_spelled_only_in_tokens_col():
+    sites = _sites(_is_ws_tokenizer)
+    assert sites == _TOKENIZER_HOME, (
+        "whitespace tokenizer spelled outside text.tokens_col; call it "
+        f"instead: {sorted(sites - _TOKENIZER_HOME)}"
+    )

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from big_data_2021_spark_streaming_spark.functions.hashing import h60_seeded
 from big_data_2021_spark_streaming_spark.operators import sketches
 from big_data_2021_spark_streaming_spark.sources.batch import load_table
 
@@ -53,7 +54,7 @@ def test_sketch_summaries_are_bounded(spark, sf_dir):
     events = load_table(spark, sf_dir, "events")
     uid = F.col("user_id").cast("string")
     regs = (
-        events.select((sketches._h("hllb", uid) % sketches.HLL_M).alias("b"))
+        events.select((h60_seeded("hllb", uid) % sketches.HLL_M).alias("b"))
         .groupBy("b")
         .count()
     )
@@ -61,7 +62,7 @@ def test_sketch_summaries_are_bounded(spark, sf_dir):
     cells = (
         events.select(
             *[
-                (sketches._h(f"cms{j}", uid) % sketches.CMS_W).alias(f"b{j}")
+                (h60_seeded(f"cms{j}", uid) % sketches.CMS_W).alias(f"b{j}")
                 for j in range(sketches.CMS_D)
             ]
         )

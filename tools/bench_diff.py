@@ -8,7 +8,9 @@ audit (VERDICT r04 item 7).
 Accepted input shapes, auto-detected per file:
 
 * a full ``bench.py`` output line (``{"metric": ..., "queries": {...},
-  "value": ...}``) — the repo records these under ``bench_runs/``;
+  "value": ...}``) — the repo records these under ``bench_runs/``; its
+  ``warm_queries`` block (the shared-frame builds timed before the
+  per-query loop) is gated too, under ``warm:<name>`` keys;
 * a driver ``BENCH_r{N}.json`` (``{"tail": "...", ...}``) — the tail is
   a 2,000-char truncation, so per-query pairs are recovered by regex
   and only the queries visible in BOTH files are compared;
@@ -48,7 +50,10 @@ def load_timings(path: str) -> dict[str, float]:
         line = [ln for ln in text.splitlines() if ln.strip()][-1]
         doc = json.loads(line)
     if isinstance(doc, dict) and isinstance(doc.get("queries"), dict):
-        return {k: float(v) for k, v in doc["queries"].items()}
+        out = {k: float(v) for k, v in doc["queries"].items()}
+        warm = doc.get("warm_queries") or {}
+        out.update({f"warm:{k}": float(v) for k, v in warm.items()})
+        return out
     if isinstance(doc, dict) and isinstance(doc.get("tail"), str):
         pairs = _PAIR.findall(doc["tail"])
         # the first regex hit inside a truncated tail may be a partial
