@@ -1601,18 +1601,10 @@ def sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         codes.join(F.broadcast(qcodes), "gd")
         .where(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
+        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum(dvec * dvec * F.col("rng") * F.col("rng")).alias("sq_dist"))
     )
-    w = Window.partitionBy("query_id").orderBy("sq_dist", "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOPK)
-        .select(
-            "query_id", "rank", F.col("vec_id").alias("neighbor_id"), "sq_dist"
-        )
-        .persist()
-    )
+    return _rank_topk(scored, F.col("sq_dist"), F.col("sq_dist"))
 
 
 def sq_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2050,28 +2042,21 @@ def bq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("crank") <= BQ_CANDIDATES)
     )
     queries = _query_vectors(vecs)
-    rer_w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id")
-    )
-    return (
+    reranked = (
         cands.join(vecs.select("vec_id", "v"), "vec_id")
         .join(F.broadcast(queries), "query_id")
         .select(
             "query_id",
-            "vec_id",
+            F.col("vec_id").alias("neighbor_id"),
             "hamming",
             _cos(F.col("q"), F.col("v")).alias("cos"),
         )
-        .withColumn("rank", F.row_number().over(rer_w))
-        .where(F.col("rank") <= TOPK)
-        .select(
-            "query_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("hamming").cast("int").alias("hamming"),
-            F.round("cos", 6).alias("cos_sim"),
-        )
-        .persist()
+    )
+    return _rank_topk(
+        reranked,
+        F.col("cos").desc(),
+        F.col("hamming").cast("int").alias("hamming"),
+        F.round("cos", 6).alias("cos_sim"),
     )
 
 
@@ -2145,22 +2130,17 @@ def matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     2-decimal division (the ann_recall contract)."""
     vecs = _vectors(spark, sf_dir)
     queries = _query_vectors(vecs)
-
-    def _topk(score_col: F.Column) -> DataFrame:
-        w = Window.partitionBy("query_id").orderBy(
-            score_col.desc(), F.col("vec_id")
-        )
-        return (
-            vecs.crossJoin(F.broadcast(queries))
-            .where(F.col("vec_id") != F.col("query_id"))
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= TOPK)
-            .select("query_id", F.col("vec_id").alias("neighbor_id"))
-        )
-
-    exact = _topk(_cos(F.col("q"), F.col("v")))
-    prefix = _topk(
-        _cos(F.slice(F.col("q"), 1, MRL_DIM), F.slice(F.col("v"), 1, MRL_DIM))
+    pairs = (
+        vecs.crossJoin(F.broadcast(queries))
+        .where(F.col("vec_id") != F.col("query_id"))
+        .withColumnRenamed("vec_id", "neighbor_id")
+    )
+    exact = _rank_topk(pairs, _cos(F.col("q"), F.col("v")).desc())
+    prefix = _rank_topk(
+        pairs,
+        _cos(
+            F.slice(F.col("q"), 1, MRL_DIM), F.slice(F.col("v"), 1, MRL_DIM)
+        ).desc(),
     )
     return (
         exact.alias("e")
@@ -2483,7 +2463,7 @@ def recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ivfpq_res": pairs(ivfpq_residual_topk(spark, sf_dir)),
         "sq": pairs(sq_topk(spark, sf_dir)),
         "bq": pairs(bq_topk(spark, sf_dir)),
-        "mrl": _mrl_prefix_pairs(spark, sf_dir),
+        "mrl": pairs(_mrl_prefix_pairs(spark, sf_dir)),
     }
     frames = []
     for method in _SWEEP_METHODS:
@@ -2526,15 +2506,12 @@ def _mrl_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     score = _cos(
         F.slice(F.col("q"), 1, MRL_DIM), F.slice(F.col("v"), 1, MRL_DIM)
     )
-    w = Window.partitionBy("query_id").orderBy(score.desc(), F.col("vec_id"))
-    return (
+    pairs = (
         vecs.crossJoin(F.broadcast(queries))
         .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOPK)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-        .persist()
+        .withColumnRenamed("vec_id", "neighbor_id")
     )
+    return _rank_topk(pairs, score.desc())
 
 
 def _recall_sweep_sql() -> str:
@@ -2543,11 +2520,7 @@ def _recall_sweep_sql() -> str:
         "ivf": ORACLES["similarity_ivf_topk"],
         "pq": ORACLES["similarity_pq_topk"],
         "ivf_pq": ORACLES["similarity_ivf_pq_topk"],
-        **(
-            {"ivfpq_res": ORACLES["similarity_ivfpq_residual_topk"]}
-            if "similarity_ivfpq_residual_topk" in ORACLES
-            else {}
-        ),
+        "ivfpq_res": ORACLES["similarity_ivfpq_residual_topk"],
         "sq": ORACLES["similarity_sq_topk"],
         "bq": ORACLES["similarity_bq_topk"],
         "mrl": f"""
@@ -2570,15 +2543,8 @@ def _recall_sweep_sql() -> str:
             ) WHERE rank <= {TOPK}
         """,
     }
-    # the residual IVF-PQ oracle is defined LATER in this module; the
-    # first module-load call builds the sweep without it and the
-    # re-assignment after that definition folds it in
-    selects = []
-    for method in _SWEEP_METHODS:
-        if method not in method_sub:
-            continue
-        selects.append(
-            f"""
+    return "\nUNION ALL\n".join(
+        f"""
     SELECT '{method}' AS method,
            CAST(COUNT(*) AS BIGINT) AS n_exact_pairs,
            CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL
@@ -2589,11 +2555,8 @@ def _recall_sweep_sql() -> str:
     FROM ({ORACLES["similarity_topk"]}) e
     LEFT JOIN ({method_sub[method]}) a
         ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id"""
-        )
-    return "\nUNION ALL\n".join(selects)
-
-
-ORACLES["similarity_recall_sweep"] = _recall_sweep_sql()
+        for method in _SWEEP_METHODS
+    )
 
 
 def label_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3198,8 +3161,7 @@ ORACLES["embedding_jl_distortion"] = f"""
 """
 
 
-# rebuild the recall sweep now that the residual IVF-PQ oracle exists —
-# the first build at its definition site ran before this section loaded
+# built here, after the residual IVF-PQ oracle above that it reads
 ORACLES["similarity_recall_sweep"] = _recall_sweep_sql()
 
 

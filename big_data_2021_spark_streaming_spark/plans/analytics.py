@@ -1181,7 +1181,7 @@ def local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(rev_micro).alias("rev_micro"))
         .select(
             "nation_name",
-            (F.expr("(rev_micro + 5000) div 10000") / F.lit(100.0)).alias(
+            (F.expr(half_up("rev_micro", "10000")) / F.lit(100.0)).alias(
                 "revenue"
             ),
         )
@@ -1216,7 +1216,7 @@ def returned_item_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(rev_micro).alias("rev_micro"))
         .select(
             "o_custkey",
-            (F.expr("(rev_micro + 5000) div 10000") / F.lit(100.0)).alias(
+            (F.expr(half_up("rev_micro", "10000")) / F.lit(100.0)).alias(
                 "revenue"
             ),
         )
@@ -2335,11 +2335,13 @@ def event_dispersion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             # (r08 single-row sweep; Spark ANSI crashes on the (n−1)=0
             # division where DuckDB returns NULL)
             F.expr(
-                "CASE WHEN n_days <= 1 THEN 0 ELSE"
-                " (2 * (cast(n_days as decimal(19,0)) * q"
-                "      - cast(s as decimal(19,0)) * s) * 1000000"
-                " + (n_days - 1) * s)"
-                " div (2 * (n_days - 1) * cast(s as decimal(19,0))) END"
+                "CASE WHEN n_days <= 1 THEN 0 ELSE "
+                + half_up(
+                    "(cast(n_days as decimal(19,0)) * q"
+                    " - cast(s as decimal(19,0)) * s) * 1000000",
+                    "(n_days - 1) * cast(s as decimal(19,0))",
+                )
+                + " END"
             )
             / F.lit(1e6)
         ).alias("dispersion"),
@@ -2871,11 +2873,9 @@ def orders_monthly_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
             "growth_micro",
             F.when(F.col("prev_cents").isNull(), F.lit(None).cast("bigint")).otherwise(
                 F.expr(
-                    "CASE WHEN revenue_cents >= prev_cents"
-                    " THEN (2 * (revenue_cents - prev_cents) * 1000000 + prev_cents)"
-                    "      div (2 * prev_cents)"
-                    " ELSE -((2 * (prev_cents - revenue_cents) * 1000000 + prev_cents)"
-                    "        div (2 * prev_cents)) END"
+                    half_up_signed(
+                        "(revenue_cents - prev_cents) * 1000000", "prev_cents"
+                    )
                 )
             ),
         )
@@ -3139,11 +3139,14 @@ def event_value_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
             "share_micro",
             "benford_micro",
             F.expr(
-                "cast((2 * cast(total as decimal(38,0))"
-                " * (share_micro - benford_micro)"
-                " * (share_micro - benford_micro) + benford_micro)"
-                " div (2 * cast(benford_micro as decimal(38,0)))"
-                " as bigint)"
+                "cast("
+                + half_up(
+                    "cast(total as decimal(38,0))"
+                    " * (share_micro - benford_micro)"
+                    " * (share_micro - benford_micro)",
+                    "cast(benford_micro as decimal(38,0))",
+                )
+                + " as bigint)"
             ).alias("chi2_micro"),
         )
         .orderBy("digit")
@@ -3266,12 +3269,14 @@ def orders_priority_mix_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "share_micro",
             "global_share_micro",
             F.expr(
-                "cast((2 * cast(year_total as decimal(38,0))"
-                " * (share_micro - global_share_micro)"
-                " * (share_micro - global_share_micro)"
-                " + global_share_micro)"
-                " div (2 * cast(global_share_micro as decimal(38,0)))"
-                " as bigint)"
+                "cast("
+                + half_up(
+                    "cast(year_total as decimal(38,0))"
+                    " * (share_micro - global_share_micro)"
+                    " * (share_micro - global_share_micro)",
+                    "cast(global_share_micro as decimal(38,0))",
+                )
+                + " as bigint)"
             ).alias("drift_chi2_micro"),
         )
         .orderBy("year", "priority")
@@ -3378,7 +3383,7 @@ def valuable_part_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("v") > F.col("threshold"))
         .select(
             "partkey",
-            (F.expr("(v + 5000) div 10000") / F.lit(100.0)).alias("stock_value"),
+            (F.expr(half_up("v", "10000")) / F.lit(100.0)).alias("stock_value"),
         )
     )
 
@@ -3631,15 +3636,14 @@ def user_value_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 2e6 x corpus-total cents passes int64 around 5e12 cents
         # (~$50B corpus), where BIGINT would wrap silently
         F.expr(
-            "(2 * 1000000 * cast(sum(band_cents) over ("
-            "order by band desc rows between unbounded preceding"
-            " and current row) as decimal(38,0))"
-            " + sum(band_cents) over ("
-            "order by band desc rows between unbounded preceding"
-            " and unbounded following))"
-            " div (2 * cast(sum(band_cents) over ("
-            "order by band desc rows between unbounded preceding"
-            " and unbounded following) as decimal(38,0)))"
+            half_up(
+                "1000000 * cast(sum(band_cents) over ("
+                "order by band desc rows between unbounded preceding"
+                " and current row) as decimal(38,0))",
+                "cast(sum(band_cents) over ("
+                "order by band desc rows between unbounded preceding"
+                " and unbounded following) as decimal(38,0))",
+            )
         ).alias("cum_share_micro"),
     )
 
@@ -4694,11 +4698,9 @@ def event_trend_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
             "da",
             "db",
             F.expr(
-                "case when dc >= 0"
-                " then cast((2 * cast(dc as decimal(19,0)) * 1000000 + dd)"
-                "      div (2 * dd) as bigint)"
-                " else -cast((2 * cast(-dc as decimal(19,0)) * 1000000 + dd)"
-                "      div (2 * dd) as bigint) end"
+                "cast("
+                + half_up_signed("cast(dc as decimal(19,0)) * 1000000", "dd")
+                + " as bigint)"
             ).alias("slope_micro"),
         )
     )

@@ -39,28 +39,6 @@ def _spells_half_up(s: str) -> bool:
     )
 
 
-# Hand spellings still awaiting the helper, by (module, function). Each
-# one moves a driver-verified plan when re-spelled: the first four add
-# X but divide by cast(X as decimal(38,0)), which the helper spells
-# alike, the next two are sign CASEs unlike the helper's, and the last
-# three spell (x + 5000) div 10000 where the helper emits
-# (2 * x + 10000) div 20000, a different expression tree. A moved
-# verified plan goes to the pending fingerprints, which must stay within
-# the driver's 50-name regrade budget
-# (test_plans.py::test_registry_orders_unverified_queries_first); these
-# move to the helper once a fold makes room.
-_AWAITING_REGRADE_ROOM = {
-    ("plans/analytics.py", "event_dispersion_index"),
-    ("plans/analytics.py", "event_value_benford"),
-    ("plans/analytics.py", "orders_priority_mix_shift"),
-    ("plans/analytics.py", "user_value_concentration"),
-    ("plans/analytics.py", "orders_monthly_growth"),
-    ("plans/analytics.py", "event_trend_theilsen"),
-    ("plans/analytics.py", "local_supplier_volume"),
-    ("plans/analytics.py", "returned_item_report"),
-    ("plans/analytics.py", "valuable_part_stock"),
-}
-
 
 def _code_strings(tree: ast.AST):
     """Every string constant in the module except docstrings (prose),
@@ -117,24 +95,17 @@ def test_lint_pattern_matches_hand_spelled_half_up():
 
 
 def test_half_up_division_is_spelled_only_in_exact():
-    hits, awaiting = [], set()
-    for py in sorted(PKG.rglob("*.py")):
-        if py == EXACT:
-            continue
-        rel = str(py.relative_to(PKG))
-        for lineno, func, s in _code_strings(ast.parse(py.read_text())):
-            if not _spells_half_up(s):
-                continue
-            if (rel, func) in _AWAITING_REGRADE_ROOM:
-                awaiting.add((rel, func))
-            else:
-                hits.append(f"{rel}:{lineno} ({func}): {s.strip()[:80]}")
+    hits = [
+        f"{py.relative_to(PKG)}:{lineno} ({func}): {s.strip()[:80]}"
+        for py in sorted(PKG.rglob("*.py"))
+        if py != EXACT
+        for lineno, func, s in _code_strings(ast.parse(py.read_text()))
+        if _spells_half_up(s)
+    ]
     assert not hits, (
         "half-up division spelled outside functions/exact.py; call "
         "exact.half_up / half_up_signed instead:\n" + "\n".join(hits)
     )
-    # an entry whose site now calls the helper leaves the list
-    assert awaiting == _AWAITING_REGRADE_ROOM, _AWAITING_REGRADE_ROOM - awaiting
 
 
 def test_helpers_splice_operands_verbatim():
@@ -177,6 +148,9 @@ def test_helper_values_match_fraction(spark):
         (big, 14_000_000),
         (-big, 14_000_000),
         (big - 1, 14_000_000),
+        (5_000, 10_000),  # ties of the retired (x + 5000) div 10000
+        (-5_000, 10_000),
+        (-15_000, 10_000),
     ]
     df = spark.createDataFrame(
         [(i, Decimal(a), b) for i, (a, b) in enumerate(cases)],
@@ -186,8 +160,17 @@ def test_helper_values_match_fraction(spark):
         "i",
         f"{half_up('a', 'b')} as up",
         f"{half_up_signed('a', 'b')} as away",
+        # the two retired hand spellings, for either sign: a halved
+        # literal addend, and add b but divide by its decimal cast
+        f"{half_up('a', '10000')} as up_lit",
+        "(a + 5000) div 10000 as hand_lit",
+        f"{half_up('a', 'cast(b as decimal(38,0))')} as up_cast",
+        "(2 * a + b) div (2 * cast(b as decimal(38,0))) as hand_cast",
     ).orderBy("i").collect()
     for (a, b), r in zip(cases, rows):
         assert r.away == _half_away(a, b), (a, b)
+        assert r.up_lit == r.hand_lit, (a, b)
+        assert r.up_cast == r.hand_cast == r.up, (a, b)
         if a >= 0:
             assert r.up == _half_up(a, b), (a, b)
+            assert r.up_lit == _half_up(a, 10_000), (a, b)

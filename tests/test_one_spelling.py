@@ -1,8 +1,10 @@
 """Steps with one definition stay spelled once, with no table data: an
-AST scan of the package for hand copies of the seeded 60-bit hash and
-of the whitespace tokenizer. A copy that drifts from its definition
-breaks oracle parity (the hash) or the shared token contract (the
-tokenizer) in one operator only."""
+AST scan of the package for hand copies of the seeded 60-bit hash, of
+the whitespace tokenizer and of the ANN top-k tail. A copy that drifts
+from its definition breaks oracle parity (the hash), the shared token
+contract (the tokenizer) or the neighbor_id tie-break and persisted
+result set that the recall reports share (the top-k) in one operator
+only."""
 
 from __future__ import annotations
 
@@ -14,6 +16,7 @@ PKG = Path(__file__).resolve().parents[1] / "big_data_2021_spark_streaming_spark
 # (module, function) that may spell each step: its one definition
 _HASH_HOME = {("functions/hashing.py", "h60")}
 _TOKENIZER_HOME = {("operators/text.py", "tokens_col")}
+_TOPK_HOME = {("operators/similarity.py", "_rank_topk")}
 
 
 def _name(call: ast.AST) -> str | None:
@@ -45,6 +48,20 @@ def _is_ws_tokenizer(node: ast.AST) -> bool:
         and _name(node.args[0]) == "trim"
         and isinstance(node.args[1], ast.Constant)
         and node.args[1].value == r"\s+"
+    )
+
+
+def _is_topk_cut(node: ast.AST) -> bool:
+    """F.col("rank") <= TOPK: the per-query top-k cut."""
+    return (
+        isinstance(node, ast.Compare)
+        and _name(node.left) == "col"
+        and isinstance(arg := _first_arg(node.left), ast.Constant)
+        and arg.value == "rank"
+        and len(node.ops) == 1
+        and isinstance(node.ops[0], ast.LtE)
+        and isinstance(node.comparators[0], ast.Name)
+        and node.comparators[0].id == "TOPK"
     )
 
 
@@ -86,6 +103,12 @@ def test_matchers_pin_what_they_match():
     newline = 'F.element_at(F.split(F.trim("value"), "\\n"), 2)'
     assert not hits(newline, _is_ws_tokenizer)
     assert not hits('F.split("sym", "\\x1f")', _is_ws_tokenizer)
+    assert hits('df.where(F.col("rank") <= TOPK)', _is_topk_cut)
+    # other cuts with their own sizes: the diverse fused list, the
+    # outlier report and bq_topk's Hamming short-list
+    assert not hits('F.col("rank") <= DIVERSE_TOPK', _is_topk_cut)
+    assert not hits('F.col("rank") <= OUTLIER_TOP', _is_topk_cut)
+    assert not hits('F.col("crank") <= BQ_CANDIDATES', _is_topk_cut)
 
 
 def test_seeded_hash_is_spelled_only_in_hashing():
@@ -101,4 +124,12 @@ def test_whitespace_tokenizer_is_spelled_only_in_tokens_col():
     assert sites == _TOKENIZER_HOME, (
         "whitespace tokenizer spelled outside text.tokens_col; call it "
         f"instead: {sorted(sites - _TOKENIZER_HOME)}"
+    )
+
+
+def test_topk_cut_is_spelled_only_in_rank_topk():
+    sites = _sites(_is_topk_cut)
+    assert sites == _TOPK_HOME, (
+        "per-query top-k cut spelled outside similarity._rank_topk; call "
+        f"it instead: {sorted(sites - _TOPK_HOME)}"
     )

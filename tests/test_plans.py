@@ -730,9 +730,11 @@ def test_registry_orders_unverified_queries_first():
     # unverified entries. Round-9 start state: CORRECTNESS_r08's whole
     # 33-name graded front (including the r07 harness-error debt,
     # dedup_keep_manifest) folded green after the pending-fingerprint
-    # continuity check, so every registry query is verified on its
-    # current plan; the unverified block refills with round-9
-    # optimization re-plans as each lands.
+    # continuity check. The round-9 greens folded later by plan
+    # identity instead (plans/r16/): 27 of the 30 still pending planned
+    # identically in the graded tree and at the fold; the three that
+    # had re-planned since stay pending. The unverified block holds
+    # re-plans made after a green until the next fold.
     from big_data_2021_spark_streaming_spark.plans.registry import (
         _DRIVER_VERIFIED,
         _REPLANNED_AFTER_GREEN,
@@ -888,6 +890,26 @@ def test_fingerprint_broadcast_exemption_mechanics():
     ) != builder_fingerprint(
         "x", types.SimpleNamespace(build=builder_fingerprint, oracle="B")
     )
+
+
+def test_fingerprint_names_a_file_edited_after_import(tmp_path):
+    # inspect slices the file on disk by import-time line numbers, so an
+    # edit while the suite runs must fail naming the file, not as a bare
+    # IndentationError
+    import importlib.util
+    import types
+
+    from tools.plan_fingerprint import builder_fingerprint
+
+    mod_path = tmp_path / "fp_edited_fixture.py"
+    mod_path.write_text("def b(spark, sf):\n    return spark\n")
+    spec = importlib.util.spec_from_file_location("fp_edited_fixture", mod_path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    mod_path.write_text("def b(spark, sf):\n    if sf:\n")
+    with pytest.raises(RuntimeError, match="changed after import") as err:
+        builder_fingerprint("b", types.SimpleNamespace(build=mod.b, oracle=None))
+    assert str(mod_path) in str(err.value)
 
 
 def test_double_display_inventory_matches_schemas(spark):

@@ -144,18 +144,28 @@ def _strip_docstrings(node: ast.AST) -> None:
             child.body = child.body[1:] or [ast.Pass()]
 
 
+def _source_tree(fn: types.FunctionType) -> ast.Module:
+    """The parsed source of ``fn``. ``inspect`` slices the file on disk
+    by the line numbers recorded at import, so a file edited since then
+    can yield a slice that does not parse."""
+    try:
+        return ast.parse(textwrap.dedent(inspect.getsource(fn)))
+    except SyntaxError as e:
+        raise RuntimeError(
+            f"{inspect.getsourcefile(fn)}: the source of {fn.__qualname__} "
+            "no longer parses; the file changed after import, so rerun"
+        ) from e
+
+
 def _normalized_source(fn: types.FunctionType) -> str:
-    src = textwrap.dedent(inspect.getsource(fn))
-    tree = ast.parse(src)
-    tree = _StripBroadcast().visit(tree)
+    tree = _StripBroadcast().visit(_source_tree(fn))
     _strip_docstrings(tree)
     return ast.dump(tree)
 
 
 def _referenced_names(fn: types.FunctionType) -> list[str]:
-    tree = ast.parse(textwrap.dedent(inspect.getsource(fn)))
     return sorted(
-        {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        {n.id for n in ast.walk(_source_tree(fn)) if isinstance(n, ast.Name)}
     )
 
 
@@ -167,9 +177,8 @@ def _local_imports(fn: types.FunctionType) -> list[object]:
     precisely the shared-helper edge the staleness rule exists for."""
     import importlib
 
-    tree = ast.parse(textwrap.dedent(inspect.getsource(fn)))
     out = []
-    for node in ast.walk(tree):
+    for node in ast.walk(_source_tree(fn)):
         if not isinstance(node, ast.ImportFrom):
             continue
         if node.level:  # relative: resolve against the builder's module
