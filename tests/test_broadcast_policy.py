@@ -124,7 +124,6 @@ _ALLOWED_PINS = frozenset(
         ("operators/similarity.py", "_mrl_prefix_pairs", "queries"),
         ("operators/similarity.py", "_pq_codes_long", "cents"),
         ("operators/similarity.py", "_pq_query_table", "cents"),
-        ("operators/similarity.py", "_topk", "queries"),
         ("operators/similarity.py", "ann_recall_report", "approx"),
         ("operators/similarity.py", "bq_topk", "qcodes"),
         ("operators/similarity.py", "bq_topk", "queries"),
@@ -145,6 +144,7 @@ _ALLOWED_PINS = frozenset(
         ("operators/similarity.py", "label_centroid_distances", "cents"),
         ("operators/similarity.py", "label_consensus", "tot"),
         ("operators/similarity.py", "lsh_topk", "queries"),
+        ("operators/similarity.py", "matryoshka_recall", "queries"),
         ("operators/similarity.py", "mrr_eval", "hits"),
         ("operators/similarity.py", "ndcg_eval", "exact"),
         ("operators/similarity.py", "nearest_cells", "cents"),

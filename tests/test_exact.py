@@ -148,7 +148,7 @@ def test_helper_values_match_fraction(spark):
         (big, 14_000_000),
         (-big, 14_000_000),
         (big - 1, 14_000_000),
-        (5_000, 10_000),  # ties of the retired (x + 5000) div 10000
+        (5_000, 10_000),  # ties of (x + 5000) div 10000
         (-5_000, 10_000),
         (-15_000, 10_000),
     ]
@@ -160,8 +160,9 @@ def test_helper_values_match_fraction(spark):
         "i",
         f"{half_up('a', 'b')} as up",
         f"{half_up_signed('a', 'b')} as away",
-        # the two retired hand spellings, for either sign: a halved
-        # literal addend, and add b but divide by its decimal cast
+        # the hand spellings the lint rejects equal the helper for
+        # either sign: a halved literal addend, and adding b but
+        # dividing by its decimal cast
         f"{half_up('a', '10000')} as up_lit",
         "(a + 5000) div 10000 as hand_lit",
         f"{half_up('a', 'cast(b as decimal(38,0))')} as up_cast",
