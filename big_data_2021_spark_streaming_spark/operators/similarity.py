@@ -1,28 +1,38 @@
-"""Similarity search over embedding columns.
+"""Similarity search over ``embeddings.embedding`` (ARRAY<FLOAT>, 64-dim).
 
-Two strategies over ``embeddings.embedding`` (ARRAY<FLOAT>, 64-dim):
+Every approximate top-k here is one filter-and-refine skeleton: a
+cheap filter bounds WHICH vectors are scored, a score ranks them, and
+the acceptance reports compare the result with the exact list.
 
-- ``similarity_topk``: brute-force cosine top-k for a query subset.
-  The query side is tiny (broadcast), so the plan is a single pass
-  over the big side — the right baseline at any scale, and the recall
-  oracle for approximate variants.
-- ``similarity_lsh_signature`` / ``similarity_lsh_topk``: random-
-  hyperplane LSH (sign of v·r_j). Hyperplane components are derived
-  from the cross-engine h60 hash, quantized to 3 decimals, and inlined
-  as literals in BOTH the Spark plan and the DuckDB oracle — identical
-  doubles, identical bits, identical buckets. The bucketed top-k
-  searches only the query's bucket: the 100 TB path (bucket join
-  instead of cross join).
+1. Filter: the IVF probe (``_ivf_probe``: corpus assigned to its
+   nearest seed cell, each query probing its NPROBE nearest cells),
+   the hyperplane-LSH bucket (``_signature``), or the BQ Hamming
+   short-list. ``similarity_topk`` has no filter; it is the brute-force
+   baseline and the recall oracle.
+2. Score: exact cosine (``_cos``, via ``_cosine_topk``) or ADC over
+   product-quantization codes. The one codebook distance is
+   ``_book_dists``; ``_pq_encode`` takes its argmin code and
+   ``_adc_table`` turns it into a query's lookup table, for plain and
+   residual PQ alike.
+3. Rank: ``_rank_topk``, each query's TOPK best with neighbor_id
+   breaking ties.
+4. Recall: ``_recall``, the exact list left-joined to the approximate
+   one.
 
-All dot products run JVM-side via zip_with/aggregate with strictly
-sequential summation — bit-identical to DuckDB's sequential
-list_dot_product/list_cosine_similarity on DOUBLE[].
+Cosines run JVM-side via zip_with/aggregate with strictly sequential
+summation — bit-identical to DuckDB's sequential
+list_dot_product/list_cosine_similarity on DOUBLE[]. LSH hyperplanes
+and PQ codebooks are h60-derived 3-decimal literals inlined alike in
+the Spark plan and the DuckDB oracle, and codebook and quantizer math
+is exact integer milli-units (``_milli_comp``), so both engines agree
+bit for bit.
 """
 
 from __future__ import annotations
 
 import hashlib
 import math
+from functools import reduce
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -198,29 +208,36 @@ def _ivf_cells(vecs: DataFrame) -> DataFrame:
     ).select(F.col("vec_id").alias("cell_id"), F.col("v").alias("c"))
 
 
-def _nearest_cells_fn(cents: DataFrame):
-    """(side, id_col, v_col, n) -> n nearest cells per row: one scan of
-    the side against the broadcast centroid list + a per-row top-n
-    window. NLIST stays broadcast-sized at thousands of cells."""
-
-    def nearest_cells(side: DataFrame, id_col: str, v_col: str, n: int) -> DataFrame:
-        w = Window.partitionBy(id_col).orderBy(
-            F.col("cell_cos").desc(), F.col("cell_id")
+def _nearest_cells(
+    side: DataFrame, cents: DataFrame, id_col: str, v_col: str, n: int
+) -> DataFrame:
+    """The n nearest cells per row of ``side``: one scan of the side
+    against the broadcast centroid list + a per-row top-n window.
+    NLIST stays broadcast-sized at thousands of cells."""
+    w = Window.partitionBy(id_col).orderBy(F.col("cell_cos").desc(), F.col("cell_id"))
+    return (
+        side.crossJoin(F.broadcast(cents))
+        .select(
+            id_col,
+            v_col,
+            "cell_id",
+            _cos(F.col(v_col), F.col("c")).alias("cell_cos"),
         )
-        return (
-            side.crossJoin(F.broadcast(cents))
-            .select(
-                id_col,
-                v_col,
-                "cell_id",
-                _cos(F.col(v_col), F.col("c")).alias("cell_cos"),
-            )
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= n)
-            .select(id_col, v_col, "cell_id")
-        )
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= n)
+        .select(id_col, v_col, "cell_id")
+    )
 
-    return nearest_cells
+
+def _ivf_probe(vecs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(cents, assigned, probes): the IVF filter step. ``assigned`` is
+    (vec_id, v, cell_id), each corpus vector in its nearest cell;
+    ``probes`` is (query_id, q, cell_id), each query's NPROBE nearest
+    cells. Built in that order (one ``_cos`` each)."""
+    cents = _ivf_cells(vecs)
+    assigned = _nearest_cells(vecs, cents, "vec_id", "v", 1)
+    probes = _nearest_cells(_query_vectors(vecs), cents, "query_id", "q", NPROBE)
+    return cents, assigned, probes
 
 
 def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -238,12 +255,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the probe is an equi-join on cell_id — candidate work is bounded by
     cell occupancy, never the corpus.
     """
-    vecs = _vectors(spark, sf_dir)
-    cents = _ivf_cells(vecs)
-    nearest_cells = _nearest_cells_fn(cents)
-    assigned = nearest_cells(vecs, "vec_id", "v", 1)
-    queries = _query_vectors(vecs)
-    probes = nearest_cells(queries, "query_id", "q", NPROBE)
+    _, assigned, probes = _ivf_probe(_vectors(spark, sf_dir))
     # N_QUERIES × NPROBE probe rows broadcast onto the corpus-sized
     # assignment frame — never a two-sided shuffle on cell_id
     return _cosine_topk(assigned.join(F.broadcast(probes), "cell_id"))
@@ -257,7 +269,7 @@ def ivf_cell_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment pass (one broadcast-centroid scan + a |cells|-key
     aggregate); the share is an exact micro-unit rational."""
     vecs = _vectors(spark, sf_dir)
-    assigned = _nearest_cells_fn(_ivf_cells(vecs))(vecs, "vec_id", "v", 1)
+    assigned = _nearest_cells(vecs, _ivf_cells(vecs), "vec_id", "v", 1)
     counts = assigned.groupBy("cell_id").agg(
         F.count(F.lit(1)).alias("n_vecs")
     )
@@ -318,35 +330,65 @@ def _milli(x) -> F.Column:
     return F.round(x * 1000).cast("bigint")
 
 
-def _pq_codes_long(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, m, code): nearest codebook entry per subspace, fully
-    relational — posexplode components, broadcast-join the 1 024-row
-    codebook, one exact-integer aggregate, one argmin window. Every
-    stage is a codegen-friendly hash join/agg; distances are exact
-    BIGINTs so the aggregation is order-free."""
-    vecs = _vectors(spark, sf_dir)
-    comp = vecs.select(
-        "vec_id", F.posexplode("v").alias("gd", "x")
-    ).select("vec_id", "gd", _milli(F.col("x")).alias("xq"))
-    cents = _pq_book(spark)
+def _milli_comp(side: DataFrame, id_col: str, v_col: str) -> DataFrame:
+    """(id_col, gd, xq): one row per vector component, in exact integer
+    milli-units — the relational layout every codebook and quantizer
+    step reads."""
+    return side.select(id_col, F.posexplode(v_col).alias("gd", "x")).select(
+        id_col, "gd", _milli(F.col("x")).alias("xq")
+    )
+
+
+def _book_dists(comp: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, m, k, dist): exact squared distance from each (keys)
+    subvector of a (*keys, gd, xq) component frame to every codebook
+    entry — broadcast-join the 1 024-row codebook, one exact-integer
+    aggregate. Distances are BIGINTs, so the aggregation is order-free."""
     diff = F.col("xq") - F.col("cq")
-    dists = (
-        comp.join(F.broadcast(cents), "gd")
-        .groupBy("vec_id", "m", "k")
+    return (
+        comp.join(F.broadcast(_pq_book(comp.sparkSession)), "gd")
+        .groupBy(*keys, "m", "k")
         .agg(F.sum(diff * diff).alias("dist"))
     )
+
+
+def _pq_encode(comp: DataFrame) -> DataFrame:
+    """(vec_id, m, code, dist): the nearest codebook entry per subspace
+    of each vector of a (vec_id, gd, xq) component frame — one argmin
+    window over ``_book_dists``. dist is the chosen code's squared
+    error."""
     w = Window.partitionBy("vec_id", "m").orderBy("dist", "k")
     return (
-        dists.withColumn("rn", F.row_number().over(w))
+        _book_dists(comp, "vec_id")
+        .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
-        # dist rides along: it is the per-subspace reconstruction error
-        # of the chosen code (consumed by pq_reconstruction_error)
         .select("vec_id", "m", (F.col("k") + 1).alias("code"), "dist")
-        # the compressed index: PQ_M ints per vector — persisting it is
-        # the point of PQ (the code table is what lives in memory at
-        # query time); pq_codes and pq_topk share one materialization
-        .persist()
     )
+
+
+def _adc_table(comp: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, m, code, qdist): the ADC lookup table of each (keys)
+    query subvector — its exact distance to every codebook entry,
+    N_QUERIES × PQ_M × PQ_K rows per key, always broadcast-sized."""
+    return _book_dists(comp, *keys).select(
+        *keys, "m", (F.col("k") + 1).alias("code"), F.col("dist").alias("qdist")
+    )
+
+
+def _pq_codes_long(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, m, code, dist): the PQ code table, fully relational —
+    every stage is a codegen-friendly hash join/agg or window. dist
+    rides along for pq_reconstruction_error. Persisted: the code table
+    is what lives in memory at query time, and pq_codes, pq_topk and
+    ivf_pq_topk share one materialization."""
+    return _pq_encode(_milli_comp(_vectors(spark, sf_dir), "vec_id", "v")).persist()
+
+
+def _pq_query_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The plain-PQ ADC table (query_id, m, code, qdist), shared by
+    pq_topk and ivf_pq_topk."""
+    queries = _query_vectors(_vectors(spark, sf_dir))
+    return _adc_table(_milli_comp(queries, "query_id", "q"), "query_id")
 
 
 def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -362,30 +404,6 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias(f"code_{m}")
             for m in range(PQ_M)
         ]
-    )
-
-
-def _pq_query_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-query ADC lookup table (query_id, m, code, qdist): exact
-    integer squared distance from each query subvector to every codebook
-    entry — N_QUERIES × PQ_M × PQ_K rows, always broadcast-sized.
-    Shared by pq_topk and ivf_pq_topk."""
-    vecs = _vectors(spark, sf_dir)
-    qcomp = (
-        vecs.where(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.posexplode("v").alias("gd", "x"),
-        )
-        .select("query_id", "gd", _milli(F.col("x")).alias("xq"))
-    )
-    cents = _pq_book(spark)
-    diff = F.col("xq") - F.col("cq")
-    return (
-        qcomp.join(F.broadcast(cents), "gd")
-        .groupBy("query_id", "m", F.col("k").alias("code"))
-        .agg(F.sum(diff * diff).alias("qdist"))
-        .withColumn("code", F.col("code") + 1)
     )
 
 
@@ -426,17 +444,13 @@ def ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the broadcast query table are both shared with the standalone PQ
     entries via CacheManager plan matching."""
     vecs = _vectors(spark, sf_dir)
-    nearest_cells = _nearest_cells_fn(_ivf_cells(vecs))
-    assigned = nearest_cells(vecs, "vec_id", "v", 1).select("vec_id", "cell_id")
-    queries = _query_vectors(vecs)
-    probes = nearest_cells(queries, "query_id", "q", NPROBE).select(
-        "query_id", "cell_id"
-    )
+    _, assigned, probes = _ivf_probe(vecs)
     candidates = (
         # probes = N_QUERIES × NPROBE rows — broadcast onto the
         # corpus-sized assignment frame (post-window stats are unknown,
         # so Catalyst would otherwise shuffle BOTH sides on cell_id)
-        assigned.join(F.broadcast(probes), "cell_id")
+        assigned.select("vec_id", "cell_id")
+        .join(F.broadcast(probes.select("query_id", "cell_id")), "cell_id")
         .where(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id")
     )
@@ -475,6 +489,36 @@ def pq_reconstruction_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _recall(exact: DataFrame, approx: DataFrame, *by: str) -> DataFrame:
+    """(*by, n_exact, n_hits): the exact (query_id, neighbor_id) list
+    left-joined to the approximate one, counting exact pairs and the
+    ones the approximate list also returned. A caller that wants the
+    join pinned passes ``approx`` already hinted."""
+    hits = approx.select("query_id", "neighbor_id", F.lit(1).alias("hit"))
+    return (
+        exact.select("query_id", "neighbor_id")
+        .join(hits, ["query_id", "neighbor_id"], "left")
+        .groupBy(*by)
+        .agg(
+            F.count(F.lit(1)).alias("n_exact"),
+            F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("bigint").alias("n_hits"),
+        )
+    )
+
+
+def _recall_at_k(exact: DataFrame, approx: DataFrame) -> DataFrame:
+    """(query_id, n_exact, n_hits, recall): per-query recall@k, half-up
+    to 2 decimals."""
+    return _recall(exact, approx, "query_id").select(
+        "query_id",
+        "n_exact",
+        "n_hits",
+        # k/K recall ratios land on .xx5 boundaries constantly (e.g.
+        # 19/40), where cross-engine double ROUND diverges
+        (F.expr(half_up("n_hits * 100", "n_exact")) / F.lit(100.0)).alias("recall"),
+    )
+
+
 def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of the PQ index against the exact brute-force oracle —
     THE acceptance metric for any ANN index: how many of the true top-5
@@ -483,33 +527,11 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     list on (query, neighbor)) and reduces to one row per query. The
     exact side is the expensive one; at 100 TB this report runs on a
     sampled query set, which is exactly the N_QUERIES shape."""
-    exact = topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
-    approx = pq_topk(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    return (
-        # both sides are k·N_QUERIES rows, but post-aggregation stats
-        # are unknown at plan time — hint the (inner) approx side so
-        # the recall join never degenerates to a sort-merge exchange
-        exact.join(F.broadcast(approx), ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-            .cast("bigint")
-            .alias("n_hits"),
-        )
-        .select(
-            "query_id",
-            "n_exact",
-            "n_hits",
-            # k/K recall ratios land on .xx5 boundaries constantly (e.g.
-            # 19/40), where cross-engine double ROUND diverges
-            (F.expr(half_up("n_hits * 100", "n_exact")) / F.lit(100.0)).alias(
-                "recall"
-            ),
-        )
-    )
+    # both sides are k·N_QUERIES rows, but post-aggregation stats are
+    # unknown at plan time — hint the (inner) approx side so the recall
+    # join never degenerates to a sort-merge exchange
+    approx = pq_topk(spark, sf_dir)
+    return _recall_at_k(topk_bruteforce(spark, sf_dir), F.broadcast(approx))
 
 
 RANGE_TAU = 0.30  # cosine radius for range search
@@ -562,7 +584,7 @@ def diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     first, global top-k second. Both windows key on query_id, so one
     shuffle serves both under AQE."""
     vecs = _vectors(spark, sf_dir)
-    assigned = _nearest_cells_fn(_ivf_cells(vecs))(vecs, "vec_id", "v", 1)
+    assigned = _nearest_cells(vecs, _ivf_cells(vecs), "vec_id", "v", 1)
     queries = _query_vectors(vecs)
     scored = (
         assigned.crossJoin(F.broadcast(queries))
@@ -1111,6 +1133,80 @@ def signature_sql(col_expr: str = "CAST(embedding AS DOUBLE[])") -> str:
 
 _SIG_SQL = signature_sql()
 
+# CTE text the oracles below share verbatim. Each is pasted in where the
+# oracle needs it, so two oracles cannot drift apart on one step.
+
+# exact milli-unit components, one row per (vec_id, gd)
+_COMP_CTE = """comp0 AS (
+        SELECT vec_id,
+               unnest(range(0, len(embedding))) AS gd,
+               unnest(CAST(embedding AS DOUBLE[])) AS x
+        FROM embeddings
+    ),
+    comp AS (
+        SELECT vec_id, CAST(gd AS INTEGER) AS gd,
+               CAST(ROUND(x * 1000) AS BIGINT) AS xq
+        FROM comp0
+    )"""
+# the same CTE one nesting level deeper
+_COMP_CTE_NESTED = _COMP_CTE.replace("\n", "\n    ")
+
+# IVF filter: seed cells, each corpus vector's nearest cell, and each
+# query's NPROBE nearest cells
+_IVF_ASSIGN_CTE = f"""v AS (
+        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+    ),
+    cells AS (
+        SELECT vec_id AS cell_id, v AS c FROM v
+        WHERE vec_id >= {N_QUERIES} AND vec_id < {N_QUERIES + NLIST}
+    ),
+    assigned AS (
+        SELECT vec_id, cell_id FROM (
+            SELECT v.vec_id, c.cell_id,
+                   row_number() OVER (
+                       PARTITION BY v.vec_id
+                       ORDER BY list_cosine_similarity(v.v, c.c) DESC,
+                                c.cell_id) AS rn
+            FROM v CROSS JOIN cells c
+        ) WHERE rn = 1
+    )"""
+_IVF_PROBES_CTE = f"""probes AS (
+        SELECT query_id, cell_id FROM (
+            SELECT v.vec_id AS query_id, c.cell_id,
+                   row_number() OVER (
+                       PARTITION BY v.vec_id
+                       ORDER BY list_cosine_similarity(v.v, c.c) DESC,
+                                c.cell_id) AS rn
+            FROM v CROSS JOIN cells c WHERE v.vec_id < {N_QUERIES}
+        ) WHERE rn <= {NPROBE}
+    )"""
+
+# ADC rank tail over scored(query_id, neighbor_id, adc)
+_ADC_RANK_SQL = f"""ranked AS (
+        SELECT query_id, neighbor_id, adc,
+               row_number() OVER (
+                   PARTITION BY query_id ORDER BY adc, neighbor_id) AS rank
+        FROM scored
+    )
+    SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id,
+           ROUND(adc / 1000000.0, 6) AS approx_dist
+    FROM ranked WHERE rank <= {TOPK}
+"""
+
+# per-query recall@k of CTE ``approx`` against CTE ``exact``
+_RECALL_AT_K_SQL = """    SELECT e.query_id,
+           COUNT(*) AS n_exact,
+           CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
+           ((2 * CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL
+                               THEN 1 ELSE 0 END) AS BIGINT) * 100
+             + COUNT(*)) // (2 * COUNT(*))) / 100.0 AS recall
+    FROM exact e
+    LEFT JOIN approx a
+        ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
+    GROUP BY e.query_id
+"""
+
 ORACLES: dict[str, str] = {
     "similarity_topk": f"""
         WITH q AS (
@@ -1229,23 +1325,7 @@ ORACLES["similarity_ivf_topk"] = f"""
 """
 
 ORACLES["similarity_ivf_occupancy"] = f"""
-    WITH v AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    cells AS (
-        SELECT vec_id AS cell_id, v AS c FROM v
-        WHERE vec_id >= {N_QUERIES} AND vec_id < {N_QUERIES + NLIST}
-    ),
-    assigned AS (
-        SELECT vec_id, cell_id FROM (
-            SELECT v.vec_id, c.cell_id,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY list_cosine_similarity(v.v, c.c) DESC,
-                                c.cell_id) AS rn
-            FROM v CROSS JOIN cells c
-        ) WHERE rn = 1
-    ),
+    WITH {_IVF_ASSIGN_CTE},
     counts AS (
         SELECT cell_id, COUNT(*) AS n_vecs FROM assigned GROUP BY cell_id
     )
@@ -1335,17 +1415,7 @@ def _pq_cents_values_sql() -> str:
 # engines agree bit-for-bit with no float-order pinning
 def _pq_codes_cte() -> str:
     return f"""
-        comp0 AS (
-            SELECT vec_id,
-                   unnest(range(0, len(embedding))) AS gd,
-                   unnest(CAST(embedding AS DOUBLE[])) AS x
-            FROM embeddings
-        ),
-        comp AS (
-            SELECT vec_id, CAST(gd AS INTEGER) AS gd,
-                   CAST(ROUND(x * 1000) AS BIGINT) AS xq
-            FROM comp0
-        ),
+        {_COMP_CTE_NESTED},
         cents(gd, m, k, cq) AS (VALUES {_pq_cents_values_sql()}),
         dists AS (
             SELECT vec_id, m, k,
@@ -1429,33 +1499,8 @@ ORACLES["similarity_pq_topk"] = _pq_topk_sql()
 ORACLES["similarity_ivf_pq_topk"] = f"""
     WITH {_pq_codes_cte()},
     {_pq_qtab_cte()},
-    v AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    cells AS (
-        SELECT vec_id AS cell_id, v AS c FROM v
-        WHERE vec_id >= {N_QUERIES} AND vec_id < {N_QUERIES + NLIST}
-    ),
-    assigned AS (
-        SELECT vec_id, cell_id FROM (
-            SELECT v.vec_id, c.cell_id,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY list_cosine_similarity(v.v, c.c) DESC,
-                                c.cell_id) AS rn
-            FROM v CROSS JOIN cells c
-        ) WHERE rn = 1
-    ),
-    probes AS (
-        SELECT query_id, cell_id FROM (
-            SELECT v.vec_id AS query_id, c.cell_id,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY list_cosine_similarity(v.v, c.c) DESC,
-                                c.cell_id) AS rn
-            FROM v CROSS JOIN cells c WHERE v.vec_id < {N_QUERIES}
-        ) WHERE rn <= {NPROBE}
-    ),
+    {_IVF_ASSIGN_CTE},
+    {_IVF_PROBES_CTE},
     cand AS (
         SELECT p.query_id, a.vec_id
         FROM assigned a JOIN probes p USING (cell_id)
@@ -1469,16 +1514,7 @@ ORACLES["similarity_ivf_pq_topk"] = f"""
                    AND q.m = c.m AND q.code = c.code
         GROUP BY 1, 2
     ),
-    ranked AS (
-        SELECT query_id, neighbor_id, adc,
-               row_number() OVER (
-                   PARTITION BY query_id ORDER BY adc, neighbor_id) AS rank
-        FROM scored
-    )
-    SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id,
-           ROUND(adc / 1000000.0, 6) AS approx_dist
-    FROM ranked WHERE rank <= {TOPK}
-"""
+    {_ADC_RANK_SQL}"""
 
 # codes.dist is the chosen code's squared error in milli²-units; the
 # sum is exact BIGINT in both engines, doubles only at the boundary
@@ -1498,18 +1534,7 @@ ORACLES["similarity_pq_reconstruction"] = f"""
 ORACLES["similarity_ann_recall"] = f"""
     WITH exact AS ({ORACLES["similarity_topk"]}),
     approx AS ({_pq_topk_sql()})
-    SELECT e.query_id,
-           COUNT(*) AS n_exact,
-           CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-           ((2 * CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL
-                               THEN 1 ELSE 0 END) AS BIGINT) * 100
-             + COUNT(*)) // (2 * COUNT(*))) / 100.0 AS recall
-    FROM exact e
-    LEFT JOIN approx a
-        ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-    GROUP BY e.query_id
-"""
+{_RECALL_AT_K_SQL}"""
 
 # parallel unnests zip row-wise (the WITH-ORDINALITY substitute);
 # range() is half-open so dim is 0-based like posexplode
@@ -1583,9 +1608,7 @@ def sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     summation order to pin."""
     vecs = _vectors(spark, sf_dir)
     params = _sq_params(spark, sf_dir)
-    comp = vecs.select("vec_id", F.posexplode("v").alias("gd", "x")).select(
-        "vec_id", "gd", _milli(F.col("x")).alias("xq")
-    )
+    comp = _milli_comp(vecs, "vec_id", "v")
     codes = comp.join(F.broadcast(params), "gd").select(
         "vec_id", "gd", "rng", _sq_code().alias("code")
     )
@@ -1615,9 +1638,7 @@ def sq_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     one 64-key aggregate."""
     vecs = _vectors(spark, sf_dir)
     params = _sq_params(spark, sf_dir)
-    comp = vecs.select("vec_id", F.posexplode("v").alias("gd", "x")).select(
-        "vec_id", "gd", _milli(F.col("x")).alias("xq")
-    )
+    comp = _milli_comp(vecs, "vec_id", "v")
     coded = comp.join(F.broadcast(params), "gd").select(
         "gd",
         "mn",
@@ -1637,17 +1658,7 @@ def sq_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sq_cte() -> str:
     """Shared oracle CTE: milli components, per-dim params, codes."""
     return f"""
-        comp0 AS (
-            SELECT vec_id,
-                   unnest(range(0, len(embedding))) AS gd,
-                   unnest(CAST(embedding AS DOUBLE[])) AS x
-            FROM embeddings
-        ),
-        comp AS (
-            SELECT vec_id, CAST(gd AS INTEGER) AS gd,
-                   CAST(ROUND(x * 1000) AS BIGINT) AS xq
-            FROM comp0
-        ),
+        {_COMP_CTE_NESTED},
         params AS (
             SELECT gd, MIN(xq) AS mn, MAX(xq) AS mx,
                    MAX(xq) - MIN(xq) AS rng
@@ -1837,17 +1848,7 @@ def covariance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLES["embedding_covariance_pairs"] = f"""
-    WITH comp0 AS (
-        SELECT vec_id,
-               unnest(range(0, len(embedding))) AS gd,
-               unnest(CAST(embedding AS DOUBLE[])) AS x
-        FROM embeddings
-    ),
-    comp AS (
-        SELECT vec_id, CAST(gd AS INTEGER) AS gd,
-               CAST(ROUND(x * 1000) AS BIGINT) AS xq
-        FROM comp0
-    ),
+    WITH {_COMP_CTE},
     prod AS (
         SELECT a.gd AS gd1, b.gd AS gd2,
                CAST(SUM(a.xq * b.xq) AS BIGINT) AS s_xy,
@@ -2136,36 +2137,15 @@ def matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumnRenamed("vec_id", "neighbor_id")
     )
     exact = _rank_topk(pairs, _cos(F.col("q"), F.col("v")).desc())
-    prefix = _rank_topk(
+    approx = _rank_topk(
         pairs,
         _cos(
             F.slice(F.col("q"), 1, MRL_DIM), F.slice(F.col("v"), 1, MRL_DIM)
         ).desc(),
     )
-    return (
-        exact.alias("e")
-        .join(
-            prefix.alias("p"),
-            (F.col("e.query_id") == F.col("p.query_id"))
-            & (F.col("e.neighbor_id") == F.col("p.neighbor_id")),
-            "left",
-        )
-        .groupBy(F.col("e.query_id").alias("query_id"))
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.sum(
-                F.when(F.col("p.neighbor_id").isNotNull(), 1).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_hits"),
-        )
-        .select(
-            "query_id",
-            "n_exact",
-            "n_hits",
-            (F.expr(half_up("n_hits * 100", "n_exact")) / 100.0).alias("recall"),
-        )
-    )
+    # both top-k sides are k·N_QUERIES rows: pin the approx side, as
+    # ann_recall_report does
+    return _recall_at_k(exact, F.broadcast(approx))
 
 
 ORACLES["similarity_matryoshka_recall"] = f"""
@@ -2201,18 +2181,7 @@ ORACLES["similarity_matryoshka_recall"] = f"""
             WHERE e.vec_id <> q.query_id
         ) WHERE rank <= {TOPK}
     )
-    SELECT e.query_id,
-           COUNT(*) AS n_exact,
-           CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-           ((2 * CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL
-                               THEN 1 ELSE 0 END) AS BIGINT) * 100
-             + COUNT(*)) // (2 * COUNT(*))) / 100.0 AS recall
-    FROM exact e
-    LEFT JOIN approx a
-        ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-    GROUP BY e.query_id
-"""
+{_RECALL_AT_K_SQL}"""
 
 
 # ---------------------------------------------------------------------
@@ -2423,18 +2392,6 @@ ORACLES["embedding_power_iteration"] = _power_iteration_sql()
 # Cross-method recall sweep
 # ---------------------------------------------------------------------
 
-_SWEEP_METHODS = (
-    "lsh",
-    "ivf",
-    "pq",
-    "ivf_pq",
-    "ivfpq_res",
-    "sq",
-    "bq",
-    "mrl",
-)
-
-
 def recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One acceptance dashboard for the whole ANN stack: recall@5 of
     every index strategy (hyperplane LSH, IVF, PQ, IVF-PQ, residual
@@ -2448,55 +2405,29 @@ def recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The aggregate recall is micro-exact: hits and the |queries|·k
     denominator are integers; per-method rows are independent, so the
-    plan is a union of bounded per-method joins against the broadcast
+    plan is a union of bounded per-method joins against the
     5·|queries|-row exact set."""
-    exact = topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
-
-    def pairs(df: DataFrame) -> DataFrame:
-        return df.select("query_id", "neighbor_id")
-
+    exact = topk_bruteforce(spark, sf_dir)
     approx = {
-        "lsh": pairs(lsh_topk(spark, sf_dir)),
-        "ivf": pairs(ivf_topk(spark, sf_dir)),
-        "pq": pairs(pq_topk(spark, sf_dir)),
-        "ivf_pq": pairs(ivf_pq_topk(spark, sf_dir)),
-        "ivfpq_res": pairs(ivfpq_residual_topk(spark, sf_dir)),
-        "sq": pairs(sq_topk(spark, sf_dir)),
-        "bq": pairs(bq_topk(spark, sf_dir)),
-        "mrl": pairs(_mrl_prefix_pairs(spark, sf_dir)),
+        "lsh": lsh_topk(spark, sf_dir),
+        "ivf": ivf_topk(spark, sf_dir),
+        "pq": pq_topk(spark, sf_dir),
+        "ivf_pq": ivf_pq_topk(spark, sf_dir),
+        "ivfpq_res": ivfpq_residual_topk(spark, sf_dir),
+        "sq": sq_topk(spark, sf_dir),
+        "bq": bq_topk(spark, sf_dir),
+        "mrl": _mrl_prefix_pairs(spark, sf_dir),
     }
-    frames = []
-    for method in _SWEEP_METHODS:
-        a = approx[method]
-        frames.append(
-            exact.alias("e")
-            .join(
-                a.alias("a"),
-                (F.col("e.query_id") == F.col("a.query_id"))
-                & (F.col("e.neighbor_id") == F.col("a.neighbor_id")),
-                "left",
-            )
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_exact_pairs"),
-                F.sum(
-                    F.when(F.col("a.neighbor_id").isNotNull(), 1).otherwise(0)
-                )
-                .cast("bigint")
-                .alias("n_hits"),
-            )
-            .select(
-                F.lit(method).alias("method"),
-                "n_exact_pairs",
-                "n_hits",
-                F.expr(half_up("n_hits * 1000000", "n_exact_pairs")).alias(
-                    "recall_micro"
-                ),
-            )
+    frames = [
+        _recall(exact, a).select(
+            F.lit(method).alias("method"),
+            F.col("n_exact").alias("n_exact_pairs"),
+            "n_hits",
+            F.expr(half_up("n_hits * 1000000", "n_exact")).alias("recall_micro"),
         )
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+        for method, a in approx.items()
+    ]
+    return reduce(DataFrame.unionByName, frames)
 
 
 def _mrl_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2553,9 +2484,9 @@ def _recall_sweep_sql() -> str:
                               THEN 1 ELSE 0 END) * 1000000 + COUNT(*))
                 // (2 * COUNT(*)) AS BIGINT) AS recall_micro
     FROM ({ORACLES["similarity_topk"]}) e
-    LEFT JOIN ({method_sub[method]}) a
+    LEFT JOIN ({sub}) a
         ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id"""
-        for method in _SWEEP_METHODS
+        for method, sub in method_sub.items()
     )
 
 
@@ -2830,14 +2761,6 @@ ORACLES["retrieval_mrr_eval"] = _mrr_sql()
 # ---------------------------------------------------------------------
 
 
-def _cell_comp_milli(cents: DataFrame) -> DataFrame:
-    """(cell_id, gd, ccq): IVF centroid components in exact milli-units
-    — NLIST×DIM rows, always broadcast-sized."""
-    return cents.select(
-        "cell_id", F.posexplode("c").alias("gd", "cx")
-    ).select("cell_id", "gd", _milli(F.col("cx")).alias("ccq"))
-
-
 def ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Residual IVF-PQ top-5 (the Faiss IVFPQ layout): corpus vectors
     are PQ-encoded as residuals against their assigned cell centroid,
@@ -2852,56 +2775,29 @@ def ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell because its residual does). All arithmetic is BIGINT milli²
     so both engines agree bit-for-bit."""
     vecs = _vectors(spark, sf_dir)
-    cents = _ivf_cells(vecs)
-    nearest_cells = _nearest_cells_fn(cents)
-    assigned = nearest_cells(vecs, "vec_id", "v", 1).select("vec_id", "cell_id")
-    queries = _query_vectors(vecs)
-    probes = nearest_cells(queries, "query_id", "q", NPROBE).select(
-        "query_id", "cell_id"
-    )
-    cellcomp = _cell_comp_milli(cents)
-    comp = vecs.select(
-        "vec_id", F.posexplode("v").alias("gd", "x")
-    ).select("vec_id", "gd", _milli(F.col("x")).alias("xq"))
-    book = _pq_book(spark)
-    # corpus residual codes: residual = milli(x) − milli(centroid), per
-    # the vector's own cell (per-list residuals, exactly as Faiss)
-    rcomp = (
-        comp.join(assigned, "vec_id")
-        .join(F.broadcast(cellcomp), ["cell_id", "gd"])
-        .select("vec_id", "cell_id", "gd", (F.col("xq") - F.col("ccq")).alias("rq"))
-    )
-    rdiff = F.col("rq") - F.col("cq")
-    rdists = (
-        rcomp.join(F.broadcast(book), "gd")
-        .groupBy("vec_id", "cell_id", "m", "k")
-        .agg(F.sum(rdiff * rdiff).alias("dist"))
-    )
-    wcode = Window.partitionBy("vec_id", "m").orderBy("dist", "k")
-    rcodes = (
-        rdists.withColumn("rn", F.row_number().over(wcode))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "cell_id", "m", (F.col("k") + 1).alias("code"))
-    )
+    cents, assigned, probes = _ivf_probe(vecs)
+    assigned = assigned.select("vec_id", "cell_id")
+    probes = probes.select("query_id", "cell_id")
+    comp = _milli_comp(vecs, "vec_id", "v")
+    cellcomp = _milli_comp(cents, "cell_id", "c").withColumnRenamed("xq", "ccq")
+
+    def residual(cells: DataFrame) -> DataFrame:
+        # (vec_id, cell_id, gd, xq): milli(x) − milli(centroid) of each
+        # vector in each of its cells — per-list residuals, as Faiss
+        return (
+            comp.join(cells, "vec_id")
+            .join(F.broadcast(cellcomp), ["cell_id", "gd"])
+            .select(
+                "vec_id", "cell_id", "gd", (F.col("xq") - F.col("ccq")).alias("xq")
+            )
+        )
+
+    rcodes = _pq_encode(residual(assigned))
     # per-(query, probed cell) ADC table from the query's residual in
     # THAT cell — the residual layout's one structural difference
-    qrcomp = (
-        comp.join(
-            probes.withColumnRenamed("query_id", "vec_id"), "vec_id"
-        )
-        .join(F.broadcast(cellcomp), ["cell_id", "gd"])
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "cell_id",
-            "gd",
-            (F.col("xq") - F.col("ccq")).alias("rq"),
-        )
-    )
-    qtab = (
-        qrcomp.join(F.broadcast(book), "gd")
-        .groupBy("query_id", "cell_id", "m", F.col("k").alias("code"))
-        .agg(F.sum(rdiff * rdiff).alias("qdist"))
-        .withColumn("code", F.col("code") + 1)
+    qres = residual(probes.withColumnRenamed("query_id", "vec_id"))
+    qtab = _adc_table(
+        qres.withColumnRenamed("vec_id", "query_id"), "query_id", "cell_id"
     )
     candidates = (
         assigned.join(F.broadcast(probes), "cell_id")
@@ -2911,52 +2807,16 @@ def ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _adc_topk(
         # candidate frame is corpus-proportional — no broadcast hint
         # (same reasoning as ivf_pq_topk); the ADC table stays hinted
-        rcodes.drop("cell_id")
-        .join(candidates, "vec_id")
+        rcodes.join(candidates, "vec_id")
         .join(F.broadcast(qtab), ["query_id", "cell_id", "m", "code"])
     )
 
 
 ORACLES["similarity_ivfpq_residual_topk"] = f"""
-    WITH comp0 AS (
-        SELECT vec_id,
-               unnest(range(0, len(embedding))) AS gd,
-               unnest(CAST(embedding AS DOUBLE[])) AS x
-        FROM embeddings
-    ),
-    comp AS (
-        SELECT vec_id, CAST(gd AS INTEGER) AS gd,
-               CAST(ROUND(x * 1000) AS BIGINT) AS xq
-        FROM comp0
-    ),
+    WITH {_COMP_CTE},
     book(gd, m, k, cq) AS (VALUES {_pq_cents_values_sql()}),
-    v AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    cells AS (
-        SELECT vec_id AS cell_id, v AS c FROM v
-        WHERE vec_id >= {N_QUERIES} AND vec_id < {N_QUERIES + NLIST}
-    ),
-    assigned AS (
-        SELECT vec_id, cell_id FROM (
-            SELECT v.vec_id, c.cell_id,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY list_cosine_similarity(v.v, c.c) DESC,
-                                c.cell_id) AS rn
-            FROM v CROSS JOIN cells c
-        ) WHERE rn = 1
-    ),
-    probes AS (
-        SELECT query_id, cell_id FROM (
-            SELECT v.vec_id AS query_id, c.cell_id,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY list_cosine_similarity(v.v, c.c) DESC,
-                                c.cell_id) AS rn
-            FROM v CROSS JOIN cells c WHERE v.vec_id < {N_QUERIES}
-        ) WHERE rn <= {NPROBE}
-    ),
+    {_IVF_ASSIGN_CTE},
+    {_IVF_PROBES_CTE},
     cellcomp AS (
         SELECT cell_id, CAST(gd AS INTEGER) AS gd,
                CAST(ROUND(x * 1000) AS BIGINT) AS ccq
@@ -3013,16 +2873,7 @@ ORACLES["similarity_ivfpq_residual_topk"] = f"""
                    AND q.m = rc.m AND q.code = rc.code
         GROUP BY 1, 2
     ),
-    ranked AS (
-        SELECT query_id, neighbor_id, adc,
-               row_number() OVER (
-                   PARTITION BY query_id ORDER BY adc, neighbor_id) AS rank
-        FROM scored
-    )
-    SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id,
-           ROUND(adc / 1000000.0, 6) AS approx_dist
-    FROM ranked WHERE rank <= {TOPK}
-"""
+    {_ADC_RANK_SQL}"""
 
 
 # ---------------------------------------------------------------------

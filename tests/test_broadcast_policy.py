@@ -122,8 +122,11 @@ _ALLOWED_PINS = frozenset(
         ("operators/dedup.py", "lsh_recall_vs_exact", "n_lsh"),
         ("operators/dedup.py", "pagerank_centrality", "n_g"),
         ("operators/similarity.py", "_mrl_prefix_pairs", "queries"),
-        ("operators/similarity.py", "_pq_codes_long", "cents"),
-        ("operators/similarity.py", "_pq_query_table", "cents"),
+        # the 1 024-row literal PQ codebook, the NLIST seed centroids and
+        # their NLIST×DIM milli components (the ANN filter/score steps)
+        ("operators/similarity.py", "_book_dists", "_pq_book"),
+        ("operators/similarity.py", "_nearest_cells", "cents"),
+        ("operators/similarity.py", "residual", "cellcomp"),
         ("operators/similarity.py", "ann_recall_report", "approx"),
         ("operators/similarity.py", "bq_topk", "qcodes"),
         ("operators/similarity.py", "bq_topk", "queries"),
@@ -132,8 +135,6 @@ _ALLOWED_PINS = frozenset(
         ("operators/similarity.py", "ivf_pq_topk", "probes"),
         ("operators/similarity.py", "ivf_pq_topk", "qtab"),
         ("operators/similarity.py", "ivf_topk", "probes"),
-        ("operators/similarity.py", "ivfpq_residual_topk", "book"),
-        ("operators/similarity.py", "ivfpq_residual_topk", "cellcomp"),
         ("operators/similarity.py", "ivfpq_residual_topk", "probes"),
         ("operators/similarity.py", "ivfpq_residual_topk", "qtab"),
         # the Lloyd centroid array: ONE row of <= LLOYD_BROADCAST_MAX
@@ -144,10 +145,10 @@ _ALLOWED_PINS = frozenset(
         ("operators/similarity.py", "label_centroid_distances", "cents"),
         ("operators/similarity.py", "label_consensus", "tot"),
         ("operators/similarity.py", "lsh_topk", "queries"),
+        ("operators/similarity.py", "matryoshka_recall", "approx"),
         ("operators/similarity.py", "matryoshka_recall", "queries"),
         ("operators/similarity.py", "mrr_eval", "hits"),
         ("operators/similarity.py", "ndcg_eval", "exact"),
-        ("operators/similarity.py", "nearest_cells", "cents"),
         ("operators/similarity.py", "power_iteration_pca", "mx"),
         ("operators/similarity.py", "power_iteration_pca", "nn"),
         ("operators/similarity.py", "power_iteration_pca", "ray"),

@@ -1,10 +1,11 @@
 """Steps with one definition stay spelled once, with no table data: an
 AST scan of the package for hand copies of the seeded 60-bit hash, of
-the whitespace tokenizer and of the ANN top-k tail. A copy that drifts
-from its definition breaks oracle parity (the hash), the shared token
-contract (the tokenizer) or the neighbor_id tie-break and persisted
-result set that the recall reports share (the top-k) in one operator
-only."""
+the whitespace tokenizer, of the ANN top-k tail and of the PQ codebook
+distance. A copy that drifts from its definition breaks oracle parity
+(the hash), the shared token contract (the tokenizer), the neighbor_id
+tie-break and persisted result set that the recall reports share (the
+top-k) or the code a vector and a query agree on (the codebook
+distance) in one operator only."""
 
 from __future__ import annotations
 
@@ -17,6 +18,7 @@ PKG = Path(__file__).resolve().parents[1] / "big_data_2021_spark_streaming_spark
 _HASH_HOME = {("functions/hashing.py", "h60")}
 _TOKENIZER_HOME = {("operators/text.py", "tokens_col")}
 _TOPK_HOME = {("operators/similarity.py", "_rank_topk")}
+_BOOK_HOME = {("operators/similarity.py", "_book_dists")}
 
 
 def _name(call: ast.AST) -> str | None:
@@ -65,6 +67,17 @@ def _is_topk_cut(node: ast.AST) -> bool:
     )
 
 
+def _is_book_diff(node: ast.AST) -> bool:
+    """x - F.col("cq"): a component's distance to a codebook entry."""
+    return (
+        isinstance(node, ast.BinOp)
+        and isinstance(node.op, ast.Sub)
+        and _name(node.right) == "col"
+        and isinstance(arg := _first_arg(node.right), ast.Constant)
+        and arg.value == "cq"
+    )
+
+
 def _spellings(tree: ast.AST, match) -> list[tuple[int, str]]:
     funcs = [
         (n.lineno, n.end_lineno, n.name)
@@ -109,6 +122,9 @@ def test_matchers_pin_what_they_match():
     assert not hits('F.col("rank") <= DIVERSE_TOPK', _is_topk_cut)
     assert not hits('F.col("rank") <= OUTLIER_TOP', _is_topk_cut)
     assert not hits('F.col("crank") <= BQ_CANDIDATES', _is_topk_cut)
+    assert hits('diff = F.col("rq") - F.col("cq")', _is_book_diff)
+    # the residual subtracts the IVF centroid component, not a codebook
+    assert not hits('(F.col("xq") - F.col("ccq")).alias("xq")', _is_book_diff)
 
 
 def test_seeded_hash_is_spelled_only_in_hashing():
@@ -132,4 +148,12 @@ def test_topk_cut_is_spelled_only_in_rank_topk():
     assert sites == _TOPK_HOME, (
         "per-query top-k cut spelled outside similarity._rank_topk; call "
         f"it instead: {sorted(sites - _TOPK_HOME)}"
+    )
+
+
+def test_codebook_distance_is_spelled_only_in_book_dists():
+    sites = _sites(_is_book_diff)
+    assert sites == _BOOK_HOME, (
+        "codebook distance spelled outside similarity._book_dists; call "
+        f"it (or _pq_encode / _adc_table) instead: {sorted(sites - _BOOK_HOME)}"
     )

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import importlib
+import sys
+
+import tools.plan_identity
 from tools.plan_identity import movers, normalize, plan_hash
 
 _RUN_A = """\
@@ -54,3 +58,11 @@ def test_movers_lists_changed_and_one_sided_names():
     after = {"a": "1", "b": "9", "d": "4"}
     assert movers(before, after) == ["b", "c", "d"]
     assert movers(before, dict(before)) == []
+
+
+def test_import_leaves_sys_path_alone():
+    # a script that imports normalize/plan_hash before the package must
+    # still build the checkout it means to, not the tool's own
+    before = list(sys.path)
+    importlib.reload(tools.plan_identity)
+    assert sys.path == before

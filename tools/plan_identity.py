@@ -29,8 +29,6 @@ import re
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-
 _RULES = (
     (re.compile(r"#\d+"), "#_"),
     (re.compile(r"plan_id=\d+"), "plan_id=_"),
@@ -96,4 +94,5 @@ def main(argv: list[str]) -> int:
 
 
 if __name__ == "__main__":
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     sys.exit(main(sys.argv[1:]))
