@@ -11,15 +11,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from big_data_2021_spark_streaming_spark.sources.batch import load_table
+from tools.plan_identity import explain
 
 SF = "/root/testdata/sf0.001"
-
-
-def plan_of(df) -> str:
-    jvm = df.sparkSession._jvm
-    return jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 def test_join_strategy_hints_are_honored(spark):
@@ -37,15 +31,15 @@ def test_join_strategy_hints_are_honored(spark):
             orders.hint("shuffle_hash"),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
-        assert "ShuffledHashJoin" in plan_of(hashed)
+        assert "ShuffledHashJoin" in explain(hashed)
         merged = li.join(
             orders.hint("merge"), F.col("l_orderkey") == F.col("o_orderkey")
         )
-        assert "SortMergeJoin" in plan_of(merged)
+        assert "SortMergeJoin" in explain(merged)
         bcast = li.join(
             F.broadcast(orders), F.col("l_orderkey") == F.col("o_orderkey")
         )
-        pb = plan_of(bcast)
+        pb = explain(bcast)
         assert "BroadcastHashJoin" in pb
         assert "Arguments: hashpartitioning" not in pb
     finally:

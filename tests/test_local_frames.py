@@ -30,19 +30,14 @@ from big_data_2021_spark_streaming_spark.operators import audit, similarity
 from big_data_2021_spark_streaming_spark.plans import rsvp_fixture
 from big_data_2021_spark_streaming_spark.plans.registry import all_queries
 from big_data_2021_spark_streaming_spark.streaming import pipeline
+from tools.plan_identity import explain
 
 PKG = Path(session.__file__).resolve().parent
 ARROW = "spark.sql.execution.arrow.pyspark.enabled"
 
 
-def _explain(df) -> str:
-    return df._sc._jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def _assert_like_list_path(spark, rows, ddl, df):
-    plan = _explain(df)
+    plan = explain(df)
     assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
     assert df.schema == _parse_datatype_string(ddl)
     listed = spark.createDataFrame(rows, ddl)
@@ -147,7 +142,7 @@ def test_states_dimension_collects_without_a_job(spark):
 
 
 def test_q2_plans_no_python_rdd(spark, sf_dir):
-    plan = _explain(all_queries()["rsvp_q2_payload"].build(spark, sf_dir))
+    plan = explain(all_queries()["rsvp_q2_payload"].build(spark, sf_dir))
     assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
 
 

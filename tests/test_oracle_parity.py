@@ -9,11 +9,16 @@ the driver (the r02 escape this pins).
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import duckdb
+import numpy as np
+import pandas as pd
 import pytest
+from py4j.protocol import Py4JNetworkError
 
 from big_data_2021_spark_streaming_spark.plans.registry import all_queries
-from tools.check_oracle import TABLES, frame_to_multiset
+from tools.check_oracle import TABLES, gate, mismatch
 
 SPECS = all_queries()
 
@@ -36,10 +41,8 @@ def test_query_matches_oracle(name, spark, sf_dir, oracle_con):
     if spec.oracle is None:
         assert spdf is not None  # rows-only check: query must at least run
         return
-    ddf = oracle_con.execute(spec.oracle).df()
-    assert sorted(spdf.columns) == sorted(ddf.columns)
-    assert len(spdf) == len(ddf)
-    assert frame_to_multiset(spdf) == frame_to_multiset(ddf)
+    problem = mismatch(spdf, oracle_con.execute(spec.oracle).df())
+    assert problem is None, problem
 
 
 # Oracle type lint: DuckDB SUM/aggregate over BIGINT widens to HUGEINT,
@@ -55,3 +58,44 @@ def test_oracle_emits_no_hugeint(name, oracle_con):
     assert not bad, (
         f"oracle column(s) widen to HUGEINT — wrap in CAST(... AS BIGINT): {bad}"
     )
+
+
+def test_mismatch_reports_the_first_differing_row():
+    a = pd.DataFrame({"k": [1, 2], "v": [10, 20]})
+    assert mismatch(a, a[["v", "k"]]) is None  # column order is free
+    assert mismatch(a, a.head(1)) == "rowcount spark=2 duckdb=1"
+    assert mismatch(a, a.assign(v=[10, 21])) == (
+        "value mismatch first-diff@1: ('2', '20') vs ('2', '21')"
+    )
+    # int 20 and float 20.0 hash apart at the driver
+    assert mismatch(a, a.assign(v=[10.0, 20.0])).startswith("value mismatch")
+    cells = a.assign(v=[np.array([1]), np.array([2])])
+    assert mismatch(cells, cells).startswith("driver contract")
+
+
+@pytest.mark.parametrize(
+    "lost",
+    [
+        ConnectionRefusedError(111, "Connection refused"),
+        Py4JNetworkError("Answer from Java side is empty"),
+    ],
+)
+def test_gate_stops_when_the_spark_connection_is_lost(lost, capsys):
+    built = []
+
+    def spec(name, error=None):
+        def build(spark, sf_dir):
+            built.append(name)
+            if error:
+                raise error
+            return SimpleNamespace(toPandas=lambda: pd.DataFrame({"a": [1]}))
+
+        return SimpleNamespace(build=build, oracle=None)
+
+    specs = {n: spec(n, lost if n == "b" else None) for n in "abcd"}
+    assert gate(None, None, specs, "sf") == 1
+    out = capsys.readouterr().out.splitlines()
+    assert built == ["a", "b"]
+    assert len(out) == 2 and out[0].startswith("ok   a:")
+    assert out[1].startswith("ABORT b: Spark connection lost")
+    assert out[1].endswith("; 2 queries not run")

@@ -1,4 +1,5 @@
-"""The plan-identity normalizer on canned explain output (no JVM)."""
+"""The plan-identity normalizer and plan-shape reader on canned explain
+output (no JVM)."""
 
 from __future__ import annotations
 
@@ -6,7 +7,7 @@ import importlib
 import sys
 
 import tools.plan_identity
-from tools.plan_identity import movers, normalize, plan_hash
+from tools.plan_identity import movers, normalize, plan_hash, shape
 
 _RUN_A = """\
 (12) Exchange
@@ -66,3 +67,76 @@ def test_import_leaves_sys_path_alone():
     before = list(sys.path)
     importlib.reload(tools.plan_identity)
     assert sys.path == before
+
+
+# formatted mode prints each node twice: once in the tree, once as the
+# "(N) Op" header of its detail section
+_SHAPED = """\
+== Physical Plan ==
+AdaptiveSparkPlan (9)
++- TakeOrderedAndProject (8)
+   +- BroadcastNestedLoopJoin Inner BuildRight (7)
+      :- SortMergeJoin Inner (5)
+      :  :- BroadcastHashJoin Inner BuildRight (3)
+      :  :  :- Scan parquet  (1)
+      :  :  +- ShuffledHashJoin Inner BuildLeft (2)
+      :  +- Window (4)
+      +- Window (6)
+
+
+(1) Scan parquet 
+Location: InMemoryFileIndex [file:/data/events.parquet]
+
+(2) ShuffledHashJoin
+Left keys [1]: [user_id#1L]
+
+(3) BroadcastHashJoin
+Left keys [1]: [user_id#1L]
+
+(4) Window
+Arguments: [row_number() windowspecdefinition(user_id#1L, ts#2 ASC NULLS FIRST, specifiedwindowframe(RowFrame, unboundedpreceding$(), currentrow$())) AS rn#3], [user_id#1L], [ts#2 ASC NULLS FIRST]
+
+(5) SortMergeJoin
+Left keys [1]: [user_id#1L]
+
+(6) Window
+Arguments: [row_number() windowspecdefinition(_band#4 ASC NULLS FIRST, doc_id#5L DESC NULLS LAST, specifiedwindowframe(RowFrame, unboundedpreceding$(), currentrow$())) AS rk#6]
+
+(7) BroadcastNestedLoopJoin
+Join type: Inner
+
+(8) TakeOrderedAndProject
+Arguments: 10, [rn#3 ASC NULLS FIRST]
+"""
+
+
+def test_shape_counts_detail_headers_once():
+    assert shape(_SHAPED) == {
+        "scans": 1,
+        "exchanges": 0,
+        "bhj": 1,
+        "smj": 1,
+        "shj": 1,
+        "bnlj": 1,
+        "topk": True,
+        "gwin": True,
+        "cartesian": False,
+    }
+
+
+def test_shape_global_window_needs_an_empty_partition_spec():
+    # only the (_band, doc_id) ordering-only window is global; the
+    # user_id-partitioned one is not
+    band = "(_band#4 ASC NULLS FIRST, doc_id#5L DESC NULLS LAST, "
+    assert not shape(_SHAPED.replace(band, "(source#9, " + band[1:]))["gwin"]
+    assert shape(_SHAPED.replace(band, "("))["gwin"]  # no spec at all
+
+
+def test_shape_flags_cartesian_and_counts_exchanges():
+    p = _SHAPED.replace("BroadcastNestedLoopJoin", "CartesianProduct") + (
+        "\n(10) Exchange\n"
+        "Arguments: hashpartitioning(user_id#1L, 8), ENSURE_REQUIREMENTS, [plan_id=1]\n"
+    )
+    s = shape(p)
+    assert s["cartesian"] and s["bnlj"] == 0
+    assert s["exchanges"] == 1

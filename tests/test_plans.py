@@ -14,24 +14,13 @@ from __future__ import annotations
 import pytest
 
 from big_data_2021_spark_streaming_spark.plans.registry import all_queries
+from tools.plan_identity import PLANS_MD, explain, shape, walk
 
 SF = "/root/testdata/sf0.001"
 
 
 def plan(spark, name: str, mode: str = "formatted") -> str:
-    df = all_queries()[name].build(spark, SF)
-    jvm = spark._jvm
-    return jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), mode
-    )
-
-
-def nscans(p: str) -> int:
-    # formatted mode prints every node twice (tree + detail section);
-    # count the detail headers only
-    import re
-
-    return len(re.findall(r"^\(\d+\) Scan parquet", p, re.M))
+    return explain(all_queries()[name].build(spark, SF), mode)
 
 
 def test_q1_filter_pushes_predicate_and_prunes_columns(spark):
@@ -88,11 +77,7 @@ def test_similarity_topk_cross_join_is_broadcast(spark):
         topk_bruteforce,
     )
 
-    df = topk_bruteforce.__wrapped__(spark, SF)
-    jvm = spark._jvm
-    p = jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    p = explain(topk_bruteforce.__wrapped__(spark, SF))
     assert "BroadcastNestedLoopJoin" in p
 
 
@@ -175,7 +160,6 @@ _BNLJ_INTENDED = frozenset(
         "value_drift_tvd",            # 1-row global-bounds frame onto the scan
         "split_leakage_report",       # 1-row leak total onto the 3-row summary
         "contrastive_negatives",      # 1-row corpus-size scalar onto anchors
-        "dedup_pagerank",             # 1-row node-count scalar onto the node frame
         "dedup_lsh_recall_exact",     # 1-row LSH-total scalar onto 1-row stats
         "text_lang_kappa",            # 1-row marginal-product scalar onto 1-row stats
         "text_bm25_search",           # 1-row corpus-totals scalar onto matched docs
@@ -202,20 +186,16 @@ _BNLJ_INTENDED = frozenset(
         "similarity_bq_topk",         # ≤20-row packed-code query set × corpus codes
         "similarity_matryoshka_recall",  # exact baseline twice: queries × corpus
         "orders_aging_buckets",       # 1-row as-of scalar onto the filtered scan
-        "value_mad_anomalies",        # 1-row-per-type extremes/median/MAD scalars
         "sketch_histogram_quantiles",  # 1-row bounds + ≤1024-row cum-histogram scalars
         "t_closeness_audit",          # ≤|bands|-row global distribution onto QI groups
         "event_cusum_changepoint",    # 1-row day-span bounds onto the |types| frame
         "event_dispersion_index",     # same 1-row day-span bounds grid
         "event_trend_theilsen",       # same 1-row day-span bounds grid
         "event_seasonal_naive_mape",  # same 1-row day-span bounds grid
-        "user_dau_wau_stickiness",    # 1-row day-span bounds filter
         "experiment_srm_check",       # 1-row chi2 frame onto 2 arm rows
         "experiment_cuped_lift",      # 1-row bounds + pooled-moment frames
         "embedding_power_iteration",  # 1-row n/max/Rayleigh scalars onto ≤DIM²-row frames
         "quality_dup_profile",        # 1-row corpus-count scalar onto the ranked frame
-        "kmeans_clusters",            # 1-row broadcast centroid-array (k×DIM aggregate, not data)
-        "dedup_semantic",             # same 1-row centroid array via the shared Lloyd assignment
         "similarity_recall_sweep",    # exact baseline + per-method broadcast-sized joins
         "join_strategy_advisor",      # 1-row stats scalars per FK edge
         "sketch_hll_intersection",    # |types|²-row pair grid (≤ dozens)
@@ -226,7 +206,6 @@ _BNLJ_INTENDED = frozenset(
         "text_zipf_topshare",         # 1-row rank-extremes scalar onto the |vocab| frame
         "orders_priority_mix_shift",  # 1-row grand-total scalar onto |priorities| rows
         "curation_quality_budget_curve",  # 1-row n/total scalars onto the ranked frame
-        "similarity_cluster_purity",  # 1-row broadcast centroid-array via the Lloyd memo
         "event_value_benford",        # 1-row digit-total scalar onto 9 digit rows
     }
 )
@@ -289,21 +268,6 @@ def test_global_window_allowlist_is_capped_and_justified():
         assert name in names, f"allowlisted {name} is not a registry query"
         assert len(why.strip()) >= 10, f"{name}: justification missing"
 
-_UNPART_WINDOW = __import__("re").compile(
-    r"windowspecdefinition\(([^)]*?)specifiedwindowframe"
-)
-
-
-def _has_unpartitioned_window(plan_str: str) -> bool:
-    # a windowspecdefinition whose args before the frame are all
-    # ordering columns (or absent) has an empty partition spec — at
-    # scale that window moves its whole input to one task
-    for m in _UNPART_WINDOW.finditer(plan_str):
-        cols = [c.strip() for c in m.group(1).split(",") if c.strip()]
-        if not any("ASC" not in c and "DESC" not in c for c in cols):
-            return True
-    return False
-
 
 def test_no_unintended_cartesian_nested_loop_or_global_window_anywhere(spark):
     # registry-wide scale lint: a CartesianProduct anywhere, a
@@ -311,17 +275,27 @@ def test_no_unintended_cartesian_nested_loop_or_global_window_anywhere(spark):
     # crossJoins, or an unpartitioned Window outside the audited
     # bounded-frame set, is a 100 TB outage regardless of small-sf
     # correctness
-    for name, spec in all_queries().items():
-        df = spec.build(spark, SF)
-        jvm = spark._jvm
-        p = jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        assert "CartesianProduct" not in p, name
+    for name, p in walk(spark, SF):
+        s = shape(p)
+        assert not s["cartesian"], name
         if name not in _BNLJ_INTENDED:
-            assert "BroadcastNestedLoopJoin" not in p, name
+            assert s["bnlj"] == 0, name
         if name not in _GLOBAL_WINDOW_INTENDED:
-            assert not _has_unpartitioned_window(p), name
+            assert not s["gwin"], name
+
+
+def test_lint_allowlists_match_plans_md():
+    # each allowlist holds exactly the names whose cold plan (PLANS.md,
+    # rewritten by every plan-identity recording) shows the operator: a
+    # name that stops planning one leaves its list in the same change
+    rows = [
+        [c.strip() for c in line.strip("|").split("|")]
+        for line in PLANS_MD.read_text().splitlines()
+        if line.startswith("| ") and not line.startswith("| query ")
+    ]
+    assert len(rows) == len(all_queries())
+    assert {r[0] for r in rows if int(r[6]) > 0} == _BNLJ_INTENDED
+    assert {r[0] for r in rows if r[8] == "yes"} == set(_GLOBAL_WINDOW_INTENDED)
 
 
 def test_no_driver_side_collect_outside_lloyd_loop():
@@ -379,7 +353,7 @@ def test_big_order_customers_single_fact_scan(spark):
     # the HAVING aggregate doubles as the outer sum: lineitem must be
     # scanned exactly once (3 scans total: lineitem, orders, customer)
     p = plan(spark, "big_order_customers")
-    assert nscans(p) == 3
+    assert shape(p)["scans"] == 3
 
 
 def test_shipping_priority_topk_take_ordered_with_pushed_dates(spark):
@@ -433,7 +407,7 @@ def test_embedding_outliers_broadcasts_centroids(spark):
 
 def test_mixture_report_is_single_corpus_scan(spark):
     p = plan(spark, "corpus_mixture_report")
-    assert nscans(p) == 1
+    assert shape(p)["scans"] == 1
 
 
 def test_repetition_signals_no_cartesian(spark):
@@ -687,7 +661,7 @@ def test_excess_quantity_chain_is_joins_not_subqueries(spark):
     # aggregated pair frame, not a second fact scan
     p = plan(spark, "excess_quantity_suppliers")
     assert "SortMergeJoin" not in p
-    assert nscans(p) == 4  # lineitem, part, supplier, nation — once each
+    assert shape(p)["scans"] == 4  # lineitem, part, supplier, nation — once each
 
 
 def test_registry_names_unique_across_modules():
@@ -991,7 +965,7 @@ def test_ship_latency_quantiles_is_cell_reduced(spark):
     # percentile picks run on the broadcast cell/target frames (no
     # cartesian, no TakeOrdered/global sort of fact rows)
     p = plan(spark, "order_ship_latency_quantiles")
-    assert nscans(p) == 2
+    assert shape(p)["scans"] == 2
     assert "CartesianProduct" not in p
     assert "BroadcastHashJoin" in p  # targets broadcast onto the cells
     assert "GlobalSort" not in p.replace("Sort [l_returnflag", "")
@@ -1002,9 +976,7 @@ def test_minhash_cardinality_banded_rank_no_global_window(spark):
     # partitioned windows (fixed arithmetic bands over h60's uniform
     # domain), never an unpartitioned window over the corpus
     p = plan(spark, "dedup_minhash_cardinality", mode="extended")
-    from tests.test_plans import _has_unpartitioned_window
-
-    assert not _has_unpartitioned_window(p)
+    assert not shape(p)["gwin"]
     assert "CartesianProduct" not in p
 
 
@@ -1020,14 +992,14 @@ def test_word_len_profile_single_corpus_scan(spark):
     # round-8 addition: ONE documents scan reduced map-side to
     # (source, len) cells; stats + median both read the persisted cells
     p = plan(spark, "text_word_len_profile")
-    assert nscans(p) <= 1  # 0 once the cell frame is cached
+    assert shape(p)["scans"] <= 1  # 0 once the cell frame is cached
     assert "CartesianProduct" not in p
 
 
 def test_log2_histogram_single_scan_partial_agg(spark):
     # round-8 addition: one events scan, map-side-combinable aggregate
     p = plan(spark, "event_value_log2_histogram")
-    assert nscans(p) == 1
+    assert shape(p)["scans"] == 1
     assert "partial" in p.lower()  # partial aggregation before the wire
 
 
@@ -1037,10 +1009,10 @@ def test_theilsen_pair_join_rides_cached_calendar_cells(spark):
     # bounded), never re-scan events, and pair up via an equi-join on
     # event_type — no cartesian, no unpartitioned window
     p = plan(spark, "event_trend_theilsen")
-    assert nscans(p) <= 1  # one events scan builds the cells
+    assert shape(p)["scans"] <= 1  # one events scan builds the cells
     assert "CartesianProduct" not in p
     assert "InMemoryTableScan" in p  # both pair sides read the cache
-    assert not _has_unpartitioned_window(p)
+    assert not shape(p)["gwin"]
 
 
 def test_pruning_audit_single_long_frame_chain(spark):
@@ -1049,7 +1021,7 @@ def test_pruning_audit_single_long_frame_chain(spark):
     # persisted cell frame), not a 9-branch union — the union shape
     # cost ~30 sequential AQE stages (7.5 s for a 9-row report)
     p = plan(spark, "partition_pruning_audit")
-    assert nscans(p) <= 1  # one orders scan builds the cells
+    assert shape(p)["scans"] <= 1  # one orders scan builds the cells
     assert "Union" not in p
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
@@ -1063,7 +1035,7 @@ def test_clustering_depth_sweepline_not_range_join(spark):
     # scan builds the min/max cells, everything after runs on the
     # persisted interval frame
     p = plan(spark, "lake_clustering_depth")
-    assert nscans(p) <= 1
+    assert shape(p)["scans"] <= 1
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
-    assert not _has_unpartitioned_window(p)
+    assert not shape(p)["gwin"]

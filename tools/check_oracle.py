@@ -17,6 +17,7 @@ escape).
 
 from __future__ import annotations
 
+import contextlib
 import math
 import sys
 import time
@@ -26,6 +27,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import duckdb
 import numpy as np
+from py4j.protocol import Py4JError, Py4JNetworkError
 
 from big_data_2021_spark_streaming_spark.plans.registry import all_queries
 from big_data_2021_spark_streaming_spark.session import get_session
@@ -81,22 +83,40 @@ def frame_to_multiset(df) -> list[tuple[str, ...]]:
     return sorted(rows)
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-    specs = all_queries()
-    if only:
-        specs = {k: v for k, v in specs.items() if k in only}
-
-    spark = get_session("oracle-check", cpus=8)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+def mismatch(spark_pdf, duck_pdf) -> str | None:
+    """Why the driver's gate would fail Spark's result against DuckDB's
+    (row count, sorted column names, canonical multiset, a cell the
+    driver cannot grade), or None when it would pass."""
+    problems = []
+    if len(spark_pdf) != len(duck_pdf):
+        problems.append(f"rowcount spark={len(spark_pdf)} duckdb={len(duck_pdf)}")
+    if sorted(spark_pdf.columns) != sorted(duck_pdf.columns):
+        problems.append(
+            f"cols spark={sorted(spark_pdf.columns)} duckdb={sorted(duck_pdf.columns)}"
         )
+    if problems:
+        return "; ".join(problems)
+    try:
+        sm, dm = frame_to_multiset(spark_pdf), frame_to_multiset(duck_pdf)
+    except DriverContractError as e:
+        return f"driver contract — {e}"
+    if sm == dm:
+        return None
+    # equal lengths, so unequal sorted lists differ at some index
+    i = next(i for i, (a, b) in enumerate(zip(sm, dm)) if a != b)
+    return f"value mismatch first-diff@{i}: {sm[i]} vs {dm[i]}"
 
+
+def gate(spark, con, specs, sf_dir: str) -> int:
+    """Check each spec in name order, one line per query; the exit status.
+
+    A lost Spark connection (the JVM died) ends the run with one line:
+    every later query would only report the same dead connection.
+    """
+    names = sorted(specs)
     failures = []
-    for name, spec in sorted(specs.items()):
+    for n, name in enumerate(names):
+        spec = specs[name]
         t0 = time.perf_counter()
 
         def took() -> str:
@@ -106,8 +126,14 @@ def main() -> int:
             return f" [{dt:.1f}s]" if dt >= 5 else ""
 
         try:
-            sdf = spec.build(spark, sf_dir)
-            spdf = sdf.toPandas()
+            spdf = spec.build(spark, sf_dir).toPandas()
+        except (ConnectionError, Py4JNetworkError) as e:
+            print(
+                f"ABORT {name}: Spark connection lost ({type(e).__name__}: {e});"
+                f" {len(names) - n - 1} queries not run",
+                flush=True,
+            )
+            return 1
         except Exception as e:
             failures.append(name)
             print(f"FAIL {name}: spark error {type(e).__name__}: {e}{took()}", flush=True)
@@ -121,38 +147,34 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL {name}: duckdb error {e}{took()}", flush=True)
             continue
-        problems = []
-        if len(spdf) != len(ddf):
-            problems.append(f"rowcount spark={len(spdf)} duckdb={len(ddf)}")
-        if sorted(spdf.columns) != sorted(ddf.columns):
-            problems.append(
-                f"cols spark={sorted(spdf.columns)} duckdb={sorted(ddf.columns)}"
-            )
-        if not problems:
-            try:
-                sm, dm = frame_to_multiset(spdf), frame_to_multiset(ddf)
-            except DriverContractError as e:
-                failures.append(name)
-                print(f"FAIL {name}: driver contract — {e}{took()}", flush=True)
-                continue
-            if sm != dm:
-                diff = next(
-                    (i for i, (a, b) in enumerate(zip(sm, dm)) if a != b), None
-                )
-                detail = (
-                    f" first-diff@{diff}: {sm[diff]} vs {dm[diff]}"
-                    if diff is not None
-                    else ""
-                )
-                problems.append(f"value mismatch{detail}")
-        if problems:
+        problem = mismatch(spdf, ddf)
+        if problem:
             failures.append(name)
-            print(f"FAIL {name}: {'; '.join(problems)}{took()}", flush=True)
+            print(f"FAIL {name}: {problem}{took()}", flush=True)
         else:
             print(f"PASS {name}: {len(spdf)} rows{took()}", flush=True)
-    spark.stop()
-    print(f"\n{len(specs) - len(failures)}/{len(specs)} passed")
+    print(f"\n{len(names) - len(failures)}/{len(names)} passed")
     return 1 if failures else 0
+
+
+def main() -> int:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    only = set(sys.argv[2:])
+    specs = all_queries()
+    if only:
+        specs = {k: v for k, v in specs.items() if k in only}
+
+    spark = get_session("oracle-check", cpus=8)
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    status = gate(spark, con, specs, sf_dir)
+    # after an abort there is no JVM left to stop
+    with contextlib.suppress(ConnectionError, Py4JError):
+        spark.stop()
+    return status
 
 
 if __name__ == "__main__":

@@ -1,4 +1,4 @@
-"""Normalized physical-plan hashes for every registry query.
+"""Normalized physical-plan hashes and plan shapes for every registry query.
 
 A deletion or merge in the engine is accepted as neutral when every
 registry query keeps an identical normalized plan hash (and an
@@ -12,13 +12,18 @@ The first form builds every query on the corpus ``SF_DIR`` (the
 recorded proofs use the sf0.001 test corpus) in ONE fresh session, in
 sorted name order (builders share session-cached frames and fire eager
 jobs, so a fixed order makes the recording repeatable), and writes
-``{name: sha256}`` of ``explain("formatted")`` after ``normalize``. The second lists the
-names whose hash differs (or that exist on one side only) and exits 1
-if there are any.
+``{name: sha256}`` of ``explain("formatted")`` after ``normalize``.
+From the same plan texts it rewrites ``PLANS.md``, the per-query
+plan-shape inventory (see ``shape``). The second form lists the names
+whose hash differs (or that exist on one side only) and exits 1 if
+there are any.
 
 Normalization strips what differs between two sessions running the
 same code: expression ids (``x#123``), exchange plan ids, RDD ids and
 the runtime statistics of query stages and cached plans.
+
+``explain``, ``walk`` and ``shape`` are the one way the tests read a
+plan, walk the registry for plans and classify a plan's operators.
 """
 
 from __future__ import annotations
@@ -36,6 +41,39 @@ _RULES = (
     (re.compile(r"Statistics\([^)]*\)"), "Statistics(_)"),
 )
 
+_UNPART_WINDOW = re.compile(r"windowspecdefinition\(([^)]*?)specifiedwindowframe")
+
+PLANS_MD = Path(__file__).resolve().parent.parent / "PLANS.md"
+
+_PLANS_MD_HEAD = """\
+# PLANS.md — physical-plan shape per registry query
+
+Generated by `python tools/plan_identity.py SF_DIR OUT.json` from the
+plans it hashes, here on the `{corpus}` corpus (plan-only; shapes are
+data-size-independent modulo AQE runtime re-planning, which only
+upgrades joins to broadcast).
+Columns: parquet scans, shuffle exchanges, join strategies
+(broadcast-hash / sort-merge / shuffled-hash / broadcast-
+nested-loop), distributed top-k, and whether an
+unpartitioned window appears (every `yes` is in the audited
+bounded-frame allowlist, and every BNLJ row in the broadcast-sized
+cross-join allowlist, pinned by `tests/test_plans.py`).
+
+Queries composing the session-memoized top-k/pair frames
+(the recall sweep, NDCG eval, the dedup consumers) show
+their pipelines fully expanded here — a fresh session plans
+them cold; at runtime those frames are persisted once per
+session and the repeat scans collapse to InMemoryTableScans.
+
+(No codegen-span column: under AQE, codegen ids are only
+assigned in the FINAL plan after execution, so they are not
+visible in a plan-time report; `tests/test_plans.py` pins
+codegen coverage on the hot reference lineages instead.)
+
+| query | scans | exchanges | BHJ | SMJ | SHJ | BNLJ | top-k | global window |
+|---|---|---|---|---|---|---|---|---|
+"""
+
 
 def normalize(plan: str) -> str:
     for pattern, repl in _RULES:
@@ -47,23 +85,78 @@ def plan_hash(plan: str) -> str:
     return hashlib.sha256(normalize(plan).encode()).hexdigest()
 
 
-def record(sf_dir: str) -> dict[str, str]:
+def explain(df, mode: str = "formatted") -> str:
+    """The plan text ``df.explain(mode)`` prints, as a string."""
+    jvm = df.sparkSession._jvm
+    return jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), mode
+    )
+
+
+def walk(spark, sf_dir: str):
+    """Build each registry query on ``sf_dir`` in sorted name order and
+    yield ``(name, formatted plan text)``; the caller owns the session."""
     from big_data_2021_spark_streaming_spark.plans.registry import all_queries
+
+    specs = all_queries()
+    for name in sorted(specs):
+        yield name, explain(specs[name].build(spark, sf_dir))
+
+
+def _nodes(plan: str, op: str) -> int:
+    # formatted mode prints every node twice (tree + detail section);
+    # count the detail headers only
+    return len(re.findall(rf"^\(\d+\) {op}", plan, re.M))
+
+
+def _has_unpartitioned_window(plan: str) -> bool:
+    # a windowspecdefinition whose args before the frame are all
+    # ordering columns (or absent) has an empty partition spec — at
+    # scale that window moves its whole input to one task
+    for m in _UNPART_WINDOW.finditer(plan):
+        cols = [c.strip() for c in m.group(1).split(",") if c.strip()]
+        if not any("ASC" not in c and "DESC" not in c for c in cols):
+            return True
+    return False
+
+
+def shape(plan: str) -> dict:
+    """The PLANS.md columns of a formatted plan, plus ``cartesian``."""
+    return {
+        "scans": _nodes(plan, "Scan parquet"),
+        "exchanges": plan.count("Arguments: hashpartitioning"),
+        "bhj": _nodes(plan, "BroadcastHashJoin"),
+        "smj": _nodes(plan, "SortMergeJoin"),
+        "shj": _nodes(plan, "ShuffledHashJoin"),
+        "bnlj": _nodes(plan, "BroadcastNestedLoopJoin"),
+        "topk": "TakeOrderedAndProject" in plan,
+        "gwin": _has_unpartitioned_window(plan),
+        "cartesian": "CartesianProduct" in plan,
+    }
+
+
+def plans_md(plans: dict[str, str], sf_dir: str) -> str:
+    rows = []
+    for name, plan in plans.items():
+        s = shape(plan)
+        rows.append(
+            f"| {name} | {s['scans']} | {s['exchanges']} |"
+            f" {s['bhj']} | {s['smj']} | {s['shj']} | {s['bnlj']} |"
+            f" {'yes' if s['topk'] else ''} |"
+            f" {'yes' if s['gwin'] else ''} |\n"
+        )
+    return _PLANS_MD_HEAD.format(corpus=Path(sf_dir).name) + "".join(rows)
+
+
+def record(sf_dir: str) -> dict[str, str]:
+    """``{name: formatted plan text}`` from one walk in a fresh session."""
     from big_data_2021_spark_streaming_spark.session import get_session
 
     spark = get_session("plan-identity", cpus=4)
-    explain = spark._jvm.org.apache.spark.sql.api.python.PythonSQLUtils
-    specs = all_queries()
-    out = {}
     try:
-        for name in sorted(specs):
-            df = specs[name].build(spark, sf_dir)
-            out[name] = plan_hash(
-                explain.explainString(df._jdf.queryExecution(), "formatted")
-            )
+        return dict(walk(spark, sf_dir))
     finally:
         spark.stop()
-    return out
 
 
 def movers(before: dict[str, str], after: dict[str, str]) -> list[str]:
@@ -87,9 +180,11 @@ def main(argv: list[str]) -> int:
         print(__doc__, file=sys.stderr)
         return 2
     sf_dir, out = argv
-    hashes = record(sf_dir)
+    plans = record(sf_dir)
+    hashes = {name: plan_hash(plan) for name, plan in plans.items()}
     Path(out).write_text(json.dumps(hashes, indent=1, sort_keys=True) + "\n")
-    print(f"wrote {out} ({len(hashes)} queries)")
+    PLANS_MD.write_text(plans_md(plans, sf_dir))
+    print(f"wrote {out} and {PLANS_MD} ({len(hashes)} queries)")
     return 0
 
 
