@@ -18,7 +18,10 @@ Arguments: hashpartitioning(doc_id#123L, 8), ENSURE_REQUIREMENTS, [plan_id=57]
 Output [2]: [doc_id#123L, source#124]
 
 (14) Scan ExistingRDD
-Arguments: [src#9L, label#10L], MapPartitionsRDD[88] at localCheckpoint
+Arguments: [src#9L, label#10L], MapPartitionsRDD[88] at localCheckpoint at <unknown>:0, ExistingRDD, UnknownPartitioning(0)
+
+(15) Project
+Output [2]: [x_12#5, aggregate(zip_with(va#3, vb#4, lambdafunction((lambda x_70#19690 * lambda y_71#19691), lambda x_70#19690, lambda y_71#19691, false)), 0.0, lambdafunction((lambda x_72#19698 + lambda y_73#19699), lambda x_72#19698, lambda y_73#19699, false), lambdafunction(lambda id#19700, lambda id#19700, false)) AS dot#6]
 """
 
 _RUN_B = """\
@@ -30,7 +33,10 @@ Arguments: hashpartitioning(doc_id#7L, 8), ENSURE_REQUIREMENTS, [plan_id=3]
 Output [2]: [doc_id#7L, source#8]
 
 (14) Scan ExistingRDD
-Arguments: [src#901L, label#902L], MapPartitionsRDD[5] at localCheckpoint
+Arguments: [src#901L, label#902L], MapPartitionsRDD[5] at localCheckpoint at NativeMethodAccessorImpl.java:0, ExistingRDD, UnknownPartitioning(0)
+
+(15) Project
+Output [2]: [x_12#9, aggregate(zip_with(va#7, vb#8, lambdafunction((lambda x_2#40 * lambda y_3#41), lambda x_2#40, lambda y_3#41, false)), 0.0, lambdafunction((lambda x_4#48 + lambda y_5#49), lambda x_4#48, lambda y_5#49, false), lambdafunction(lambda id#50, lambda id#50, false)) AS dot#10]
 """
 
 
@@ -38,19 +44,38 @@ def test_normalize_strips_session_ids_and_runtime_stats():
     out = normalize(_RUN_A)
     assert "doc_id#_L" in out and "source#_" in out
     assert "[plan_id=_]" in out
-    assert "MapPartitionsRDD[_]" in out
+    assert "MapPartitionsRDD[_] at localCheckpoint, ExistingRDD" in out
     assert "ShuffleQueryStage, Statistics(_)" in out
+    # counter-named lambda variables renumbered by first appearance;
+    # a SQL lambda's fixed name and a column named like one stay
+    assert "(lambda x_0#_ * lambda y_1#_), lambda x_0#_, lambda y_1#_" in out
+    assert "(lambda x_2#_ + lambda y_3#_), lambda x_2#_, lambda y_3#_" in out
+    assert "lambdafunction(lambda id#_, lambda id#_, false)" in out
+    assert "[x_12#_, " in out
+    assert normalize("lambda x_9#1 + lambda x_9#1 + lambda x_8#2") == (
+        "lambda x_0#_ + lambda x_0#_ + lambda x_1#_"
+    )
     assert normalize(_RUN_B) == out
     assert plan_hash(_RUN_A) == plan_hash(_RUN_B)
 
 
 def test_plan_change_moves_the_hash():
-    # an operator, a partition count or a column name is the plan
+    # an operator, a partition count, a column name, a lambda's operand
+    # order, parameter order or body, or the method that made an RDD
+    # is the plan
     for old, new in (
         ("hashpartitioning", "rangepartitioning"),
         (", 8)", ", 16)"),
         ("source#8", "origin#8"),
+        ("(lambda x_2#40 * lambda y_3#41)", "(lambda y_3#41 * lambda x_2#40)"),
+        (
+            "lambda x_2#40, lambda y_3#41, false",
+            "lambda y_3#41, lambda x_2#40, false",
+        ),
+        ("(lambda x_4#48 + lambda y_5#49)", "(lambda x_4#48 - lambda y_5#49)"),
+        ("at localCheckpoint", "at checkpoint"),
     ):
+        assert old in _RUN_B
         assert plan_hash(_RUN_B.replace(old, new)) != plan_hash(_RUN_B)
 
 

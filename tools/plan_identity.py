@@ -20,7 +20,24 @@ there are any.
 
 Normalization strips what differs between two sessions running the
 same code: expression ids (``x#123``), exchange plan ids, RDD ids and
-the runtime statistics of query stages and cached plans.
+the runtime statistics of query stages and cached plans. Two more
+pieces of plan text come from counters that live as long as the JVM,
+so they depend on what the session built before, not on the plan:
+
+- PySpark names a Python lambda's variables ``x_N``, ``y_N``, ``z_N``
+  from one counter, so one lambda built more or fewer renames them in
+  every later plan. ``normalize`` renumbers each counter-named lambda
+  variable by its first appearance within the plan (``lambda x_70``,
+  ``lambda y_71`` become ``lambda x_0``, ``lambda y_1``). SQL lambdas
+  with fixed names (``lambda acc``) and columns such as ``x_12#5``
+  stay as they are.
+- An RDD label ends in the call site that created it. The JVM's first
+  reflective calls of a method run through ``NativeMethodAccessorImpl``
+  and later ones through a generated accessor with no source, so the
+  same checkpoint reads ``MapPartitionsRDD[88] at localCheckpoint at
+  NativeMethodAccessorImpl.java:0`` or ``... at <unknown>:0`` depending
+  on how many ran before it. The site is dropped and the method kept
+  (``MapPartitionsRDD[_] at localCheckpoint``).
 
 ``explain``, ``walk`` and ``shape`` are the one way the tests read a
 plan, walk the registry for plans and classify a plan's operators.
@@ -38,8 +55,11 @@ _RULES = (
     (re.compile(r"#\d+"), "#_"),
     (re.compile(r"plan_id=\d+"), "plan_id=_"),
     (re.compile(r"RDD\[\d+\]"), "RDD[_]"),
+    (re.compile(r"(RDD\[_\] at \w+) at [^\s,]+:\d+"), r"\1"),
     (re.compile(r"Statistics\([^)]*\)"), "Statistics(_)"),
 )
+
+_LAMBDA_VAR = re.compile(r"\blambda ([A-Za-z]\w*?)_(\d+)\b")
 
 _UNPART_WINDOW = re.compile(r"windowspecdefinition\(([^)]*?)specifiedwindowframe")
 
@@ -78,7 +98,13 @@ codegen coverage on the hot reference lineages instead.)
 def normalize(plan: str) -> str:
     for pattern, repl in _RULES:
         plan = pattern.sub(repl, plan)
-    return plan
+    seen: dict[str, int] = {}
+
+    def renumber(m: re.Match) -> str:
+        n = seen.setdefault(m.group(0), len(seen))
+        return f"lambda {m.group(1)}_{n}"
+
+    return _LAMBDA_VAR.sub(renumber, plan)
 
 
 def plan_hash(plan: str) -> str:
