@@ -233,7 +233,7 @@ def _ivf_probe(vecs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(cents, assigned, probes): the IVF filter step. ``assigned`` is
     (vec_id, v, cell_id), each corpus vector in its nearest cell;
     ``probes`` is (query_id, q, cell_id), each query's NPROBE nearest
-    cells. Built in that order (one ``_cos`` each)."""
+    cells."""
     cents = _ivf_cells(vecs)
     assigned = _nearest_cells(vecs, cents, "vec_id", "v", 1)
     probes = _nearest_cells(_query_vectors(vecs), cents, "query_id", "q", NPROBE)
@@ -820,11 +820,6 @@ def _lloyd_broadcast(spark: SparkSession, vecs: DataFrame, k: int) -> DataFrame:
             cents[int(r["cluster_id"])] = [
                 float(r[f"s{i}"]) / n for i in range(DIM)
             ]
-    # built fresh, not reused from the loop: Spark names lambda
-    # variables from one session-wide counter, so skipping this call
-    # would rename them in the plan text of every later query (the
-    # text tools/plan_identity.py hashes)
-    best = _km_best()
     return vecs.crossJoin(F.broadcast(_cent_frame(spark, cents))).select(
         "vec_id",
         "v",
@@ -2129,23 +2124,12 @@ def matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the audit that says whether that layout change pays). Per-query
     output joins the two 5-row top-k sets; recall is half-up exact
     2-decimal division (the ann_recall contract)."""
-    vecs = _vectors(spark, sf_dir)
-    queries = _query_vectors(vecs)
-    pairs = (
-        vecs.crossJoin(F.broadcast(queries))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumnRenamed("vec_id", "neighbor_id")
-    )
-    exact = _rank_topk(pairs, _cos(F.col("q"), F.col("v")).desc())
-    approx = _rank_topk(
-        pairs,
-        _cos(
-            F.slice(F.col("q"), 1, MRL_DIM), F.slice(F.col("v"), 1, MRL_DIM)
-        ).desc(),
-    )
     # both top-k sides are k·N_QUERIES rows: pin the approx side, as
     # ann_recall_report does
-    return _recall_at_k(exact, F.broadcast(approx))
+    return _recall_at_k(
+        topk_bruteforce(spark, sf_dir),
+        F.broadcast(_mrl_prefix_pairs(spark, sf_dir)),
+    )
 
 
 ORACLES["similarity_matryoshka_recall"] = f"""

@@ -65,8 +65,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # call (~500 load_table calls per bench run, each a driver-side
 # file-listing + footer read) while leaving every consumer's plan
 # identical (normalized-plan-hash equality over all registry queries,
-# recorded with commit af4cae8 as
-# plans/r09/load_table_memo_plan_identity.json). No RESULT is cached:
+# recorded with commit af4cae8). No RESULT is cached:
 # scans still read parquet at every execution.
 load_table = session_cached(load_table)
 

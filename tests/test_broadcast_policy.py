@@ -145,8 +145,7 @@ _ALLOWED_PINS = frozenset(
         ("operators/similarity.py", "label_centroid_distances", "cents"),
         ("operators/similarity.py", "label_consensus", "tot"),
         ("operators/similarity.py", "lsh_topk", "queries"),
-        ("operators/similarity.py", "matryoshka_recall", "approx"),
-        ("operators/similarity.py", "matryoshka_recall", "queries"),
+        ("operators/similarity.py", "matryoshka_recall", "_mrl_prefix_pairs"),
         ("operators/similarity.py", "mrr_eval", "hits"),
         ("operators/similarity.py", "ndcg_eval", "exact"),
         ("operators/similarity.py", "power_iteration_pca", "mx"),

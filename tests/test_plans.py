@@ -184,7 +184,7 @@ _BNLJ_INTENDED = frozenset(
         "value_winsorize",            # 1-row n + percentile-bounds scalars onto the scan
         "epoch_shuffle_plan",         # 3-row epochs frame fanned onto the doc scan
         "similarity_bq_topk",         # ≤20-row packed-code query set × corpus codes
-        "similarity_matryoshka_recall",  # exact baseline twice: queries × corpus
+        "similarity_matryoshka_recall",  # exact and prefix top-k: queries × corpus each
         "orders_aging_buckets",       # 1-row as-of scalar onto the filtered scan
         "sketch_histogram_quantiles",  # 1-row bounds + ≤1024-row cum-histogram scalars
         "t_closeness_audit",          # ≤|bands|-row global distribution onto QI groups

@@ -1,15 +1,17 @@
 """Checkpoint/state introspection tests.
 
-Half of these run against the REFERENCE's own committed checkpoint
-(`/root/reference/checkpoint`, the real 2021 Kafka-cluster run) and pin
-the exact numbers BASELINE.md derived from those artifacts by hand —
-the module must reproduce the hand analysis. The other half build a
-fresh stateful checkpoint and read its keyed state back through
-Spark's statestore source.
+Half of these read a Kafka-source checkpoint and pin the exact numbers
+BASELINE.md derived by hand from the REFERENCE's own committed
+checkpoint (``REF_CKPT``, the real 2021 Kafka-cluster run): the module
+must reproduce the hand analysis. Each runs twice: on a synthetic
+checkpoint written here with those numbers (offsets/, commits/ and
+sources/ only), and on the reference checkpoint when it is present. The other half build a fresh stateful checkpoint and read
+its keyed state back through Spark's statestore source.
 """
 
 from __future__ import annotations
 
+import json
 from pathlib import Path
 
 import pytest
@@ -31,17 +33,63 @@ from big_data_2021_spark_streaming_spark.streaming.state_inspect import (
 
 REF_CKPT = "/root/reference/checkpoint"
 
-needs_reference = pytest.mark.skipif(
-    not Path(REF_CKPT).is_dir(), reason="reference checkpoint not present"
-)
+# BASELINE.md's numbers for the reference run: topic all_events,
+# partition 0 starts at 21726; 13 planned batches whose end offsets
+# climb to 21861 (batch 0 ends at 21727, batch 12 covers 21849-21861);
+# batches 0-11 committed; 97,032 ms first to last with 6.9-10.4 s gaps
+_START = 21726
+_ENDS = [21727, 21739, *range(21750, 21850, 11), 21861]
+_GAPS_MS = [6_900, 10_400, *[7_973] * 8, 7_974, 7_974]
+_T0_MS = 1_623_196_023_000
+_CONF = {
+    "spark.sql.shuffle.partitions": "200",
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state."
+        "HDFSBackedStateStoreProvider"
+    ),
+}
 
 
-@needs_reference
-def test_reference_offsets_log(spark):
+def _write_checkpoint(root: Path) -> None:
+    """The offsets/commits write-ahead logs and the Kafka source's
+    initial-offset file in Spark's on-disk format: a version line, then
+    JSON (the source file starts with the 0 byte Kafka's log writes)."""
+    for d in ("offsets", "commits", "sources/0"):
+        (root / d).mkdir(parents=True)
+    ts = _T0_MS
+    for batch, end in enumerate(_ENDS):
+        if batch:
+            ts += _GAPS_MS[batch - 1]
+        meta = {"batchWatermarkMs": 0, "batchTimestampMs": ts, "conf": _CONF}
+        (root / "offsets" / str(batch)).write_text(
+            "v1\n" + json.dumps(meta) + "\n"
+            + json.dumps({"all_events": {"0": end}})
+        )
+        if batch < len(_ENDS) - 1:
+            (root / "commits" / str(batch)).write_text(
+                'v1\n{"nextBatchWatermarkMs":0}'
+            )
+    (root / "sources" / "0" / "0").write_text(
+        "\x00v1\n" + json.dumps({"all_events": {"0": _START}})
+    )
+
+
+@pytest.fixture(scope="module", params=["synthetic", "reference"])
+def kafka_ckpt(request, tmp_path_factory) -> str:
+    if request.param == "reference":
+        if not Path(REF_CKPT).is_dir():
+            pytest.skip("reference checkpoint not present")
+        return REF_CKPT
+    root = tmp_path_factory.mktemp("kafka_ckpt")
+    _write_checkpoint(root)
+    return str(root)
+
+
+def test_offsets_log(spark, kafka_ckpt):
     """BASELINE.md rows 'micro-batches recorded' and 'watermark
     advance': 13 planned batches (0–12), batchWatermarkMs pinned 0 on
     every one (the stateless Q2 run), Spark 3.1.2 conf captured."""
-    rows = {r.batch_id: r for r in checkpoint_offsets(spark, REF_CKPT).collect()}
+    rows = {r.batch_id: r for r in checkpoint_offsets(spark, kafka_ckpt).collect()}
     assert sorted(rows) == list(range(13))
     assert all(r.batch_watermark_ms == 0 for r in rows.values())
     assert rows[0].conf["spark.sql.shuffle.partitions"] == "200"
@@ -52,14 +100,13 @@ def test_reference_offsets_log(spark):
     assert all(len(r.sources) == 1 for r in rows.values())
 
 
-@needs_reference
-def test_reference_progress_report(spark):
+def test_progress_report(spark, kafka_ckpt):
     """BASELINE.md rows 'wall-clock span' and 'mean batch cadence':
     97.032 s first→last planned batch, gaps 6.9–10.4 s; batches 0–11
     committed, batch 12 planned but never committed (the run was
     stopped mid-batch — the batch that would replay on restart)."""
     rows = sorted(
-        checkpoint_progress_report(spark, REF_CKPT).collect(),
+        checkpoint_progress_report(spark, kafka_ckpt).collect(),
         key=lambda r: r.batch_id,
     )
     assert rows[-1].batch_timestamp_ms - rows[0].batch_timestamp_ms == 97_032
@@ -71,14 +118,13 @@ def test_reference_progress_report(spark):
     assert committed[12] is False
 
 
-@needs_reference
-def test_reference_kafka_ingest_ledger(spark):
+def test_kafka_ingest_ledger(spark, kafka_ckpt):
     """BASELINE.md row 'records processed': single-partition topic
     ``all_events`` ends at offset 21861; batches 1–12 ingested 134
     records between them (batch 0's own 1-record delta lives in
     sources/, outside the offsets log, hence NULL)."""
     rows = sorted(
-        kafka_batch_records(spark, REF_CKPT).collect(),
+        kafka_batch_records(spark, kafka_ckpt).collect(),
         key=lambda r: r.batch_id,
     )
     assert {r.topic for r in rows} == {"all_events"}
@@ -134,18 +180,16 @@ def test_state_read_matches_query_output(spark, tmp_path):
 # --- WAL restore → resume point → batch replay (reference fidelity) ---
 
 
-@needs_reference
-def test_reference_source_start(spark):
+def test_source_start(spark, kafka_ckpt):
     """sources/0/0 is the stream's pre-batch-0 left edge: the real run
     started the all_events topic at offset 21726."""
-    rows = kafka_source_start(spark, REF_CKPT).collect()
+    rows = kafka_source_start(spark, kafka_ckpt).collect()
     assert [(r.topic, r.partition, r.start_offset) for r in rows] == [
         ("all_events", 0, 21726)
     ]
 
 
-@needs_reference
-def test_reference_replay_plan_rebuilds_every_batch_range(spark):
+def test_replay_plan_rebuilds_every_batch_range(spark, kafka_ckpt):
     """The WAL arithmetic a restarted MicroBatchExecution performs:
     every batch's (start, end] range from consecutive end-offsets,
     batch 0 anchored at sources/0/0. Pins the resume point — batch 12
@@ -153,7 +197,7 @@ def test_reference_replay_plan_rebuilds_every_batch_range(spark):
     is the batch a restart replays — and BASELINE.md's 135-record run
     total."""
     plan = {
-        r.batch_id: r for r in replay_batch_plan(spark, REF_CKPT).collect()
+        r.batch_id: r for r in replay_batch_plan(spark, kafka_ckpt).collect()
     }
     assert sorted(plan) == list(range(13))
     b0 = plan[0]
@@ -169,9 +213,8 @@ def test_reference_replay_plan_rebuilds_every_batch_range(spark):
     assert sum(r.records for r in plan.values()) == 135
 
 
-@needs_reference
-def test_reference_replay_batch_executes_the_resume_point(spark):
-    """EXECUTES against the reference's artifacts: a surrogate record
+def test_replay_batch_executes_the_resume_point(spark, kafka_ckpt):
+    """EXECUTES against the checkpoint's WAL: a surrogate record
     log spans the topic's full offset range (Kafka retention outlived
     the records, so payloads are deterministic stand-ins keyed by
     offset), and replaying the uncommitted batch must select EXACTLY
@@ -183,19 +226,18 @@ def test_reference_replay_batch_executes_the_resume_point(spark):
         F.col("id").alias("offset"),
         F.concat(F.lit("evt-"), F.col("id")).alias("value"),
     )
-    replayed = replay_batch(spark, REF_CKPT, records, batch_id=12)
+    replayed = replay_batch(spark, kafka_ckpt, records, batch_id=12)
     got = sorted(r.offset for r in replayed.collect())
     assert got == list(range(21849, 21861))
     agg = replayed.groupBy("topic").count().collect()
     assert (agg[0]["topic"], agg[0]["count"]) == ("all_events", 12)
     # the WAL arithmetic is idempotent: an already-committed batch
     # rebuilds its exact range too (exactly-once replay semantics)
-    b0 = replay_batch(spark, REF_CKPT, records, batch_id=0).collect()
+    b0 = replay_batch(spark, kafka_ckpt, records, batch_id=0).collect()
     assert [r.offset for r in b0] == [21726]
 
 
-@needs_reference
-def test_reference_replay_feeds_the_reference_pipeline(spark):
+def test_replay_feeds_the_reference_pipeline(spark, kafka_ckpt):
     """The full restore story: rebuild the uncommitted batch from the
     WAL, then run the reference's own Q1/Q2 lineage over exactly that
     record set — RSVP-shaped payloads keyed by offset, US rows on even
@@ -237,7 +279,7 @@ def test_reference_replay_feeds_the_reference_pipeline(spark):
         ],
         "topic STRING, partition INT, offset LONG, value STRING, timestamp STRING",
     )
-    replayed = replay_batch(spark, REF_CKPT, records, batch_id=12)
+    replayed = replay_batch(spark, kafka_ckpt, records, batch_id=12)
     q1 = q1_us_meetups(replayed, mode="normalized").collect()
     assert sorted(r.rsvp_id for r in q1) == [
         o for o in range(21849, 21861) if o % 2 == 0
