@@ -411,19 +411,7 @@ ORACLES["curation_keep_list"] = f"""
         WHERE ({_dedup._MATCHES}) / {float(_dedup.NUM_PERM)}
               >= {_dedup.EST_THRESHOLD}
     ),
-    edges AS (
-        SELECT doc_id_a AS src, doc_id_b AS dst FROM pairs
-        UNION ALL
-        SELECT doc_id_b, doc_id_a FROM pairs
-    ),
-    reach(doc_id, label) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.src, r.label FROM edges e JOIN reach r ON r.doc_id = e.dst
-    ),
-    comp AS (
-        SELECT doc_id, MIN(label) AS cluster_id FROM reach GROUP BY doc_id
-    ),
+    {_dedup._COMPONENTS_CTE},
     {_QUALITY_CTE}
     SELECT d.doc_id,
            d.lang,
@@ -468,8 +456,11 @@ def _multisignal_sql() -> str:
 
 ORACLES["curation_multisignal_gate"] = _multisignal_sql()
 
-ORACLES["decontaminate_overlap"] = f"""
-    WITH pos AS (
+
+def _decon_grams_sql(keys: str) -> str:
+    """``pos`` and ``grams``: the distinct (``keys``, DECON_NGRAM-token
+    gram) rows of every document, as the head of a WITH list."""
+    return f"""pos AS (
         SELECT doc_id, source,
                generate_subscripts(toks, 1) AS pos,
                unnest(toks) AS tok
@@ -480,7 +471,7 @@ ORACLES["decontaminate_overlap"] = f"""
         )
     ),
     grams AS (
-        SELECT DISTINCT doc_id, source, gram FROM (
+        SELECT DISTINCT {keys}, gram FROM (
             SELECT doc_id, source,
                    concat_ws(' ', tok,
                              {", ".join(f"lead(tok, {i}) OVER w" for i in range(1, DECON_NGRAM))}) AS gram,
@@ -488,7 +479,11 @@ ORACLES["decontaminate_overlap"] = f"""
             FROM pos WHERE tok <> ''
             WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
         ) WHERE _last IS NOT NULL
-    ),
+    )"""
+
+
+ORACLES["decontaminate_overlap"] = f"""
+    WITH {_decon_grams_sql("doc_id, source")},
     eval_grams AS (
         SELECT DISTINCT gram FROM grams WHERE source = '{EVAL_SOURCE}'
     ),
@@ -548,26 +543,7 @@ ORACLES["corpus_source_minhash"] = f"""
 """
 
 ORACLES["corpus_cross_source_overlap"] = f"""
-    WITH pos AS (
-        SELECT doc_id, source,
-               generate_subscripts(toks, 1) AS pos,
-               unnest(toks) AS tok
-        FROM (
-            SELECT doc_id, source,
-                   regexp_split_to_array(trim(text), '\\s+') AS toks
-            FROM documents
-        )
-    ),
-    grams AS (
-        SELECT DISTINCT source, gram FROM (
-            SELECT doc_id, source,
-                   concat_ws(' ', tok,
-                             {", ".join(f"lead(tok, {i}) OVER w" for i in range(1, DECON_NGRAM))}) AS gram,
-                   lead(tok, {DECON_NGRAM - 1}) OVER w AS _last
-            FROM pos WHERE tok <> ''
-            WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        ) WHERE _last IS NOT NULL
-    ),
+    WITH {_decon_grams_sql("source")},
     sizes AS (
         SELECT source, CAST(COUNT(*) AS BIGINT) AS n_grams
         FROM grams GROUP BY source

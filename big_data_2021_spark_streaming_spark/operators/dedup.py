@@ -316,16 +316,22 @@ def _char_gram_rows(
     ).distinct()
 
 
-def _pair_gram_sets(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """(pairs, gram_sets): the LSH candidate pairs and the persisted
-    per-candidate-doc gram-set frame — ONE definition shared by
-    ngram_jaccard and gram_containment (the SQL twin is
-    _PAIR_GRAMS_CTE). Sharing the construction, not just relying on
-    CacheManager plan-matching across two hand-maintained copies,
-    guarantees both consumers read the same materialization even if
-    the lineage changes later.
+def _pair_gram_counts(
+    spark: SparkSession, sf_dir: str, *counts: str
+) -> DataFrame:
+    """(doc_id_a, doc_id_b, n_inter, *counts) over the LSH candidate
+    pairs ⋈ the persisted per-candidate-doc gram-set frame, where
+    ``counts`` names any of ``n_union``, ``n_a`` and ``n_b`` — ONE
+    definition shared by ngram_jaccard and gram_containment (the SQL
+    twin is _PAIR_GRAMS_CTE). Sharing the construction, not just
+    relying on CacheManager plan-matching across two hand-maintained
+    copies, guarantees both consumers read the same materialization
+    even if the lineage changes later.
+
+    Left joins + coalesce so a candidate doc whose normalized text is
+    shorter than one gram (zero grams, hence no gram_sets row) keeps
+    its pair; union = 0 (both sides empty) then yields NULL in both
+    engines rather than Spark-drop vs DuckDB-NaN divergence.
 
     Gram sets are assembled relationally: the linear explode hashes
     each position once (see _char_gram_rows — a transform() lambda
@@ -336,7 +342,27 @@ def _pair_gram_sets(
     ~4 s at sf0.1 for the exploded pairs×grams formulation, and that
     blow-up scales with the near-dup rate)."""
     pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_id_a", "doc_id_b")
-    return pairs, _candidate_gram_sets(spark, sf_dir)
+    gram_sets = _candidate_gram_sets(spark, sf_dir)
+    a = gram_sets.select(
+        F.col("doc_id").alias("doc_id_a"), F.col("grams").alias("g_a")
+    )
+    b = gram_sets.select(
+        F.col("doc_id").alias("doc_id_b"), F.col("grams").alias("g_b")
+    )
+    n_inter = F.coalesce(F.size(F.array_intersect("g_a", "g_b")), F.lit(0))
+    n_a = F.coalesce(F.size("g_a"), F.lit(0))
+    n_b = F.coalesce(F.size("g_b"), F.lit(0))
+    cols = {"n_union": n_a + n_b - n_inter, "n_a": n_a, "n_b": n_b}
+    return (
+        pairs.join(a, "doc_id_a", "left")
+        .join(b, "doc_id_b", "left")
+        .select(
+            "doc_id_a",
+            "doc_id_b",
+            n_inter.cast("bigint").alias("n_inter"),
+            *(cols[c].cast("bigint").alias(c) for c in counts),
+        )
+    )
 
 
 def _candidate_gram_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -362,40 +388,13 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage is an equi-join or aggregation the planner can partition,
     and candidate generation stays LSH-bounded (never all-pairs).
     """
-    pairs, gram_sets = _pair_gram_sets(spark, sf_dir)
-    a = gram_sets.select(
-        F.col("doc_id").alias("doc_id_a"), F.col("grams").alias("g_a")
-    )
-    b = gram_sets.select(
-        F.col("doc_id").alias("doc_id_b"), F.col("grams").alias("g_b")
-    )
-    # left joins + coalesce so a candidate doc whose normalized text is
-    # shorter than one gram (zero grams, hence no gram_sets row) keeps
-    # its pair; union = 0 (both sides empty) yields NULL in both
-    # engines rather than Spark-drop vs DuckDB-NaN divergence
-    n_inter = F.coalesce(F.size(F.array_intersect("g_a", "g_b")), F.lit(0))
-    n_a = F.coalesce(F.size("g_a"), F.lit(0))
-    n_b = F.coalesce(F.size("g_b"), F.lit(0))
-    union = n_a + n_b - n_inter
-    # a zero union yields NULL in both engines, preserving the WHEN
-    # semantics
-    return (
-        pairs.join(a, "doc_id_a", "left")
-        .join(b, "doc_id_b", "left")
-        .select(
-            "doc_id_a",
-            "doc_id_b",
-            n_inter.cast("bigint").alias("n_inter"),
-            union.cast("bigint").alias("n_union"),
-        )
-        .select(
-            "doc_id_a",
-            "doc_id_b",
-            F.when(
-                F.col("n_union") > 0,
-                F.expr(half_up("n_inter * 1000000", "n_union")) / F.lit(1e6),
-            ).alias("ngram_jaccard"),
-        )
+    return _pair_gram_counts(spark, sf_dir, "n_union").select(
+        "doc_id_a",
+        "doc_id_b",
+        F.when(
+            F.col("n_union") > 0,
+            F.expr(half_up("n_inter * 1000000", "n_union")) / F.lit(1e6),
+        ).alias("ngram_jaccard"),
     )
 
 
@@ -405,40 +404,19 @@ def gram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-inside-doc case (a short document fully quoted inside a long
     one scores low Jaccard but containment ≈ 1), which is exactly the
     boilerplate/quotation signal a curation pipeline keys on. Shares
-    _pair_gram_sets with ngram_jaccard — one persisted gram-set
+    _pair_gram_counts with ngram_jaccard — one persisted gram-set
     materialization, so the marginal cost is one pair join."""
-    pairs, gram_sets = _pair_gram_sets(spark, sf_dir)
-    a = gram_sets.select(
-        F.col("doc_id").alias("doc_id_a"), F.col("grams").alias("g_a")
-    )
-    b = gram_sets.select(
-        F.col("doc_id").alias("doc_id_b"), F.col("grams").alias("g_b")
-    )
-    n_inter = F.coalesce(F.size(F.array_intersect("g_a", "g_b")), F.lit(0))
-    n_a = F.coalesce(F.size("g_a"), F.lit(0))
-    n_b = F.coalesce(F.size("g_b"), F.lit(0))
-    return (
-        pairs.join(a, "doc_id_a", "left")
-        .join(b, "doc_id_b", "left")
-        .select(
-            "doc_id_a",
-            "doc_id_b",
-            n_inter.cast("bigint").alias("n_inter"),
-            n_a.cast("bigint").alias("n_a"),
-            n_b.cast("bigint").alias("n_b"),
-        )
-        .select(
-            "doc_id_a",
-            "doc_id_b",
-            F.when(
-                F.col("n_a") > 0,
-                F.expr(half_up("n_inter * 1000000", "n_a")) / F.lit(1e6),
-            ).alias("contain_a_in_b"),
-            F.when(
-                F.col("n_b") > 0,
-                F.expr(half_up("n_inter * 1000000", "n_b")) / F.lit(1e6),
-            ).alias("contain_b_in_a"),
-        )
+    return _pair_gram_counts(spark, sf_dir, "n_a", "n_b").select(
+        "doc_id_a",
+        "doc_id_b",
+        F.when(
+            F.col("n_a") > 0,
+            F.expr(half_up("n_inter * 1000000", "n_a")) / F.lit(1e6),
+        ).alias("contain_a_in_b"),
+        F.when(
+            F.col("n_b") > 0,
+            F.expr(half_up("n_inter * 1000000", "n_b")) / F.lit(1e6),
+        ).alias("contain_b_in_a"),
     )
 
 
@@ -1080,25 +1058,70 @@ _MATCHES = " + ".join(
     f"CAST(a.mh{j} = b.mh{j} AS INTEGER)" for j in range(NUM_PERM)
 )
 
+
+def _nest(sql: str, levels: int = 1) -> str:
+    """``sql`` with every line after the first ``levels`` steps deeper."""
+    return sql.replace("\n", "\n" + "    " * levels)
+
+
+# the near-dup cut on a pair's MinHash estimate (sides ``a`` and ``b``)
+_NEAR_CUT = f"({_MATCHES}) / {float(NUM_PERM)} >= {EST_THRESHOLD}"
+# the mh joins and the cut under a candidate SELECT ... FROM cand
+_NEAR_JOIN = f"""JOIN mh a ON a.doc_id = cand.doc_id_a
+    JOIN mh b ON b.doc_id = cand.doc_id_b
+    WHERE {_NEAR_CUT}"""
+# the near-dup pairs with their estimate (the dedup_minhash_lsh result)
+_EST_PAIRS_SELECT = f"""SELECT cand.doc_id_a, cand.doc_id_b,
+           ({_MATCHES}) / {float(NUM_PERM)} AS est_jaccard
+    FROM cand
+    {_NEAR_JOIN}"""
+
 _LSH_PAIRS_SQL = f"""
     WITH {_MH_CTE},
     {_BANDS_CTE}
-    SELECT cand.doc_id_a, cand.doc_id_b,
-           ({_MATCHES}) / {float(NUM_PERM)} AS est_jaccard
-    FROM cand
-    JOIN mh a ON a.doc_id = cand.doc_id_a
-    JOIN mh b ON b.doc_id = cand.doc_id_b
-    WHERE ({_MATCHES}) / {float(NUM_PERM)} >= {EST_THRESHOLD}
+    {_EST_PAIRS_SELECT}
 """
 
-_SIMHASH_SUMS = ",\n               ".join(
-    f"sum(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS s{i}"
-    for i in range(SIMHASH_BITS)
-)
-_SIMHASH_SIG = " + ".join(
-    f"CASE WHEN s{i} >= 0 THEN CAST({2**i} AS BIGINT) ELSE 0 END"
-    for i in range(SIMHASH_BITS)
-)
+# mh, bands, cand and the near-dup ``pairs``: the head of a WITH list
+_PAIRS_CTE = f"""{_MH_CTE},
+    {_BANDS_CTE},
+    pairs AS (
+        SELECT cand.doc_id_a, cand.doc_id_b
+        FROM cand
+        {_nest(_NEAR_JOIN)}
+    )"""
+
+# the undirected pair graph (``edges``) and its connected components by
+# recursive CTE: cluster_id = min doc_id reachable (needs WITH RECURSIVE)
+_EDGES_CTE = """edges AS (
+        SELECT doc_id_a AS src, doc_id_b AS dst FROM pairs
+        UNION ALL
+        SELECT doc_id_b, doc_id_a FROM pairs
+    )"""
+_COMPONENTS_CTE = f"""{_EDGES_CTE},
+    reach(doc_id, label) AS (
+        SELECT src, src FROM edges
+        UNION
+        SELECT e.src, r.label FROM edges e JOIN reach r ON r.doc_id = e.dst
+    ),
+    comp AS (
+        SELECT doc_id, MIN(label) AS cluster_id FROM reach GROUP BY doc_id
+    )"""
+
+
+def _simhash_sums_sql(bits: int) -> str:
+    return ",\n               ".join(
+        f"sum(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS s{i}"
+        for i in range(bits)
+    )
+
+
+def _simhash_sig_sql(bits: int) -> str:
+    return " + ".join(
+        f"CASE WHEN s{i} >= 0 THEN CAST({2**i} AS BIGINT) ELSE 0 END"
+        for i in range(bits)
+    )
+
 
 ORACLES: dict[str, str] = {
     "dedup_exact": f"""
@@ -1123,9 +1146,7 @@ ORACLES: dict[str, str] = {
         pairs AS (
             SELECT cand.doc_id_a, cand.doc_id_b
             FROM cand
-            JOIN mh a ON a.doc_id = cand.doc_id_a
-            JOIN mh b ON b.doc_id = cand.doc_id_b
-            WHERE ({_MATCHES}) / {float(NUM_PERM)} >= {EST_THRESHOLD}
+            {_nest(_NEAR_JOIN, 2)}
         ),
         ts AS (SELECT doc_id, {_TOK_SQL} AS tok FROM documents)
         SELECT p.doc_id_a, p.doc_id_b,
@@ -1146,31 +1167,35 @@ ORACLES: dict[str, str] = {
         ),
         sums AS (
             SELECT doc_id,
-               {_SIMHASH_SUMS}
+               {_simhash_sums_sql(SIMHASH_BITS)}
             FROM exploded GROUP BY doc_id
         )
-        SELECT doc_id, {_SIMHASH_SIG} AS simhash FROM sums
+        SELECT doc_id, {_simhash_sig_sql(SIMHASH_BITS)} AS simhash FROM sums
     """,
     "dedup_embedding_nn": None,  # assembled below (needs similarity hyperplanes)
 }
 
-ORACLES["dedup_simhash_hamming"] = f"""
+
+def _simhash_hamming_sql(bits: int, band_bits: int, near: int) -> str:
+    """Hamming-distance histogram of the SimHash pairs that share a
+    ``band_bits``-wide band of the ``bits``-bit signature."""
+    return f"""
     WITH exploded AS (
         SELECT doc_id, {h60_sql('sh')} AS h
         FROM (SELECT doc_id, unnest({_TOK_SQL}) AS sh FROM documents)
     ),
     sums AS (
         SELECT doc_id,
-           {_SIMHASH_SUMS}
+           {_simhash_sums_sql(bits)}
         FROM exploded GROUP BY doc_id
     ),
-    sigs AS (SELECT doc_id, {_SIMHASH_SIG} AS simhash FROM sums),
+    sigs AS (SELECT doc_id, {_simhash_sig_sql(bits)} AS simhash FROM sums),
     bands AS (
         SELECT doc_id, simhash, band_id,
-               (simhash >> (band_id * {SIMHASH_BAND_BITS}))
-                   & {(1 << SIMHASH_BAND_BITS) - 1} AS bv
+               (simhash >> (band_id * {band_bits}))
+                   & {(1 << band_bits) - 1} AS bv
         FROM sigs, (
-            SELECT unnest([{", ".join(str(b) for b in range(SIMHASH_BITS // SIMHASH_BAND_BITS))}])
+            SELECT unnest([{", ".join(str(b) for b in range(bits // band_bits))}])
                 AS band_id
         )
     ),
@@ -1183,52 +1208,17 @@ ORACLES["dedup_simhash_hamming"] = f"""
          AND a.doc_id < b.doc_id
     )
     SELECT hamming, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           hamming <= {SIMHASH_NEAR} AS is_near
+           hamming <= {near} AS is_near
     FROM pairs GROUP BY hamming ORDER BY hamming
 """
 
 
-_SIMHASH_WIDE_SUMS = ",\n               ".join(
-    f"sum(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS s{i}"
-    for i in range(SIMHASH_WIDE_BITS)
+ORACLES["dedup_simhash_hamming"] = _simhash_hamming_sql(
+    SIMHASH_BITS, SIMHASH_BAND_BITS, SIMHASH_NEAR
 )
-_SIMHASH_WIDE_SIG = " + ".join(
-    f"CASE WHEN s{i} >= 0 THEN CAST({2**i} AS BIGINT) ELSE 0 END"
-    for i in range(SIMHASH_WIDE_BITS)
+ORACLES["dedup_simhash_wide"] = _simhash_hamming_sql(
+    SIMHASH_WIDE_BITS, SIMHASH_WIDE_BAND_BITS, SIMHASH_WIDE_NEAR
 )
-
-ORACLES["dedup_simhash_wide"] = f"""
-    WITH exploded AS (
-        SELECT doc_id, {h60_sql('sh')} AS h
-        FROM (SELECT doc_id, unnest({_TOK_SQL}) AS sh FROM documents)
-    ),
-    sums AS (
-        SELECT doc_id,
-           {_SIMHASH_WIDE_SUMS}
-        FROM exploded GROUP BY doc_id
-    ),
-    sigs AS (SELECT doc_id, {_SIMHASH_WIDE_SIG} AS simhash FROM sums),
-    bands AS (
-        SELECT doc_id, simhash, band_id,
-               (simhash >> (band_id * {SIMHASH_WIDE_BAND_BITS}))
-                   & {(1 << SIMHASH_WIDE_BAND_BITS) - 1} AS bv
-        FROM sigs, (
-            SELECT unnest([{", ".join(str(b) for b in range(SIMHASH_WIDE_BITS // SIMHASH_WIDE_BAND_BITS))}])
-                AS band_id
-        )
-    ),
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS da, b.doc_id AS db,
-               CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT)
-                   AS hamming
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.bv = b.bv
-         AND a.doc_id < b.doc_id
-    )
-    SELECT hamming, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           hamming <= {SIMHASH_WIDE_NEAR} AS is_near
-    FROM pairs GROUP BY hamming ORDER BY hamming
-"""
 
 ORACLES["dedup_minhash_cardinality"] = f"""
     WITH dh AS (
@@ -1316,15 +1306,7 @@ _NGRAMS_SQL = f"""list_distinct(list_transform(
 #   dead work), and
 # - the normalization is hoisted into its own CTE column so the gram
 #   lambda doesn't re-run the regexp per position (see _NGRAMS_SQL)
-_PAIR_GRAMS_CTE = f"""{_MH_CTE},
-    {_BANDS_CTE},
-    pairs AS (
-        SELECT cand.doc_id_a, cand.doc_id_b
-        FROM cand
-        JOIN mh a ON a.doc_id = cand.doc_id_a
-        JOIN mh b ON b.doc_id = cand.doc_id_b
-        WHERE ({_MATCHES}) / {float(NUM_PERM)} >= {EST_THRESHOLD}
-    ),
+_PAIR_GRAMS_CTE = f"""{_PAIRS_CTE},
     nrm AS (
         SELECT doc_id,
                lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS norm
@@ -1374,28 +1356,8 @@ ORACLES["dedup_containment"] = f"""
 # the undirected pair graph; documents outside every pair are their own
 # singleton cluster via the left join
 ORACLES["dedup_clusters"] = f"""
-    WITH RECURSIVE {_MH_CTE},
-    {_BANDS_CTE},
-    pairs AS (
-        SELECT cand.doc_id_a, cand.doc_id_b
-        FROM cand
-        JOIN mh a ON a.doc_id = cand.doc_id_a
-        JOIN mh b ON b.doc_id = cand.doc_id_b
-        WHERE ({_MATCHES}) / {float(NUM_PERM)} >= {EST_THRESHOLD}
-    ),
-    edges AS (
-        SELECT doc_id_a AS src, doc_id_b AS dst FROM pairs
-        UNION ALL
-        SELECT doc_id_b, doc_id_a FROM pairs
-    ),
-    reach(doc_id, label) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.src, r.label FROM edges e JOIN reach r ON r.doc_id = e.dst
-    ),
-    comp AS (
-        SELECT doc_id, MIN(label) AS cluster_id FROM reach GROUP BY doc_id
-    )
+    WITH RECURSIVE {_PAIRS_CTE},
+    {_COMPONENTS_CTE}
     SELECT d.doc_id,
            COALESCE(c.cluster_id, d.doc_id) AS cluster_id,
            d.doc_id = COALESCE(c.cluster_id, d.doc_id) AS is_canonical
@@ -1406,12 +1368,7 @@ ORACLES["dedup_lsh_calibration"] = f"""
     WITH {_MH_CTE},
     {_BANDS_CTE},
     pairs AS (
-        SELECT cand.doc_id_a, cand.doc_id_b,
-               ({_MATCHES}) / {float(NUM_PERM)} AS est_jaccard
-        FROM cand
-        JOIN mh a ON a.doc_id = cand.doc_id_a
-        JOIN mh b ON b.doc_id = cand.doc_id_b
-        WHERE ({_MATCHES}) / {float(NUM_PERM)} >= {EST_THRESHOLD}
+        {_nest(_EST_PAIRS_SELECT)}
     ),
     ts AS (SELECT doc_id, {_TOK_SQL} AS tok FROM documents),
     j AS (
@@ -1453,7 +1410,7 @@ ORACLES["dedup_incremental"] = f"""
         FROM xcand
         JOIN mh a ON a.doc_id = xcand.new_id
         JOIN mh b ON b.doc_id = xcand.old_id
-        WHERE ({_MATCHES}) / {float(NUM_PERM)} >= {EST_THRESHOLD}
+        WHERE {_NEAR_CUT}
     ),
     best AS (
         SELECT new_id, old_id, est_jaccard FROM (
@@ -1475,28 +1432,8 @@ ORACLES["dedup_incremental"] = f"""
 _FP_SQL = fingerprint_sql("d.text")
 
 ORACLES["dedup_rate_report"] = f"""
-    WITH RECURSIVE {_MH_CTE},
-    {_BANDS_CTE},
-    pairs AS (
-        SELECT cand.doc_id_a, cand.doc_id_b
-        FROM cand
-        JOIN mh a ON a.doc_id = cand.doc_id_a
-        JOIN mh b ON b.doc_id = cand.doc_id_b
-        WHERE ({_MATCHES}) / {float(NUM_PERM)} >= {EST_THRESHOLD}
-    ),
-    edges AS (
-        SELECT doc_id_a AS src, doc_id_b AS dst FROM pairs
-        UNION ALL
-        SELECT doc_id_b, doc_id_a FROM pairs
-    ),
-    reach(doc_id, label) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.src, r.label FROM edges e JOIN reach r ON r.doc_id = e.dst
-    ),
-    comp AS (
-        SELECT doc_id, MIN(label) AS cluster_id FROM reach GROUP BY doc_id
-    )
+    WITH RECURSIVE {_PAIRS_CTE},
+    {_COMPONENTS_CTE}
     SELECT d.source,
            COUNT(*) AS n_docs,
            COUNT(DISTINCT {_FP_SQL}) AS n_unique_exact,
@@ -1801,6 +1738,16 @@ def pagerank_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# the head of the pagerank, triangle and k-core oracles
+_GRAPH_PAIRS_SQL = f"""
+    WITH {_MH_CTE},
+    {_BANDS_CTE},
+    pairs AS (
+        SELECT cand.doc_id_a, cand.doc_id_b FROM cand
+        {_nest(_NEAR_JOIN)}
+    )"""
+
+
 def _pagerank_sql() -> str:
     base = f"(15 * {PR_SCALE}) // (100 * n.n_g)"
     steps = []
@@ -1820,20 +1767,8 @@ def _pagerank_sql() -> str:
         )
         prev = f"r{i}"
     chained = ",\n    ".join(steps)
-    return f"""
-    WITH {_MH_CTE},
-    {_BANDS_CTE},
-    pairs AS (
-        SELECT cand.doc_id_a, cand.doc_id_b FROM cand
-        JOIN mh a ON a.doc_id = cand.doc_id_a
-        JOIN mh b ON b.doc_id = cand.doc_id_b
-        WHERE ({_MATCHES}) / {float(NUM_PERM)} >= {EST_THRESHOLD}
-    ),
-    edges AS (
-        SELECT doc_id_a AS src, doc_id_b AS dst FROM pairs
-        UNION ALL
-        SELECT doc_id_b, doc_id_a FROM pairs
-    ),
+    return f"""{_GRAPH_PAIRS_SQL},
+    {_EDGES_CTE},
     deg AS (
         SELECT src AS doc_id, CAST(COUNT(*) AS BIGINT) AS deg
         FROM edges GROUP BY src
@@ -1908,15 +1843,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _triangles_sql() -> str:
-    return f"""
-    WITH {_MH_CTE},
-    {_BANDS_CTE},
-    pairs AS (
-        SELECT cand.doc_id_a, cand.doc_id_b FROM cand
-        JOIN mh a ON a.doc_id = cand.doc_id_a
-        JOIN mh b ON b.doc_id = cand.doc_id_b
-        WHERE ({_MATCHES}) / {float(NUM_PERM)} >= {EST_THRESHOLD}
-    ),
+    return f"""{_GRAPH_PAIRS_SQL},
     tri AS (
         SELECT e1.doc_id_a AS a, e1.doc_id_b AS b, e2.doc_id_b AS c
         FROM pairs e1
@@ -2020,20 +1947,8 @@ def _kcore_sql() -> str:
         )
         prev_surv = f"surv{i}"
     chained = ",\n    ".join(stages)
-    return f"""
-    WITH {_MH_CTE},
-    {_BANDS_CTE},
-    pairs AS (
-        SELECT cand.doc_id_a, cand.doc_id_b FROM cand
-        JOIN mh a ON a.doc_id = cand.doc_id_a
-        JOIN mh b ON b.doc_id = cand.doc_id_b
-        WHERE ({_MATCHES}) / {float(NUM_PERM)} >= {EST_THRESHOLD}
-    ),
-    edges AS (
-        SELECT doc_id_a AS src, doc_id_b AS dst FROM pairs
-        UNION ALL
-        SELECT doc_id_b, doc_id_a FROM pairs
-    ),
+    return f"""{_GRAPH_PAIRS_SQL},
+    {_EDGES_CTE},
     {chained}
     SELECT e.src AS doc_id, CAST(COUNT(*) AS BIGINT) AS core_deg
     FROM edges e

@@ -1131,8 +1131,11 @@ _SIG_SQL = signature_sql()
 # CTE text the oracles below share verbatim. Each is pasted in where the
 # oracle needs it, so two oracles cannot drift apart on one step.
 
-# exact milli-unit components, one row per (vec_id, gd)
-_COMP_CTE = """comp0 AS (
+
+def _comp_cte(where: str = "") -> str:
+    """Exact milli-unit components, one row per (vec_id, gd) that
+    passes ``where``."""
+    return f"""comp0 AS (
         SELECT vec_id,
                unnest(range(0, len(embedding))) AS gd,
                unnest(CAST(embedding AS DOUBLE[])) AS x
@@ -1141,8 +1144,11 @@ _COMP_CTE = """comp0 AS (
     comp AS (
         SELECT vec_id, CAST(gd AS INTEGER) AS gd,
                CAST(ROUND(x * 1000) AS BIGINT) AS xq
-        FROM comp0
+        FROM comp0{where}
     )"""
+
+
+_COMP_CTE = _comp_cte()
 # the same CTE one nesting level deeper
 _COMP_CTE_NESTED = _COMP_CTE.replace("\n", "\n    ")
 
@@ -1163,6 +1169,25 @@ _IVF_ASSIGN_CTE = f"""v AS (
                        ORDER BY list_cosine_similarity(v.v, c.c) DESC,
                                 c.cell_id) AS rn
             FROM v CROSS JOIN cells c
+        ) WHERE rn = 1
+    )"""
+# the same assignment carrying each vector ``v`` (cells in ``cents``)
+_IVF_ASSIGN_V_CTE = f"""v AS (
+        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+    ),
+    cents AS (
+        SELECT vec_id AS cell_id, v AS c FROM v
+        WHERE vec_id >= {N_QUERIES} AND vec_id < {N_QUERIES + NLIST}
+    ),
+    assigned AS (
+        SELECT vec_id, v, cell_id FROM (
+            SELECT v.vec_id, v.v, c.cell_id,
+                   row_number() OVER (
+                       PARTITION BY v.vec_id
+                       ORDER BY list_cosine_similarity(v.v, c.c) DESC,
+                                c.cell_id
+                   ) AS rn
+            FROM v CROSS JOIN cents c
         ) WHERE rn = 1
     )"""
 _IVF_PROBES_CTE = f"""probes AS (
@@ -1275,24 +1300,7 @@ ORACLES["embedding_norm_stats"] = """
 """
 
 ORACLES["similarity_ivf_topk"] = f"""
-    WITH v AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    cents AS (
-        SELECT vec_id AS cell_id, v AS c FROM v
-        WHERE vec_id >= {N_QUERIES} AND vec_id < {N_QUERIES + NLIST}
-    ),
-    assigned AS (
-        SELECT vec_id, v, cell_id FROM (
-            SELECT v.vec_id, v.v, c.cell_id,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY list_cosine_similarity(v.v, c.c) DESC,
-                                c.cell_id
-                   ) AS rn
-            FROM v CROSS JOIN cents c
-        ) WHERE rn = 1
-    ),
+    WITH {_IVF_ASSIGN_V_CTE},
     probes AS (
         SELECT query_id, q, cell_id FROM (
             SELECT v.vec_id AS query_id, v.v AS q, c.cell_id,
@@ -1349,24 +1357,7 @@ ORACLES["similarity_range_search"] = f"""
 """
 
 ORACLES["similarity_diverse_topk"] = f"""
-    WITH v AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    cents AS (
-        SELECT vec_id AS cell_id, v AS c FROM v
-        WHERE vec_id >= {N_QUERIES} AND vec_id < {N_QUERIES + NLIST}
-    ),
-    assigned AS (
-        SELECT vec_id, v, cell_id FROM (
-            SELECT v.vec_id, v.v, c.cell_id,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY list_cosine_similarity(v.v, c.c) DESC,
-                                c.cell_id
-                   ) AS rn
-            FROM v CROSS JOIN cents c
-        ) WHERE rn = 1
-    ),
+    WITH {_IVF_ASSIGN_V_CTE},
     q AS (
         SELECT vec_id AS query_id, v AS qv FROM v
         WHERE vec_id < {N_QUERIES}
@@ -2132,6 +2123,22 @@ def matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# each query's TOPK neighbors by MRL_DIM-prefix cosine, over ``q``
+_MRL_TOPK_SQL = f"""SELECT query_id, neighbor_id FROM (
+            SELECT q.query_id, e.vec_id AS neighbor_id,
+                   row_number() OVER (
+                       PARTITION BY q.query_id
+                       ORDER BY list_cosine_similarity(
+                                    q.qv[1:{MRL_DIM}],
+                                    CAST(e.embedding AS DOUBLE[])[1:{MRL_DIM}]
+                                ) DESC,
+                                e.vec_id
+                   ) AS rank
+            FROM embeddings e CROSS JOIN q
+            WHERE e.vec_id <> q.query_id
+        ) WHERE rank <= {TOPK}"""
+_MRL_TOPK_SQL_NESTED = _MRL_TOPK_SQL.replace("\n", "\n    ")
+
 ORACLES["similarity_matryoshka_recall"] = f"""
     WITH q AS (
         SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
@@ -2151,19 +2158,7 @@ ORACLES["similarity_matryoshka_recall"] = f"""
         ) WHERE rank <= {TOPK}
     ),
     approx AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.query_id, e.vec_id AS neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY list_cosine_similarity(
-                                    q.qv[1:{MRL_DIM}],
-                                    CAST(e.embedding AS DOUBLE[])[1:{MRL_DIM}]
-                                ) DESC,
-                                e.vec_id
-                   ) AS rank
-            FROM embeddings e CROSS JOIN q
-            WHERE e.vec_id <> q.query_id
-        ) WHERE rank <= {TOPK}
+        {_MRL_TOPK_SQL}
     )
 {_RECALL_AT_K_SQL}"""
 
@@ -2312,17 +2307,7 @@ def _power_iteration_sql() -> str:
         prev = f"r{i}"
     chained = ",\n    ".join(stages)
     return f"""
-    WITH comp0 AS (
-        SELECT vec_id,
-               unnest(range(0, len(embedding))) AS gd,
-               unnest(CAST(embedding AS DOUBLE[])) AS x
-        FROM embeddings
-    ),
-    comp AS (
-        SELECT vec_id, CAST(gd AS INTEGER) AS gd,
-               CAST(ROUND(x * 1000) AS BIGINT) AS xq
-        FROM comp0 WHERE gd < {PCA_DIMS}
-    ),
+    WITH {_comp_cte(f" WHERE gd < {PCA_DIMS}")},
     nn AS (SELECT CAST(COUNT(DISTINCT vec_id) AS BIGINT) AS n FROM comp),
     sums AS (
         SELECT gd, CAST(SUM(xq) AS BIGINT) AS s FROM comp GROUP BY gd
@@ -2443,19 +2428,7 @@ def _recall_sweep_sql() -> str:
                 SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
                 FROM embeddings WHERE vec_id < {N_QUERIES}
             )
-            SELECT query_id, neighbor_id FROM (
-                SELECT q.query_id, e.vec_id AS neighbor_id,
-                       row_number() OVER (
-                           PARTITION BY q.query_id
-                           ORDER BY list_cosine_similarity(
-                                        q.qv[1:{MRL_DIM}],
-                                        CAST(e.embedding AS DOUBLE[])[1:{MRL_DIM}]
-                                    ) DESC,
-                                    e.vec_id
-                       ) AS rank
-                FROM embeddings e CROSS JOIN q
-                WHERE e.vec_id <> q.query_id
-            ) WHERE rank <= {TOPK}
+            {_MRL_TOPK_SQL_NESTED}
         """,
     }
     return "\nUNION ALL\n".join(

@@ -729,8 +729,8 @@ ORACLES["sketch_hll_users"] = f"""
     FROM est
 """
 
-ORACLES["sketch_hll_merge"] = f"""
-    WITH hashed AS (
+# the HLL registers (scope, bucket, rho_max) of each event type's users
+_TYPE_REGS_CTE = f"""hashed AS (
         SELECT event_type AS scope,
                {h60_seeded_sql('hllb', 'CAST(user_id AS VARCHAR)')} % {HLL_M} AS bucket,
                {h60_seeded_sql('hllv', 'CAST(user_id AS VARCHAR)')} % {1 << HLL_CAP} AS v
@@ -741,7 +741,10 @@ ORACLES["sketch_hll_merge"] = f"""
                MAX(CASE WHEN v = 0 THEN {HLL_CAP + 1}
                         ELSE {HLL_CAP + 1} - length(bin(v)) END) AS rho_max
         FROM hashed GROUP BY scope, bucket
-    ),
+    )"""
+
+ORACLES["sketch_hll_merge"] = f"""
+    WITH {_TYPE_REGS_CTE},
     all_regs AS (
         SELECT scope, bucket, rho_max FROM regs
         UNION ALL
@@ -811,18 +814,7 @@ def _hll_sum_est_sql(src: str, keys: str) -> str:
 
 
 ORACLES["sketch_hll_intersection"] = f"""
-    WITH hashed AS (
-        SELECT event_type AS scope,
-               {h60_seeded_sql('hllb', 'CAST(user_id AS VARCHAR)')} % {HLL_M} AS bucket,
-               {h60_seeded_sql('hllv', 'CAST(user_id AS VARCHAR)')} % {1 << HLL_CAP} AS v
-        FROM events
-    ),
-    regs AS (
-        SELECT scope, bucket,
-               MAX(CASE WHEN v = 0 THEN {HLL_CAP + 1}
-                        ELSE {HLL_CAP + 1} - length(bin(v)) END) AS rho_max
-        FROM hashed GROUP BY scope, bucket
-    ),
+    WITH {_TYPE_REGS_CTE},
     types AS (SELECT DISTINCT scope FROM regs),
     pairs AS (
         SELECT a.scope AS type_a, b.scope AS type_b

@@ -958,14 +958,8 @@ def lang_id_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KAPPA_HALF_UP = (
-    "CASE WHEN {a} >= 0"
-    " THEN (2 * ({a}) * 1000000 + ({b})) // (2 * ({b}))"
-    " ELSE -((2 * -({a}) * 1000000 + ({b})) // (2 * ({b}))) END"
-)
-
-ORACLES["text_lang_kappa"] = f"""
-    WITH t AS (
+# the marker-count language prediction (``pred_lang``) of every document
+_LANG_PRED_CTE = f"""t AS (
         SELECT doc_id,
                {_MARKER_COLS}
         FROM documents
@@ -978,7 +972,16 @@ ORACLES["text_lang_kappa"] = f"""
                     WHEN c_fr = greatest(c_en, c_es, c_fr, c_de) THEN 'fr'
                     ELSE 'de' END AS pred_lang
         FROM t
-    ),
+    )"""
+
+_KAPPA_HALF_UP = (
+    "CASE WHEN {a} >= 0"
+    " THEN (2 * ({a}) * 1000000 + ({b})) // (2 * ({b}))"
+    " ELSE -((2 * -({a}) * 1000000 + ({b})) // (2 * ({b}))) END"
+)
+
+ORACLES["text_lang_kappa"] = f"""
+    WITH {_LANG_PRED_CTE},
     matrix AS (
         SELECT d.lang, p.pred_lang, CAST(COUNT(*) AS BIGINT) AS n
         FROM documents d JOIN pred p USING (doc_id)
@@ -1015,20 +1018,7 @@ ORACLES["text_lang_kappa"] = f"""
 
 
 ORACLES["text_lang_confusion"] = f"""
-    WITH t AS (
-        SELECT doc_id,
-               {_MARKER_COLS}
-        FROM documents
-    ),
-    pred AS (
-        SELECT doc_id,
-               CASE WHEN greatest(c_en, c_es, c_fr, c_de) = 0 THEN 'und'
-                    WHEN c_en = greatest(c_en, c_es, c_fr, c_de) THEN 'en'
-                    WHEN c_es = greatest(c_en, c_es, c_fr, c_de) THEN 'es'
-                    WHEN c_fr = greatest(c_en, c_es, c_fr, c_de) THEN 'fr'
-                    ELSE 'de' END AS pred_lang
-        FROM t
-    ),
+    WITH {_LANG_PRED_CTE},
     matrix AS (
         SELECT d.lang, p.pred_lang, COUNT(*) AS n_docs
         FROM documents d JOIN pred p USING (doc_id)
@@ -1101,6 +1091,39 @@ def bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 NOVELTY_N = 3  # token shingle width for the novelty curve
 
 
+def _token_shingles(docs: DataFrame) -> DataFrame:
+    """Distinct (doc_id, g) rows: each document's 3-token shingles, one
+    explode row per position (docs shorter than NOVELTY_N have none)."""
+    toks = docs.select("doc_id", tokens_col(F.col("text")).alias("toks"))
+    return (
+        toks.where(F.size("toks") >= NOVELTY_N)
+        .select(
+            "doc_id",
+            F.explode(
+                F.expr(
+                    "transform(sequence(1, size(toks) - 2),"
+                    " i -> concat_ws(' ', toks[i-1], toks[i], toks[i+1]))"
+                )
+            ).alias("g"),
+        )
+        .distinct()
+    )
+
+
+# each document's distinct 3-token shingles ``g``: ``toks`` and ``grams``
+_SHINGLES_CTE = f"""toks AS (
+        SELECT doc_id, {_oracle_tokens()} AS toks FROM documents
+    ),
+    grams AS (
+        SELECT DISTINCT doc_id,
+               toks[CAST(i AS INTEGER)] || ' ' ||
+               toks[CAST(i AS INTEGER) + 1] || ' ' ||
+               toks[CAST(i AS INTEGER) + 2] AS g
+        FROM (SELECT doc_id, toks, unnest(range(1, len(toks) - 1)) AS i
+              FROM toks WHERE len(toks) >= {NOVELTY_N})
+    )"""
+
+
 def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-saturation signal: per document, the fraction of its
     distinct 3-token shingles that no earlier document (by doc_id —
@@ -1114,20 +1137,7 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     pays, with map-side combine). The join back is gram-keyed; no
     pairwise doc comparison anywhere."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", tokens_col(F.col("text")).alias("toks"))
-    grams = (
-        toks.where(F.size("toks") >= NOVELTY_N)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(toks) - 2),"
-                    " i -> concat_ws(' ', toks[i-1], toks[i], toks[i+1]))"
-                )
-            ).alias("g"),
-        )
-        .distinct()
-    )
+    grams = _token_shingles(docs)
     first = grams.groupBy("g").agg(F.min("doc_id").alias("first_doc"))
     per_doc = (
         grams.join(first, "g")
@@ -1149,17 +1159,7 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLES["text_ngram_novelty"] = f"""
-    WITH toks AS (
-        SELECT doc_id, {_oracle_tokens()} AS toks FROM documents
-    ),
-    grams AS (
-        SELECT DISTINCT doc_id,
-               toks[CAST(i AS INTEGER)] || ' ' ||
-               toks[CAST(i AS INTEGER) + 1] || ' ' ||
-               toks[CAST(i AS INTEGER) + 2] AS g
-        FROM (SELECT doc_id, toks, unnest(range(1, len(toks) - 1)) AS i
-              FROM toks WHERE len(toks) >= {NOVELTY_N})
-    ),
+    WITH {_SHINGLES_CTE},
     first AS (
         SELECT g, MIN(doc_id) AS first_doc FROM grams GROUP BY g
     ),
@@ -1199,20 +1199,7 @@ def boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer threshold (df·100 ≥ pct·n_docs) and half-up permille.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", tokens_col(F.col("text")).alias("toks"))
-    grams = (
-        toks.where(F.size("toks") >= NOVELTY_N)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(toks) - 2),"
-                    " i -> concat_ws(' ', toks[i-1], toks[i], toks[i+1]))"
-                )
-            ).alias("g"),
-        )
-        .distinct()
-    )
+    grams = _token_shingles(docs)
     n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     flagged = (
         grams.groupBy("g")
@@ -1245,17 +1232,7 @@ def boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLES["text_boilerplate_ngrams"] = f"""
-    WITH toks AS (
-        SELECT doc_id, {_oracle_tokens()} AS toks FROM documents
-    ),
-    grams AS (
-        SELECT DISTINCT doc_id,
-               toks[CAST(i AS INTEGER)] || ' ' ||
-               toks[CAST(i AS INTEGER) + 1] || ' ' ||
-               toks[CAST(i AS INTEGER) + 2] AS g
-        FROM (SELECT doc_id, toks, unnest(range(1, len(toks) - 1)) AS i
-              FROM toks WHERE len(toks) >= {NOVELTY_N})
-    ),
+    WITH {_SHINGLES_CTE},
     n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
     flagged AS (
         SELECT g, 1 AS boiler

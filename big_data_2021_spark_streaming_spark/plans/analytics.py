@@ -1362,7 +1362,20 @@ def fuzzy_name_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     1..len, substr concat — per-position work, never a per-element
     lambda over the whole row)."""
     names = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    base = names.select(
+    return _edit1_name_pairs(names).select(
+        "custkey_a",
+        "custkey_b",
+        "name_a",
+        "name_b",
+        F.levenshtein("name_a", "name_b").alias("edit_dist"),
+    )
+
+
+def _edit1_name_pairs(customers: DataFrame) -> DataFrame:
+    """(custkey_a, custkey_b, name_a, name_b), custkey_a < custkey_b, of
+    every customer-name pair at levenshtein distance 1, blocked by the
+    deletion neighborhood (see fuzzy_name_matches)."""
+    base = customers.select(
         "c_custkey", "c_name", F.length("c_name").alias("n")
     )
     deletions = base.select(
@@ -1396,13 +1409,6 @@ def fuzzy_name_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("custkey_a", "custkey_b", "name_a", "name_b")
         .distinct()
         .where(F.levenshtein("name_a", "name_b") == 1)
-        .select(
-            "custkey_a",
-            "custkey_b",
-            "name_a",
-            "name_b",
-            F.levenshtein("name_a", "name_b").alias("edit_dist"),
-        )
     )
 
 
@@ -1466,42 +1472,7 @@ def linkage_fs_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(u_num("c_mktsegment", "u_seg"))
         .crossJoin(u_num("bal_band", "u_bal"))
     )
-    base = cust.select("c_custkey", "c_name", F.length("c_name").alias("n"))
-    deletions = base.select(
-        "c_custkey",
-        "c_name",
-        F.explode(F.sequence(F.lit(1), F.col("n"))).alias("pos"),
-    ).select(
-        "c_custkey",
-        "c_name",
-        F.concat(
-            F.expr("substr(c_name, 1, pos - 1)"),
-            F.expr("substr(c_name, pos + 1)"),
-        ).alias("variant"),
-    )
-    variants = deletions.union(
-        base.select("c_custkey", "c_name", F.col("c_name").alias("variant"))
-    ).distinct()
-    cand = (
-        variants.select(
-            F.col("c_custkey").alias("custkey_a"),
-            F.col("c_name").alias("name_a"),
-            "variant",
-        )
-        .join(
-            variants.select(
-                F.col("c_custkey").alias("custkey_b"),
-                F.col("c_name").alias("name_b"),
-                "variant",
-            ),
-            "variant",
-        )
-        .where(F.col("custkey_a") < F.col("custkey_b"))
-        .select("custkey_a", "custkey_b", "name_a", "name_b")
-        .distinct()
-        .where(F.levenshtein("name_a", "name_b") == 1)
-        .select("custkey_a", "custkey_b")
-    )
+    cand = _edit1_name_pairs(cust).select("custkey_a", "custkey_b")
     fa = cust.select(
         F.col("c_custkey").alias("custkey_a"),
         F.col("c_nationkey").alias("nat_a"),

@@ -1746,17 +1746,10 @@ ORACLES["event_value_log2_histogram"] = """
     ORDER BY 1, 2
 """
 
-# value-domain-histogram twin of the Spark builder: same (mode, lag)
-# cells, same ceil-rank ⌈q·n/100⌉ target, smallest lag with cum ≥ r
-# Theil–Sen twin: same dense day grid as the dispersion oracle, same
-# signed half-away micro split, ties ranked by (slope, da, db)
-ORACLES["event_trend_theilsen"] = """
-    WITH daily AS (
-        SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-               CAST(COUNT(*) AS BIGINT) AS c
-        FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
-    ),
-    bounds AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM daily),
+# the dense (event_type, day) grid over a ``daily`` (event_type, day, c)
+# CTE: every type on every day from the first to the last, absent days
+# counted 0
+_DENSE_CTE = """bounds AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM daily),
     grid AS (
         SELECT t.event_type, gs.day
         FROM (SELECT DISTINCT event_type FROM daily) t
@@ -1769,7 +1762,27 @@ ORACLES["event_trend_theilsen"] = """
         FROM grid g
         LEFT JOIN daily d
             ON d.event_type = g.event_type AND d.day = g.day
+    )"""
+# per-type daily event counts and their dense grid
+_DAILY_DENSE_CTE = f"""daily AS (
+        SELECT event_type,
+               epoch_us(ts) // 86400000000 AS day,
+               CAST(COUNT(*) AS BIGINT) AS c
+        FROM events GROUP BY 1, 2
     ),
+    {_DENSE_CTE}"""
+
+# value-domain-histogram twin of the Spark builder: same (mode, lag)
+# cells, same ceil-rank ⌈q·n/100⌉ target, smallest lag with cum ≥ r
+# Theil–Sen twin: same dense day grid as the dispersion oracle, same
+# signed half-away micro split, ties ranked by (slope, da, db)
+ORACLES["event_trend_theilsen"] = f"""
+    WITH daily AS (
+        SELECT event_type, epoch_us(ts) // 86400000000 AS day,
+               CAST(COUNT(*) AS BIGINT) AS c
+        FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
+    ),
+    {_DENSE_CTE},
     pairs AS (
         SELECT a.event_type, a.day AS da, b.day AS db,
                CASE WHEN b.c >= a.c
@@ -2283,27 +2296,8 @@ ORACLES["event_markov_accuracy"] = """
 
 # Fisher dispersion twin: dense daily grid, exact integer moments,
 # HUGEINT micro leaf mirroring the Spark DECIMAL(38,0) arithmetic
-ORACLES["event_dispersion_index"] = """
-    WITH daily AS (
-        SELECT event_type,
-               epoch_us(ts) // 86400000000 AS day,
-               CAST(COUNT(*) AS BIGINT) AS c
-        FROM events GROUP BY 1, 2
-    ),
-    bounds AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM daily),
-    grid AS (
-        SELECT t.event_type, gs.day
-        FROM (SELECT DISTINCT event_type FROM daily) t
-        CROSS JOIN (
-            SELECT unnest(generate_series(d0, d1)) AS day FROM bounds
-        ) gs
-    ),
-    dense AS (
-        SELECT g.event_type, g.day, COALESCE(d.c, 0) AS c
-        FROM grid g
-        LEFT JOIN daily d
-            ON d.event_type = g.event_type AND d.day = g.day
-    ),
+ORACLES["event_dispersion_index"] = f"""
+    WITH {_DAILY_DENSE_CTE},
     moments AS (
         SELECT event_type,
                CAST(COUNT(*) AS BIGINT) AS n_days,
@@ -2434,27 +2428,8 @@ ORACLES["experiment_cuped_lift"] = """
 
 # Seasonal-naive MAPE twin: dense grid + lag-7, exact half-up micro
 # leaves (zero-actual days excluded from MAPE, counted), signed bias
-ORACLES["event_seasonal_naive_mape"] = """
-    WITH daily AS (
-        SELECT event_type,
-               epoch_us(ts) // 86400000000 AS day,
-               CAST(COUNT(*) AS BIGINT) AS c
-        FROM events GROUP BY 1, 2
-    ),
-    bounds AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM daily),
-    grid AS (
-        SELECT t.event_type, gs.day
-        FROM (SELECT DISTINCT event_type FROM daily) t
-        CROSS JOIN (
-            SELECT unnest(generate_series(d0, d1)) AS day FROM bounds
-        ) gs
-    ),
-    dense AS (
-        SELECT g.event_type, g.day, COALESCE(d.c, 0) AS c
-        FROM grid g
-        LEFT JOIN daily d
-            ON d.event_type = g.event_type AND d.day = g.day
-    ),
+ORACLES["event_seasonal_naive_mape"] = f"""
+    WITH {_DAILY_DENSE_CTE},
     scored AS (
         SELECT event_type, c,
                lag(c, 7) OVER (

@@ -104,7 +104,7 @@ def to_memory_sink(
     )
 
 
-def with_ingest_metrics(df: DataFrame, name: str = "ingest_metrics") -> DataFrame:
+def with_ingest_metrics(df: DataFrame) -> DataFrame:
     """Attach per-micro-batch data-quality metrics via ``observe()`` —
     the production observability hook: row count, decode-failure count,
     and max event-time ride the batch as observed metrics (surfaced in
@@ -115,11 +115,12 @@ def with_ingest_metrics(df: DataFrame, name: str = "ingest_metrics") -> DataFram
     Works on any frame with the decoded RSVP ``data`` struct.
     ``n_corrupt`` counts ``reference_queries.decode_failed`` rows (the
     predicate ``rsvp_decode_failures`` pins): the live decode-failure
-    meter the reference had no way to see."""
+    meter the reference had no way to see. The metrics ride the
+    progress events under the name ``ingest_metrics``."""
     from ..plans.reference_queries import decode_failed
 
     return df.observe(
-        name,
+        "ingest_metrics",
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(decode_failed().cast("bigint")).alias("n_corrupt"),
         F.max("timestamp").alias("max_event_ts"),

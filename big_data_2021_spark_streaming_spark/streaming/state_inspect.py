@@ -130,9 +130,7 @@ def checkpoint_progress_report(
 _KAFKA_OFFSETS_SCHEMA = "MAP<STRING, MAP<STRING, LONG>>"
 
 
-def kafka_batch_records(
-    spark: SparkSession, checkpoint_dir: str, source_index: int = 0
-) -> DataFrame:
+def kafka_batch_records(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
     """Per-batch ingest ledger for a Kafka source: (batch_id, topic,
     partition, end_offset, records) where ``records`` is the delta to
     the previous batch's end-offset for the same (topic, partition) —
@@ -145,7 +143,7 @@ def kafka_batch_records(
         "batch_id",
         F.explode(
             F.from_json(
-                F.element_at("sources", source_index + 1),
+                F.element_at("sources", 1),
                 _KAFKA_OFFSETS_SCHEMA,
             )
         ).alias("topic", "parts"),
@@ -164,14 +162,12 @@ def kafka_batch_records(
     )
 
 
-def kafka_source_start(
-    spark: SparkSession, checkpoint_dir: str, source_index: int = 0
-) -> DataFrame:
-    """The stream's pre-batch-0 start offsets from ``sources/<i>/0``:
+def kafka_source_start(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
+    """The stream's pre-batch-0 start offsets from ``sources/0/0``:
     (topic, partition, start_offset). The offsets WAL only records each
     batch's END offsets, so this file is the missing left edge of
     batch 0's range."""
-    path = f"{checkpoint_dir.rstrip('/')}/sources/{source_index}"
+    path = f"{checkpoint_dir.rstrip('/')}/sources/0"
     parsed = (
         spark.read.text(path, wholetext=True)
         .select(
@@ -192,13 +188,11 @@ def kafka_source_start(
     )
 
 
-def replay_batch_plan(
-    spark: SparkSession, checkpoint_dir: str, source_index: int = 0
-) -> DataFrame:
+def replay_batch_plan(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
     """The executable contract of every planned micro-batch: (batch_id,
     topic, partition, start_offset, end_offset, records, committed).
     Start offsets come from the PREVIOUS batch's WAL entry (the
-    ``sources/<i>/0`` file for batch 0) — exactly the arithmetic a
+    ``sources/0/0`` file for batch 0) — exactly the arithmetic a
     restarted MicroBatchExecution performs to rebuild an uncommitted
     batch. The resume point after a crash is the row set where
     ``committed`` is false (reference: batch 12, cf.
@@ -207,8 +201,8 @@ def replay_batch_plan(
 
     Scale: one row per (batch, topic, partition) of WAL metadata —
     never data-sized; the lag window partitions by (topic, partition)."""
-    ends = kafka_batch_records(spark, checkpoint_dir, source_index)
-    start0 = kafka_source_start(spark, checkpoint_dir, source_index)
+    ends = kafka_batch_records(spark, checkpoint_dir)
+    start0 = kafka_source_start(spark, checkpoint_dir)
     w = Window.partitionBy("topic", "partition").orderBy("batch_id")
     with_start = ends.select(
         "batch_id",
@@ -250,7 +244,6 @@ def replay_batch(
     checkpoint_dir: str,
     records: DataFrame,
     batch_id: int,
-    source_index: int = 0,
 ) -> DataFrame:
     """EXECUTE a WAL batch against data: filter a records frame
     carrying (topic, partition, offset) to exactly the offset ranges
@@ -260,7 +253,7 @@ def replay_batch(
     scan, so the filter is a map-side semi-join: no shuffle of the
     records themselves."""
     ranges = (
-        replay_batch_plan(spark, checkpoint_dir, source_index)
+        replay_batch_plan(spark, checkpoint_dir)
         .where(F.col("batch_id") == batch_id)
         .select("topic", "partition", "start_offset", "end_offset")
     )
@@ -272,25 +265,18 @@ def replay_batch(
 
 
 def read_operator_state(
-    spark: SparkSession,
-    checkpoint_dir: str,
-    operator_id: int = 0,
-    store_name: str | None = None,
-    batch_id: int | None = None,
+    spark: SparkSession, checkpoint_dir: str, operator_id: int = 0
 ) -> DataFrame:
-    """The keyed state of a stateful operator as a batch DataFrame
-    (Spark's ``statestore`` source): struct ``key``, struct ``value``,
-    ``partition_id``. Reads are partition-parallel and respect the
-    provider in the checkpoint (HDFS-backed or RocksDB). Pin
-    ``batch_id`` to time-travel to an earlier committed version."""
-    reader = spark.read.format("statestore").option(
-        "operatorId", operator_id
+    """The latest committed keyed state of a stateful operator's default
+    store as a batch DataFrame (Spark's ``statestore`` source): struct
+    ``key``, struct ``value``, ``partition_id``. Reads are
+    partition-parallel and respect the provider in the checkpoint
+    (HDFS-backed or RocksDB)."""
+    return (
+        spark.read.format("statestore")
+        .option("operatorId", operator_id)
+        .load(checkpoint_dir)
     )
-    if store_name is not None:
-        reader = reader.option("storeName", store_name)
-    if batch_id is not None:
-        reader = reader.option("batchId", batch_id)
-    return reader.load(checkpoint_dir)
 
 
 def state_metadata(spark: SparkSession, checkpoint_dir: str) -> DataFrame:

@@ -1,15 +1,19 @@
 """Steps with one definition stay spelled once, with no table data: an
 AST scan of the package for hand copies of the seeded 60-bit hash, of
-the whitespace tokenizer, of the ANN top-k tail and of the PQ codebook
-distance. A copy that drifts from its definition breaks oracle parity
-(the hash), the shared token contract (the tokenizer), the neighbor_id
-tie-break and persisted result set that the recall reports share (the
-top-k) or the code a vector and a query agree on (the codebook
-distance) in one operator only."""
+the whitespace tokenizer, of the ANN top-k tail, of the PQ codebook
+distance, of the edit-1 deletion variant and of the 3-token shingle
+explode, and a source scan for copies of two DuckDB oracle steps (the
+dense day grid and the LSH near-dup cut). A copy that drifts from its
+definition breaks oracle parity (the hash), the shared token contract
+(the tokenizer), the neighbor_id tie-break and persisted result set
+that the recall reports share (the top-k), the code a vector and a
+query agree on (the codebook distance) or the one candidate and gram
+set two twin queries share, in one operator only."""
 
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 PKG = Path(__file__).resolve().parents[1] / "big_data_2021_spark_streaming_spark"
@@ -19,6 +23,18 @@ _HASH_HOME = {("functions/hashing.py", "h60")}
 _TOKENIZER_HOME = {("operators/text.py", "tokens_col")}
 _TOPK_HOME = {("operators/similarity.py", "_rank_topk")}
 _BOOK_HOME = {("operators/similarity.py", "_book_dists")}
+_DELETION_HOME = {("plans/analytics.py", "_edit1_name_pairs")}
+_SHINGLE_HOME = {("operators/text.py", "_token_shingles")}
+
+_DELETION = "substr(c_name, 1, pos - 1)"
+_SHINGLE = "transform(sequence(1, size(toks) - 2)"
+_DENSE_GRID = "generate_series(d0, d1)) AS day FROM bounds"
+# dedup's one near-dup cut, plus curation's two copies that break the
+# line before ``>=`` and so render other bytes
+_NEAR_CUT = re.compile(
+    r"/ \{float\((?:_dedup\.)?NUM_PERM\)\}\s*>= \{(?:_dedup\.)?EST_THRESHOLD\}"
+)
+_NEAR_CUT_COPIES = 3
 
 
 def _name(call: ast.AST) -> str | None:
@@ -78,6 +94,32 @@ def _is_book_diff(node: ast.AST) -> bool:
     )
 
 
+def _spark_expr(needle: str):
+    """Matcher for F.expr("...needle..."): a Spark SQL-expression step."""
+
+    def match(node: ast.AST) -> bool:
+        return (
+            _name(node) == "expr"
+            and isinstance(arg := _first_arg(node), ast.Constant)
+            and isinstance(arg.value, str)
+            and needle in arg.value
+        )
+
+    return match
+
+
+def _source_hits(pattern: re.Pattern) -> list[tuple[str, int]]:
+    """(module, line) of every match of ``pattern`` in the package source."""
+    hits = []
+    for py in sorted(PKG.rglob("*.py")):
+        text = py.read_text()
+        for m in pattern.finditer(text):
+            hits.append(
+                (str(py.relative_to(PKG)), text.count("\n", 0, m.start()) + 1)
+            )
+    return hits
+
+
 def _spellings(tree: ast.AST, match) -> list[tuple[int, str]]:
     funcs = [
         (n.lineno, n.end_lineno, n.name)
@@ -125,6 +167,22 @@ def test_matchers_pin_what_they_match():
     assert hits('diff = F.col("rq") - F.col("cq")', _is_book_diff)
     # the residual subtracts the IVF centroid component, not a codebook
     assert not hits('(F.col("xq") - F.col("ccq")).alias("xq")', _is_book_diff)
+    deletion = _spark_expr(_DELETION)
+    assert hits('F.expr("substr(c_name, 1, pos - 1)")', deletion)
+    # the DuckDB twin in an oracle f-string is not the Spark step
+    assert not hits('f"""SELECT substr(c_name, 1, pos - 1) FROM {t}"""', deletion)
+    shingle = (
+        'F.expr("transform(sequence(1, size(toks) - 2),"'
+        '" i -> concat_ws(\' \', toks[i-1], toks[i], toks[i+1]))")'
+    )
+    assert hits(shingle, _spark_expr(_SHINGLE))
+    assert _NEAR_CUT.search("WHERE ({_MATCHES}) / {float(NUM_PERM)} >= {EST_THRESHOLD}")
+    assert _NEAR_CUT.search(
+        "WHERE ({_dedup._MATCHES}) / {float(_dedup.NUM_PERM)}\n"
+        "              >= {_dedup.EST_THRESHOLD}"
+    )
+    # the estimate column is not the cut
+    assert not _NEAR_CUT.search("({_MATCHES}) / {float(NUM_PERM)} AS est_jaccard")
 
 
 def test_seeded_hash_is_spelled_only_in_hashing():
@@ -156,4 +214,36 @@ def test_codebook_distance_is_spelled_only_in_book_dists():
     assert sites == _BOOK_HOME, (
         "codebook distance spelled outside similarity._book_dists; call "
         f"it (or _pq_encode / _adc_table) instead: {sorted(sites - _BOOK_HOME)}"
+    )
+
+
+def test_deletion_variant_is_spelled_only_in_edit1_name_pairs():
+    sites = _sites(_spark_expr(_DELETION))
+    assert sites == _DELETION_HOME, (
+        "edit-1 deletion variant spelled outside analytics._edit1_name_pairs;"
+        f" call it instead: {sorted(sites - _DELETION_HOME)}"
+    )
+
+
+def test_token_shingles_are_spelled_only_in_token_shingles():
+    sites = _sites(_spark_expr(_SHINGLE))
+    assert sites == _SHINGLE_HOME, (
+        "3-token shingle explode spelled outside text._token_shingles; call"
+        f" it instead: {sorted(sites - _SHINGLE_HOME)}"
+    )
+
+
+def test_oracle_dense_day_grid_is_spelled_once():
+    hits = _source_hits(re.compile(re.escape(_DENSE_GRID)))
+    assert len(hits) == 1, (
+        "dense day grid spelled more than once; paste oracles._DENSE_CTE"
+        f" (or _DAILY_DENSE_CTE) instead: {hits}"
+    )
+
+
+def test_oracle_near_dup_cut_is_not_copied():
+    hits = _source_hits(_NEAR_CUT)
+    assert len(hits) == _NEAR_CUT_COPIES, (
+        "LSH near-dup cut spelled again; paste dedup._NEAR_CUT,"
+        f" _NEAR_JOIN or _PAIRS_CTE instead: {hits}"
     )

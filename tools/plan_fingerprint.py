@@ -157,19 +157,17 @@ def _source_tree(fn: types.FunctionType) -> ast.Module:
         ) from e
 
 
-def _normalized_source(fn: types.FunctionType) -> str:
-    tree = _StripBroadcast().visit(_source_tree(fn))
+def _normalized_source(tree: ast.Module) -> str:
+    tree = _StripBroadcast().visit(tree)
     _strip_docstrings(tree)
     return ast.dump(tree)
 
 
-def _referenced_names(fn: types.FunctionType) -> list[str]:
-    return sorted(
-        {n.id for n in ast.walk(_source_tree(fn)) if isinstance(n, ast.Name)}
-    )
+def _referenced_names(tree: ast.Module) -> list[str]:
+    return sorted({n.id for n in ast.walk(tree) if isinstance(n, ast.Name)})
 
 
-def _local_imports(fn: types.FunctionType) -> list[object]:
+def _local_imports(fn: types.FunctionType, tree: ast.Module) -> list[object]:
     """Objects bound by ``from X import Y`` statements INSIDE the
     function body. These never appear in module globals, so the
     referenced-name walk alone would miss them — e.g. dedup_semantic's
@@ -178,7 +176,7 @@ def _local_imports(fn: types.FunctionType) -> list[object]:
     import importlib
 
     out = []
-    for node in ast.walk(_source_tree(fn)):
+    for node in ast.walk(tree):
         if not isinstance(node, ast.ImportFrom):
             continue
         if node.level:  # relative: resolve against the builder's module
@@ -212,48 +210,79 @@ def _unwrap(fn) -> types.FunctionType:
         raise TypeError(f"cannot unwrap builder {fn!r}")
 
 
-def _closure_parts(fn, seen: set[str], parts: dict[str, str]) -> None:
-    fn = _unwrap(fn)
-    key = f"{fn.__module__}.{fn.__qualname__}"
-    if key in seen:
-        return
-    seen.add(key)
-    parts[key] = _normalized_source(fn)
-    module = sys.modules.get(fn.__module__)
-    if module is None or not fn.__module__.startswith(_PKG):
-        return
-    # closure cells (builders produced by factory functions) hash by value
-    if fn.__closure__:
-        for var, cell in zip(
-            fn.__code__.co_freevars, fn.__closure__, strict=True
-        ):
-            try:
-                val = cell.cell_contents
-            except ValueError:  # empty cell
+def _in_pkg(val) -> bool:
+    return (getattr(val, "__module__", None) or "").startswith(_PKG)
+
+
+def _closure(build) -> tuple[dict[str, str], list[str]]:
+    """One walk of ``build``'s closure: the fingerprint's hashed parts
+    and the escape violations (see ``fingerprint_escapes``).
+
+    Each function's normalized source is a part. In-package functions
+    are followed through closure cells, referenced names and
+    function-local ``from X import Y``; UPPERCASE data constants and
+    data closure cells are parts by repr. An in-package module
+    referenced by name, or a referenced lowercase module-level data
+    constant, is a violation."""
+    parts: dict[str, str] = {}
+    viol: list[str] = []
+    seen: set[str] = set()
+
+    def walk(fn) -> None:
+        fn = _unwrap(fn)
+        key = f"{fn.__module__}.{fn.__qualname__}"
+        if key in seen:
+            return
+        seen.add(key)
+        tree = _source_tree(fn)
+        names = _referenced_names(tree)
+        imports = _local_imports(fn, tree)
+        parts[key] = _normalized_source(tree)
+        module = sys.modules.get(fn.__module__)
+        if module is None or not fn.__module__.startswith(_PKG):
+            return
+        # closure cells (builders produced by factory functions) hash by value
+        if fn.__closure__:
+            for var, cell in zip(
+                fn.__code__.co_freevars, fn.__closure__, strict=True
+            ):
+                try:
+                    val = cell.cell_contents
+                except ValueError:  # empty cell
+                    continue
+                if callable(val) and _in_pkg(val):
+                    walk(val)
+                elif isinstance(val, _CONST_TYPES) and not _is_runtime_cache(var):
+                    parts[f"{key}::cell::{var}"] = _checked_repr(var, val)
+        for name in names:
+            val = getattr(module, name, None)
+            if val is None:
                 continue
-            if callable(val) and getattr(val, "__module__", "").startswith(_PKG):
-                _closure_parts(val, seen, parts)
-            elif isinstance(val, _CONST_TYPES) and not _is_runtime_cache(var):
-                parts[f"{key}::cell::{var}"] = _checked_repr(var, val)
-    for name in _referenced_names(fn):
-        val = getattr(module, name, None)
-        if val is None:
-            continue
-        if isinstance(val, types.FunctionType) and val.__module__.startswith(
-            _PKG
-        ):
-            _closure_parts(val, seen, parts)
-        elif (
-            isinstance(val, _CONST_TYPES)
-            and name.isupper()
-            and not _is_runtime_cache(name)
-        ):
-            parts[f"{fn.__module__}.{name}"] = _checked_repr(name, val)
-    for val in _local_imports(fn):
-        if isinstance(val, types.FunctionType) and val.__module__.startswith(
-            _PKG
-        ):
-            _closure_parts(val, seen, parts)
+            if isinstance(val, types.ModuleType) and val.__name__.startswith(
+                _PKG
+            ):
+                viol.append(
+                    f"{key}: references in-package module {name!r} by "
+                    "attribute — invisible to the plan fingerprint; use "
+                    "'from ... import name' instead"
+                )
+            elif isinstance(val, types.FunctionType) and _in_pkg(val):
+                walk(val)
+            elif isinstance(val, _CONST_TYPES) and not _is_runtime_cache(name):
+                if name.isupper():
+                    parts[f"{fn.__module__}.{name}"] = _checked_repr(name, val)
+                else:
+                    viol.append(
+                        f"{key}: references lowercase module-level constant "
+                        f"{name!r} — invisible to the plan fingerprint; "
+                        "rename it UPPERCASE so edits invalidate greens"
+                    )
+        for val in imports:
+            if isinstance(val, types.FunctionType) and _in_pkg(val):
+                walk(val)
+
+    walk(build)
+    return parts, viol
 
 
 def fingerprint_escapes(build) -> list[str]:
@@ -266,71 +295,11 @@ def fingerprint_escapes(build) -> list[str]:
     widening the traversal (attribute roots are unboundedly aliasable),
     the repo bans the escaping patterns outright; this returns the
     violations for the enforcing test."""
-    viol: list[str] = []
-
-    def walk(fn, seen: set[str]) -> None:
-        try:
-            fn = _unwrap(fn)
-        except TypeError:
-            return
-        key = f"{fn.__module__}.{fn.__qualname__}"
-        if key in seen:
-            return
-        seen.add(key)
-        module = sys.modules.get(fn.__module__)
-        if module is None or not fn.__module__.startswith(_PKG):
-            return
-        for name in _referenced_names(fn):
-            val = getattr(module, name, None)
-            if val is None:
-                continue
-            if isinstance(val, types.ModuleType) and getattr(
-                val, "__name__", ""
-            ).startswith(_PKG):
-                viol.append(
-                    f"{key}: references in-package module {name!r} by "
-                    "attribute — invisible to the plan fingerprint; use "
-                    "'from ... import name' instead"
-                )
-            elif isinstance(val, types.FunctionType) and val.__module__.startswith(
-                _PKG
-            ):
-                walk(val, seen)
-            elif (
-                isinstance(val, _CONST_TYPES)
-                and not name.isupper()
-                and not _is_runtime_cache(name)
-            ):
-                viol.append(
-                    f"{key}: references lowercase module-level constant "
-                    f"{name!r} — invisible to the plan fingerprint; "
-                    "rename it UPPERCASE so edits invalidate greens"
-                )
-        if fn.__closure__:
-            for var, cell in zip(
-                fn.__code__.co_freevars, fn.__closure__, strict=True
-            ):
-                try:
-                    val = cell.cell_contents
-                except ValueError:
-                    continue
-                if callable(val) and getattr(val, "__module__", "").startswith(
-                    _PKG
-                ):
-                    walk(val, seen)
-        for val in _local_imports(fn):
-            if isinstance(val, types.FunctionType) and val.__module__.startswith(
-                _PKG
-            ):
-                walk(val, seen)
-
-    walk(build, set())
-    return viol
+    return _closure(build)[1]
 
 
 def builder_fingerprint(name: str, spec) -> str:
-    parts: dict[str, str] = {}
-    _closure_parts(spec.build, set(), parts)
+    parts = _closure(spec.build)[0]
     if spec.oracle is not None:
         parts["__oracle__"] = spec.oracle
     blob = json.dumps(parts, sort_keys=True).encode()

@@ -80,10 +80,13 @@ bounded-frame allowlist, and every BNLJ row in the broadcast-sized
 cross-join allowlist, pinned by `tests/test_plans.py`).
 
 Queries composing the session-memoized top-k/pair frames
-(the recall sweep, NDCG eval, the dedup consumers) show
-their pipelines fully expanded here — a fresh session plans
-them cold; at runtime those frames are persisted once per
-session and the repeat scans collapse to InMemoryTableScans.
+(the recall sweep, NDCG eval, the dedup consumers) are planned
+after an earlier query of the sorted walk persisted those frames.
+A cached read shows as an `InMemoryTableScan` over the cached
+plan, and a `localCheckpoint`ed frame as a `Scan ExistingRDD`
+leaf (a `LogicalRDD`) with nothing below it. The counts take each
+numbered plan node once, so a cached pipeline read many times
+counts once and a checkpointed pipeline not at all.
 
 (No codegen-span column: under AQE, codegen ids are only
 assigned in the FINAL plan after execution, so they are not
