@@ -527,18 +527,24 @@ _MARKER_COLS = ",\n               ".join(
     f"{_oracle_marker_count(words)} AS c_{lang}"
     for lang, words in LANG_MARKERS.items()
 )
-ORACLES["text_lang_id"] = f"""
-    WITH t AS (
+# the per-language marker counts (``c_en`` … ``c_de``) of every document
+_LANG_COUNTS_CTE = f"""t AS (
         SELECT doc_id,
                {_MARKER_COLS}
         FROM documents
-    )
-    SELECT doc_id, c_en, c_es, c_fr, c_de,
-           CASE WHEN greatest(c_en, c_es, c_fr, c_de) = 0 THEN 'und'
+    )"""
+# the language with the most markers; 'und' when none match
+_PRED_LANG_CASE = """CASE WHEN greatest(c_en, c_es, c_fr, c_de) = 0 THEN 'und'
                 WHEN c_en = greatest(c_en, c_es, c_fr, c_de) THEN 'en'
                 WHEN c_es = greatest(c_en, c_es, c_fr, c_de) THEN 'es'
                 WHEN c_fr = greatest(c_en, c_es, c_fr, c_de) THEN 'fr'
-                ELSE 'de' END AS pred_lang
+                ELSE 'de' END AS pred_lang"""
+_PRED_LANG_CASE_NESTED = _PRED_LANG_CASE.replace("\n", "\n    ")
+
+ORACLES["text_lang_id"] = f"""
+    WITH {_LANG_COUNTS_CTE}
+    SELECT doc_id, c_en, c_es, c_fr, c_de,
+           {_PRED_LANG_CASE}
     FROM t
 """
 
@@ -959,18 +965,10 @@ def lang_id_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # the marker-count language prediction (``pred_lang``) of every document
-_LANG_PRED_CTE = f"""t AS (
-        SELECT doc_id,
-               {_MARKER_COLS}
-        FROM documents
-    ),
+_LANG_PRED_CTE = f"""{_LANG_COUNTS_CTE},
     pred AS (
         SELECT doc_id,
-               CASE WHEN greatest(c_en, c_es, c_fr, c_de) = 0 THEN 'und'
-                    WHEN c_en = greatest(c_en, c_es, c_fr, c_de) THEN 'en'
-                    WHEN c_es = greatest(c_en, c_es, c_fr, c_de) THEN 'es'
-                    WHEN c_fr = greatest(c_en, c_es, c_fr, c_de) THEN 'fr'
-                    ELSE 'de' END AS pred_lang
+               {_PRED_LANG_CASE_NESTED}
         FROM t
     )"""
 

@@ -396,10 +396,10 @@ def value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native session windows (F.session_window, 30-minute gap): per
-    (user, session) bounds and aggregates. The built-in merging-window
-    counterpart of streaming.pipeline.sessionize — same semantics
-    (end = last event + gap), state merged by Spark instead of a custom
-    state machine. One shuffle on the session-window key. Sums ride
+    (user, session) bounds and aggregates. The same session window as
+    streaming.pipeline.sessionize, but ``session_end`` here is the
+    window end (last event + gap), where sessionize reports the last
+    event. One shuffle on the session-window key. Sums ride
     exact micro-unit integers to cents (half-up) for cross-engine,
     partition-order-independent results."""
     events = load_table(spark, sf_dir, "events")

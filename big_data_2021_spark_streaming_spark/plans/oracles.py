@@ -1772,8 +1772,6 @@ _DAILY_DENSE_CTE = f"""daily AS (
     ),
     {_DENSE_CTE}"""
 
-# value-domain-histogram twin of the Spark builder: same (mode, lag)
-# cells, same ceil-rank ⌈q·n/100⌉ target, smallest lag with cum ≥ r
 # Theil–Sen twin: same dense day grid as the dispersion oracle, same
 # signed half-away micro split, ties ranked by (slope, da, db)
 ORACLES["event_trend_theilsen"] = f"""

@@ -24,8 +24,9 @@ Sinks:
 
 Scale posture: RocksDB state store (session.py), watermark on every
 stateful query (unbounded state is a deploy-blocker at 100 TB),
-``dropDuplicatesWithinWatermark`` for ingest dedup, and
-``applyInPandasWithState`` for custom state machines (sessionization).
+``dropDuplicatesWithinWatermark`` for ingest dedup, Spark's native
+session window for sessionization, and ``applyInPandasWithState`` only
+for the per-user EWMA spike detector.
 """
 
 from __future__ import annotations
@@ -36,15 +37,16 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 from ..session import local_frame
+
+# event-time lateness every watermarked operator here allows by default
+WATERMARK_DELAY = "10 minutes"
 
 ENVELOPE_SCHEMA = StructType(
     [
@@ -127,15 +129,14 @@ def with_ingest_metrics(df: DataFrame) -> DataFrame:
     )
 
 
-def to_console_sink(
-    df: DataFrame, output_mode: str = "append", truncate: bool = True
-):
+def to_console_sink(df: DataFrame):
     """Debug sink (``srapk_structure_streaming.py:167-171``): print each
-    micro-batch to stdout. Dev affordance only — never a deploy path."""
+    micro-batch to stdout, append mode, long cells truncated. Dev
+    affordance only — never a deploy path."""
     return (
         df.writeStream.format("console")
-        .option("truncate", str(truncate).lower())
-        .outputMode(output_mode)
+        .option("truncate", "true")
+        .outputMode("append")
         .start()
     )
 
@@ -163,19 +164,18 @@ def to_foreach_batch_sink(
     df: DataFrame,
     batch_fn,
     checkpoint_dir: str,
-    output_mode: str = "append",
     available_now: bool = False,
 ):
-    """foreachBatch sink: arbitrary per-micro-batch batch logic (merge,
-    multi-sink fan-out, JDBC upsert) with the engine's delivery
-    contract — Spark may REPLAY a batch_id after failure, so batch_fn
-    must be idempotent per batch_id. ``available_now=True`` drains all
-    available input then stops (the batch-over-stream trigger for
-    backfills)."""
+    """foreachBatch sink, append mode: arbitrary per-micro-batch batch
+    logic (merge, multi-sink fan-out, JDBC upsert) with the engine's
+    delivery contract — Spark may REPLAY a batch_id after failure, so
+    batch_fn must be idempotent per batch_id. ``available_now=True``
+    drains all available input then stops (the batch-over-stream
+    trigger for backfills)."""
     writer = (
         df.writeStream.foreachBatch(batch_fn)
         .option("checkpointLocation", checkpoint_dir)
-        .outputMode(output_mode)
+        .outputMode("append")
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
@@ -548,7 +548,6 @@ def stream_interval_join(
     right_ts: str,
     join_keys_expr: str,
     window: str = "1 hour",
-    watermark_delay: str = "10 minutes",
     how: str = "inner",
 ) -> DataFrame:
     """Stream–stream interval join (beyond the reference, which only
@@ -566,8 +565,8 @@ def stream_interval_join(
     ``join_keys_expr`` is the equality part (e.g. ``"user_id = p_user_id"``);
     column names on the two sides must not collide.
     """
-    lw = left.withWatermark(left_ts, watermark_delay)
-    rw = right.withWatermark(right_ts, watermark_delay)
+    lw = left.withWatermark(left_ts, WATERMARK_DELAY)
+    rw = right.withWatermark(right_ts, WATERMARK_DELAY)
     cond = F.expr(
         f"{join_keys_expr} AND {right_ts} >= {left_ts} "
         f"AND {right_ts} <= {left_ts} + interval {window}"
@@ -575,94 +574,42 @@ def stream_interval_join(
     return lw.join(rw, cond, how)
 
 
-SESSION_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("session_start", TimestampType()),
-        StructField("session_end", TimestampType()),
-        StructField("n_events", IntegerType()),
-        StructField("total_value", DoubleType()),
-    ]
-)
-
-_STATE_SCHEMA = StructType(
-    [
-        StructField("start_us", LongType()),
-        StructField("end_us", LongType()),
-        StructField("n", IntegerType()),
-        StructField("total", DoubleType()),
-    ]
-)
-
-
 def sessionize(
     events: DataFrame,
     gap: str = "30 minutes",
-    watermark_delay: str = "10 minutes",
+    watermark_delay: str = WATERMARK_DELAY,
 ) -> DataFrame:
-    """Custom stateful operator: event-time sessionization with a
-    configurable inactivity gap, via applyInPandasWithState.
+    """Event-time sessionization with an inactivity ``gap``, on Spark's
+    native session window: one row per (user, session) with columns
+    user_id, session_start, session_end, n_events, total_value.
+    ``session_end`` is the session's last event, not the window end
+    (last event + ``gap``).
 
-    A session closes two ways:
+    The engine keeps the session state and merges out-of-order events
+    that the watermark admits, so an event that arrives late and
+    bridges two bursts joins them into one session. In append mode a
+    session is emitted once the watermark passes its last event plus
+    ``gap``; Spark runs a no-data micro-batch for that after the batch
+    that advanced the watermark. ``withWatermark`` does nothing on a
+    batch frame, so the same lineage sessionizes a static frame and a
+    stream alike. Spark's state store holds each user's open sessions
+    until they are emitted.
 
-    - **gap**: a new event for the same user lands more than ``gap``
-      past the open session's end — the old session is emitted in that
-      same micro-batch and a new one opens (events are walked in
-      event-time order, so this also splits sessions *within* a batch);
-    - **silence**: no further event ever arrives — the event-time
-      timeout fires once the watermark passes ``session_end + gap``.
-      Spark evaluates timeouts against the watermark computed at batch
-      *start*, so the emitting batch is the first one *after* the
-      watermark-advancing batch (tests must push a sentinel trigger;
-      ``processAllAvailable`` with no new data won't flush a pending
-      timeout).
-
-    State per user is O(1) — four scalars — so total state is bounded
-    by |active users|, the 100 TB-safe shape.
+    ``gap`` is parsed here: ``F.session_window`` drops every row, with
+    no error, when the gap does not parse or is not positive.
     """
-    import pandas as pd
-
-    gap_us = _duration_to_us(gap)
-
-    def emit(user_id, sessions):
-        return pd.DataFrame(
-            {
-                "user_id": [user_id] * len(sessions),
-                "session_start": [pd.Timestamp(s[0], unit="us") for s in sessions],
-                "session_end": [pd.Timestamp(s[1], unit="us") for s in sessions],
-                "n_events": [s[2] for s in sessions],
-                "total_value": [s[3] for s in sessions],
-            }
-        )
-
-    def update(key, pdfs, state: GroupState):
-        (user_id,) = key
-        if state.hasTimedOut:
-            closed = tuple(state.get)
-            state.remove()
-            yield emit(user_id, [closed])
-            return
-        rows = pd.concat(list(pdfs)).sort_values("ts")
-        ts_us = (rows["ts"].astype("int64") // 1000).tolist()  # ns → µs
-        vals = rows["value"].astype(float).tolist()
-        open_session = tuple(state.get) if state.exists else None
-        closed, cur = merge_session_events(
-            open_session, zip(ts_us, vals), gap_us
-        )
-        state.update(cur)
-        state.setTimeoutTimestamp(cur[1] // 1000 + gap_us // 1000)
-        if closed:
-            yield emit(user_id, closed)
-
+    _duration_to_us(gap)
     return (
         events.withWatermark("ts", watermark_delay)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        .groupBy(F.session_window("ts", gap), "user_id")
+        .agg(
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
+            F.count(F.lit(1)).cast("int").alias("n_events"),
+            F.sum("value").alias("total_value"),
+        )
+        .select(
+            "user_id", "session_start", "session_end", "n_events", "total_value"
         )
     )
 
@@ -729,9 +676,7 @@ def ewma_fold(
     return out, hist
 
 
-def stream_ewma_spikes(
-    events: DataFrame, watermark_delay: str = "10 minutes"
-) -> DataFrame:
+def stream_ewma_spikes(events: DataFrame) -> DataFrame:
     """Streaming form of the per-user EWMA spike detector
     (plans/analytics.py::event_ewma_spikes): per-user state is the last
     ≤EWMA_DEPTH micro-unit values — O(DEPTH) longs per active user, the
@@ -755,7 +700,7 @@ def stream_ewma_spikes(
             yield pd.DataFrame(out, columns=EWMA_OUTPUT_SCHEMA.fieldNames())
 
     return (
-        events.withWatermark("ts", watermark_delay)
+        events.withWatermark("ts", WATERMARK_DELAY)
         .groupBy("user_id")
         .applyInPandasWithState(
             update,
@@ -765,34 +710,6 @@ def stream_ewma_spikes(
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-def merge_session_events(
-    open_session: tuple | None, events, gap_us: int
-) -> tuple[list[tuple], tuple]:
-    """Pure session walk (unit-testable core of :func:`sessionize`).
-
-    ``open_session`` is ``(start_us, end_us, n, total)`` or None;
-    ``events`` yields ``(ts_us, value)`` in event-time order. Returns
-    ``(closed_sessions, open_session)``: an event more than ``gap_us``
-    past the open session's end closes it and opens a new one;
-    anything else merges (min/max bounds, running count/sum).
-    """
-    closed: list[tuple] = []
-    cur = list(open_session) if open_session else None
-    for t, v in events:
-        t = int(t)
-        if cur is None:
-            cur = [t, t, 1, v]
-        elif t > cur[1] + gap_us:
-            closed.append(tuple(cur))
-            cur = [t, t, 1, v]
-        else:
-            cur[0] = min(cur[0], t)
-            cur[1] = max(cur[1], t)
-            cur[2] += 1
-            cur[3] += v
-    return closed, (tuple(cur) if cur is not None else None)
 
 
 def _duration_to_us(text: str) -> int:
@@ -807,4 +724,7 @@ def _duration_to_us(text: str) -> int:
     }
     if unit not in scale:
         raise ValueError(f"duration {text!r}: unit must be one of {sorted(scale)}")
-    return int(amount) * scale[unit]
+    us = int(amount) * scale[unit]
+    if us <= 0:
+        raise ValueError(f"duration {text!r}: must be positive")
+    return us

@@ -12,9 +12,6 @@ counterpart for an environment with no live feed and no broker:
   surrogate's contract (one file ≈ one micro-batch, see
   ``pipeline.rsvp_file_stream``). Streaming tests drive their
   micro-batches through this instead of hand-rolled writers.
-- :func:`kafka_producer` builds the real producer with the reference's
-  exact serializer contract (``read_stream.py:10-11``); import-gated on
-  ``kafka-python``, which is not installed in this sandbox.
 - :func:`iter_jsonl_records` is the decode-validate loop
   (``read_stream.py:19-23``) over a fixture file instead of an HTTP
   response.
@@ -82,19 +79,3 @@ class FileEnvelopeProducer:
             n += len(batch)
         return n
 
-
-def kafka_producer(bootstrap_servers: list[str]):
-    """Real ingestion producer, the reference's construction verbatim
-    (``read_stream.py:10-11``). Requires ``kafka-python`` (not in this
-    sandbox — callers should treat NotImplementedError as 'use
-    FileEnvelopeProducer')."""
-    try:
-        from kafka import KafkaProducer  # type: ignore[import-not-found]
-    except ImportError as e:  # pragma: no cover - no kafka-python here
-        raise NotImplementedError(
-            "kafka-python is not installed; use FileEnvelopeProducer"
-        ) from e
-    return KafkaProducer(  # pragma: no cover
-        bootstrap_servers=bootstrap_servers,
-        value_serializer=lambda x: json.dumps(x).encode("utf-8"),
-    )

@@ -264,17 +264,15 @@ def replay_batch(
     ).drop("start_offset", "end_offset")
 
 
-def read_operator_state(
-    spark: SparkSession, checkpoint_dir: str, operator_id: int = 0
-) -> DataFrame:
-    """The latest committed keyed state of a stateful operator's default
-    store as a batch DataFrame (Spark's ``statestore`` source): struct
-    ``key``, struct ``value``, ``partition_id``. Reads are
-    partition-parallel and respect the provider in the checkpoint
-    (HDFS-backed or RocksDB)."""
+def read_operator_state(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
+    """The latest committed keyed state of the query's first stateful
+    operator (operatorId 0), default store, as a batch DataFrame
+    (Spark's ``statestore`` source): struct ``key``, struct ``value``,
+    ``partition_id``. Reads are partition-parallel and respect the
+    provider in the checkpoint (HDFS-backed or RocksDB)."""
     return (
         spark.read.format("statestore")
-        .option("operatorId", operator_id)
+        .option("operatorId", 0)
         .load(checkpoint_dir)
     )
 
@@ -287,10 +285,8 @@ def state_metadata(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
     return spark.read.format("state-metadata").load(checkpoint_dir)
 
 
-def state_skew_report(
-    spark: SparkSession, checkpoint_dir: str, operator_id: int = 0
-) -> DataFrame:
-    """Per-partition state-row counts for one operator, with each
+def state_skew_report(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
+    """Per-partition state-row counts for operator 0, with each
     partition's permille share of total state rows — the hot-key /
     skewed-grouping diagnosis. A healthy aggregation spreads state
     uniformly (share ≈ 1000/numPartitions); one partition holding a
@@ -298,7 +294,7 @@ def state_skew_report(
     become a straggler (or an OOM) at scale. One distributed
     aggregation over the state read; the result is numPartitions
     rows."""
-    state = read_operator_state(spark, checkpoint_dir, operator_id)
+    state = read_operator_state(spark, checkpoint_dir)
     per_part = state.groupBy("partition_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("state_rows")
     )

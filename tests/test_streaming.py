@@ -263,6 +263,123 @@ def test_sessionize_splits_within_one_batch(spark, tmp_path):
     assert s.session_start == t0 and s.session_end == t0 + timedelta(minutes=10)
 
 
+T0 = datetime(2024, 1, 1, 0, 0, 0)
+SESSION_EVENT_SCHEMA = "event_id LONG, ts STRING, user_id LONG, value DOUBLE"
+
+
+def session_event(i, minutes, value, user=1):
+    return {
+        "event_id": i,
+        "ts": (T0 + timedelta(minutes=minutes)).strftime("%Y-%m-%d %H:%M:%S"),
+        "user_id": user,
+        "value": value,
+    }
+
+
+def session_events(reader, d):
+    """Session-event JSON files in ``d`` as (event_id, ts, user_id, value)
+    frames; ``reader`` is ``spark.read`` or ``spark.readStream``."""
+    return (
+        reader.schema(SESSION_EVENT_SCHEMA)
+        .json(str(d))
+        .selectExpr("event_id", "CAST(ts AS TIMESTAMP) AS ts", "user_id", "value")
+    )
+
+
+def write_events(path, events):
+    path.write_text("\n".join(json.dumps(e) for e in events))
+
+
+def test_sessionize_merges_admitted_out_of_order_event(spark, tmp_path):
+    """An event above the watermark that lands between two bursts
+    bridges them: one session, as the batch session window over all
+    events gives."""
+    d = tmp_path / "sess_ooo"
+    d.mkdir()
+    write_events(
+        d / "b0.json",
+        [session_event(1, 0, 1.0), session_event(2, 10, 2.0), session_event(3, 45, 5.0)],
+    )
+    sessions = sessionize(
+        session_events(spark.readStream, d),
+        gap="30 minutes",
+        watermark_delay="10 minutes",
+    )
+    q = to_memory_sink(sessions, "sess_ooo_sink")
+    q.processAllAvailable()
+    # 38 min is above the 35-min watermark, so Spark admits it
+    write_events(d / "b1.json", [session_event(4, 38, 7.0)])
+    q.processAllAvailable()
+    write_events(d / "b2.json", [session_event(5, 300, 0.0, user=2)])
+    q.processAllAvailable()
+    write_events(d / "b3.json", [session_event(6, 600, 0.0, user=3)])
+    drain(q)
+    out = [r for r in spark.table("sess_ooo_sink").collect() if r.user_id == 1]
+    assert len(out) == 1
+    s = out[0]
+    assert s.n_events == 4 and s.total_value == 15.0
+    assert s.session_start == T0 and s.session_end == T0 + timedelta(minutes=45)
+
+
+@pytest.mark.parametrize("n_files", [1, 2, 4])
+def test_sessionize_stream_matches_static_for_any_slicing(spark, tmp_path, n_files):
+    """In-order events fed as 1, 2 or 4 files give the rows sessionize
+    returns on the static frame of all events."""
+    evs = [
+        session_event(1, 0, 1.0),
+        session_event(2, 5, 2.0, user=2),
+        session_event(3, 20, 3.0),
+        session_event(4, 70, 4.0, user=2),
+        session_event(5, 90, 5.0),
+        session_event(6, 100, 6.0, user=2),
+        session_event(7, 115, 7.0),
+        session_event(8, 200, 8.0),
+    ]
+    static_dir = tmp_path / "all"
+    static_dir.mkdir()
+    write_events(static_dir / "all.json", evs)
+    static = sessionize(session_events(spark.read, static_dir)).collect()
+    assert len(static) == 5
+
+    d = tmp_path / "sliced"
+    d.mkdir()
+    step = len(evs) // n_files
+    for k in range(n_files):
+        write_events(d / f"b{k}.json", evs[k * step : (k + 1) * step])
+    sink = f"sess_slice_{n_files}_sink"
+    q = to_memory_sink(sessionize(session_events(spark.readStream, d)), sink)
+    q.processAllAvailable()
+    # two pushes of another user's events move the watermark past
+    # every session above and flush them
+    write_events(d / "push0.json", [session_event(9, 1000, 0.0, user=99)])
+    q.processAllAvailable()
+    write_events(d / "push1.json", [session_event(10, 2000, 0.0, user=99)])
+    drain(q)
+    streamed = [r for r in spark.table(sink).collect() if r.user_id != 99]
+    assert sorted(streamed) == sorted(static)
+
+
+def test_sessionize_output_schema(spark, tmp_path):
+    want = (
+        "struct<user_id:bigint,session_start:timestamp,session_end:timestamp,"
+        "n_events:int,total_value:double>"
+    )
+    write_events(tmp_path / "b0.json", [session_event(1, 0, 1.0)])
+    for reader in (spark.read, spark.readStream):
+        sessions = sessionize(session_events(reader, tmp_path))
+        assert sessions.schema.simpleString() == want
+
+
+@pytest.mark.parametrize("gap", ["30 minutez", "0 minutes", "-5 minutes"])
+def test_sessionize_rejects_bad_gap_at_build_time(spark, tmp_path, gap):
+    """F.session_window silently drops every row on such a gap, so
+    sessionize refuses it before any query starts."""
+    stream = session_events(spark.readStream, tmp_path)
+    with pytest.raises(ValueError, match="duration"):
+        sessionize(stream, gap=gap)
+    assert spark.streams.active == []
+
+
 def test_checkpoint_recovery(spark, tmp_path):
     """Kill a checkpointed query, append new data, restart from the same
     checkpoint: no reprocessing of old batches, new data picked up —
