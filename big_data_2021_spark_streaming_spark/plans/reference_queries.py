@@ -114,12 +114,7 @@ def q2_us_meetups_enriched(
     )
 
 
-def q3_cities_per_minute(
-    raw: DataFrame,
-    mode: str = "faithful",
-    watermark: str | None = "1 minute",
-    as_json: bool = True,
-) -> DataFrame:
+def q3_cities_per_minute(raw: DataFrame, as_json: bool = True) -> DataFrame:
     """Q3: per 1-minute tumbling window, the set of cities with RSVPs.
 
     Event time is the *envelope* timestamp (Kafka ingest time), not any
@@ -128,11 +123,11 @@ def q3_cities_per_minute(
     sorted city array) for oracle comparison instead of the JSON
     payload of ``srapk_structure_streaming.py:156-165``.
     """
-    decoded = decode_rsvps(raw, mode).select(
-        "data.*", F.to_timestamp("timestamp").alias("timestamp")
+    decoded = (
+        decode_rsvps(raw)
+        .select("data.*", F.to_timestamp("timestamp").alias("timestamp"))
+        .withWatermark("timestamp", "1 minute")  # a no-op on a batch frame
     )
-    if decoded.isStreaming and watermark:
-        decoded = decoded.withWatermark("timestamp", watermark)
     windowed = decoded.groupBy(F.window("timestamp", "1 minute")).agg(
         F.collect_set("group.group_city").alias("cities")
     )

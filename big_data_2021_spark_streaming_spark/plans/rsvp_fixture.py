@@ -42,6 +42,7 @@ from ..session import local_frame
 from .reference_queries import (
     decode_failed,
     decode_rsvps,
+    q1_us_meetups,
     q2_us_meetups_enriched,
 )
 
@@ -120,17 +121,12 @@ def _states_values_sql() -> str:
 
 def rsvp_faithful_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q1 on the faithful schema; output pins the mtime-NULL quirk."""
-    decoded = decode_rsvps(_envelope_df(spark), mode="faithful")
-    return (
-        decoded.select("data.*")
-        .where(F.col("group.group_country") == "us")
-        .select(
-            "rsvp_id",
-            "guests",
-            "mtime",  # NULL wherever the feed's epoch-ms overflows int32
-            F.col("group.group_city").alias("group_city"),
-            F.col("group.group_state").alias("group_state"),
-        )
+    return q1_us_meetups(_envelope_df(spark), "faithful").select(
+        "rsvp_id",
+        "guests",
+        "mtime",  # NULL wherever the feed's epoch-ms overflows int32
+        F.col("group.group_city").alias("group_city"),
+        F.col("group.group_state").alias("group_state"),
     )
 
 
@@ -145,11 +141,7 @@ def rsvp_decode_failures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PERMISSIVE-decode audit: total rows vs rows whose JSON failed to
     parse (from_json → NULL struct) — the corrupt-rate metric an ingest
     pipeline monitors before trusting a feed."""
-    from ..schemas import rsvp_schema
-
-    env = _envelope_df(spark)
-    parsed = env.select(F.from_json("value", rsvp_schema("faithful")).alias("data"))
-    return parsed.agg(
+    return decode_rsvps(_envelope_df(spark)).agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(decode_failed().cast("bigint")).alias("n_corrupt"),
     )

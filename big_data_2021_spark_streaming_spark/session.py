@@ -45,7 +45,6 @@ RUNTIME_CONF = {
 
 def get_session(
     app_name: str = "big-data-2021-spark-streaming-spark",
-    master: str | None = None,
     cpus: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
@@ -53,7 +52,7 @@ def get_session(
     cpus = cpus or DEFAULT_CPUS
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(cpus))
         # local mode runs driver+executors in ONE JVM, so Spark's 1g
         # driver default is the whole memory budget — the sf0.4 dedup

@@ -211,22 +211,18 @@ def dlq_split_batch_writer(out_dir: str, reject_sql: str, reason_sql: str):
     Scale: one persisted micro-batch scan feeds both writes; the split
     is a narrow filter, no shuffle, and the DLQ side is tiny by
     construction so its files stay small without coalescing."""
+    good = idempotent_parquet_batch_writer(f"{out_dir}/good")
+    dlq = idempotent_parquet_batch_writer(f"{out_dir}/dlq")
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         flagged = batch_df.withColumn("_reject", F.expr(reject_sql)).persist()
         try:
-            (
-                flagged.where(~F.col("_reject"))
-                .drop("_reject")
-                .write.mode("overwrite")
-                .parquet(f"{out_dir}/good/batch_id={batch_id}")
-            )
-            (
+            good(flagged.where(~F.col("_reject")).drop("_reject"), batch_id)
+            dlq(
                 flagged.where(F.col("_reject"))
                 .drop("_reject")
-                .withColumn("reject_reason", F.expr(reason_sql))
-                .write.mode("overwrite")
-                .parquet(f"{out_dir}/dlq/batch_id={batch_id}")
+                .withColumn("reject_reason", F.expr(reason_sql)),
+                batch_id,
             )
         finally:
             flagged.unpersist()
@@ -427,6 +423,8 @@ def drift_monitor_batch_writer(
             f"histogram with a positive total, got {ref_cells!r}"
         )
 
+    alarms = idempotent_parquet_batch_writer(out_dir)
+
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         ref = local_frame(
@@ -462,7 +460,7 @@ def drift_monitor_batch_writer(
                 tvd_micro("n_batch", str(n_ref)).alias("tvd_micro"),
             )
         )
-        out.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
+        alarms(out, batch_id)
 
     return write
 
@@ -507,6 +505,7 @@ def incremental_dedup_batch_writer(out_dir: str):
     the protobuf runtime this sandbox lacks; foreachBatch + partitioned
     parquet state is the deployable equivalent and is trigger-shape
     invariant (pinned by the slicing test)."""
+    verdicts_out = idempotent_parquet_batch_writer(f"{out_dir}/verdicts")
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         from ..operators.dedup import (
@@ -529,9 +528,7 @@ def incremental_dedup_batch_writer(out_dir: str):
                 batch_df.select(F.col("doc_id").alias("new_id")),
                 _best_prior_match(corpus, mh_new),
             )
-            verdicts.write.mode("overwrite").parquet(
-                f"{out_dir}/verdicts/batch_id={batch_id}"
-            )
+            verdicts_out(verdicts, batch_id)
             mh_new.write.mode("overwrite").parquet(
                 f"{out_dir}/sigs/ingest_batch={batch_id}"
             )

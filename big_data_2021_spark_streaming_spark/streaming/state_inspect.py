@@ -15,15 +15,16 @@ turns that analysis into engine queries:
 - ``checkpoint_progress_report``: batches joined with their commit
   status plus inter-batch cadence — the "is my stream healthy /
   which batch is replaying" triage view.
-- ``kafka_batch_records``: per-(topic, partition) records ingested by
-  each batch, from consecutive Kafka end-offsets — the throughput
-  ledger (BASELINE.md's 135-records/97 s numbers are one aggregation
-  over this frame).
-- ``read_operator_state`` / ``state_metadata`` / ``state_skew_report``:
-  wrappers over Spark's ``statestore`` / ``state-metadata`` batch
-  sources — the keyed state of a live query as a queryable frame, and
-  the per-partition state-row skew profile that diagnoses hot keys
-  before they OOM an executor.
+- ``replay_batch_plan``: the one Kafka range ledger — per (batch,
+  topic, partition) the (start, end] offsets, the records between them
+  and the commit flag (BASELINE.md's 135-records/97 s numbers are one
+  aggregation over it). ``kafka_source_start`` is batch 0's left edge;
+  ``replay_batch`` re-executes one batch's ranges against records.
+- ``state_skew_report``: per-partition state rows of operator 0 via
+  Spark's ``statestore`` source, the hot-key profile that diagnoses a
+  skewed grouping before it OOMs an executor. Read the keyed state and
+  the operator inventory from Spark's ``statestore`` and
+  ``state-metadata`` sources directly.
 
 Scale posture: log files are read by Spark (``spark.read.text``), so a
 checkpoint on S3/HDFS never flows through the driver; the offsets log
@@ -97,6 +98,17 @@ def checkpoint_commits(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
     )
 
 
+def _with_commit_flag(
+    spark: SparkSession, checkpoint_dir: str, batches: DataFrame
+) -> DataFrame:
+    """``batches`` (keyed by batch_id) plus ``committed``: false for a
+    batch the offsets log planned and the commits log never closed."""
+    commits = checkpoint_commits(spark, checkpoint_dir).select(
+        "batch_id", F.lit(True).alias("committed")
+    )
+    return batches.join(commits, "batch_id", "left").fillna(False, ["committed"])
+
+
 def checkpoint_progress_report(
     spark: SparkSession, checkpoint_dir: str
 ) -> DataFrame:
@@ -106,60 +118,30 @@ def checkpoint_progress_report(
     NULL for batch 0). The triage view: gaps spiking → backpressure;
     committed=false on the max batch → that batch replays on restart;
     watermark stuck at 0 → no event-time column reached the sink."""
-    offsets = checkpoint_offsets(spark, checkpoint_dir)
-    commits = checkpoint_commits(spark, checkpoint_dir).select(
-        "batch_id", F.lit(True).alias("committed")
+    offsets = checkpoint_offsets(spark, checkpoint_dir).select(
+        "batch_id", "batch_timestamp_ms", "batch_watermark_ms"
     )
     w = Window.orderBy("batch_id")  # one-row-per-batch metadata frame
-    return (
-        offsets.join(commits, "batch_id", "left")
-        .select(
-            "batch_id",
-            "batch_timestamp_ms",
-            "batch_watermark_ms",
-            F.coalesce("committed", F.lit(False)).alias("committed"),
-            (
-                F.col("batch_timestamp_ms")
-                - F.lag("batch_timestamp_ms").over(w)
-            ).alias("batch_gap_ms"),
-        )
+    ts = F.col("batch_timestamp_ms")
+    return _with_commit_flag(spark, checkpoint_dir, offsets).withColumn(
+        "batch_gap_ms", ts - F.lag(ts).over(w)
     )
 
 
-# Kafka end-offset JSON: {"topic": {"partition": endOffset, ...}, ...}
-_KAFKA_OFFSETS_SCHEMA = "MAP<STRING, MAP<STRING, LONG>>"
-
-
-def kafka_batch_records(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
-    """Per-batch ingest ledger for a Kafka source: (batch_id, topic,
-    partition, end_offset, records) where ``records`` is the delta to
-    the previous batch's end-offset for the same (topic, partition) —
-    NULL for the first logged batch (its start offset lives in
-    ``sources/``, not the offsets log). Sum(records) over a time span
-    is the stream's throughput; a partition whose records dwarf its
-    siblings is Kafka-side skew."""
-    offsets = checkpoint_offsets(spark, checkpoint_dir)
-    parsed = offsets.select(
-        "batch_id",
-        F.explode(
-            F.from_json(
-                F.element_at("sources", 1),
-                _KAFKA_OFFSETS_SCHEMA,
-            )
-        ).alias("topic", "parts"),
-    ).select(
-        "batch_id",
-        "topic",
-        F.explode("parts").alias("partition", "end_offset"),
+def _kafka_offsets(
+    frame: DataFrame, offsets_json, offset_name: str, *keys: str
+) -> DataFrame:
+    """Decode a Kafka offset JSON column ``{"topic": {"partition":
+    offset, ...}, ...}`` into one row per (topic, partition): (*keys,
+    topic, partition INT, ``offset_name``)."""
+    topics = frame.select(
+        *keys,
+        F.explode(F.from_json(offsets_json, "MAP<STRING, MAP<STRING, LONG>>"))
+        .alias("topic", "parts"),
     )
-    w = Window.partitionBy("topic", "partition").orderBy("batch_id")
-    return parsed.select(
-        "batch_id",
-        "topic",
-        F.col("partition").cast("int").alias("partition"),
-        "end_offset",
-        (F.col("end_offset") - F.lag("end_offset").over(w)).alias("records"),
-    )
+    return topics.select(
+        *keys, "topic", F.explode("parts").alias("partition", offset_name)
+    ).withColumn("partition", F.col("partition").cast("int"))
 
 
 def kafka_source_start(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
@@ -168,75 +150,46 @@ def kafka_source_start(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
     batch's END offsets, so this file is the missing left edge of
     batch 0's range."""
     path = f"{checkpoint_dir.rstrip('/')}/sources/0"
-    parsed = (
-        spark.read.text(path, wholetext=True)
-        .select(
-            F.from_json(
-                F.element_at(F.split(F.trim("value"), "\n"), 2),
-                _KAFKA_OFFSETS_SCHEMA,
-            ).alias("m")
-        )
-        .select(F.explode("m").alias("topic", "parts"))
-    )
-    return parsed.select(
-        "topic",
-        F.explode("parts").alias("partition", "start_offset"),
-    ).select(
-        "topic",
-        F.col("partition").cast("int").alias("partition"),
+    return _kafka_offsets(
+        spark.read.text(path, wholetext=True),
+        F.element_at(F.split(F.trim("value"), "\n"), 2),
         "start_offset",
     )
 
 
 def replay_batch_plan(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
-    """The executable contract of every planned micro-batch: (batch_id,
+    """The Kafka range ledger of every planned micro-batch: (batch_id,
     topic, partition, start_offset, end_offset, records, committed).
-    Start offsets come from the PREVIOUS batch's WAL entry (the
-    ``sources/0/0`` file for batch 0) — exactly the arithmetic a
-    restarted MicroBatchExecution performs to rebuild an uncommitted
-    batch. The resume point after a crash is the row set where
-    ``committed`` is false (reference: batch 12, cf.
+    Each batch covers (start, end] with start = the PREVIOUS batch's
+    WAL end offset (the ``sources/0/0`` offset for batch 0) — exactly
+    the arithmetic a restarted MicroBatchExecution performs to rebuild
+    an uncommitted batch. Sum(records) over a time span is the stream's
+    throughput; a partition whose records dwarf its siblings is
+    Kafka-side skew. The resume point after a crash is the row set
+    where ``committed`` is false (reference: batch 12, cf.
     ``srapk_structure_streaming.py:173-179``'s checkpoint, offsets/12
     present with no commits/12).
 
     Scale: one row per (batch, topic, partition) of WAL metadata —
     never data-sized; the lag window partitions by (topic, partition)."""
-    ends = kafka_batch_records(spark, checkpoint_dir)
+    ends = _kafka_offsets(
+        checkpoint_offsets(spark, checkpoint_dir),
+        F.element_at("sources", 1),
+        "end_offset",
+        "batch_id",
+    )
     start0 = kafka_source_start(spark, checkpoint_dir)
     w = Window.partitionBy("topic", "partition").orderBy("batch_id")
-    with_start = ends.select(
+    start = F.coalesce(F.lag("end_offset").over(w), "start_offset")
+    ranges = ends.join(F.broadcast(start0), ["topic", "partition"], "left").select(
         "batch_id",
         "topic",
         "partition",
-        F.lag("end_offset").over(w).alias("_prev_end"),
+        start.alias("start_offset"),
         "end_offset",
-    ).join(F.broadcast(start0), ["topic", "partition"], "left")
-    commits = checkpoint_commits(spark, checkpoint_dir).select(
-        "batch_id", F.lit(True).alias("committed")
+        (F.col("end_offset") - start).alias("records"),
     )
-    return (
-        with_start.select(
-            "batch_id",
-            "topic",
-            "partition",
-            F.coalesce("_prev_end", "start_offset").alias("start_offset"),
-            "end_offset",
-            (
-                F.col("end_offset")
-                - F.coalesce("_prev_end", "start_offset")
-            ).alias("records"),
-        )
-        .join(commits, "batch_id", "left")
-        .select(
-            "batch_id",
-            "topic",
-            "partition",
-            "start_offset",
-            "end_offset",
-            "records",
-            F.coalesce("committed", F.lit(False)).alias("committed"),
-        )
-    )
+    return _with_commit_flag(spark, checkpoint_dir, ranges)
 
 
 def replay_batch(
@@ -264,27 +217,6 @@ def replay_batch(
     ).drop("start_offset", "end_offset")
 
 
-def read_operator_state(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
-    """The latest committed keyed state of the query's first stateful
-    operator (operatorId 0), default store, as a batch DataFrame
-    (Spark's ``statestore`` source): struct ``key``, struct ``value``,
-    ``partition_id``. Reads are partition-parallel and respect the
-    provider in the checkpoint (HDFS-backed or RocksDB)."""
-    return (
-        spark.read.format("statestore")
-        .option("operatorId", 0)
-        .load(checkpoint_dir)
-    )
-
-
-def state_metadata(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
-    """Operator inventory of a checkpoint (Spark's ``state-metadata``
-    source): operatorId/operatorName/stateStoreName/numPartitions and
-    the batch-id range still materialized — what you ask BEFORE
-    pointing ``read_operator_state`` at an unfamiliar checkpoint."""
-    return spark.read.format("state-metadata").load(checkpoint_dir)
-
-
 def state_skew_report(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
     """Per-partition state-row counts for operator 0, with each
     partition's permille share of total state rows — the hot-key /
@@ -294,7 +226,11 @@ def state_skew_report(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
     become a straggler (or an OOM) at scale. One distributed
     aggregation over the state read; the result is numPartitions
     rows."""
-    state = read_operator_state(spark, checkpoint_dir)
+    state = (
+        spark.read.format("statestore")
+        .option("operatorId", 0)
+        .load(checkpoint_dir)
+    )
     per_part = state.groupBy("partition_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("state_rows")
     )

@@ -5,8 +5,10 @@ BASELINE.md derived by hand from the REFERENCE's own committed
 checkpoint (``REF_CKPT``, the real 2021 Kafka-cluster run): the module
 must reproduce the hand analysis. Each runs twice: on a synthetic
 checkpoint written here with those numbers (offsets/, commits/ and
-sources/ only), and on the reference checkpoint when it is present. The other half build a fresh stateful checkpoint and read
-its keyed state back through Spark's statestore source.
+sources/ only), and on the reference checkpoint when it is present.
+The other half build fresh checkpoints — one stateful aggregation,
+and the benchmark's own five streaming queries — and read them back
+through the generic readers and Spark's statestore source.
 """
 
 from __future__ import annotations
@@ -17,17 +19,15 @@ from pathlib import Path
 import pytest
 
 import pyspark.sql.functions as F
+from pyspark.errors import SparkRuntimeException
 
 from big_data_2021_spark_streaming_spark.streaming.state_inspect import (
     checkpoint_commits,
     checkpoint_offsets,
     checkpoint_progress_report,
-    kafka_batch_records,
     kafka_source_start,
-    read_operator_state,
     replay_batch,
     replay_batch_plan,
-    state_metadata,
     state_skew_report,
 )
 
@@ -121,15 +121,15 @@ def test_progress_report(spark, kafka_ckpt):
 def test_kafka_ingest_ledger(spark, kafka_ckpt):
     """BASELINE.md row 'records processed': single-partition topic
     ``all_events`` ends at offset 21861; batches 1–12 ingested 134
-    records between them (batch 0's own 1-record delta lives in
-    sources/, outside the offsets log, hence NULL)."""
+    records between them, and batch 0 its 1-record delta from the
+    sources/0/0 start offset."""
     rows = sorted(
-        kafka_batch_records(spark, kafka_ckpt).collect(),
+        replay_batch_plan(spark, kafka_ckpt).collect(),
         key=lambda r: r.batch_id,
     )
     assert {r.topic for r in rows} == {"all_events"}
     assert {r.partition for r in rows} == {0}
-    assert rows[0].records is None
+    assert rows[0].records == 1
     assert rows[-1].end_offset == 21_861
     assert sum(r.records for r in rows[1:]) == 21_861 - 21_727
 
@@ -165,16 +165,76 @@ def test_state_read_matches_query_output(spark, tmp_path):
     sink = {r.k: r["count"] for r in spark.table("state_inspect_sink").collect()}
     assert sink == {"x": 3, "y": 2, "z": 1}
 
-    meta = state_metadata(spark, ckpt).collect()
+    meta = spark.read.format("state-metadata").load(ckpt).collect()
     assert len(meta) == 1 and meta[0].operatorName == "stateStoreSave"
 
-    state = read_operator_state(spark, ckpt).collect()
+    state = spark.read.format("statestore").load(ckpt).collect()
     assert {r.key[0]: r.value[0] for r in state} == sink
 
     skew = state_skew_report(spark, ckpt).collect()
     assert sum(r.state_rows for r in skew) == len(sink)
     assert all(r.state_rows > 0 for r in skew)  # empty partitions absent
     assert abs(sum(r.share_permille for r in skew) - 1000) <= len(skew)
+
+
+def test_generic_readers_on_the_bench_checkpoints(spark, tmp_path):
+    """The readers that assume no Kafka source run on the rsvp_stream
+    workload's own checkpoints: its five queries (perfbench/stream.py)
+    drain a small generated backlog, one file per micro-batch, with
+    availableNow, and each checkpoint is read back. The assertions hold
+    by construction: every batch commits, the file source logs offsets
+    0 and 1 for the two files, dedup keeps one state row per distinct
+    rsvp_id, and the EWMA detector one per user (group) the generator
+    emitted. A stateless query's checkpoint has no state to read."""
+    from datetime import datetime, timezone
+
+    from perfbench.gen import RsvpGenerator
+    from perfbench.harness import Recorder
+    from perfbench.metrics import STREAM_QUERIES
+    from perfbench.stream import _start_queries
+
+    from big_data_2021_spark_streaming_spark.streaming.replay import (
+        FileEnvelopeProducer,
+    )
+
+    paths = {k: tmp_path / k for k in ("src", "ckpt", "out")}
+    gen = RsvpGenerator(seed=1)
+    producer = FileEnvelopeProducer(paths["src"])
+    created = datetime(2024, 1, 1, tzinfo=timezone.utc)  # one Q3 window
+    for _ in range(2):
+        producer.send_batch(gen.make(100, created))
+    queries = _start_queries(spark, STREAM_QUERIES, paths, 1, True, Recorder(False))
+    for q in queries.values():
+        q.awaitTermination(300)
+        assert q.exception() is None
+
+    operators = {
+        "q3": "stateStoreSave",
+        "dedup": "dedupeWithinWatermark",
+        "ewma": "applyInPandasWithState",
+    }
+    state_rows = {
+        "q3": 1,
+        "dedup": gen.distinct_ids(),
+        "ewma": len({group for *_, group in gen.records}),
+    }
+    for name in STREAM_QUERIES:
+        ckpt = str(paths["ckpt"] / name)
+        report = checkpoint_progress_report(spark, ckpt).collect()
+        assert sorted(r.batch_id for r in report) == list(range(len(report)))
+        assert len(report) >= 2 and all(r.committed for r in report), name
+        offsets = checkpoint_offsets(spark, ckpt).collect()
+        assert {json.loads(r.sources[0])["logOffset"] for r in offsets} == {0, 1}
+        if name not in operators:
+            with pytest.raises(SparkRuntimeException) as err:
+                state_skew_report(spark, ckpt).collect()
+            assert err.value.getCondition() == "STDS_FAILED_TO_READ_STATE_SCHEMA"
+            continue
+        meta = spark.read.format("state-metadata").load(ckpt).collect()
+        assert [r.operatorName for r in meta] == [operators[name]]
+        skew = state_skew_report(spark, ckpt).collect()
+        assert sum(r.state_rows for r in skew) == state_rows[name], name
+        assert abs(sum(r.share_permille for r in skew) - 1000) <= len(skew)
 
 
 # --- WAL restore → resume point → batch replay (reference fidelity) ---

@@ -94,40 +94,6 @@ def test_q1_q2_streaming_replay(spark, fixture_dir, producer):
     assert {p["group_state"] for p in payloads} == {"OREGON", "TEXAS"}
 
 
-def test_q3_append_mode_emits_closed_windows_and_drops_late(
-    spark, fixture_dir, producer
-):
-    # The file source orders files by mtime, so three files written in
-    # the same tick can coalesce/reorder. Write each file only after the
-    # previous micro-batch fully drained: batch order is deterministic.
-    producer.send_batch(
-        [
-            (rsvp_json("us", "Bend", "OR"), "2021-06-09 00:00:07"),
-            (rsvp_json("us", "Portland", "OR"), "2021-06-09 00:00:30"),
-        ]
-    )
-    raw = rsvp_file_stream(spark, str(fixture_dir))
-    q = to_memory_sink(
-        q3_cities_per_minute(raw, as_json=False), "q3_sink", output_mode="append"
-    )
-    q.processAllAvailable()
-    # batch 1 advances the watermark past minute 0 (event at 00:05)
-    producer.send_batch(
-        [(rsvp_json("us", "Austin", "TX"), "2021-06-09 00:05:00")]
-    )
-    q.processAllAvailable()
-    # batch 2 is a late straggler for the already-finalized minute 0
-    producer.send_batch(
-        [(rsvp_json("us", "LateCity", "CA"), "2021-06-09 00:00:45")]
-    )
-    drain(q)
-    rows = {r.minute: sorted(r.cities) for r in spark.table("q3_sink").collect()}
-    # minute-0 window was finalized when the watermark passed its end —
-    # and the late 'LateCity' arrival was dropped, not re-emitted
-    assert rows.get(0) == ["Bend", "Portland"]
-    assert not any("LateCity" in cities for cities in rows.values())
-
-
 def test_batch_stream_equivalence(spark, fixture_dir, producer):
     rows = [
         (rsvp_json("us", "Bend", "OR"), "2021-06-09 00:00:07"),
@@ -145,7 +111,7 @@ def test_batch_stream_equivalence(spark, fixture_dir, producer):
     # streaming run, complete mode (all windows, finalized or not)
     stream_raw = rsvp_file_stream(spark, str(fixture_dir))
     q = to_memory_sink(
-        q3_cities_per_minute(stream_raw, as_json=False, watermark=None),
+        q3_cities_per_minute(stream_raw, as_json=False),
         "equiv_sink",
         output_mode="complete",
     )
@@ -209,8 +175,9 @@ def test_sessionize_closes_on_gap_and_timeout(spark, tmp_path):
     q.processAllAvailable()
     assert spark.table("sess_sink").count() == 0  # A still open
 
-    # gap closure: a user-1 event 300 min later closes A in-batch and
-    # opens session B (end 300 min, timeout 330 min)
+    # gap closure: a user-1 event 300 min later opens session B (window
+    # 300-330 min) and moves the watermark to 299 min, past A's window
+    # end (last event + gap = 40 min): the no-data batch after it emits A
     write("b1.json", [ev(4, 300, 9.0)])
     q.processAllAvailable()
     out = spark.table("sess_sink").collect()
@@ -219,22 +186,21 @@ def test_sessionize_closes_on_gap_and_timeout(spark, tmp_path):
     assert s.user_id == 1 and s.n_events == 3 and s.total_value == 6.0
     assert s.session_start == t0 and s.session_end == t0 + timedelta(minutes=10)
 
-    # timeout closure: batch 2 (other user) advances the watermark to
-    # 599 min > B's timeout, and batch 3 is the post-watermark trigger
-    # in which the timeout actually fires (timeouts are evaluated
-    # against the watermark computed at batch start)
+    # watermark closure of the last session: batch 2 (another user)
+    # moves the watermark to 599 min, past B's window end (330 min), so
+    # the batch after it emits B; batch 3 and the drain flush the rest
     write("b2.json", [ev(5, 600, 4.0, user=2)])
     q.processAllAvailable()
     write("b3.json", [ev(6, 900, 5.0, user=3)])
     drain(q)
     out = {(r.user_id, r.n_events, r.total_value) for r in spark.table("sess_sink").collect()}
-    assert (1, 1, 9.0) in out  # session B emitted by the event-time timeout
+    assert (1, 1, 9.0) in out  # session B, closed by the watermark
     assert (1, 3, 6.0) in out  # session A still there (gap closure)
 
 
 def test_sessionize_splits_within_one_batch(spark, tmp_path):
     """Two gap-separated bursts arriving in a single micro-batch must
-    still become two sessions (the in-batch walk splits them)."""
+    still become two sessions (the session window splits at the gap)."""
     d = tmp_path / "sess2"
     d.mkdir()
     t0 = datetime(2024, 1, 1, 0, 0, 0)
@@ -257,7 +223,9 @@ def test_sessionize_splits_within_one_batch(spark, tmp_path):
     q = to_memory_sink(sessions, "sess2_sink")
     drain(q)
     out = spark.table("sess2_sink").collect()
-    assert len(out) == 1  # first burst closed by the in-batch gap split
+    # the first burst's window ends at 40 min, below the 99-min watermark
+    # the batch sets; the second burst's session is still open
+    assert len(out) == 1
     s = out[0]
     assert s.n_events == 2 and s.total_value == 3.0
     assert s.session_start == t0 and s.session_end == t0 + timedelta(minutes=10)
@@ -511,8 +479,8 @@ def test_replay_jsonl_chunks_batches(tmp_path):
 
 def test_native_session_window_streaming(spark, tmp_path):
     """F.session_window in streaming append mode: a session is emitted
-    once the watermark passes its end (last event + gap) — the built-in
-    counterpart of the custom sessionize operator."""
+    once the watermark passes its end (last event + gap) — the operator
+    ``sessionize`` is built on, read here through its raw window."""
     import pyspark.sql.functions as F
 
     d = tmp_path / "natsess"
@@ -832,71 +800,98 @@ def test_update_output_mode_re_emits_changed_windows(spark, fixture_dir, produce
     assert sorted(emissions) == [1, 2]
 
 
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
+# The state-store providers a stateful scenario runs under, each with a
+# custom metric only it reports: HDFS-backed is the reference's
+# provider, RocksDB is the one get_session sets.
+_PROVIDER_METRICS = {
+    "HDFSBackedStateStoreProvider": "loadedMapCacheHitCount",
+    "RocksDBStateStoreProvider": "rocksdbGetCount",
+}
 
 
-@pytest.fixture
-def rocksdb_state_store(spark):
-    """Pin the query's state store to RocksDB, restoring the default
-    (HDFS-backed) provider afterward. The provider is resolved from
-    SQLConf at query start, so a per-test conf flip is enough."""
+def _under_each_provider(spark, scenario):
+    """Run ``scenario(provider) -> (query, result)`` once per state-store
+    provider and return the results in ``_PROVIDER_METRICS`` order. Each
+    query's progress must carry its provider's metric, so a comparison
+    cannot silently run one provider twice. The provider is resolved
+    from SQLConf at query start, so a conf flip between queries is
+    enough; the session's provider is restored afterward."""
     key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    yield
-    if prev is None:
-        spark.conf.unset(key)
-    else:
+    prev = spark.conf.get(key)
+    results = []
+    try:
+        for provider, metric in _PROVIDER_METRICS.items():
+            spark.conf.set(
+                key, f"org.apache.spark.sql.execution.streaming.state.{provider}"
+            )
+            q, result = scenario(provider)
+            seen = {
+                m
+                for p in q.recentProgress
+                for op in p["stateOperators"]
+                for m in op["customMetrics"]
+            }
+            assert metric in seen, provider
+            results.append(result)
+    finally:
         spark.conf.set(key, prev)
+    return results
 
 
-def _run_q3_scenario(spark, fixture_dir, producer, sink):
-    """The append-mode Q3 lineage with a late straggler — identical to
-    test_q3_append_mode_emits_closed_windows_and_drops_late, factored so
-    both state-store providers replay the same scenario."""
+def _run_q3_scenario(spark, d, sink):
+    """The append-mode Q3 lineage with a late straggler: (query,
+    {minute: sorted cities})."""
+    d.mkdir()
+    producer = FileEnvelopeProducer(d)
+    # The file source orders files by mtime, so three files written in
+    # the same tick can coalesce/reorder. Write each file only after the
+    # previous micro-batch fully drained: batch order is deterministic.
     producer.send_batch(
         [
             (rsvp_json("us", "Bend", "OR"), "2021-06-09 00:00:07"),
             (rsvp_json("us", "Portland", "OR"), "2021-06-09 00:00:30"),
         ]
     )
-    raw = rsvp_file_stream(spark, str(fixture_dir))
+    raw = rsvp_file_stream(spark, str(d))
     q = to_memory_sink(
         q3_cities_per_minute(raw, as_json=False), sink, output_mode="append"
     )
     q.processAllAvailable()
+    # batch 1 advances the watermark past minute 0 (event at 00:05)
     producer.send_batch(
         [(rsvp_json("us", "Austin", "TX"), "2021-06-09 00:05:00")]
     )
     q.processAllAvailable()
+    # batch 2 is a late straggler for the already-finalized minute 0
     producer.send_batch(
         [(rsvp_json("us", "LateCity", "CA"), "2021-06-09 00:00:45")]
     )
     drain(q)
-    return {r.minute: sorted(r.cities) for r in spark.table(sink).collect()}
+    return q, {r.minute: sorted(r.cities) for r in spark.table(sink).collect()}
 
 
-def test_q3_rocksdb_state_store_matches_default(
-    spark, fixture_dir, producer, rocksdb_state_store
-):
-    """The 100 TB state answer: windowed-aggregation state living in
-    RocksDB (off-heap, spillable — the provider a large cluster runs)
-    must produce byte-identical results to the default in-memory
-    provider, including the watermark late-drop."""
-    rows = _run_q3_scenario(spark, fixture_dir, producer, "q3_rocks_sink")
-    assert rows.get(0) == ["Bend", "Portland"]
-    assert not any("LateCity" in cities for cities in rows.values())
+def test_q3_rocksdb_state_store_matches_default(spark, tmp_path):
+    """Append-mode Q3 emits closed windows and drops late data under
+    both state-store providers: windowed-aggregation state in RocksDB
+    (off-heap, spillable — the provider a large cluster runs) gives the
+    rows the reference's HDFS-backed provider gives. The minute-0 window
+    is finalized when the watermark passes its end, and the late
+    'LateCity' arrival is dropped, not re-emitted."""
+    hdfs, rocks = _under_each_provider(
+        spark,
+        lambda provider: _run_q3_scenario(
+            spark, tmp_path / provider, f"q3_{provider}_sink"
+        ),
+    )
+    assert hdfs == rocks
+    assert rocks.get(0) == ["Bend", "Portland"]
+    assert not any("LateCity" in cities for cities in rocks.values())
 
 
-def test_sessionize_rocksdb_state_store_matches_default(
-    spark, tmp_path, rocksdb_state_store
-):
-    """flatMapGroupsWithState-style session state on RocksDB: the gap
-    closure emits the same session row the default provider emits."""
-    d = tmp_path / "sess_rocks"
-    d.mkdir()
+def test_sessionize_rocksdb_state_store_matches_default(spark, tmp_path):
+    """Session-window state under both state-store providers: the
+    watermark closes the same session row on RocksDB as on the
+    reference's HDFS-backed provider."""
     t0 = datetime(2024, 1, 1, 0, 0, 0)
 
     def ev(i, minutes, value, user=1):
@@ -907,27 +902,35 @@ def test_sessionize_rocksdb_state_store_matches_default(
             "value": value,
         }
 
-    (d / "b0.json").write_text(
-        "\n".join(json.dumps(e) for e in [ev(1, 0, 1.0), ev(2, 5, 2.0), ev(3, 10, 3.0)])
-    )
-    schema = "event_id LONG, ts STRING, user_id LONG, value DOUBLE"
-    stream = (
-        spark.readStream.schema(schema)
-        .json(str(d))
-        .selectExpr(
-            "event_id", "CAST(ts AS TIMESTAMP) AS ts", "user_id", "value"
+    def scenario(provider):
+        d = tmp_path / provider
+        d.mkdir()
+        (d / "b0.json").write_text(
+            "\n".join(
+                json.dumps(e) for e in [ev(1, 0, 1.0), ev(2, 5, 2.0), ev(3, 10, 3.0)]
+            )
         )
-    )
-    sessions = sessionize(stream, gap="30 minutes", watermark_delay="1 minute")
-    q = to_memory_sink(sessions, "sess_rocks_sink")
-    q.processAllAvailable()
-    (d / "b1.json").write_text(json.dumps(ev(4, 300, 9.0)))
-    drain(q)
-    out = spark.table("sess_rocks_sink").collect()
-    assert len(out) == 1
-    s = out[0]
-    assert s.user_id == 1 and s.n_events == 3 and s.total_value == 6.0
-    assert s.session_start == t0 and s.session_end == t0 + timedelta(minutes=10)
+        schema = "event_id LONG, ts STRING, user_id LONG, value DOUBLE"
+        stream = (
+            spark.readStream.schema(schema)
+            .json(str(d))
+            .selectExpr(
+                "event_id", "CAST(ts AS TIMESTAMP) AS ts", "user_id", "value"
+            )
+        )
+        sessions = sessionize(stream, gap="30 minutes", watermark_delay="1 minute")
+        sink = f"sess_{provider}_sink"
+        q = to_memory_sink(sessions, sink)
+        q.processAllAvailable()
+        (d / "b1.json").write_text(json.dumps(ev(4, 300, 9.0)))
+        drain(q)
+        return q, spark.table(sink).collect()
+
+    for out in _under_each_provider(spark, scenario):
+        assert len(out) == 1
+        s = out[0]
+        assert s.user_id == 1 and s.n_events == 3 and s.total_value == 6.0
+        assert s.session_start == t0 and s.session_end == t0 + timedelta(minutes=10)
 
 
 def test_dlq_split_preserves_every_row_and_is_idempotent(spark, tmp_path):
@@ -1077,11 +1080,11 @@ def test_upsert_state_writer_maintains_latest_per_key(spark, tmp_path):
     assert state_replayed == state1
 
 
-def test_ewma_spikes_batch_stream_equivalence(spark, tmp_path):
-    """The streaming EWMA spike detector must emit exactly the rows the
-    batch plan produces on the same events, with the data split across
-    micro-batches in event-time order — bounded per-user state carries
-    the history across the batch boundary."""
+def _ewma_batch_and_stream(spark, d, user_id, split, sink):
+    """One user's 10 events, a quiet baseline then bursts, through the
+    batch EWMA plan and through the streaming detector with the events
+    split across two micro-batches before index ``split``: (query,
+    (batch rows, streamed rows))."""
     import json as _json
 
     import pandas as pd
@@ -1091,16 +1094,13 @@ def test_ewma_spikes_batch_stream_equivalence(spark, tmp_path):
     )
     from big_data_2021_spark_streaming_spark.streaming.pipeline import (
         stream_ewma_spikes,
-        to_memory_sink,
     )
 
-    # one user, 10 events: quiet baseline then bursts (values chosen so
-    # some spikes land in batch 2, proving state crossed the boundary)
     vals = [1.0, 1.1, 0.9, 1.0, 1.05, 9.5, 1.0, 1.0, 12.25, 0.95]
     rows = [
         {
             "event_id": i + 1,
-            "user_id": 7,
+            "user_id": user_id,
             "ts": f"2024-01-01 00:{i:02d}:00",
             "value": v,
         }
@@ -1109,19 +1109,18 @@ def test_ewma_spikes_batch_stream_equivalence(spark, tmp_path):
     # batch side: same rows as a parquet events table
     pdf = pd.DataFrame(rows)
     pdf["ts"] = pd.to_datetime(pdf["ts"])
-    events_dir = tmp_path / "batch"
-    events_dir.mkdir()
+    events_dir = d / "batch"
+    events_dir.mkdir(parents=True)
     pdf.to_parquet(events_dir / "events.parquet")
     batch = {
         (r.user_id, r.event_id, r.value, r.n_hist, r.ewma)
         for r in event_ewma_spikes(spark, str(events_dir)).collect()
     }
-    assert batch, "fixture produced no spikes — test is vacuous"
 
-    sdir = tmp_path / "stream"
+    sdir = d / "stream"
     sdir.mkdir()
     (sdir / "b0.json").write_text(
-        "\n".join(_json.dumps(r) for r in rows[:6])
+        "\n".join(_json.dumps(r) for r in rows[:split])
     )
     schema = "event_id LONG, user_id LONG, ts TIMESTAMP, value DOUBLE"
     stream = (
@@ -1129,83 +1128,46 @@ def test_ewma_spikes_batch_stream_equivalence(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(str(sdir))
     )
-    q = to_memory_sink(stream_ewma_spikes(stream), "ewma_sink")
+    q = to_memory_sink(stream_ewma_spikes(stream), sink)
     try:
         q.processAllAvailable()
         (sdir / "b1.json").write_text(
-            "\n".join(_json.dumps(r) for r in rows[6:])
+            "\n".join(_json.dumps(r) for r in rows[split:])
         )
         q.processAllAvailable()
-        streamed = {
-            tuple(r) for r in spark.table("ewma_sink").collect()
-        }
+        streamed = {tuple(r) for r in spark.table(sink).collect()}
     finally:
         q.stop()
+    return q, (batch, streamed)
+
+
+def test_ewma_spikes_batch_stream_equivalence(spark, tmp_path):
+    """The streaming EWMA spike detector must emit exactly the rows the
+    batch plan produces on the same events, with the data split across
+    micro-batches in event-time order — bounded per-user state carries
+    the history across the batch boundary."""
+    # split after event 6, so some spikes land in batch 2
+    _, (batch, streamed) = _ewma_batch_and_stream(
+        spark, tmp_path, 7, 6, "ewma_sink"
+    )
+    assert batch, "fixture produced no spikes — test is vacuous"
     assert streamed == batch
     assert any(r[1] > 6 for r in streamed), (
         "no spike in batch 2 — state never crossed the boundary"
     )
 
 
-def test_ewma_spikes_rocksdb_state_store_matches_batch(
-    spark, tmp_path, rocksdb_state_store
-):
-    """The EWMA detector's per-user array state on RocksDB must still
-    reproduce the batch plan exactly across a micro-batch boundary —
-    the applyInPandasWithState + list-state shape under the provider a
+def test_ewma_spikes_rocksdb_state_store_matches_batch(spark, tmp_path):
+    """The EWMA detector's per-user array state reproduces the batch
+    plan exactly across a micro-batch boundary under both state-store
+    providers — the applyInPandasWithState + list-state shape on the
+    reference's HDFS-backed provider and on RocksDB, the provider a
     large cluster runs."""
-    import json as _json
-
-    import pandas as pd
-
-    from big_data_2021_spark_streaming_spark.plans.analytics import (
-        event_ewma_spikes,
+    runs = _under_each_provider(
+        spark,
+        lambda provider: _ewma_batch_and_stream(
+            spark, tmp_path / provider, 11, 5, f"ewma_{provider}_sink"
+        ),
     )
-    from big_data_2021_spark_streaming_spark.streaming.pipeline import (
-        stream_ewma_spikes,
-        to_memory_sink,
-    )
-
-    vals = [1.0, 1.1, 0.9, 1.0, 1.05, 9.5, 1.0, 1.0, 12.25, 0.95]
-    rows = [
-        {
-            "event_id": i + 1,
-            "user_id": 11,
-            "ts": f"2024-01-01 00:{i:02d}:00",
-            "value": v,
-        }
-        for i, v in enumerate(vals)
-    ]
-    pdf = pd.DataFrame(rows)
-    pdf["ts"] = pd.to_datetime(pdf["ts"])
-    bdir = tmp_path / "batch"
-    bdir.mkdir()
-    pdf.to_parquet(bdir / "events.parquet")
-    batch = {
-        (r.user_id, r.event_id, r.value, r.n_hist, r.ewma)
-        for r in event_ewma_spikes(spark, str(bdir)).collect()
-    }
-    sdir = tmp_path / "stream"
-    sdir.mkdir()
-    (sdir / "b0.json").write_text(
-        "\n".join(_json.dumps(r) for r in rows[:5])
-    )
-    schema = "event_id LONG, user_id LONG, ts TIMESTAMP, value DOUBLE"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(sdir))
-    )
-    q = to_memory_sink(stream_ewma_spikes(stream), "ewma_rocks_sink")
-    try:
-        q.processAllAvailable()
-        (sdir / "b1.json").write_text(
-            "\n".join(_json.dumps(r) for r in rows[5:])
-        )
-        q.processAllAvailable()
-        streamed = {
-            tuple(r) for r in spark.table("ewma_rocks_sink").collect()
-        }
-    finally:
-        q.stop()
-    assert streamed == batch and batch
+    for batch, streamed in runs:
+        assert streamed == batch and batch
