@@ -870,6 +870,14 @@ def _run_q3_scenario(spark, d, sink):
     return q, {r.minute: sorted(r.cities) for r in spark.table(sink).collect()}
 
 
+def test_q3_append_mode_emits_closed_windows_and_drops_late(spark, tmp_path):
+    _, rows = _run_q3_scenario(spark, tmp_path / "q3", "q3_sink")
+    # minute-0 window was finalized when the watermark passed its end —
+    # and the late 'LateCity' arrival was dropped, not re-emitted
+    assert rows.get(0) == ["Bend", "Portland"]
+    assert not any("LateCity" in cities for cities in rows.values())
+
+
 def test_q3_rocksdb_state_store_matches_default(spark, tmp_path):
     """Append-mode Q3 emits closed windows and drops late data under
     both state-store providers: windowed-aggregation state in RocksDB
